@@ -106,11 +106,9 @@ object Bench {
     // Streaming queries run fixed micro-batch machinery (state stores,
     // checkpoint WAL) whose cost is data-size-independent; splitting the
     // subtotals keeps round-over-round totals comparable without footnotes.
-    val streaming = Set("q78_stream_upsert_sink", "q79_stream_running_stats",
-      "q80_stream_tumbling", "q81_stream_watermarked", "q82_stream_dedup",
-      "q83_stream_stream_join", "q84_stream_static_join", "q85_stream_session",
-      "q86_stream_sliding", "q135_stream_table_source",
-      "q139_stream_incremental_dedup", "q140_stream_sink_tumbling")
+    // (q139 is a streaming dedup registered with the Dedup queries)
+    val streaming = graft.queries.Streaming.all.map(_._1).toSet +
+      "q139_stream_incremental_dedup"
     val streamingS = results.collect { case (k, v) if v >= 0 && streaming(k) => v }.sum
     val batchS = total - streamingS
     val sampleJson = ordered.map { case (k, _) =>

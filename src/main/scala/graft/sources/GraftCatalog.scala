@@ -1114,6 +1114,12 @@ class GraftStagedTable(spark: SparkSession, catalog: GraftCatalog,
 
   private val staged = scala.collection.mutable.ArrayBuffer[AddFile]()
 
+  /** The table a staged REPLACE supersedes, as of staging: any commit that
+    * lands on it before commitStagedChanges is a typed conflict. */
+  private val replaced: Option[(GraftTable, Snapshot)] =
+    if (!replacesExisting) None
+    else { val t = GraftTable.forPath(spark, dir); Some((t, t.snapshot)) }
+
   override def name(): String = ident.toString
   override def schema(): StructType = declaredSchema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -1157,11 +1163,12 @@ class GraftStagedTable(spark: SparkSession, catalog: GraftCatalog,
 
   override def commitStagedChanges(): Unit = {
     val adds = staged.synchronized(staged.toSeq)
-    if (replacesExisting)
-      GraftTable.forPath(spark, dir)
-        .commitReplaceTable(adds, declaredSchema, partitionCols, props)
-    else
-      GraftTable.createStaged(spark, dir, declaredSchema, partitionCols, props, adds)
+    replaced match {
+      case Some((t, s)) =>
+        t.commitReplaceTable(s, adds, declaredSchema, partitionCols, props)
+      case None =>
+        GraftTable.createStaged(spark, dir, declaredSchema, partitionCols, props, adds)
+    }
     catalog.registerExternal(ident, dir)
   }
 

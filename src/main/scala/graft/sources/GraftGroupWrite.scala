@@ -134,12 +134,13 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
     // features) re-check at EVERY epoch commit against the current head
     // snapshot — a mid-stream ALTER that enables row tracking or adds a
     // generated/identity column must fail the stream loudly, not commit
-    // epochs whose rows lack row-id stamps / identity values. The snapshot
-    // is the same (LRU-cached) fold the exactly-once probe below already
-    // needs, so this costs no extra log work.
-    val headMeta = table.snapshot.metaData
-    val genNow = graft.table.GeneratedColumns.names(table.snapshot.schema) ++
-      graft.table.IdentityColumns.names(table.snapshot.schema)
+    // epochs whose rows lack row-id stamps / identity values. One fold
+    // serves these guards, the exactly-once probe below and the commit
+    // (whose writer-feature gate reads its protocol).
+    val head = table.snapshot
+    val headMeta = head.metaData
+    val genNow = graft.table.GeneratedColumns.names(head.schema) ++
+      graft.table.IdentityColumns.names(head.schema)
     if (genNow.nonEmpty || table.rowTrackingEnabled(headMeta)) {
       messages.foreach {
         case m: GraftWriteMessage =>
@@ -151,7 +152,6 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
           "engine-maintained columns (generated/identity/rowTracking) — " +
           "restart the stream via foreachBatch { (b, _) => table.append(b) }")
     }
-    table.gateWrite()
     // exactly-once epoch guard: the snapshot's folded SetTransaction map
     // (appId -> latest committed epoch) — O(1) per epoch, bounded by
     // checkpoints, instead of re-parsing every commit file of the log.
@@ -161,7 +161,7 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
     // must not re-commit its last epoch); every new commit writes a Txn,
     // so the fallback stops firing after the first post-upgrade epoch.
     val alreadyCommitted =
-      table.snapshot.transactions.get(queryId) match {
+      head.transactions.get(queryId) match {
         case Some(last) => last >= epochId
         case None => table.log.commitInfos.exists(c =>
           c.operationMetrics.get("txnAppId").contains(queryId) &&
@@ -171,7 +171,7 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
       messages.flatMap { case m: GraftWriteMessage => m.adds }.toSeq)
     if (alreadyCommitted)
       adds.foreach(a => Files.deleteIfExists(Paths.get(table.path, a.path)))
-    else table.commitStreamingAppend(adds, queryId, epochId)
+    else table.commitStreamingAppend(head, adds, queryId, epochId)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

@@ -608,7 +608,7 @@ final class GraftLog(val tablePath: String,
     // 1M-AddFile commits the body must not materialize twice.
     if (store.verifyAfterPublish) {
       val back = try store.readLines(versionFile(v)) catch {
-        case e: Exception => throw new java.util.ConcurrentModificationException(
+        case e: Exception => throw new LogStoreContractException(
           s"commit $v of $tablePath is not readable after publish — the " +
             s"LogStore lost the write (read-after-publish visibility " +
             s"violated): $e")
@@ -622,7 +622,7 @@ final class GraftLog(val tablePath: String,
       }
       if (!java.util.Arrays.equals(digest(back.iterator),
           digest(commitLines)))
-        throw new java.util.ConcurrentModificationException(
+        throw new LogStoreContractException(
           s"commit $v of $tablePath does not contain this writer's actions " +
             "after publish — the LogStore's publishIfAbsent is not atomic " +
             "(a concurrent writer overwrote the commit); see the LogStore " +

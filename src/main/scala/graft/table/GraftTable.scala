@@ -24,7 +24,8 @@ import org.apache.spark.sql.types._
   * contain affected rows (semi-join file discovery), so a MERGE touching 1%%
   * of files rewrites 1%% of the table, not all of it.
   */
-final class GraftTable private (val spark: SparkSession, val path: String) {
+final class GraftTable private (val spark: SparkSession, val path: String)
+    extends OptimisticCommit {
 
   val log = new GraftLog(path, LogStore.resolve(spark))
 
@@ -661,18 +662,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val bad = read(s).filter(!coalesce(expr(checkExpr), lit(false))).limit(1).count()
     require(bad == 0, s"cannot add constraint '$name': existing rows violate $checkExpr")
     val meta = s.metaData.copy(constraints = s.metaData.constraints + (name -> checkExpr))
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ADD CONSTRAINT",
-        Map("name" -> name, "expr" -> checkExpr))))
+    commit(s, TxnInfo.wholeTable(s), "ADD CONSTRAINT",
+      Map("name" -> name, "expr" -> checkExpr))((_, _) => Seq(meta))
   }
 
   def dropConstraint(name: String): Unit = {
     val s = snapshot
     require(s.metaData.constraints.contains(name), s"no such constraint: $name")
     val meta = s.metaData.copy(constraints = s.metaData.constraints - name)
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "DROP CONSTRAINT",
-        Map("name" -> name))))
+    commit(s, TxnInfo.wholeTable(s), "DROP CONSTRAINT", Map("name" -> name))(
+      (_, _) => Seq(meta))
   }
 
   /** Append rows as a new commit. Blind appends never conflict
@@ -715,12 +714,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // rows were conformed to a schema that no longer governs). An identity
     // frontier bump is itself a metadata change, so two identity appends
     // can never both rebase from one frontier (one gets MetadataChanged).
-    commitDml(s0raw,
-      TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "WRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        metaAction ++ adds)
+    commit(s0raw, TxnInfo.Blind, "WRITE",
+      Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => metaAction ++ adds)
     autoCompact()
   }
 
@@ -737,17 +733,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val adds = stampRowIds(s0, writeDataMapped(
       enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
       s0.metaData))
-    val info = TxnInfo(readWholeTable = false, None, Set.empty, Set.empty)
-    val committed = commitDmlAt(s0.version, s0, info,
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "WRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
-              "txnAppId" -> appId, "epoch" -> version.toString)),
-        Txn(appId, version)) ++ identityMeta(s0, adds) ++ adds,
+    val committed = commit(s0, TxnInfo.Blind, "WRITE",
+      Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
+          "txnAppId" -> appId, "epoch" -> version.toString),
       // a concurrent replay of the SAME app may have landed this epoch
       // while we raced — skip instead of double-writing
       onRaceRecheck = head =>
-        log.snapshotAt(head).transactions.get(appId).exists(_ >= version))
+        log.snapshotAt(head).transactions.get(appId).exists(_ >= version))(
+      (_, _) => Txn(appId, version) +: (identityMeta(s0, adds) ++ adds)).isDefined
     if (!committed)
       adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
     committed
@@ -804,13 +797,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
       s0.metaData))
     val txns = pending.map(p => Txn(txnKey(p), Files.getLastModifiedTime(p).toMillis))
-    val info = TxnInfo(readWholeTable = false, None, Set.empty, Set.empty)
-    val committed = commitDmlAt(s0.version, s0, info,
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "COPY INTO",
-          Map("numSourceFiles" -> pending.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s0, adds) ++ txns ++ adds,
+    val committed = commit(s0, TxnInfo.Blind, "COPY INTO",
+      Map("numSourceFiles" -> pending.size.toString,
+          "numOutputRows" -> adds.map(_.numRecords).sum.toString),
       // a CONCURRENT copyInto may have won the race with some (or all) of
       // our source files — blindly rebasing would ingest them twice. Abort
       // when any pending file is now covered by the folded ledger; the
@@ -819,7 +808,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         val ledger = log.snapshotAt(head).transactions
         pending.exists(p => ledger.get(txnKey(p))
           .exists(_ >= Files.getLastModifiedTime(p).toMillis))
-      })
+      })((_, _) => identityMeta(s0, adds) ++ txns ++ adds).isDefined
     if (!committed) {
       adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
       return copyInto(sourceDir, fmt)
@@ -842,14 +831,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // overwrite logically replaces EVERYTHING as of its snapshot — a
     // concurrent append would be silently erased by a rebase, so it
     // conflicts (readWholeTable)
-    commitDml(s,
-      TxnInfo(readWholeTable = true, None,
-        s.files.map(_.path).toSet, s.files.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        s.files.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    commit(s, TxnInfo.wholeTable(s, removeAll = true), "OVERWRITE",
+      Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
     autoCompact()
   }
 
@@ -973,16 +957,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         .drop(GraftTable.RowIdCol)
         .withColumn("_change_type", lit("delete"))
         .unionByName(conformed.withColumn("_change_type", lit("insert"))))
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("predicate" -> pred.toString,
-              "numRewrittenFiles" -> touched.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+      "OVERWRITE",
+      Map("predicate" -> pred.toString,
+          "numRewrittenFiles" -> touched.size.toString,
+          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
     autoCompact()
   }
 
@@ -1032,16 +1014,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         if (v == default) col(c).isNull else col(c) === lit(v)
       }.reduce(_ && _))
       .reduceOption(_ || _).getOrElse(lit(false))
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, Some(comboPred),
         touched.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("partitions" -> combos.size.toString,
-              "numRewrittenFiles" -> touched.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+      "OVERWRITE",
+      Map("partitions" -> combos.size.toString,
+          "numRewrittenFiles" -> touched.size.toString,
+          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
     autoCompact()
   }
 
@@ -1144,21 +1124,21 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           key == "clustering.columns")
         Seq(s.protocol)
       else Nil
-    val ts = log.nextTimestamp()
     // ICT enabled post-creation pins the delta enablement markers the
     // spec requires (version + timestamp of the first ICT commit) so a
     // delta 4.x reader knows where the authoritative clock starts
-    val metaIct =
-      if (key == "delta.enableInCommitTimestamps" &&
-          value.equalsIgnoreCase("true") &&
-          !metaFinal.properties.contains("delta.inCommitTimestampEnablementVersion"))
-        metaFinal.copy(properties = metaFinal.properties ++ Map(
-          "delta.inCommitTimestampEnablementVersion" -> (s.version + 1).toString,
-          "delta.inCommitTimestampEnablementTimestamp" -> ts.toString))
-      else metaFinal
-    log.commit(s.version + 1, upgrade ++ compatEnable ++ Seq(metaIct,
-      CommitInfo(s.version + 1, ts, "SET TBLPROPERTIES",
-        Map(key -> value))) ++ backfill)
+    val pinsIct = key == "delta.enableInCommitTimestamps" &&
+      value.equalsIgnoreCase("true") &&
+      !metaFinal.properties.contains("delta.inCommitTimestampEnablementVersion")
+    commit(s, TxnInfo.wholeTable(s), "SET TBLPROPERTIES", Map(key -> value)) {
+      (v, ts) =>
+        val metaIct =
+          if (!pinsIct) metaFinal
+          else metaFinal.copy(properties = metaFinal.properties ++ Map(
+            "delta.inCommitTimestampEnablementVersion" -> v.toString,
+            "delta.inCommitTimestampEnablementTimestamp" -> ts.toString))
+        upgrade ++ compatEnable ++ Seq(metaIct) ++ backfill
+    }
   }
 
   /** Delta-style auto compaction: when the table property
@@ -1182,56 +1162,42 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // Column, so classify conservatively: the whole table was readable by
     // the rewrite plan (appends conflict), and the replaced files are both
     // read and removed
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = true, None,
         removed.map(_.path).toSet, removed.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, op,
-          Map("numRewrittenFiles" -> removed.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        removed.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+      op,
+      Map("numRewrittenFiles" -> removed.size.toString,
+          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => adds ++ cdc)
   }
 
   /** Atomic REPLACE TABLE (AS SELECT) commit: ONE log version carries the
     * fresh MetaData (new table id — a replace is a new logical table, as
-    * in Delta), a RemoveFile for every currently-live data file, and the
-    * staged AddFiles. Readers see the old table or the new one, never an
-    * empty or mixed middle; the staged files were written into the table
-    * directory ahead of time and stay invisible until this lands. History
-    * and time travel across the replace boundary are preserved (the log
-    * keeps every prior commit). A concurrent winner is superseded: REPLACE
-    * semantically reads-and-rewrites the whole table, so the loop
-    * recomputes the head's live set and retries — bounded by contention,
-    * never re-running the (already written) query. */
-  private[graft] def commitReplaceTable(adds: Seq[AddFile],
+    * in Delta), a RemoveFile for every file live in `s` (the snapshot the
+    * replace was staged against), and the staged AddFiles. Readers see the
+    * old table or the new one, never an empty or mixed middle; the staged
+    * files were written into the table directory ahead of time and stay
+    * invisible until this lands. History and time travel across the
+    * replace boundary are preserved (the log keeps every prior commit).
+    * The replace read and removes the whole table, so any concurrent data,
+    * metadata or protocol commit since `s` is a typed conflict. */
+  private[graft] def commitReplaceTable(s: Snapshot, adds: Seq[AddFile],
       newSchema: StructType, partitionCols: Seq[String],
       props: Map[String, String]): Unit = {
-    gateWriterFeatures(snapshot.protocol)
     // REPLACE drops every committed row — the exact thing appendOnly
     // forbids; unset the property first (the same escape hatch as DML)
-    requireNotAppendOnly(snapshot.metaData, "REPLACE TABLE AS SELECT")
-    var done = false
-    while (!done) {
-      val s = snapshot
-      val v = s.version + 1
-      val ts = log.nextTimestamp()
-      // constraint.* props land in metaData.constraints (enforced on
-      // every later write), not as dead same-named properties — same
-      // split the non-staged CREATE path performs via addConstraint
-      val (chk, plain) = props.partition(_._1.startsWith("constraint."))
-      val meta = MetaData(UUID.randomUUID().toString, newSchema.json,
-        System.currentTimeMillis(), partitionCols,
-        chk.map { case (k, v2) => k.stripPrefix("constraint.") -> v2 }, plain)
-      try {
-        log.commit(v, Seq(meta,
-          CommitInfo(v, ts, "REPLACE TABLE AS SELECT",
-            Map("numRemovedFiles" -> s.files.size.toString,
-                "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-          s.files.map(f => RemoveFile(f.path, ts)) ++
-          FileOps.capAddStats(meta, adds))
-        done = true
-      } catch { case _: java.util.ConcurrentModificationException => () }
-    }
+    requireNotAppendOnly(s.metaData, "REPLACE TABLE AS SELECT")
+    // constraint.* props land in metaData.constraints (enforced on
+    // every later write), not as dead same-named properties — same
+    // split the non-staged CREATE path performs via addConstraint
+    val (chk, plain) = props.partition(_._1.startsWith("constraint."))
+    val meta = MetaData(UUID.randomUUID().toString, newSchema.json,
+      System.currentTimeMillis(), partitionCols,
+      chk.map { case (k, v) => k.stripPrefix("constraint.") -> v }, plain)
+    commit(s, TxnInfo.wholeTable(s, removeAll = true), "REPLACE TABLE AS SELECT",
+      Map("numRemovedFiles" -> s.files.size.toString,
+          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+      (_, _) => meta +: FileOps.capAddStats(meta, adds))
   }
 
   /** ALTER TABLE ADD COLUMN: additive schema evolution as a metadata-only
@@ -1331,10 +1297,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
             (GraftTable.ExistenceDefaultsProp ->
               (prior.map(_ + ",").getOrElse("") + name)))
       }
-    log.commit(s.version + 1, Seq(markedMeta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ADD COLUMNS",
-        Map("column" -> s"$name ${dataType.simpleString}") ++
-          default.map("default" -> _))))
+    commit(s, TxnInfo.wholeTable(s), "ADD COLUMNS",
+      Map("column" -> s"$name ${dataType.simpleString}") ++
+        default.map("default" -> _))((_, _) => Seq(markedMeta))
   }
 
   /** ALTER TABLE ... ALTER COLUMN ... SET / DROP NOT NULL. DROP NOT NULL
@@ -1365,11 +1330,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       }
     }
     val evolved = StructType(s.schema.fields.updated(idx, f.copy(nullable = nullable)))
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "nullability" -> (if (nullable) "DROP NOT NULL" else "SET NOT NULL")))))
+    commit(s, TxnInfo.wholeTable(s), "ALTER COLUMN",
+      Map("column" -> name,
+          "nullability" -> (if (nullable) "DROP NOT NULL" else "SET NOT NULL")))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json)))
   }
 
   /** ALTER COLUMN ... SET / DROP DEFAULT — metadata-only. Spark's
@@ -1400,11 +1364,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val proto: Seq[Action] =
       if (sql.isDefined && DeltaWriteCompat.enabled(s.metaData))
         Seq(s.protocol) else Nil
-    log.commit(s.version + 1, proto ++ Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "default" -> sql.getOrElse("DROP DEFAULT")))))
+    commit(s, TxnInfo.wholeTable(s), "ALTER COLUMN",
+      Map("column" -> name, "default" -> sql.getOrElse("DROP DEFAULT")))(
+      (_, _) => proto :+ s.metaData.copy(schemaString = evolved.json))
   }
 
   /** ALTER COLUMN ... COMMENT — column documentation as a versioned
@@ -1421,10 +1383,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case None    => mb.remove("comment")
     }
     val evolved = StructType(s.schema.fields.updated(idx, f.copy(metadata = mb.build())))
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name, "comment" -> comment.getOrElse("")))))
+    commit(s, TxnInfo.wholeTable(s), "ALTER COLUMN",
+      Map("column" -> name, "comment" -> comment.getOrElse("")))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json)))
   }
 
   /** ALTER TABLE ... ALTER COLUMN ... TYPE — type WIDENING as a
@@ -1482,11 +1443,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // rather than refusal
     val proto: Seq[Action] =
       if (DeltaWriteCompat.enabled(s.metaData)) Seq(s.protocol) else Nil
-    log.commit(s.version + 1, proto ++ Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "type" -> s"${f.dataType.simpleString} -> ${newType.simpleString}"))))
+    commit(s, TxnInfo.wholeTable(s), "ALTER COLUMN",
+      Map("column" -> name,
+          "type" -> s"${f.dataType.simpleString} -> ${newType.simpleString}"))(
+      (_, _) => proto :+ s.metaData.copy(schemaString = evolved.json))
   }
 
   private def columnMappingEnabled(meta: MetaData): Boolean =
@@ -1543,10 +1503,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .find { case (_, e) => generationRefs(e).exists(_.equalsIgnoreCase(oldName)) }
     require(genHit.isEmpty,
       s"cannot rename $oldName: referenced by generated column ${genHit.get._1}'s expression")
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json, partitionColumns = parts),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "RENAME COLUMN",
-        Map("from" -> oldName, "to" -> newName))))
+    commit(s, TxnInfo.wholeTable(s), "RENAME COLUMN",
+      Map("from" -> oldName, "to" -> newName))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json, partitionColumns = parts)))
   }
 
   /** ALTER TABLE DROP COLUMN: metadata-only under column mapping — the
@@ -1584,25 +1543,21 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (!bloomHit) meta0
       else meta0.copy(properties = meta0.properties + ("bloom.columns" ->
         GraftTable.bloomColumns(meta0).filterNot(_ == name).mkString(",")))
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "DROP COLUMNS",
-        Map("column" -> name))))
+    commit(s, TxnInfo.wholeTable(s), "DROP COLUMNS", Map("column" -> name))(
+      (_, _) => Seq(meta))
   }
 
   /** One micro-batch epoch of a streaming write, committed atomically
     * with its (queryId, epochId) transaction identity — the replay guard
     * GraftStreamingWrite checks before re-committing an epoch. */
-  private[graft] def commitStreamingAppend(adds: Seq[AddFile],
+  private[graft] def commitStreamingAppend(s: Snapshot, adds: Seq[AddFile],
       queryId: String, epochId: Long): Unit = {
-    commitDmlAt(latestVersion, snapshot,
-      TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "STREAMING UPDATE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
-              "txnAppId" -> queryId, "epoch" -> epochId.toString)),
-        // SetTransaction: folds into the snapshot so the exactly-once
-        // replay guard is an O(1) lookup, not an O(history) log scan
-        Txn(queryId, epochId)) ++ adds)
+    commit(s, TxnInfo.Blind, "STREAMING UPDATE",
+      Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
+          "txnAppId" -> queryId, "epoch" -> epochId.toString))(
+      // SetTransaction: folds into the snapshot so the exactly-once
+      // replay guard is an O(1) lookup, not an O(history) log scan
+      (_, _) => Txn(queryId, epochId) +: adds)
     autoCompact()
   }
 
@@ -1616,9 +1571,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       s"$key is the table's physical bucket layout and cannot be unset — " +
         "re-layout with optimize(rebucketTo = (column, n))")
     val meta = s.metaData.copy(properties = s.metaData.properties - key)
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "UNSET TBLPROPERTIES",
-        Map("key" -> key))))
+    commit(s, TxnInfo.wholeTable(s), "UNSET TBLPROPERTIES", Map("key" -> key))(
+      (_, _) => Seq(meta))
   }
 
   /** Delta's `ALTER TABLE ... DROP FEATURE` (the delta-4.x
@@ -1641,7 +1595,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * feature. */
   def dropFeature(feature: String): Unit = {
     val s = snapshot
-    val dropVersion = s.version + 1
     def active(f: String): Boolean =
       s.protocol.readerFeatures.contains(f) || s.protocol.writerFeatures.contains(f)
     val disabledProp: String = feature match {
@@ -1666,20 +1619,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           "is either not droppable (its traces live in data files) or not a " +
           "graft feature")
     }
-    val meta = s.metaData.copy(properties =
-      s.metaData.properties - disabledProp +
-        ("delta.requireCheckpointProtectionBeforeVersion" -> dropVersion.toString))
     val proto = s.protocol.copy(
       readerFeatures = s.protocol.readerFeatures.filterNot(_ == feature),
       writerFeatures =
         (s.protocol.writerFeatures.filterNot(_ == feature) :+
           "checkpointProtection").distinct,
       minWriterVersion = math.max(s.protocol.minWriterVersion, 7))
-    log.commit(dropVersion, Seq(proto, meta,
-      CommitInfo(dropVersion, log.nextTimestamp(), "DROP FEATURE",
-        Map("feature" -> feature))))
+    val dropVersion = commit(s, TxnInfo.wholeTable(s), "DROP FEATURE",
+      Map("feature" -> feature))((v, _) => Seq(proto, s.metaData.copy(properties =
+        s.metaData.properties - disabledProp +
+          ("delta.requireCheckpointProtectionBeforeVersion" -> v.toString))))
     // the protected boundary checkpoint: readers seed at the drop version
-    log.writeCheckpoint(dropVersion)
+    dropVersion.foreach(log.writeCheckpoint)
   }
 
   private def autoCompact(): Unit =
@@ -1883,18 +1834,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // restore resets the WHOLE table to the target snapshot — a rebase
     // past any concurrent change would silently erase it, so everything
     // conflicts (readWholeTable + full remove set)
-    commitDml(cur,
+    commit(cur,
       TxnInfo(readWholeTable = true, None,
         cur.files.map(_.path).toSet, removedFiles.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "RESTORE",
-          Map("restoredVersion" -> version.toString))) ++
+      "RESTORE", Map("restoredVersion" -> version.toString))(
+      (_, _) =>
         (if (tgt.metaData != cur.metaData) Seq(tgt.metaData) else Nil) ++
-        cur.files.filterNot(f => tgtPaths.contains(f.path)).map(f => RemoveFile(f.path, ts)) ++
-        dvChanged.map(f => RemoveFile(f.path, ts)) ++
-        dvChanged.map(Actions.untagReAdd) ++
-        tgt.files.filterNot(f => curByPath.contains(f.path))
-          .map(Actions.untagReAdd) ++ cdc)
+        addedFiles.map(Actions.untagReAdd) ++ cdc)
   }
 
   /** CLONE: branch this table's current snapshot into a new table at
@@ -1995,13 +1941,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         }.collect().toSeq.sorted
     if (missing.isEmpty || dryRun) return missing
     val gone = missing.toSet
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, readPredicate = None,
         readFiles = gone, removes = gone),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "FSCK",
-          Map("numRemovedFiles" -> missing.size.toString))) ++
-        missing.map(RemoveFile(_, ts)))
+      "FSCK", Map("numRemovedFiles" -> missing.size.toString))((_, _) => Nil)
     missing
   }
 
@@ -2359,35 +2302,33 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // pure reorganization of exactly `scoped`: concurrent appends never
     // conflict (Delta's dataChange=false leniency) — only a writer that
     // removed one of our input files does
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, None,
         scoped.map(_.path).toSet, scoped.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "OPTIMIZE",
-          // the skip metrics PARTITION the untouched file set (summing
-          // never double-counts): numFilesSkipped = out of `where` scope,
-          // numClusteredFilesSkipped = conforming clustered files,
-          // numSizeSkipped = right-sized survivors of a bare bin-pack —
-          // so s.files.size == before + the skips, auditable per commit
-          Map("numFilesBefore" -> scoped.size.toString,
-              "numFilesAfter" -> adds.size.toString,
-              "numFilesSkipped" -> (s.files.size - inScope.size).toString) ++
-            (if (incremental)
-               Map("numClusteredFilesSkipped" -> clusteredSkipped.toString)
-             else Map.empty) ++
-            (if (scoped0.size != scoped.size)
-               Map("numSizeSkipped" -> (scoped0.size - scoped.size).toString)
-             else Map.empty) ++
-            (if (zCols.nonEmpty) Map("zorderBy" -> zCols.mkString(","))
-             else Map.empty))) ++
-        identityMeta(s, adds) ++
-        // reorganization, not new data: removes carry dataChange=false and
-        // the outputs the reorg tag — the PROTOCOL-level spelling (what
-        // compat emits for delta streams and the tail reader skips on),
-        // alongside the operation-name recognition graft always had
-        scoped.map(f => RemoveFile(f.path, ts, dataChange = false)) ++
-        adds.map(a => a.copy(tags =
-          a.tags + (Actions.DataChangeFalseTag -> "true"))))
+      "OPTIMIZE",
+      // the skip metrics PARTITION the untouched file set (summing
+      // never double-counts): numFilesSkipped = out of `where` scope,
+      // numClusteredFilesSkipped = conforming clustered files,
+      // numSizeSkipped = right-sized survivors of a bare bin-pack —
+      // so s.files.size == before + the skips, auditable per commit
+      Map("numFilesBefore" -> scoped.size.toString,
+          "numFilesAfter" -> adds.size.toString,
+          "numFilesSkipped" -> (s.files.size - inScope.size).toString) ++
+        (if (incremental)
+           Map("numClusteredFilesSkipped" -> clusteredSkipped.toString)
+         else Map.empty) ++
+        (if (scoped0.size != scoped.size)
+           Map("numSizeSkipped" -> (scoped0.size - scoped.size).toString)
+         else Map.empty) ++
+        (if (zCols.nonEmpty) Map("zorderBy" -> zCols.mkString(","))
+         else Map.empty),
+      // reorganization, not new data: removes carry dataChange=false and
+      // the outputs the reorg tag — the PROTOCOL-level spelling (what
+      // compat emits for delta streams and the tail reader skips on),
+      // alongside the operation-name recognition graft always had
+      dataChange = false)(
+      (_, _) => identityMeta(s, adds) ++ adds.map(a => a.copy(tags =
+        a.tags + (Actions.DataChangeFalseTag -> "true"))))
   }
 
   /** The `optimize(rebucketTo = ...)` rewrite: every live file reads back
@@ -2426,18 +2367,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // append unbucketed files (the gate must not wait for a checkpoint)
     val protocolLine: Seq[Action] =
       if (DeltaWriteCompat.enabled(newMeta)) Seq(s.protocol) else Nil
-    commitDml(s,
-      TxnInfo(readWholeTable = true, None,
-        s.files.map(_.path).toSet, s.files.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "OPTIMIZE",
-          Map("rebucketTo" -> s"bucket($n, $column)",
-              "numFilesBefore" -> s.files.size.toString,
-              "numFilesAfter" -> adds.size.toString)),
-          newMeta) ++ protocolLine ++
-        s.files.map(f => RemoveFile(f.path, ts, dataChange = false)) ++
-        adds.map(a => a.copy(tags =
-          a.tags + (Actions.DataChangeFalseTag -> "true"))))
+    commit(s, TxnInfo.wholeTable(s, removeAll = true), "OPTIMIZE",
+      Map("rebucketTo" -> s"bucket($n, $column)",
+          "numFilesBefore" -> s.files.size.toString,
+          "numFilesAfter" -> adds.size.toString),
+      dataChange = false)(
+      (_, _) => (newMeta +: protocolLine) ++ adds.map(a => a.copy(tags =
+        a.tags + (Actions.DataChangeFalseTag -> "true"))))
   }
 
   /** DELETE rows matching `pred` (api.py:107). Files with no match survive
@@ -2452,7 +2388,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** `prunedFiles` over an explicit candidate list — the conflict checker
     * probes a WINNING commit's added files against this txn's read
     * predicate with exactly the pruning semantics the read used. */
-  private def pruneCandidates(s: Snapshot, pred: Column,
+  private[table] def pruneCandidates(s: Snapshot, pred: Column,
       candidates: Seq[AddFile]): Seq[AddFile] = {
     val resolved = DataSkipping.resolve(spark, s.schema, pred)
     // under column mapping stats/partition keys are physical — translate
@@ -2533,116 +2469,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (probes.isEmpty) bucketPruned
       else bucketPruned.filter(f =>
         FileOps.bloomMayMatch(Paths.get(path, f.path), probes))
-    }
-  }
-
-  /** Commit with Delta-style logical conflict resolution (VLDB 2020 §3.2):
-    * losing the physical commit race is NOT an error by itself. The loser
-    * reads every winning commit in (its snapshot, new head], classifies it
-    * against what this transaction read and removes, and either
-    *
-    *  - REBASES: no logical overlap (the winner appended files disjoint
-    *    from our read predicate, or touched files we neither read nor
-    *    remove) — re-commit the SAME actions at the new head; the rewrite
-    *    stays valid because nothing it depended on changed; or
-    *  - THROWS a typed [[GraftConcurrentWriteException]] subclass naming
-    *    exactly what conflicted.
-    *
-    * `mkActions(version, timestamp)` rebuilds the action list for the
-    * attempted version (CommitInfo / RemoveFile embed both). The data
-    * files were already written and stay invisible until a commit lands,
-    * so rebasing costs one log read per winning commit — no data work. */
-  private[table] def commitDml(s: Snapshot, info: TxnInfo,
-      mkActions: (Long, Long) => Seq[Action]): Unit = {
-    gateWriterFeatures(s.protocol)
-    commitDmlAt(s.version, s, info, mkActions)
-  }
-
-  /** Writer-feature gate (the write-side twin of GraftLog's reader gate): a
-    * table whose protocol lists a writerFeature this build does not
-    * implement must not be written — e.g. a generated-columns table written
-    * by a writer that ignores the generation rule would silently break the
-    * column invariant for every later reader. */
-  /** Streaming-sink entry: gate once at writer-factory creation (the
-    * per-epoch commit path deliberately avoids a snapshot fold). */
-  private[graft] def gateWrite(): Unit = gateWriterFeatures(snapshot.protocol)
-
-  private def gateWriterFeatures(protocol: Protocol): Unit = {
-    val unsupported = protocol.writerFeatures.filterNot(Protocol.supportedWriterFeatures)
-    if (unsupported.nonEmpty) throw new GraftProtocolException(
-      s"table $path requires writer features ${unsupported.mkString(", ")} " +
-        s"this build does not support (supported: " +
-        s"${Protocol.supportedWriterFeatures.toSeq.sorted.mkString(", ")})")
-  }
-
-  /** As commitDml, but the snapshot (needed only to resolve the read
-    * predicate against winner files when a race is actually LOST) is
-    * by-name — the streaming epoch hot path passes `snapshot` without
-    * paying a log fold on the common no-race commit.
-    *
-    * `onRaceRecheck` runs after each lost race's winners classify as
-    * disjoint, with the new head version: returning true ABORTS the commit
-    * (returns false to the caller, who cleans up its staged files) — the
-    * hook idempotent writers (appendIdempotent, copyInto) use to re-probe
-    * their ledgers instead of blindly rebasing into a double-write.
-    * Returns true when the commit landed. */
-  private[table] def commitDmlAt(baseVersion: Long, snap: => Snapshot, info: TxnInfo,
-      mkActions: (Long, Long) => Seq[Action],
-      onRaceRecheck: Long => Boolean = _ => false): Boolean = {
-    lazy val s = snap
-    var base = baseVersion
-    var attempts = 0
-    while (true) {
-      try {
-        log.commit(base + 1, mkActions(base + 1, log.nextTimestamp()))
-        return true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          val head = latestVersion
-          ((base + 1) to head).foreach(w => classifyWinner(s, w, info))
-          if (onRaceRecheck(head)) return false
-          // all winners disjoint — rebase and retry (bounded: a writer
-          // that loses 10 straight races is livelocked, surface it)
-          if (attempts >= 10) throw e
-          base = head
-      }
-    }
-    true
-  }
-
-  /** One winning commit vs this transaction: throw the first applicable
-    * typed conflict, or return (disjoint — safe to rebase past). */
-  private[table] def classifyWinner(s: Snapshot, w: Long, info: TxnInfo): Unit = {
-    val actions = log.readVersion(w)
-    val op = actions.collectFirst { case c: CommitInfo => c.operation }.getOrElse("?")
-    if (actions.exists(_.isInstanceOf[Protocol]))
-      throw new ProtocolChangedException(
-        s"commit $w of $path upgraded the table protocol during this transaction")
-    if (actions.exists(_.isInstanceOf[MetaData]))
-      throw new MetadataChangedException(
-        s"commit $w of $path ($op) changed table metadata during this transaction")
-    val wRemoves = actions.collect { case r: RemoveFile => r.path }.toSet
-    val dd = wRemoves.intersect(info.removes)
-    if (dd.nonEmpty)
-      throw new ConcurrentDeleteDeleteException(
-        s"commit $w of $path ($op) removed ${dd.size} file(s) this transaction " +
-          s"also removes (e.g. ${dd.head})")
-    val dr = wRemoves.intersect(info.readFiles)
-    if (dr.nonEmpty)
-      throw new ConcurrentDeleteReadException(
-        s"commit $w of $path ($op) removed ${dr.size} file(s) this transaction " +
-          s"read (e.g. ${dr.head})")
-    val wAdds = actions.collect { case a: AddFile => a }
-    if (wAdds.nonEmpty) {
-      val conflicting =
-        if (info.readWholeTable) wAdds
-        else info.readPredicate
-          .map(p => pruneCandidates(s, p, wAdds)).getOrElse(Nil)
-      if (conflicting.nonEmpty)
-        throw new ConcurrentAppendException(
-          s"commit $w of $path ($op) added ${conflicting.size} file(s) this " +
-            "transaction's read should have seen")
     }
   }
 
@@ -2904,15 +2730,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
       .drop(GraftTable.RowIdCol)
       .withColumn("_change_type", lit("delete")))
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "DELETE",
-          Map("numDeletedRows" -> deleted.toString,
-              "numRewrittenFiles" -> "0",
-              "numDeletionVectors" -> touched.size.toString))) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ cdc)
+      "DELETE",
+      Map("numDeletedRows" -> deleted.toString,
+          "numRewrittenFiles" -> "0",
+          "numDeletionVectors" -> touched.size.toString))((_, _) => reAdds ++ cdc)
     Some(deleted)
   }
 
@@ -3039,15 +2863,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
       .drop(GraftTable.RowIdCol)
       .withColumn("_change_type", lit("delete")))
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "DELETE",
-          Map("numDeletedRows" -> deleted.toString,
-              "numRewrittenFiles" -> touched.size.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+      "DELETE",
+      Map("numDeletedRows" -> deleted.toString,
+          "numRewrittenFiles" -> touched.size.toString))(
+      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
     deleted
   }
 
@@ -3121,16 +2943,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           dvCount = f.dvCount + perFile(canonPath(f.path))))
         val updated = perFile.values.sum
         val cdcFiles = cdc
-        commitDml(s,
+        commit(s,
           TxnInfo(readWholeTable = false, Some(pred),
             candidates.map(_.path).toSet, touched.map(_.path).toSet),
-          (v, ts) =>
-            Seq(CommitInfo(v, ts, "UPDATE",
-              Map("numUpdatedRows" -> updated.toString,
-                  "numRewrittenFiles" -> "0",
-                  "numDeletionVectors" -> touched.size.toString))) ++
-            identityMeta(s, adds) ++
-            touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ adds ++ cdcFiles)
+          "UPDATE",
+          Map("numUpdatedRows" -> updated.toString,
+              "numRewrittenFiles" -> "0",
+              "numDeletionVectors" -> touched.size.toString))(
+          (_, _) => identityMeta(s, adds) ++ reAdds ++ adds ++ cdcFiles)
         return updated
       }
       // cap exceeded — fall through to copy-on-write
@@ -3162,15 +2982,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         s.metaData), s.metaData)
     val updated = perFileTouched.map(_.getLong(1)).sum
     val cdcFiles = cdc
-    commitDml(s,
+    commit(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "UPDATE",
-          Map("numUpdatedRows" -> updated.toString,
-              "numRewrittenFiles" -> touched.size.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdcFiles)
+      "UPDATE",
+      Map("numUpdatedRows" -> updated.toString,
+          "numRewrittenFiles" -> touched.size.toString))(
+      (_, _) => identityMeta(s, adds) ++ adds ++ cdcFiles)
     updated
   }
 
@@ -3184,9 +3002,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * rebases trivially instead of surfacing a raw
     * ConcurrentModificationException. */
   private def commitNoop(s: Snapshot, op: String): Unit =
-    commitDml(s, TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(CommitInfo(v, ts, op,
-        Map("numDeletedRows" -> "0", "numRewrittenFiles" -> "0"))))
+    commit(s, TxnInfo.Blind, op,
+      Map("numDeletedRows" -> "0", "numRewrittenFiles" -> "0"))((_, _) => Nil)
 
   private def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
 
@@ -3506,14 +3323,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
             dvPath = Some(dvPathOf(canonPath(f.path))),
             dvCount = f.dvCount + perFile.getOrElse(canonPath(f.path), 0L)))
           val cdc = writeCdcFiles(s, mergeCdc(affected, inserts))
-          commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched),
-            (v, ts) =>
-              Seq(CommitInfo(v, ts, "MERGE",
-                Map("numTargetFilesRewritten" -> "0",
-                    "numDeletionVectors" -> touched.size.toString,
-                    "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-              metaActions(adds) ++
-              touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ adds ++ cdc)
+          commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched), "MERGE",
+            Map("numTargetFilesRewritten" -> "0",
+                "numDeletionVectors" -> touched.size.toString,
+                "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+            (_, _) => metaActions(adds) ++ reAdds ++ adds ++ cdc)
           true
         }
       }
@@ -3528,13 +3342,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         val adds = stampRowIds(s, writeDataMapped(out, s.metaData))
         val cdc = writeCdcFiles(s,
           mergeCdc(withAction.filter(col("__action") >= 0), inserts))
-        commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched),
-          (v, ts) =>
-            Seq(CommitInfo(v, ts, "MERGE",
-              Map("numTargetFilesRewritten" -> touched.size.toString,
-                  "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-            metaActions(adds) ++
-            touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+        commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched), "MERGE",
+          Map("numTargetFilesRewritten" -> touched.size.toString,
+              "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+          (_, _) => metaActions(adds) ++ adds ++ cdc)
       }
     } else {
       // No affected target rows: pure insert path.
@@ -3543,12 +3354,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         schema, s.metaData.properties)
       val adds = stampRowIds(s, writeDataMapped(
         enforceConstraints(conform(inserts, schema), s.metaData), s.metaData))
-      commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, Nil),
-        (v, ts) =>
-          Seq(CommitInfo(v, ts, "MERGE",
-            Map("numTargetFilesRewritten" -> "0",
-                "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-          metaActions(adds) ++ adds)
+      commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, Nil), "MERGE",
+        Map("numTargetFilesRewritten" -> "0",
+            "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
+        (_, _) => metaActions(adds) ++ adds)
     }
   }
 

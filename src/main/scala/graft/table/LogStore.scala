@@ -41,6 +41,12 @@ import scala.jdk.CollectionConverters._
   * [[CheckpointCodec]] directly (bulk data-plane IO, same as Delta) —
   * only their PUBLISH rides this seam, which is where atomicity lives.
   */
+/** A LogStore broke its publish contract (lost visibility, non-atomic
+  * publish). Still a `ConcurrentModificationException` for existing catch
+  * sites, but no retry can fix it, so the commit path never retries one. */
+final class LogStoreContractException(msg: String)
+    extends java.util.ConcurrentModificationException(msg)
+
 trait LogStore {
   /** All lines of `p` (no trailing-newline entry). */
   def readLines(p: Path): Seq[String]

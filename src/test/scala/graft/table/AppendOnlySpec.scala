@@ -62,9 +62,18 @@ class AppendOnlySpec extends SparkTestBase {
   test("REPLACE TABLE AS SELECT refuses on an append-only table") {
     val t = mk()
     intercept[UnsupportedOperationException] {
-      t.commitReplaceTable(Nil, t.snapshot.schema, Nil, Map.empty)
+      t.commitReplaceTable(t.snapshot, Nil, t.snapshot.schema, Nil, Map.empty)
     }
     assert(t.toDF.count() === 2, "no rows may be dropped")
+  }
+
+  /** Commit a protocol naming a writer feature this build lacks. */
+  private def addUnknownWriterFeature(t: GraftTable): Unit = {
+    val p = t.snapshot.protocol
+    val unknown = p.copy(writerFeatures = p.writerFeatures :+ "fromTheFuture")
+    t.log.commit(t.latestVersion + 1, Seq(unknown,
+      CommitInfo(t.latestVersion + 1, t.log.nextTimestamp(), "SET TBLPROPERTIES",
+        Map.empty)))
   }
 
   test("writer feature gates foreign writers; UNSET is the escape hatch") {
@@ -72,11 +81,7 @@ class AppendOnlySpec extends SparkTestBase {
     assert(t.snapshot.protocol.writerFeatures.contains("appendOnly"))
     // a build that predates the feature must refuse to write at all
     intercept[GraftProtocolException] {
-      val p = t.snapshot.protocol
-      val unknown = p.copy(writerFeatures = p.writerFeatures :+ "fromTheFuture")
-      t.log.commit(t.latestVersion + 1, Seq(unknown,
-        CommitInfo(t.latestVersion + 1, t.log.nextTimestamp(), "SET TBLPROPERTIES",
-          Map.empty)))
+      addUnknownWriterFeature(t)
       t.append(df((5, "e")))
     }
     // escape hatch on a fresh table: unset re-enables destructive writes
@@ -84,5 +89,14 @@ class AppendOnlySpec extends SparkTestBase {
     t2.removeProperty("appendOnly")
     assert(t2.delete(col("id") === 1) === 1L)
     assert(t2.toDF.count() === 1)
+  }
+
+  test("writer feature gates DDL too") {
+    val t = mk()
+    addUnknownWriterFeature(t)
+    val v = t.latestVersion
+    intercept[GraftProtocolException](t.setProperty("some.prop", "x"))
+    intercept[GraftProtocolException](t.addColumn("extra", StringType))
+    assert(t.latestVersion === v, "a gated table must not be altered")
   }
 }

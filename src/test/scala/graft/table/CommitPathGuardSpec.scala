@@ -1,0 +1,67 @@
+package graft.table
+
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the table layer to one commit path: in the table sources, a log
+  * publish (`log.commit(`), a `CommitInfo(` or a `RemoveFile(` may only be
+  * built inside `OptimisticCommit.commit` or one of the version-0 creates
+  * and ADOPT, which have no prior version to conflict with. Comments are
+  * skipped; the enclosing method is the nearest member-level `def` above. */
+class CommitPathGuardSpec extends AnyFunSuite {
+
+  private val allowed = Map(
+    "GraftTable.scala" -> Set("create", "createStaged", "cloneTo", "convert", "adoptDelta"),
+    "Conflicts.scala" -> Set("commit"))
+
+  private val construction = """(?i:log)\.commit\(|\bCommitInfo\(|\bRemoveFile\(""".r
+  private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
+
+  /** `src` with every comment blanked out, line breaks kept. */
+  private def withoutComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < src.length) {
+      if (at("//")) {
+        while (i < src.length && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out += '\n'; i += 1 }
+        } while (depth > 0 && i < src.length)
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        out ++= src.substring(i, end + 3); i = end + 3
+      } else if (at("'\"'")) {
+        out ++= "'\"'"; i += 3
+      } else if (src(i) == '"') {
+        out += '"'; i += 1
+        while (src(i) != '"') {
+          if (src(i) == '\\') { out += src(i); i += 1 }
+          out += src(i); i += 1
+        }
+        out += '"'; i += 1
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  for ((file, methods) <- allowed) test(s"$file builds commits only in ${methods.toSeq.sorted.mkString(", ")}") {
+    val path = Paths.get("src/main/scala/graft/table", file)
+    assert(Files.isRegularFile(path), s"run from the repository root: $path")
+    var enclosing = "<none>"
+    val strays = withoutComments(Files.readString(path)).split("\n", -1)
+      .zipWithIndex.flatMap { case (line, i) =>
+        memberDef.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        construction.findAllIn(line).toSeq
+          .filterNot(_ => methods(enclosing))
+          .map(hit => s"$file:${i + 1} in $enclosing: $hit")
+      }
+    assert(strays.isEmpty,
+      s"commit actions built outside the one commit path:\n${strays.mkString("\n")}")
+  }
+}

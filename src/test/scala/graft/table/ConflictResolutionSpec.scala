@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 /** Multi-writer LOGICAL conflict resolution (Delta VLDB 2020 §3.2): a lost
   * commit race rebases when the winner is provably disjoint from what this
   * transaction read/removed, and raises a TYPED conflict otherwise. The
-  * deterministic tests drive `commitDml` directly with a deliberately
+  * deterministic tests drive `commit` directly with a deliberately
   * stale snapshot (the winner committed in between); the racing tests pin
   * the end-to-end behavior under real thread interleavings. */
 class ConflictResolutionSpec extends SparkTestBase {
@@ -34,16 +34,15 @@ class ConflictResolutionSpec extends SparkTestBase {
     (t, a, b)
   }
 
-  private def noopActions(op: String)(v: Long, ts: Long): Seq[Action] =
-    Seq(CommitInfo(v, ts, op, Map.empty))
+  private def noActions(v: Long, ts: Long): Seq[Action] = Nil
 
   test("lost race vs a stats-disjoint append rebases and lands") {
     val (t, a, _) = twoFiles()
     val stale = t.snapshot
     t.append(df((200, "w")))                    // winner: ids disjoint from pred
-    t.commitDml(stale,
+    t.commit(stale,
       TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-      (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+      "DELETE", Map.empty)(noActions)
     assert(t.latestVersion === stale.version + 2, "rebase commits at the new head")
     assert(!t.snapshot.files.map(_.path).contains(a))
     assert(t.toDF.filter(col("id") === 200).count() === 1, "winner's append intact")
@@ -54,9 +53,9 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.append(df((2, "dup")))                    // overlaps pred range [0,4]
     intercept[ConcurrentAppendException] {
-      t.commitDml(stale,
+      t.commit(stale,
         TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+        "DELETE", Map.empty)(noActions)
     }
   }
 
@@ -65,9 +64,9 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.delete(col("id") === 1)                   // winner rewrites file A
     intercept[ConcurrentDeleteDeleteException] {
-      t.commitDml(stale,
+      t.commit(stale,
         TxnInfo(readWholeTable = false, Some(col("id") === 3), Set(a), Set(a)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+        "DELETE", Map.empty)(noActions)
     }
   }
 
@@ -77,9 +76,9 @@ class ConflictResolutionSpec extends SparkTestBase {
     t.delete(col("id") === 1)                   // winner rewrites file A
     intercept[ConcurrentDeleteReadException] {
       // this txn read A and B but only removes B
-      t.commitDml(stale,
+      t.commit(stale,
         TxnInfo(readWholeTable = false, None, Set(a, b), Set(b)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(b, ts)))
+        "DELETE", Map.empty)(noActions)
     }
   }
 
@@ -88,16 +87,16 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.setProperty("some.prop", "x")             // metaData-changing commit
     intercept[MetadataChangedException] {
-      t.commitDml(stale,
+      t.commit(stale,
         TxnInfo(readWholeTable = false, None, Set(a), Set(a)),
-        noopActions("DELETE"))
+        "DELETE", Map.empty)(noActions)
     }
     val stale2 = t.snapshot
     t.setProperty("deletionVectors.enabled", "true") // protocol upgrade commit
     intercept[ProtocolChangedException] {
-      t.commitDml(stale2,
+      t.commit(stale2,
         TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-        noopActions("DELETE"))
+        "DELETE", Map.empty)(noActions)
     }
   }
 
@@ -106,9 +105,9 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.append(df((300, "w")))
     intercept[ConcurrentAppendException] {
-      t.commitDml(stale,
+      t.commit(stale,
         TxnInfo(readWholeTable = true, None, Set.empty, Set.empty),
-        noopActions("MERGE"))
+        "MERGE", Map.empty)(noActions)
     }
   }
 
@@ -116,11 +115,68 @@ class ConflictResolutionSpec extends SparkTestBase {
     val (t, a, _) = twoFiles()
     val stale = t.snapshot
     (0 until 3).foreach(i => t.append(df((400 + i, "w"))))
-    t.commitDml(stale,
+    t.commit(stale,
       TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-      (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+      "DELETE", Map.empty)(noActions)
     assert(t.latestVersion === stale.version + 4)
     assert(t.toDF.filter(col("id") >= 400).count() === 3)
+  }
+
+  /** A metadata-only commit (ADD CONSTRAINT's shape) based on `s`. */
+  private def addConstraintOn(t: GraftTable, s: Snapshot): Option[Long] = {
+    val meta = s.metaData.copy(
+      constraints = s.metaData.constraints + ("nonneg" -> "id >= 0"))
+    t.commit(s, TxnInfo.wholeTable(s), "ADD CONSTRAINT", Map.empty)((_, _) => Seq(meta))
+  }
+
+  test("metadata-only DDL on a stale snapshot loses to a winner's append") {
+    // the constraint was validated against rows that did not include the
+    // winner's, so rebasing past the append would skip validating them
+    val (t, _, _) = twoFiles()
+    val stale = t.snapshot
+    t.append(df((500, "w")))
+    intercept[ConcurrentAppendException](addConstraintOn(t, stale))
+    assert(t.latestVersion === stale.version + 1)
+    assert(t.snapshot.metaData.constraints.isEmpty)
+  }
+
+  test("metadata-only DDL rebases past a zero-row DELETE") {
+    val (t, _, _) = twoFiles()
+    val stale = t.snapshot
+    assert(t.delete(col("id") === 999) === 0L)  // winner changes nothing
+    assert(addConstraintOn(t, stale) === Some(stale.version + 2))
+    assert(t.snapshot.metaData.constraints.contains("nonneg"))
+  }
+
+  test("REPLACE on a stale snapshot loses to a winner that enabled appendOnly") {
+    val (t, _, _) = twoFiles()
+    val stale = t.snapshot
+    t.setProperty("appendOnly", "true")
+    intercept[GraftConcurrentWriteException] {
+      t.commitReplaceTable(stale, Nil, stale.schema, Nil, Map.empty)
+    }
+    assert(t.latestVersion === stale.version + 1)
+    assert(t.toDF.count() === 10, "no rows may be dropped")
+  }
+
+  test("REPLACE over a store that drops publishes fails, never retries forever") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    spark.conf.set(LogStore.ConfKey, "graft.table.DroppingPublishStore")
+    try {
+      val (t, _, _) = twoFiles()
+      val s = t.snapshot
+      DroppingPublishStore.dropping = true
+      try failAfter(60.seconds) {
+        intercept[LogStoreContractException] {
+          t.commitReplaceTable(s, Nil, s.schema, Nil, Map.empty)
+        }
+      } finally DroppingPublishStore.dropping = false
+      assert(t.latestVersion === s.version)
+      assert(t.toDF.count() === 10)
+    } finally spark.conf.unset(LogStore.ConfKey)
   }
 
   test("end-to-end race: appends vs predicate-disjoint DELETE — both land, no errors") {
@@ -252,4 +308,16 @@ class ConflictResolutionSpec extends SparkTestBase {
     assert(t.toDF.select("rid").distinct().count() == n,
       s"identity ids collided under contention (${retries.get()} retries)")
   }
+}
+
+/** Top-level so the LogStore conf can load it: a conforming store that,
+  * while `dropping` is set, acknowledges publishes without making them
+  * visible (the lost-visibility contract violation). */
+class DroppingPublishStore extends ConfSelectedStore {
+  override def publishIfAbsent(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+    if (!DroppingPublishStore.dropping) super.publishIfAbsent(src, dst)
+}
+
+object DroppingPublishStore {
+  @volatile var dropping = false
 }

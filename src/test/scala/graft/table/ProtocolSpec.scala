@@ -97,7 +97,7 @@ class ProtocolSpec extends SparkTestBase {
     val t = GraftTable.create(spark, tmpDir("txn-"), df((1, "a")))
     (0 until 12).foreach { epoch =>
       val adds = FileOps.writeDataFiles(df((100 + epoch, "s")), t.path)
-      t.commitStreamingAppend(adds, "queryA", epoch.toLong)
+      t.commitStreamingAppend(t.snapshot, adds, "queryA", epoch.toLong)
     }
     assert(t.snapshot.transactions.get("queryA").contains(11L))
     // checkpoint at v10 exists; a fresh log instance folds from it
