@@ -110,13 +110,41 @@ object FileOps extends Serializable {
       if (g.depth == 0) sess.conf.set(TsKey, g.prev)
     }
 
+  /** Stage one Spark write under `root/.<tag>-<uuid>` and place its output:
+    * `write` writes parquet into the staging dir it is given; `place` gets
+    * each staged part file (sorted by path), its staging-relative dir (""
+    * or "k=v/...") and that dir's Hive partition values, unescaped. It
+    * moves the part into the table and returns what the caller records;
+    * None leaves the part behind. The staging dir is then removed
+    * best-effort (`_SUCCESS`, `.crc`, skipped parts). Data files, `_cdc/`
+    * sidecars and `_dv/` sidecars are all written through here. */
+  def staged[A](root: String, tag: String)(write: String => Unit)(
+      place: (Path, String, Map[String, String]) => Option[A]): Seq[A] = {
+    val staging = Paths.get(root, s".$tag-${UUID.randomUUID()}")
+    write(staging.toString)
+    def unescape(s: String): String =
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
+    val placed = Files.walk(staging).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .toSeq.sortBy(_.toString)
+      .flatMap { part =>
+        val relDir = staging.relativize(part.getParent).toString
+        place(part, relDir, relDir.split('/').filter(_.contains("=")).map { seg =>
+          val Array(k, v) = seg.split("=", 2)
+          unescape(k) -> unescape(v)
+        }.toMap)
+      }
+    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(p =>
+      try Files.deleteIfExists(p) catch { case _: Exception => () })
+    placed
+  }
+
   /** Write `df` as parquet files inside `tablePath` (Hive-style partition
     * dirs when `partitionCols` is non-empty), returning AddFiles with footer
     * stats + partition values. Zero-row part files are dropped. */
   def writeDataFiles(df: DataFrame, tablePath: String,
                      partitionCols: Seq[String] = Nil,
                      writeOptions: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val staging = Paths.get(tablePath, s".staging-${UUID.randomUUID()}")
     val writer0 = df.write.options(writeOptions)
     val writer = if (partitionCols.nonEmpty) writer0.partitionBy(partitionCols: _*)
                  else writer0
@@ -129,50 +157,37 @@ object FileOps extends Serializable {
     // no per-write option, and ParquetFileFormat.prepareWrite overwrites any
     // option from SQLConf, so the session conf is the only lever.)
     val sess = df.sparkSession
-    enterMicros(sess)
-    try writer.parquet(staging.toString)
-    finally exitMicros(sess)
-    val parts = Files.walk(staging).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString)
     // move first (cheap metadata renames), then harvest footer stats — an
     // executor job beyond a small-commit threshold: stats are one file
     // open + footer parse PER FILE, and a large initial load writing
     // thousands of files must not serialize those round-trips on the
     // driver (the same shape CONVERT's harvest uses)
-    val moved: Seq[(String, Map[String, String])] = parts.map { part =>
-      val relDir = staging.relativize(part.getParent) // "" or "lang=en/..."
-      val partVals = relDir.toString.split('/').filter(_.contains("=")).map { seg =>
-        val Array(k, v) = seg.split("=", 2)
-        // partition dir names carry Spark's Hive-style percent-escaping
-        k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(v)
-      }.toMap
-      val relTarget =
-        (if (relDir.toString.isEmpty) "" else s"$relDir/") +
-          s"part-${UUID.randomUUID()}.parquet"
-      val target = Paths.get(tablePath, relTarget)
-      Files.createDirectories(target.getParent)
-      Files.move(part, target)
-      (relTarget, partVals)
-    }
+    val moved: Seq[(String, Map[String, String])] =
+      staged(tablePath, "staging") { dir =>
+        enterMicros(sess)
+        try writer.parquet(dir)
+        finally exitMicros(sess)
+      } { (part, relDir, partVals) =>
+        val relTarget =
+          (if (relDir.isEmpty) "" else s"$relDir/") + s"part-${UUID.randomUUID()}.parquet"
+        val target = Paths.get(tablePath, relTarget)
+        Files.createDirectories(target.getParent)
+        Files.move(part, target)
+        Some((relTarget, partVals))
+      }
     val statsByRel: Map[String, (Long, Long, Long, Map[String, String],
         Map[String, String], Map[String, Long])] =
-      harvestStats(df.sparkSession, tablePath, moved.map(_._1))
+      harvestStats(sess, tablePath, moved.map(_._1))
         .map { case (rel, rows, size, mtime, mins, maxs, nulls) =>
           rel -> ((rows, size, mtime, mins, maxs, nulls))
         }.toMap
-    val adds = moved.flatMap { case (relTarget, partVals) =>
+    moved.flatMap { case (relTarget, partVals) =>
       val (rows, size, mtime, mins, maxs, nulls) = statsByRel(relTarget)
       if (rows == 0L) { Files.delete(Paths.get(tablePath, relTarget)); None }
       else Some(AddFile(relTarget, size,
         mtime, rows, mins, maxs, partVals,
         nullCounts = nulls))
     }
-    // best-effort cleanup of the staging dir (_SUCCESS, .crc, ...)
-    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    adds
   }
 
   /** Footer stats for a relative file list under `root` — THE shared

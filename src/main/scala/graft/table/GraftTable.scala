@@ -22,7 +22,10 @@ import org.apache.spark.sql.types._
   * Scale design: reads plan `spark.read.parquet(liveFiles)` — split planning,
   * pushdown and pruning are Spark's. DML rewrites only files that provably
   * contain affected rows (semi-join file discovery), so a MERGE touching 1%%
-  * of files rewrites 1%% of the table, not all of it.
+  * of files rewrites 1%% of the table, not all of it. DELETE, UPDATE, MERGE
+  * and replaceWhere each find their touched files and then hand them to
+  * one step, `rewriteRows`, which alone chooses between tombstoning rows
+  * with deletion vectors and rewriting the files.
   */
 final class GraftTable private (val spark: SparkSession, val path: String)
     extends OptimisticCommit {
@@ -877,14 +880,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   /** Stamp fresh base row ids onto a commit's new AddFiles, allocating
     * sequentially above the snapshot's high-water mark. Files already
     * carrying a base id (DV re-adds, RESTORE, CLONE) keep it — their rows
-    * were identified when the file was first added. */
+    * were identified when the file was first added — and so do files whose
+    * footer counts no null materialized `_row_id` (rewritten rows that
+    * carry their ids), so only fresh rows move the high-water mark. */
   private def stampRowIds(s: Snapshot, adds: Seq[AddFile]): Seq[AddFile] =
     if (!rowTrackingEnabled(s.metaData)) adds
     else {
       var hwm = s.metaData.properties.get(GraftTable.RowIdHwmKey)
         .map(_.toLong).getOrElse(-1L)
       adds.map { a =>
-        if (a.baseRowId.isDefined) a
+        if (a.baseRowId.isDefined || a.nullCounts.get(GraftTable.RowIdCol).contains(0L)) a
         else {
           val base = hwm + 1
           hwm += a.numRecords
@@ -930,41 +935,24 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   def overwriteWhere(pred: Column, df: DataFrame): Unit = {
     val s = snapshot
     requireNotAppendOnly(s.metaData, "replaceWhere OVERWRITE")
-    val conformed = enforceConstraints(conform(assignIdentity(df, s), s.schema), s.metaData)
+    // CHECK constraints are enforced by rewriteRows' write
+    val conformed = conform(assignIdentity(df, s), s.schema)
     val escapees = conformed.filter(!coalesce(pred, lit(false))).limit(1).count()
     require(escapees == 0,
       s"replaceWhere: replacement rows must all satisfy the predicate $pred")
-    val candidates = prunedFiles(s, pred)
     // files with at least one matching row are replaced; their non-matching
-    // rows (partial overlap) are carried into the rewrite
-    val touchedNames = readFilesMeta(s, candidates).filter(pred)
-      .select(col("__fname")).distinct().collect().map(_.getString(0)).toSet
-    val touched = s.files.filter(f => touchedNames.contains(canonPath(f.path)))
-    // carried (out-of-scope) rows keep their materialized row ids; the
-    // replacement frame is all-fresh (null ids for the union)
-    val carried = readFilesMeta(s, touched).filter(!coalesce(pred, lit(false)))
-      .drop("__fname", "__pos")
-    val conformedR =
-      if (carried.columns.contains(GraftTable.RowIdCol))
-        conformed.withColumn(GraftTable.RowIdCol, lit(null).cast(LongType))
-      else conformed
-    val adds = stampRowIds(s, writeDataMapped(carried.unionByName(conformedR), s.metaData))
-    // operator-level CDC: replaced rows (= matching rows of touched files)
-    // as deletes, the replacement frame as inserts; carried rows are
-    // unchanged and emit nothing
-    val cdc = writeCdcFiles(s,
-      readFilesMeta(s, touched).filter(pred).drop("__fname", "__pos")
-        .drop(GraftTable.RowIdCol)
-        .withColumn("_change_type", lit("delete"))
-        .unionByName(conformed.withColumn("_change_type", lit("insert"))))
-    commit(s,
+    // rows (partial overlap) are carried over
+    val matched = coalesce(pred, lit(false))
+    val candidates = prunedFiles(s, pred)
+    val perFile = matchesPerFile(s, candidates, matched)
+    val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
+    rewriteRows(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      "OVERWRITE",
-      Map("predicate" -> pred.toString,
-          "numRewrittenFiles" -> touched.size.toString,
-          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
-      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
+      "OVERWRITE", s.metaData, touched, perFile, predicateRows(s, touched, matched, Map.empty),
+      Some(conformed), deletesOnly = true, "numRewrittenFiles")(
+      (adds, _) => Map("predicate" -> pred.toString,
+        "numOutputRows" -> adds.map(_.numRecords).sum.toString))
     autoCompact()
   }
 
@@ -1047,6 +1035,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       "columnMapping.mode=id cannot be enabled on an existing table " +
         "(files written before it carry no field ids); use name mode, " +
         "or adopt an id-mode delta table in place")
+    // the tombstone cap is read by every merge-on-read DML: a malformed
+    // value must fail here, not in every later DELETE/UPDATE/MERGE
+    require(key != "deletionVectors.maxTombstones" ||
+        value.toLongOption.exists(_ >= 0),
+      s"deletionVectors.maxTombstones must be a non-negative integer, got '$value'")
     val meta = s.metaData.copy(properties = s.metaData.properties + (key -> value))
     val feature: Option[String] = key match {
       case "deletionVectors.enabled" if value.equalsIgnoreCase("true") =>
@@ -2610,7 +2603,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * vacuum like any unreferenced file. */
   private def writeCdcFiles(s: Snapshot, change: => DataFrame): Seq[CdcFile] = {
     if (!cdfEnabled(s.metaData)) return Nil
-    val staging = Paths.get(path, s".cdcstage-${UUID.randomUUID()}")
     // Under delta write-compat on a PARTITIONED table the sidecars take
     // delta's AddCDCFile shape: the staging write partitions by the table's
     // partition columns (Spark moves them out of the file into `k=v` dirs,
@@ -2654,26 +2646,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           .fromJson(s.metaData.schemaString).asInstanceOf[StructType]
         partCols.map(ColumnMapping.physicalOf(schema, _))
       }
-    if (deltaShape) changeW.write.partitionBy(physParts: _*).parquet(staging.toString)
-    else changeW.write.parquet(staging.toString)
     Files.createDirectories(Paths.get(path, "_cdc"))
-    val parts = Files.walk(staging).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq
-    def dirValues(p: java.nio.file.Path): Map[String, String] =
-      staging.relativize(p).toString.split('/').dropRight(1)
-        .filter(_.contains("=")).map { seg =>
-          val i = seg.indexOf('=')
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.take(i)) ->
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.drop(i + 1))
-        }.toMap
-    val actions = parts.flatMap { p =>
+    FileOps.staged(path, "cdcstage") { dir =>
+      if (deltaShape) changeW.write.partitionBy(physParts: _*).parquet(dir)
+      else changeW.write.parquet(dir)
+    } { (p, _, pv) =>
       val (rows, _, _, _) = FileOps.footerStats(p)
       if (rows == 0L) None
       else {
-        val pv = if (deltaShape) dirValues(p) else Map.empty[String, String]
         val rel = s"_cdc/cdc-${UUID.randomUUID()}.parquet"
         val target = Paths.get(path, rel)
         Files.move(p, target)
@@ -2681,63 +2661,134 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         Some(CdcFile(rel, rows, Files.size(target), pv))
       }
     }
-    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    actions
   }
 
-  /** Merge-on-read DELETE: instead of rewriting every touched file
-    * copy-on-write, commit a tombstone sidecar listing the deleted
-    * (file, row_index) positions and re-add the SAME data files pointing
-    * at it — a 1-row delete on a 100 TB table writes kilobytes, not a
-    * 128 MB rewrite. Prior tombstones of the touched files ride into the
-    * new sidecar (one live sidecar per file), so scans resolve exactly one
-    * DV per file; OPTIMIZE rebases files and purges DVs.
+  /** The one row-level write step of DELETE, UPDATE, MERGE and
+    * replaceWhere, and the only place that chooses between merge-on-read
+    * and copy-on-write (Delta Lake's deletion vectors vs file rewrites).
     *
-    * Returns None when the resulting tombstone set would exceed
-    * `deletionVectors.maxTombstones` (default 4M) — a DELETE matching
-    * billions of rows must not funnel through the single-task sidecar
-    * write, and a tombstone set that large makes every subsequent read
-    * worse than the rewrite it avoided; the caller falls back to
-    * copy-on-write (the same trade Delta makes). */
-  private def deleteWithDv(s: Snapshot, pred: Column): Option[Long] = {
-    val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "DELETE"); return Some(0L) }
-    // positions of matching rows, with existing DVs already applied (a
-    // re-delete of a tombstoned row must not double-count)
-    val newPos = readFilesMeta(s, candidates)
-      .filter(coalesce(pred, lit(false)))
-      .select(col("__fname"), col("__pos"))
-    val perFileNew = newPos.groupBy("__fname").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFileNew.isEmpty) { commitNoop(s, "DELETE"); return Some(0L) }
-    val touched = s.files.filter(f => perFileNew.contains(canonPath(f.path)))
-    val maxTombstones = s.metaData.properties
-      .get("deletionVectors.maxTombstones").map(_.toLong).getOrElse(4L * 1000 * 1000)
-    if (perFileNew.values.sum + touched.map(_.dvCount).sum > maxTombstones)
-      return None
-    // prior tombstones of touched files merge into the new sidecar; new
-    // positions are disjoint from prior ones by construction
-    val allPos = dvEntries(s, touched).map(_.unionByName(newPos)).getOrElse(newPos)
-    val dvPathOf = writeDvStore(s.metaData, allPos, touched)
-    val deleted = perFileNew.values.sum
-    val reAdds = touched.map(f => Actions.untagReAdd(f).copy(
-      dvPath = Some(dvPathOf(canonPath(f.path))),
-      dvCount = f.dvCount + perFileNew(canonPath(f.path))))
-    // operator-level CDC: the newly tombstoned rows are exactly the
-    // matched rows — tag them directly
-    val cdc = writeCdcFiles(s, readFilesMeta(s, touched)
-      .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
-      .drop(GraftTable.RowIdCol)
-      .withColumn("_change_type", lit("delete")))
-    commit(s,
-      TxnInfo(readWholeTable = false, Some(pred),
-        candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      "DELETE",
-      Map("numDeletedRows" -> deleted.toString,
-          "numRewrittenFiles" -> "0",
-          "numDeletionVectors" -> touched.size.toString))((_, _) => reAdds ++ cdc)
-    Some(deleted)
+    * `rows` covers every live row of the `touched` files and carries
+    * `__fname`/`__pos` provenance, an `__affected` flag (the op changes or
+    * removes the row), a `__deleted` flag (the row has no post-image), the
+    * pre-image as the `__pre` struct and the post-image in the schema's
+    * columns (plus `_row_id` under row tracking). `affected` counts each
+    * touched file's affected rows, keyed by [[canonPath]]; `inserts` are
+    * fresh rows; `deletesOnly` says no affected row has a post-image.
+    * Returns the number of affected rows the commit applied.
+    *
+    *  - Tombstone when `deletionVectors.enabled` is on and the touched
+    *    files' existing tombstones plus the affected rows stay within
+    *    `deletionVectors.maxTombstones` (default 4M): the affected
+    *    positions merge with the prior ones into one DV store (one live DV
+    *    per file), the touched files are re-added pointing at it, and only
+    *    the post-images of affected rows plus the inserts are written — a
+    *    1-row change on a 100 TB table writes kilobytes. The positions,
+    *    the post-images and the CDC are separate jobs, so when `rows` is
+    *    not deterministic (a non-deterministic predicate or SET; every
+    *    MERGE frame, whose source may change between reads) the affected
+    *    rows are pinned (local checkpoint) and all three, and the per-file
+    *    tombstone counts, come from one evaluation: no row is tombstoned
+    *    in one job and loses or duplicates its post-image in another.
+    *  - Rewrite otherwise: every non-deleted row of the touched files, plus
+    *    the inserts, goes to new files. Past the cap a tombstone set costs
+    *    every later read more than the rewrite it avoids, and the DV write
+    *    funnels through one task.
+    *
+    * Both modes take their CDC from the same frame: deleted rows as
+    * `delete`, other affected rows as `update_preimage`/`update_postimage`
+    * pairs, inserts as `insert`. A commit that touches no file records no
+    * sidecar: `changes()` reads its inserts from the added files. Base
+    * row ids (and the high-water mark) are allocated only to written files
+    * holding fresh rows ([[stampRowIds]]), so DELETE and UPDATE commits
+    * carry no MetaData and do not conflict with concurrent writers, and a
+    * row's id does not depend on the mode. `base` is the metaData
+    * the commit's own MetaData action is compared against (MERGE passes the
+    * one before schema evolution). The op's `metrics(adds, n)`, `n` the
+    * affected rows applied, gain `filesMetric` (files rewritten, 0 when
+    * tombstoning) and, when tombstoning, `numDeletionVectors`. */
+  private def rewriteRows(s: Snapshot, info: TxnInfo, op: String, base: MetaData,
+      touched: Seq[AddFile], affected: Map[String, Long], rows: DataFrame,
+      inserts: Option[DataFrame], deletesOnly: Boolean, filesMetric: String)(
+      metrics: (Seq[AddFile], Long) => Map[String, String]): Long = {
+    val maxTombstones = s.metaData.properties.get("deletionVectors.maxTombstones")
+      .map(_.toLong).getOrElse(4L * 1000 * 1000)
+    val tombstone = touched.nonEmpty && dvEnabled(s.metaData) &&
+      affected.values.sum + touched.map(_.dvCount).sum <= maxTombstones
+    val pin = tombstone && !rows.queryExecution.analyzed.deterministic
+    // lazy: the count below is the job that evaluates and pins the rows
+    val hit =
+      if (pin) rows.filter(col("__affected")).localCheckpoint(false)
+      else rows.filter(col("__affected"))
+    val counts =
+      if (!pin) affected
+      else hit.groupBy("__fname").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val updated = hit.filter(!col("__deleted"))
+    val reAdds =
+      if (!tombstone) Nil
+      else {
+        val positions = hit.select(col("__fname"), col("__pos"))
+        val dvPathOf = writeDvStore(s.metaData,
+          dvEntries(s, touched).map(_.unionByName(positions)).getOrElse(positions), touched)
+        touched.map { f =>
+          val key = canonPath(f.path)
+          Actions.untagReAdd(f).copy(dvPath = Some(dvPathOf(key)),
+            dvCount = f.dvCount + counts.getOrElse(key, 0L))
+        }
+      }
+    val kept =
+      if (touched.isEmpty || (tombstone && deletesOnly)) None
+      else Some((if (tombstone) updated else rows.filter(!col("__deleted")))
+        .drop("__fname", "__pos", "__affected", "__deleted", "__pre"))
+    // stamped before the stats cap drops the `_row_id` null counts
+    val adds = (kept ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
+        enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
+      .getOrElse(Nil)
+    val cols = s.schema.fieldNames.toSeq.map(col)
+    val cdc =
+      if (touched.isEmpty) Nil
+      else writeCdcFiles(s, (
+        Seq(hit.select(col("__pre.*"), when(col("__deleted"), lit("delete"))
+          .otherwise(lit("update_preimage")).as("_change_type"))) ++
+        (if (deletesOnly) Nil
+         else Seq(updated.select(cols :+ lit("update_postimage").as("_change_type"): _*))) ++
+        inserts.map(_.select(cols :+ lit("insert").as("_change_type"): _*))
+      ).reduce(_ unionByName _))
+    val meta = s.metaData.copy(properties = advancedProps(s.metaData, s.schema, adds))
+    val n = counts.values.sum
+    commit(s, info, op, metrics(adds, n) ++
+      Map(filesMetric -> (if (tombstone) 0 else touched.size).toString) ++
+      (if (tombstone) Map("numDeletionVectors" -> touched.size.toString) else Map.empty))(
+      (_, _) => (if (meta != base) Seq(meta) else Nil) ++ reAdds ++ adds ++ cdc)
+    n
+  }
+
+  /** Discovery pass of the predicate ops (DELETE, UPDATE, replaceWhere):
+    * each candidate file's count of live rows matching `matched`, keyed by
+    * [[canonPath]], files without a match left out. Rows a DV already hides
+    * are not counted, so a re-delete counts 0. */
+  private def matchesPerFile(s: Snapshot, candidates: Seq[AddFile],
+      matched: Column): Map[String, Long] =
+    if (candidates.isEmpty) Map.empty
+    else readFilesMeta(s, candidates).filter(matched).groupBy("__fname").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** [[rewriteRows]]' frame for a predicate op: rows of `touched` matching
+    * `matched` are affected; with an empty `set` they are deleted, else
+    * their post-image takes `set`'s SQL expressions over the row's current
+    * values (cast to the column type). Every row keeps its `_row_id`. */
+  private def predicateRows(s: Snapshot, touched: Seq[AddFile], matched: Column,
+      set: Map[String, String]): DataFrame = {
+    val in = readFilesMeta(s, touched).withColumn("__affected", matched)
+    val names = s.schema.fieldNames.toSeq
+    in.select(Seq(col("__fname"), col("__pos"), col("__affected"),
+        (if (set.isEmpty) col("__affected") else lit(false)).as("__deleted"),
+        struct(names.map(col): _*).as("__pre")) ++
+      names.map(c => set.get(c).map(u => when(col("__affected"),
+        expr(u).cast(s.schema(c).dataType)).otherwise(col(c)).as(c)).getOrElse(col(c))) ++
+      (if (in.columns.contains(GraftTable.RowIdCol)) Seq(col(GraftTable.RowIdCol))
+       else Nil): _*)
   }
 
   /** Tombstone store for one merge-on-read commit: fname → dvPath.
@@ -2747,7 +2798,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * packed descriptors instead — so a real delta reader applies the
     * SAME tombstones graft does (merge-on-read DML stays available under
     * compat). The compat branch collects positions driver-side: the set
-    * is hard-capped by `deletionVectors.maxTombstones` (callers fall
+    * is hard-capped by `deletionVectors.maxTombstones` (rewriteRows falls
     * back to copy-on-write beyond it), the same bound the native
     * single-sidecar funnel rides. */
   private def writeDvStore(meta: MetaData, entries: DataFrame,
@@ -2780,11 +2831,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   /** Write tombstone entries as ONE `_dv/` parquet sidecar (fname, pos),
     * sorted for locality; returns the table-relative path. Tombstone sets
     * are delta-sized — bounded by rows deleted since the last OPTIMIZE and
-    * hard-capped by `deletionVectors.maxTombstones` (deleteWithDv falls
+    * hard-capped by `deletionVectors.maxTombstones` (rewriteRows falls
     * back to copy-on-write beyond it) — so a single sorted file is the
     * right shape and the repartition(1) funnel is bounded. */
   private def writeDvSidecar(entries: DataFrame): String = {
-    val staging = Paths.get(path, s".dvstage-${UUID.randomUUID()}")
+    Files.createDirectories(Paths.get(path, "_dv"))
     // `rel = true` is the FORMAT MARKER (round 16): every entry in this
     // sidecar stores the data file's full table-relative path — a bare
     // basename here is a genuine root-level file, never a pre-round-15
@@ -2792,19 +2843,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // clone-escape form) and never raise the legacy-ambiguity refusal
     // on them; sidecars WITHOUT the column keep the conservative
     // suffix-matching + refusal semantics.
-    entries.select(col("__fname").as("fname"), col("__pos").cast(LongType).as("pos"),
-        lit(true).as("rel"))
-      .repartition(1).sortWithinPartitions("fname", "pos")
-      .write.parquet(staging.toString)
-    val part = Files.walk(staging).iterator().asScala
-      .find(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("empty DV sidecar write"))
-    val rel = s"_dv/dv-${UUID.randomUUID()}.parquet"
-    Files.createDirectories(Paths.get(path, "_dv"))
-    Files.move(part, Paths.get(path, rel))
-    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    rel
+    FileOps.staged(path, "dvstage") { dir =>
+      entries.select(col("__fname").as("fname"), col("__pos").cast(LongType).as("pos"),
+          lit(true).as("rel"))
+        .repartition(1).sortWithinPartitions("fname", "pos")
+        .write.parquet(dir)
+    } { (part, _, _) =>
+      val rel = s"_dv/dv-${UUID.randomUUID()}.parquet"
+      Files.move(part, Paths.get(path, rel))
+      Some(rel)
+    }.headOption.getOrElse(throw new IllegalStateException("empty DV sidecar write"))
   }
 
   /** Delta's `delta.appendOnly`: with TBLPROPERTIES `appendOnly = 'true'`
@@ -2824,53 +2872,19 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   def delete(pred: Column): Long = {
     val s = snapshot
     requireNotAppendOnly(s.metaData, "DELETE")
-    if (dvEnabled(s.metaData)) deleteWithDv(s, pred) match {
-      case Some(n) => return n
-      case None    => () // tombstone cap exceeded — fall through to CoW
-    }
+    val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "DELETE"); return 0L }
-    // provenance via _metadata (not input_file_name): stays defined when a
-    // file's deletion vector turns the read into a multi-source plan
-    val touchedNames = readFilesMeta(s, candidates).filter(pred)
-      .select(col("__fname")).distinct().collect()
-      .map(_.getString(0)).toSet
-    if (touchedNames.isEmpty) { commitNoop(s, "DELETE"); return 0L }
-
+    val perFile = matchesPerFile(s, candidates, matched)
+    if (perFile.isEmpty) { commitNoop(s, "DELETE"); return 0L }
     // path-level matching (normalized absolute spelling) — safe even for
     // converted/foreign layouts whose basenames collide across dirs
-    val touched = s.files.filter(f => touchedNames.contains(canonPath(f.path)))
-    // with row tracking, `keep` carries each surviving row's `_row_id`
-    // (readFilesMeta resolves it) and the rewrite MATERIALIZES it into the
-    // new files — the id survives the copy-on-write
-    val keep = readFilesMeta(s, touched).filter(!coalesce(pred, lit(false)))
-      .drop("__fname", "__pos")
-    // every surviving row carries a materialized id, so the new files need
-    // no base allocation (and therefore no hwm bump — the commit stays
-    // metadata-conflict-free for concurrent writers)
-    val adds = writeDataMapped(keep, s.metaData)
-    // foreign stat-less adds carry numRecords = -1 (unknown) — the
-    // difference arithmetic would go NEGATIVE on an adopted table's first
-    // delete; count the matched rows directly in that case (one extra
-    // bounded scan over the touched files, only on the unknown-stat path)
-    val deleted =
-      if (touched.forall(_.numRecords >= 0))
-        touched.map(_.numRecords).sum - adds.map(_.numRecords).sum
-      else readFilesMeta(s, touched).filter(coalesce(pred, lit(false))).count()
-    // operator-level CDC: the deleted rows ARE the matched rows — tag them
-    // directly instead of re-reading and multiset-diffing the rewrite
-    val cdc = writeCdcFiles(s, readFilesMeta(s, touched)
-      .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
-      .drop(GraftTable.RowIdCol)
-      .withColumn("_change_type", lit("delete")))
-    commit(s,
+    val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
+    rewriteRows(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      "DELETE",
-      Map("numDeletedRows" -> deleted.toString,
-          "numRewrittenFiles" -> touched.size.toString))(
-      (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
-    deleted
+      "DELETE", s.metaData, touched, perFile, predicateRows(s, touched, matched, Map.empty),
+      inserts = None, deletesOnly = true, "numRewrittenFiles")(
+      (_, n) => Map("numDeletedRows" -> n.toString))
   }
 
   /** DELETE with a SQL predicate string (reference passes strings, api.py:107). */
@@ -2878,15 +2892,10 @@ final class GraftTable private (val spark: SparkSession, val path: String)
 
   /** UPDATE rows matching `pred`, setting columns per `set` (SQL
     * expressions over the row's current values — `"v" -> "v + 1"`). The
-    * native twin of SQL UPDATE / DeltaTable.update:
-    *  - copy-on-write: touched files (stats-pruned, then provenance-
-    *    narrowed to files with >= 1 match) rewrite in ONE projection —
-    *    `when(pred, setExpr).otherwise(col)` per column; untouched files
-    *    survive byte-identical;
-    *  - merge-on-read (deletionVectors.enabled): the matched rows'
-    *    positions tombstone and only the post-images append — kilobytes,
-    *    not rewrites (same cap + CoW fallback as DELETE/MERGE);
-    *  - CDC captures PAIRED update_preimage/update_postimage rows.
+    * native twin of SQL UPDATE / DeltaTable.update. The touched files
+    * (stats-pruned, then narrowed to files with >= 1 match) go through
+    * [[rewriteRows]] with ONE projection — `when(pred, setExpr)
+    * .otherwise(col)` per column; untouched files survive byte-identical.
     * Returns rows updated. */
   def update(pred: Column, set: Map[String, String]): Long = {
     val s = snapshot
@@ -2902,94 +2911,17 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       throw new IllegalArgumentException(
         s"UPDATE cannot set identity column '$k' — it is GENERATED ALWAYS " +
           "and assigned by the engine"))
+    val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
-    val matched = readFilesMeta(s, candidates).filter(coalesce(pred, lit(false)))
-    // with row tracking, post-images CARRY the updated row's id (rewritten
-    // or appended files materialize it — an UPDATE changes values, never
-    // identity)
-    def postImage(rows: DataFrame): DataFrame = rows.select(
-      s.schema.fieldNames.map(c =>
-        set.get(c).map(u => expr(u).cast(s.schema(c).dataType).as(c))
-          .getOrElse(col(c))).toSeq ++
-      (if (rows.columns.contains(GraftTable.RowIdCol))
-         Seq(col(GraftTable.RowIdCol)) else Nil): _*)
-    lazy val cdc = writeCdcFiles(s,
-      matched.drop("__fname", "__pos").drop(GraftTable.RowIdCol)
-        .withColumn("_change_type", lit("update_preimage"))
-        .unionByName(postImage(matched.drop("__fname", "__pos"))
-          .drop(GraftTable.RowIdCol)
-          .withColumn("_change_type", lit("update_postimage"))))
-
-    if (dvEnabled(s.metaData)) {
-      val affected = matched.localCheckpoint(true)
-      val perFile = affected.groupBy("__fname").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perFile.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
-      val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
-      val maxTombstones = s.metaData.properties
-        .get("deletionVectors.maxTombstones").map(_.toLong).getOrElse(4L * 1000 * 1000)
-      if (perFile.values.sum + touched.map(_.dvCount).sum <= maxTombstones) {
-        val tombstones = affected.select(col("__fname"), col("__pos"))
-        val allPos = dvEntries(s, touched).map(_.unionByName(tombstones)).getOrElse(tombstones)
-        val dvPathOf = writeDvStore(s.metaData, allPos, touched)
-        // post-images all carry their materialized id — no base allocation
-        val adds = writeDataMapped(enforceConstraints(
-          conform(postImage(affected.drop("__fname", "__pos")), s.schema,
-            keepRowId = true),
-          s.metaData), s.metaData)
-        val reAdds = touched.map(f => Actions.untagReAdd(f).copy(
-          dvPath = Some(dvPathOf(canonPath(f.path))),
-          dvCount = f.dvCount + perFile(canonPath(f.path))))
-        val updated = perFile.values.sum
-        val cdcFiles = cdc
-        commit(s,
-          TxnInfo(readWholeTable = false, Some(pred),
-            candidates.map(_.path).toSet, touched.map(_.path).toSet),
-          "UPDATE",
-          Map("numUpdatedRows" -> updated.toString,
-              "numRewrittenFiles" -> "0",
-              "numDeletionVectors" -> touched.size.toString))(
-          (_, _) => identityMeta(s, adds) ++ reAdds ++ adds ++ cdcFiles)
-        return updated
-      }
-      // cap exceeded — fall through to copy-on-write
-    }
-
-    // one pass yields the touched-file set AND the matched-row count — no
-    // second scan for the numUpdatedRows metric
-    val perFileTouched = matched.groupBy(col("__fname")).count().collect()
-    if (perFileTouched.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
-    val touchedNames = perFileTouched.map(_.getString(0)).toSet
-    val touched = s.files.filter(f => touchedNames.contains(canonPath(f.path)))
-    // one projection rewrites the touched files: matching rows take their
-    // SET expressions, the rest pass through (and every row keeps its
-    // materialized row id under row tracking)
-    val toRewrite = readFilesMeta(s, touched).drop("__fname", "__pos")
-    val rewritten = toRewrite
-      .select(s.schema.fieldNames.map { c =>
-        set.get(c) match {
-          case Some(u) => when(coalesce(pred, lit(false)),
-            expr(u).cast(s.schema(c).dataType)).otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }.toSeq ++
-      (if (toRewrite.columns.contains(GraftTable.RowIdCol))
-         Seq(col(GraftTable.RowIdCol)) else Nil): _*)
-    // rewritten rows all carry materialized ids — no base allocation
-    val adds = writeDataMapped(
-      enforceConstraints(conform(rewritten, s.schema, keepRowId = true),
-        s.metaData), s.metaData)
-    val updated = perFileTouched.map(_.getLong(1)).sum
-    val cdcFiles = cdc
-    commit(s,
+    val perFile = matchesPerFile(s, candidates, matched)
+    if (perFile.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
+    val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
+    rewriteRows(s,
       TxnInfo(readWholeTable = false, Some(pred),
         candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      "UPDATE",
-      Map("numUpdatedRows" -> updated.toString,
-          "numRewrittenFiles" -> touched.size.toString))(
-      (_, _) => identityMeta(s, adds) ++ adds ++ cdcFiles)
-    updated
+      "UPDATE", s.metaData, touched, perFile, predicateRows(s, touched, matched, set),
+      inserts = None, deletesOnly = false, "numRewrittenFiles")(
+      (_, n) => Map("numUpdatedRows" -> n.toString))
   }
 
   /** UPDATE with a SQL predicate string. */
@@ -3061,15 +2993,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         if (evolved == s0.schema) s0
         else s0.copy(metaData = s0.metaData.copy(schemaString = evolved.json))
       }
-    // final metaData for a merge commit: the (possibly evolved) schema plus
-    // identity-frontier and row-id high-water-mark bumps derived from the
-    // commit's own AddFiles (advancedProps covers BOTH — a merge that only
-    // bumped identity would let the next append re-allocate its row ids)
-    def metaActions(adds: Seq[AddFile]): Seq[Action] = {
-      val bumped = s.metaData.copy(
-        properties = advancedProps(s.metaData, s.schema, adds))
-      if (bumped != s0.metaData) Seq(bumped) else Nil
-    }
     val schema = s.schema
     // every SET / insert-values key must name a table column (post
     // evolution) — a typo'd or unevolved column must fail loudly, not be
@@ -3147,21 +3070,20 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // guard join over an eagerly checkpointed rewrite frame. Without
     // by-source clauses this stays an inner join; with them it has to be a
     // left-outer probe (match status is what the clauses dispatch on).
-    val touched: Seq[AddFile] =
+    // The same pass also counts each touched file's affected positions —
+    // the per-file counts rewriteRows' tombstone cap and DV counts read.
+    val affected: Map[String, Long] =
       if (s.files.isEmpty || prunedTargetFiles.isEmpty ||
-          (matchedClauses.isEmpty && bySourceClauses.isEmpty)) Nil
+          (matchedClauses.isEmpty && bySourceClauses.isEmpty)) Map.empty
       else {
         val metaT = readFilesMeta(s, prunedTargetFiles).alias(targetAlias)
-        val perFile: Array[org.apache.spark.sql.Row] =
+        val perPos =
           if (bySourceClauses.isEmpty) {
-            val affected = matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
+            val anyClause = matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
             metaT.join(src, cond, "inner")
               .groupBy(col("__fname"), col("__pos"))
               .agg(count(lit(1)).as("__n"),
-                   max(when(affected, 1).otherwise(0)).as("__aff"))
-              .groupBy(col("__fname"))
-              .agg(max(col("__n")).as("__mx"), max(col("__aff")).as("__aff"))
-              .collect()
+                   max(when(anyClause, 1).otherwise(0)).as("__aff"))
           } else {
             val joined = metaT.join(src.withColumn(srcMark, lit(true)), cond, "left_outer")
             val matchedPred = col(srcMark).isNotNull
@@ -3173,36 +3095,32 @@ final class GraftTable private (val spark: SparkSession, val path: String)
               .groupBy(col("__fname"), col("__pos"))
               .agg(sum(when(matchedPred, 1).otherwise(0)).as("__n"),
                    max(when(mAff || bAff, 1).otherwise(0)).as("__aff"))
-              .groupBy(col("__fname"))
-              .agg(max(col("__n")).as("__mx"), max(col("__aff")).as("__aff"))
-              .collect()
           }
-        val touchedNames = perFile.filter(_.getAs[Int]("__aff") == 1)
-          .map(_.getAs[String]("__fname")).toSet
-        if (matchedClauses.nonEmpty && perFile.exists(r =>
-            touchedNames.contains(r.getAs[String]("__fname")) &&
-            r.getAs[Long]("__mx") > 1))
+        val perFile = perPos.groupBy(col("__fname"))
+          .agg(max(col("__n")).as("__mx"), sum(col("__aff")).as("__naff"))
+          .filter(col("__naff") > 0)
+          .collect()
+        if (matchedClauses.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
           throw new IllegalStateException(
             "MERGE failed: multiple source rows matched the same target row")
-        s.files.filter(f => touchedNames.contains(canonPath(f.path)))
+        perFile.map(r => r.getAs[String]("__fname") -> r.getAs[Long]("__naff")).toMap
       }
+    val touched = s.files.filter(f => affected.contains(canonPath(f.path)))
 
-    if (touched.nonEmpty) {
-      // __fname/__pos provenance rides along for the merge-on-read path
-      // (tombstoning needs the affected rows' positions); the CoW path
-      // simply never selects them. __tid pins row identity for the
-      // NMBS-only copy collapse — copies of one target row share an id
-      // within any single job, which is all dropDuplicates needs.
+    // Phase 2: one frame over the touched files' rows for rewriteRows
+    // (never deterministic, through __tid, so a tombstoning rewriteRows
+    // pins it). __tid pins row identity for the NMBS-only copy collapse — copies of
+    // one target row share an id within any single job, which is all
+    // dropDuplicates needs. Each row takes the FIRST clause whose condition
+    // holds for its match status (Delta's clause-order semantics): matched
+    // clauses get action ids 0..m-1, by-source clauses m..m+b-1, -1 = keep
+    // as-is. Delete actions flag the row deleted; update actions drive
+    // per-column when-chains. All of it is one codegen'd projection — no
+    // per-clause passes over the data.
+    val rows: DataFrame = {
       val t = readFilesMeta(s, touched)
         .withColumn("__tid", monotonically_increasing_id())
         .alias(targetAlias)
-
-      // Phase 2a: rewrite touched files. Each row takes the FIRST clause
-      // whose condition holds for its match status (Delta's clause-order
-      // semantics): matched clauses get action ids 0..m-1, by-source
-      // clauses m..m+b-1, -1 = keep as-is. Delete actions filter the row
-      // out; update actions drive per-column when-chains. All of it is one
-      // codegen'd projection — no per-clause passes over the data.
       val joined = t.join(src.withColumn(srcMark, lit(true)), cond, "left_outer")
       val matchedPred = col(srcMark).isNotNull
       var chain: Column = null
@@ -3227,138 +3145,53 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       // NMBS-only merges (no matched clauses) legally allow multiple source
       // rows to match one target row — the matched row is kept as-is, so
       // there is no ambiguity and Delta does not error. But the left_outer
-      // rewrite join still emits one copy per source match (all with
-      // __action = -1 and identical target columns); collapse to one copy
-      // per pinned row id or the rewrite silently duplicates rows. When
-      // matched clauses exist the guard above already rejected multi-match,
-      // so the dedup (a shuffle) is skipped there.
+      // join still emits one copy per source match (all with __action = -1
+      // and identical target columns); collapse to one copy per pinned row
+      // id or the rewrite silently duplicates rows. When matched clauses
+      // exist the guard above already rejected multi-match, so the dedup
+      // (a shuffle) is skipped there.
       val withAction = {
         val wa = joined.withColumn("__action", action)
         if (matchedClauses.isEmpty) wa.dropDuplicates("__tid") else wa
       }
-      // row tracking: a rewritten/updated row KEEPS its id — the target
-      // side's resolved `_row_id` rides the post-image into the new file
-      val rtEnabled = rowTrackingEnabled(s.metaData)
-      def postImage(d: DataFrame): DataFrame = d.select(srcCols.map { c =>
-        var e: Column = col(s"$targetAlias.$c")
-        updateSets.foreach { case (i, set) =>
-          set.get(c).foreach(u => e = when(col("__action") === i, expr(u)).otherwise(e)) }
-        e.as(c)
-      } ++ (if (rtEnabled)
-          // TARGET-qualified: the merge SOURCE may itself carry a _row_id
-          // column (e.g. another table's scanWithRowIds output)
-          Seq(col(s"$targetAlias.${GraftTable.RowIdCol}").as(GraftTable.RowIdCol))
-        else Nil): _*)
+      withAction.select(Seq(col("__fname"), col("__pos"),
+          (col("__action") >= 0).as("__affected"),
+          (if (deleteIds.isEmpty) lit(false)
+           else col("__action").isin(deleteIds: _*)).as("__deleted"),
+          struct(srcCols.map(c => col(s"$targetAlias.$c").as(c)): _*).as("__pre")) ++
+        srcCols.map { c =>
+          var e: Column = col(s"$targetAlias.$c")
+          updateSets.foreach { case (i, set) =>
+            set.get(c).foreach(u => e = when(col("__action") === i, expr(u)).otherwise(e)) }
+          e.as(c)
+        } ++
+        // row tracking: an updated row KEEPS its id. TARGET-qualified: the
+        // merge SOURCE may itself carry a _row_id column (e.g. another
+        // table's scanWithRowIds output)
+        (if (rowTrackingEnabled(s.metaData))
+           Seq(col(s"$targetAlias.${GraftTable.RowIdCol}").as(GraftTable.RowIdCol))
+         else Nil): _*)
+    }
 
-      val deletePred: Column =
-        if (deleteIds.isEmpty) lit(false) else col("__action").isin(deleteIds: _*)
-
-      /** Operator-level CDC (Delta's write-time capture): the merge KNOWS
-        * each affected row's action, so updates emit PAIRED
-        * `update_preimage`/`update_postimage` rows, deletes their
-        * pre-image, inserts their rows — no multiset diffing and no second
-        * read of the touched files (the legacy file-diff tier keeps the
-        * delete+insert representation for pre-CDF commits). */
-      def mergeCdc(affected: DataFrame, ins: DataFrame): DataFrame = {
-        val pre = affected
-          .select(srcCols.map(c => col(s"$targetAlias.$c").as(c)) :+
-            deletePred.as("__del"): _*)
-          .withColumn("_change_type",
-            when(col("__del"), lit("delete")).otherwise(lit("update_preimage")))
-          .drop("__del")
-        val post = postImage(affected.filter(!deletePred))
-          .drop(GraftTable.RowIdCol)
-          .withColumn("_change_type", lit("update_postimage"))
-        pre.unionByName(post)
-          .unionByName(ins.drop(GraftTable.RowIdCol)
-            .withColumn("_change_type", lit("insert")))
-      }
-
-      // Phase 2b: inserts — source rows matching NOTHING in the whole table
-      // (any match would have made its file touched; see class doc).
-      // Identity columns get fresh ids here, never on the rewrite side
-      // (rewritten rows keep their existing ids). With CDF on, the frame
-      // is PINNED: the data write and the CDC sidecar write are separate
-      // jobs, and monotonically_increasing_id would otherwise assign the
-      // sidecar DIFFERENT ids than the data it claims to describe.
-      lazy val inserts = {
-        val assigned = IdentityColumns.assign(
-          insertRows(src, targetAll, cond, insertClauses, schema),
-          schema, s.metaData.properties)
-        // fresh rows carry no materialized id (read side derives base+pos);
-        // the null column only exists so the union with post-images aligns
-        val withRid = if (rtEnabled)
-          assigned.withColumn(GraftTable.RowIdCol, lit(null).cast(LongType))
-        else assigned
-        if (IdentityColumns.names(schema).nonEmpty && cdfEnabled(s.metaData))
-          withRid.localCheckpoint(true)
-        else withRid
-      }
-
-      // Merge-on-read (deletionVectors.enabled): instead of rewriting the
-      // touched files, TOMBSTONE exactly the affected rows' positions and
-      // APPEND the replacement rows (update post-images + inserts) as new
-      // files — a 10-row upsert into a 100 TB table writes kilobytes of
-      // sidecar plus the new rows, never a 128 MB rewrite. Same tombstone
-      // cap and copy-on-write fallback as the DV DELETE path.
-      val dvDone = dvEnabled(s.metaData) && {
-        val affected = withAction.filter(col("__action") >= 0)
-          .localCheckpoint(true) // one pass feeds tombstones AND post-images
-        val perFile = affected.groupBy("__fname").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val maxTombstones = s.metaData.properties
-          .get("deletionVectors.maxTombstones").map(_.toLong).getOrElse(4L * 1000 * 1000)
-        if (perFile.values.sum + touched.map(_.dvCount).sum > maxTombstones) false
-        else {
-          val tombstones = affected.select(col("__fname"), col("__pos"))
-          val allPos = dvEntries(s, touched).map(_.unionByName(tombstones)).getOrElse(tombstones)
-          val dvPathOf = writeDvStore(s.metaData, allPos, touched)
-          val replacement = postImage(affected.filter(
-            if (deleteIds.isEmpty) lit(true) else !col("__action").isin(deleteIds: _*)))
-          val out = enforceConstraints(
-            conform(replacement.unionByName(inserts), schema, keepRowId = true),
-            s.metaData)
-          val adds = stampRowIds(s, writeDataMapped(out, s.metaData))
-          val reAdds = touched.map(f => Actions.untagReAdd(f).copy(
-            dvPath = Some(dvPathOf(canonPath(f.path))),
-            dvCount = f.dvCount + perFile.getOrElse(canonPath(f.path), 0L)))
-          val cdc = writeCdcFiles(s, mergeCdc(affected, inserts))
-          commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched), "MERGE",
-            Map("numTargetFilesRewritten" -> "0",
-                "numDeletionVectors" -> touched.size.toString,
-                "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
-            (_, _) => metaActions(adds) ++ reAdds ++ adds ++ cdc)
-          true
-        }
-      }
-
-      if (!dvDone) {
-        val acted = withAction
-          .filter(if (deleteIds.isEmpty) lit(true) else !col("__action").isin(deleteIds: _*))
-        val rewritten = postImage(acted)
-        val out = enforceConstraints(
-          conform(rewritten.unionByName(inserts), schema, keepRowId = true),
-          s.metaData)
-        val adds = stampRowIds(s, writeDataMapped(out, s.metaData))
-        val cdc = writeCdcFiles(s,
-          mergeCdc(withAction.filter(col("__action") >= 0), inserts))
-        commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched), "MERGE",
-          Map("numTargetFilesRewritten" -> touched.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
-          (_, _) => metaActions(adds) ++ adds ++ cdc)
-      }
-    } else {
-      // No affected target rows: pure insert path.
-      val inserts = IdentityColumns.assign(
+    // Inserts — source rows matching NOTHING in the whole table (any match
+    // would have made its file touched; see class doc). Identity columns
+    // get fresh ids here, never on the touched side (kept rows keep their
+    // ids). When a CDC sidecar is written the frame is PINNED: the data
+    // write and the sidecar write are separate jobs, and
+    // monotonically_increasing_id would otherwise assign the sidecar
+    // DIFFERENT ids than the data it claims to describe.
+    val inserts = {
+      val assigned = IdentityColumns.assign(
         insertRows(src, targetAll, cond, insertClauses, schema),
         schema, s.metaData.properties)
-      val adds = stampRowIds(s, writeDataMapped(
-        enforceConstraints(conform(inserts, schema), s.metaData), s.metaData))
-      commit(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, Nil), "MERGE",
-        Map("numTargetFilesRewritten" -> "0",
-            "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
-        (_, _) => metaActions(adds) ++ adds)
+      if (touched.nonEmpty && IdentityColumns.names(schema).nonEmpty &&
+          cdfEnabled(s.metaData)) assigned.localCheckpoint(true)
+      else assigned
     }
+    rewriteRows(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched), "MERGE",
+      s0.metaData, touched, affected, rows, Some(inserts), deletesOnly = false,
+      "numTargetFilesRewritten")(
+      (adds, _) => Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))
   }
 
   /** A MERGE's read domain for conflict classification: with source-key

@@ -4,11 +4,20 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the table layer to one commit path: in the table sources, a log
-  * publish (`log.commit(`), a `CommitInfo(` or a `RemoveFile(` may only be
-  * built inside `OptimisticCommit.commit` or one of the version-0 creates
-  * and ADOPT, which have no prior version to conflict with. Comments are
-  * skipped; the enclosing method is the nearest member-level `def` above. */
+/** Keeps the table layer to one commit path and one row-level write step.
+  *
+  *  - In the table sources, a log publish (`log.commit(`), a `CommitInfo(`
+  *    or a `RemoveFile(` may only be built inside `OptimisticCommit.commit`
+  *    or one of the version-0 creates and ADOPT, which have no prior
+  *    version to conflict with.
+  *  - In `GraftTable.scala`, a `writeDvStore(` call and the
+  *    `"deletionVectors.maxTombstones"` literal may only appear inside
+  *    `rewriteRows`, the one place that chooses between tombstoning and
+  *    rewriting; the literal may also appear in `setProperty`, which
+  *    validates it.
+  *
+  * Comments are skipped; the enclosing method is the nearest member-level
+  * `def` above. */
 class CommitPathGuardSpec extends AnyFunSuite {
 
   private val allowed = Map(
@@ -16,6 +25,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
     "Conflicts.scala" -> Set("commit"))
 
   private val construction = """(?i:log)\.commit\(|\bCommitInfo\(|\bRemoveFile\(""".r
+  private val dvDecision = Seq(
+    """(?<!def )\bwriteDvStore\(""".r -> Set("rewriteRows"),
+    "\"deletionVectors\\.maxTombstones\"".r -> Set("rewriteRows", "setProperty"))
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
 
   /** `src` with every comment blanked out, line breaks kept. */
@@ -50,18 +62,36 @@ class CommitPathGuardSpec extends AnyFunSuite {
     out.toString
   }
 
-  for ((file, methods) <- allowed) test(s"$file builds commits only in ${methods.toSeq.sorted.mkString(", ")}") {
+  /** Each `pattern` hit in the table source `file` whose enclosing
+    * member-level method is not in `methods`, as "file:line in method: hit". */
+  private def strays(file: String, pattern: scala.util.matching.Regex,
+      methods: Set[String]): Seq[String] = {
     val path = Paths.get("src/main/scala/graft/table", file)
     assert(Files.isRegularFile(path), s"run from the repository root: $path")
     var enclosing = "<none>"
-    val strays = withoutComments(Files.readString(path)).split("\n", -1)
+    withoutComments(Files.readString(path)).split("\n", -1).toSeq
       .zipWithIndex.flatMap { case (line, i) =>
         memberDef.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
-        construction.findAllIn(line).toSeq
+        pattern.findAllIn(line).toSeq
           .filterNot(_ => methods(enclosing))
           .map(hit => s"$file:${i + 1} in $enclosing: $hit")
       }
-    assert(strays.isEmpty,
-      s"commit actions built outside the one commit path:\n${strays.mkString("\n")}")
+  }
+
+  for ((file, methods) <- allowed) test(s"$file builds commits only in ${methods.toSeq.sorted.mkString(", ")}") {
+    val found = strays(file, construction, methods)
+    assert(found.isEmpty,
+      s"commit actions built outside the one commit path:\n${found.mkString("\n")}")
+  }
+
+  test("only rewriteRows writes deletion vectors and reads the tombstone cap") {
+    val found = dvDecision.flatMap { case (pattern, methods) =>
+      strays("GraftTable.scala", pattern, methods) }
+    assert(found.isEmpty,
+      s"merge-on-read decided outside rewriteRows:\n${found.mkString("\n")}")
+    // each pattern still matches the code it guards
+    dvDecision.foreach { case (pattern, _) =>
+      assert(strays("GraftTable.scala", pattern, Set.empty).nonEmpty, s"$pattern matches nothing")
+    }
   }
 }

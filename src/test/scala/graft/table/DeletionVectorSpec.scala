@@ -192,18 +192,102 @@ class DeletionVectorSpec extends SparkTestBase {
   }
 
   test("DELETE beyond deletionVectors.maxTombstones falls back to copy-on-write") {
-    val t = dvTable("dv-cap-")
+    // one file, so the fallback rewrites the very file that carries the DV
+    val t = GraftTable.create(spark, tmpDir("dv-cap-"), seed6().coalesce(1))
+    t.setProperty("deletionVectors.enabled", "true")
     t.setProperty("deletionVectors.maxTombstones", "1")
     assert(t.delete(col("id") === 1) == 1) // 1 tombstone: at the cap, DV path
     assert(t.snapshot.files.exists(_.dvPath.isDefined))
-    // 2 new tombstones exceed the cap: copy-on-write, existing DVs honored
+    // 2 new tombstones exceed the cap: copy-on-write, existing DVs honored;
+    // the row the DV already hid is not counted as deleted again
     assert(t.delete(col("id").isin(2, 3)) == 2)
     val metrics = t.history().select("operationMetrics").head()
       .getMap[String, String](0)
-    assert(!metrics.get("numRewrittenFiles").contains("0"),
+    assert(metrics.get("numRewrittenFiles").contains("1"),
       s"expected a CoW rewrite, got $metrics")
+    assert(metrics.get("numDeletedRows").contains("2"), s"got $metrics")
     assert(ids(t.toDF) == Set(4, 5, 6))
     assert(t.metadataCount() == 3)
+  }
+
+  test("merge-on-read DML with a non-deterministic condition loses and duplicates no row") {
+    // a fresh coin per evaluation: any second evaluation of the predicate
+    // disagrees with the first on about half the rows
+    val coin = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .asNondeterministic()
+    val t = GraftTable.create(spark, tmpDir("dv-nondet-"),
+      df((1 to 400).map(i => (i, s"v$i")): _*).repartition(2))
+    t.setProperty("deletionVectors.enabled", "true")
+    t.setProperty("changeDataFeed.enabled", "true")
+    def tombstones: Long = t.snapshot.files.map(_.dvCount).sum
+
+    val updated = t.update(coin(), Map("v" -> "'u'"))
+    val first = t.latestVersion
+    assert(t.history().select("operationMetrics").head().getMap[String, String](0)
+      .get("numDeletionVectors").isDefined, "the UPDATE must tombstone")
+    val rows = t.toDF.collect()
+    assert(rows.length == 400 && rows.map(_.getInt(0)).toSet == (1 to 400).toSet)
+    assert(rows.count(_.getString(1) == "u") == updated)
+    assert(tombstones == updated)
+    assert(t.metadataCount() == 400)
+
+    val deleted = t.delete(coin())
+    assert(deleted > 0 && t.toDF.count() == 400 - deleted)
+    assert(tombstones == updated + deleted)
+    assert(t.metadataCount() == 400 - deleted)
+
+    // a source that changes between reads: each evaluation keeps a
+    // different half of the live ids (ids 401-420 are always inserts)
+    val liveIds = t.toDF.collect().map(_.getInt(0)).toSeq
+    val source = df(liveIds.map(i => (i, "m")): _*).filter(coin())
+      .unionByName(df((401 to 420).map(i => (i, "m")): _*))
+    t.merge(source, "t.id = s.id")
+      .whenMatchedUpdate(Map("v" -> "s.v"))
+      .whenNotMatchedInsert(Map("id" -> "s.id", "v" -> "s.v"))
+      .execute()
+    val merged = t.toDF.collect()
+    val live = liveIds.size
+    assert(merged.length == live + 20 &&
+      merged.map(_.getInt(0)).toSet.size == live + 20)
+    val remerged = merged.count(r => r.getString(1) == "m" && r.getInt(0) <= 400)
+    assert(t.history().select("operationMetrics").head().getMap[String, String](0)
+      .get("numOutputRows").contains((remerged + 20).toString))
+    assert(tombstones == updated + deleted + remerged)
+    assert(t.metadataCount() == live + 20)
+
+    val feed = t.changes(first - 1, t.latestVersion).groupBy("_change_type").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(feed == Map("update_preimage" -> (updated + remerged),
+      "update_postimage" -> (updated + remerged), "delete" -> deleted, "insert" -> 20L),
+      s"got $feed")
+  }
+
+  test("a malformed deletionVectors.maxTombstones is refused, DV DML keeps working") {
+    val t = dvTable("dv-badcap-")
+    val v = t.latestVersion
+    Seq("4M", "-1", "1.5", "").foreach { bad =>
+      intercept[IllegalArgumentException](
+        t.setProperty("deletionVectors.maxTombstones", bad))
+    }
+    // SQL SET TBLPROPERTIES goes through the same check
+    graft.sources.GraftCatalog.register(spark, tmpDir("dv-badcap-wh-"), "badcapcat")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS badcapcat.default")
+    spark.sql(s"CREATE TABLE badcapcat.default.t (id INT, v STRING) USING graft " +
+      s"LOCATION '${t.path}'")
+    val sqlErr = intercept[Exception](spark.sql("ALTER TABLE badcapcat.default.t " +
+      "SET TBLPROPERTIES ('deletionVectors.maxTombstones' = '4M')"))
+    assert(Iterator.iterate[Throwable](sqlErr)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), sqlErr.toString)
+    assert(t.latestVersion == v, "a refused value must not commit")
+    assert(!t.snapshot.metaData.properties.contains("deletionVectors.maxTombstones"))
+    assert(t.delete(col("id") === 1) == 1)
+    assert(t.update(col("id") === 2, Map("v" -> "'two'")) == 1)
+    t.merge(df((3, "three")), "t.id = s.id").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+    assert(t.snapshot.files.exists(_.dvPath.isDefined))
+    assert(t.toDF.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+      Set((2, "two"), (3, "three"), (4, "v4"), (5, "v5"), (6, "v6")))
+    t.setProperty("deletionVectors.maxTombstones", "0") // valid: always rewrite
+    assert(t.snapshot.metaData.properties("deletionVectors.maxTombstones") == "0")
   }
 
   test("shallow clone carries deletion vectors") {
