@@ -4,8 +4,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import java.util.concurrent.atomic.AtomicLong
 
 /** Per-query job/stage/task counter (guide §1: find where fixed driver-side
-  * cost concentrates). Runs each named query twice — warm JVM paths — and
-  * reports the SECOND run's job/stage/task counts plus wall time. Usage:
+  * cost concentrates). Runs each named query twice and reports both runs'
+  * job/stage/task counts plus wall time: the FIRST run includes the work
+  * a query caches for the rest of the JVM (the DML fixtures of
+  * queries/Table.scala), the second is the warm per-query cost. Usage:
   *   tools/run.sh graft.JobCount q121_cooccurrence [more | 'top']
   * 'top' expands to a built-in list of the most expensive batch queries.
   * Read-only diagnostics; never part of the bench or verify path.
@@ -36,15 +38,14 @@ object JobCount {
       "q152_substring_dup", "q186_dsir_selection", "q36_tfidf_keywords",
       "q91_bm25_search", "q42_minhash_lsh")
     val names = args.toSeq.flatMap { case "top" => top; case n => Seq(n) }
-    for (name <- names) {
-      SparkEntry.queries(name)(spark, sfDir).count() // warm
+    for (name <- names; run <- Seq("first", "second")) {
       Thread.sleep(300) // let the listener bus drain
       jobs.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300)
-      println(f"$name%-34s jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d  $dt%6.2f s")
+      println(f"$name%-34s $run%-6s jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d  $dt%6.2f s")
     }
     spark.stop()
   }

@@ -2,25 +2,27 @@ package graft.table
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo,
-  Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
+  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan,
   LessThanOrEqual, Literal, StartsWith}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.types._
 
 /** File-level min/max pruning — the table-layer twin of Delta data skipping
   * (SURVEY.md §4.2). Given a scan predicate, drop files whose stats prove no
-  * row can match, BEFORE Spark ever plans the scan.
+  * row can match, before Spark splits and reads them: reads get it from
+  * [[GraftFileIndex]] with the filters Spark pushes into the scan, DML and
+  * the conflict checker from [[GraftTable.prunedFiles]].
   *
-  * The predicate is resolved against the table schema first (Spark 4 Columns
-  * are lazy ColumnNodes until analysis), so we match fully-typed Catalyst
-  * nodes; any foldable side (e.g. `cast('2024-01-01' as timestamp)`) is
-  * evaluated to a literal.
+  * The predicate is a resolved Catalyst expression (a user Column is
+  * resolved against the table schema first — Spark 4 Columns are lazy
+  * ColumnNodes until analysis), so we match fully-typed nodes; any foldable
+  * side (e.g. `cast('2024-01-01' as timestamp)`) is evaluated to a literal.
   *
   * Conservative by construction: a file is only skipped when a top-level
   * conjunct is provably false over the file's [min, max]; any unrecognized
   * shape, missing stat, or unordered type keeps the file. Correctness never
   * depends on skipping — it only removes provably-dead I/O
-  * (property-checked against full scans in DataSkippingSpec).
+  * (property-checked against unpruned reads in ReadPathSpec).
   *
   * At 100 TB this is the difference between planning 100k file splits and
   * reading the handful whose range covers a selective predicate.
@@ -38,12 +40,47 @@ object DataSkipping {
     }.getOrElse(throw new IllegalStateException(s"could not resolve predicate $pred"))
   }
 
-  /** true ⇒ the file may contain matching rows (must be read). */
-  def mayMatch(resolvedPred: Expression, file: AddFile): Boolean =
-    splitConjuncts(resolvedPred).forall(c => conjunctMayMatch(c, file))
-
   def prune(resolvedPred: Expression, files: Seq[AddFile]): Seq[AddFile] =
-    files.filter(mayMatch(resolvedPred, _))
+    files.filter(matcher(resolvedPred))
+
+  /** The predicate as a test on one file: true ⇒ the file may contain
+    * matching rows (must be read). Prepared once for many files: an IN
+    * list (`In`, or the `InSet` the optimizer turns a long one into) is
+    * sorted once, so each file costs one binary search over it, not one
+    * check per value — a 100k-key list over 1M files stays cheap. */
+  def matcher(resolvedPred: Expression): AddFile => Boolean = {
+    val tests: Seq[AddFile => Boolean] = splitConjuncts(resolvedPred).map {
+      case In(a, vs) if vs.nonEmpty => inList(a, vs.map(litValue))
+      case InSet(a, hset) if hset.nonEmpty =>
+        inList(a, hset.toSeq.map(v => litValue(Literal(v, a.dataType))))
+      case c => (f: AddFile) => conjunctMayMatch(c, f)
+    }
+    f => tests.forall(_(f))
+  }
+
+  /** `a IN (values)`: the file may match iff some value lies in its
+    * [min, max] and the column is not all null. Any value that is not an
+    * ordered literal (a null, a non-foldable, an unordered type) keeps
+    * every file. */
+  private def inList(a: Expression, vals: Seq[Option[Ord]]): AddFile => Boolean =
+    attrName(a) match {
+      case Some(n) if binaryOrdered(a) && vals.forall(_.isDefined) =>
+        val sorted = vals.flatten.sortWith((x, y) => cmp(x, y).exists(_ < 0)).toIndexedSeq
+        val asString = sorted.head.isRight
+        f => !allNull(f, n) && (bounds(f, n, asString) match {
+          case None => true
+          case Some((lo, hi)) =>
+            // first value >= min, then is it <= max?
+            var l = 0
+            var h = sorted.size
+            while (l < h) {
+              val m = (l + h) >>> 1
+              if (cmp(sorted(m), lo).exists(_ < 0)) l = m + 1 else h = m
+            }
+            l < sorted.size && cmp(sorted(l), hi).forall(_ <= 0)
+        })
+      case _ => _ => true
+    }
 
   /** Byte-ORDER soundness gate for stat bounds: footer min/max are
     * byte-ordered, so every interval test against them is meaningless
@@ -82,6 +119,11 @@ object DataSkipping {
       case In(a: AttributeReference, vs) if vs.nonEmpty && binaryEquality(a) =>
         val evs = vs.map(rawLit)
         if (evs.forall(_.isDefined)) Some(a.name -> evs.flatten) else None
+      // the optimizer's form of a long IN list; its values are already the
+      // literals' evaluated form
+      case InSet(a: AttributeReference, hset) if hset.nonEmpty && binaryEquality(a) &&
+          !hset.contains(null) =>
+        Some(a.name -> hset.toSeq)
       case _ => None
     }
     // several conjuncts on one column union their candidates — the bloom
@@ -160,26 +202,34 @@ object DataSkipping {
     BigDecimal(micros)
   }
 
+  /** A file's [min, max] stats for `name`, as strings or ordered numbers. */
+  private def bounds(f: AddFile, name: String, asString: Boolean): Option[(Ord, Ord)] =
+    for {
+      lo <- f.minValues.get(name)
+      hi <- f.maxValues.get(name)
+      b <- if (asString) Some((Right(lo): Ord, Right(hi): Ord))
+           else scala.util.Try((Left(BigDecimal(lo)): Ord, Left(BigDecimal(hi)): Ord)).toOption
+             .orElse(scala.util.Try(
+               (Left(isoMicros(lo)): Ord, Left(isoMicros(hi)): Ord)).toOption)
+    } yield b
+
+  private def cmp(a: Ord, b: Ord): Option[Int] = (a, b) match {
+    case (Left(x), Left(y))   => Some(x.compare(y))
+    case (Right(x), Right(y)) => Some(x.compare(y))
+    case _                    => None
+  }
+
+  // null-count tier (independent of min/max): a file whose footer proves
+  // zero nulls can't serve IS NULL; all-null can't serve IS NOT NULL —
+  // and an all-null column can't match ANY comparison either, so the
+  // value checks compose it in. Absent count → unknown → keep.
+  private def allNull(f: AddFile, name: String): Boolean =
+    f.nullCounts.get(name).contains(f.numRecords)
+
   private def conjunctMayMatch(c: Expression, f: AddFile): Boolean = {
-    def bounds(name: String, asString: Boolean): Option[(Ord, Ord)] =
-      for {
-        lo <- f.minValues.get(name)
-        hi <- f.maxValues.get(name)
-        b <- if (asString) Some((Right(lo): Ord, Right(hi): Ord))
-             else scala.util.Try((Left(BigDecimal(lo)): Ord, Left(BigDecimal(hi)): Ord)).toOption
-               .orElse(scala.util.Try(
-                 (Left(isoMicros(lo)): Ord, Left(isoMicros(hi)): Ord)).toOption)
-      } yield b
-
-    def cmp(a: Ord, b: Ord): Option[Int] = (a, b) match {
-      case (Left(x), Left(y))   => Some(x.compare(y))
-      case (Right(x), Right(y)) => Some(x.compare(y))
-      case _                    => None
-    }
-
     // op receives (cmp(min, v), cmp(max, v)) and answers "may match?"
     def check(name: String, v: Ord, op: (Int, Int) => Boolean): Boolean =
-      bounds(name, v.isRight) match {
+      bounds(f, name, v.isRight) match {
         case Some((lo, hi)) =>
           (cmp(lo, v), cmp(hi, v)) match {
             case (Some(cl), Some(ch)) => op(cl, ch)
@@ -196,18 +246,12 @@ object DataSkipping {
       if (!binaryOrdered(a)) None
       else for { n <- attrName(a); v <- litValue(l) } yield (n, v)
 
-    // null-count tier (independent of min/max): a file whose footer proves
-    // zero nulls can't serve IS NULL; all-null can't serve IS NOT NULL —
-    // and an all-null column can't match ANY comparison either, so the
-    // value checks compose it in. Absent count → unknown → keep.
-    def nullCount(name: String): Option[Long] = f.nullCounts.get(name)
-    def allNull(name: String): Boolean = nullCount(name).contains(f.numRecords)
     def checkNN(name: String, v: Ord, op: (Int, Int) => Boolean): Boolean =
-      !allNull(name) && check(name, v, op)
+      !allNull(f, name) && check(name, v, op)
 
     c match {
-      case IsNull(a) => attrName(a).forall(n => !nullCount(n).contains(0L))
-      case IsNotNull(a) => attrName(a).forall(n => !allNull(n))
+      case IsNull(a) => attrName(a).forall(n => !f.nullCounts.get(n).contains(0L))
+      case IsNotNull(a) => attrName(a).forall(n => !allNull(f, n))
       // col LIKE 'p%': matching strings form the interval [p, pNext) where
       // pNext = p with its last char incremented — skip when the file's
       // string range provably misses it (the log-prefix / path-prefix
@@ -216,7 +260,7 @@ object DataSkipping {
       case StartsWith(a, Literal(pfx, StringType)) if pfx != null &&
           binaryOrdered(a) =>
         attrName(a).forall { n =>
-          if (allNull(n)) false
+          if (allNull(f, n)) false
           else {
             val p = pfx.toString
             val upper: Option[String] =
@@ -246,9 +290,6 @@ object DataSkipping {
         attrLit(a, l).forall { case (n, v) => checkNN(n, v, (cl, _) => cl <= 0) }
       case LessThanOrEqual(l, a) if attrLit(a, l).isDefined =>      // v <= col ⇔ col >= v
         attrLit(a, l).forall { case (n, v) => checkNN(n, v, (_, ch) => ch >= 0) }
-      case In(a, vs) if attrName(a).isDefined && binaryOrdered(a) &&
-          vs.nonEmpty && vs.forall(litValue(_).isDefined) =>
-        vs.exists(v => checkNN(attrName(a).get, litValue(v).get, (cl, ch) => cl <= 0 && ch >= 0))
       case _ => true // unknown shape → cannot skip
     }
   }

@@ -403,6 +403,15 @@ object FileOps extends Serializable {
       DeltaDeletionVectors.bitsAbs(dvAbsRef)
     else dvPositions(java.nio.file.Paths.get(dvAbsRef), fname, requireQualified)
 
+  /** Whether a `_dv/` sidecar carries the `rel` format marker column (see
+    * [[dvPositions]]), read from its parquet footer on the driver. */
+  def sidecarMarkedRel(sidecar: Path, conf: Configuration): Boolean = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HPath(sidecar.toString), conf))
+    try reader.getFooter.getFileMetaData.getSchema.containsField("rel")
+    finally reader.close()
+  }
+
   /** Load one data file's deletion-vector tombstones from a `_dv/` sidecar
     * (columns fname/pos, written sorted) as a BitSet over row indexes —
     * executor-side, parquet-mr only (the custom row-level/streaming

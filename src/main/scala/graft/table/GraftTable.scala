@@ -6,6 +6,9 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,8 +22,11 @@ import org.apache.spark.sql.types._
   * Catalyst optimizes; the table layer only decides WHICH files participate
   * (touched-file pruning + stats-based data skipping) and appends the commit.
   *
-  * Scale design: reads plan `spark.read.parquet(liveFiles)` — split planning,
-  * pushdown and pruning are Spark's. DML rewrites only files that provably
+  * Scale design: every read — any version, DML discovery, the V1 source —
+  * is planned from the log through one [[GraftFileIndex]] leaf: no file
+  * listing, and a filter on any version's frame prunes files by partition
+  * values and stats when Spark plans the scan (split planning and parquet
+  * pushdown stay Spark's). DML rewrites only files that provably
   * contain affected rows (semi-join file discovery), so a MERGE touching 1%%
   * of files rewrites 1%% of the table, not all of it. DELETE, UPDATE, MERGE
   * and replaceWhere each find their touched files and then hand them to
@@ -46,9 +52,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   /** DataFrame of a snapshot's live files (empty-but-typed when no files). */
   private def read(s: Snapshot): DataFrame = readFiles(s, s.files)
 
-  /** Raw parquet scan of a file subset, no deletion-vector filtering.
-    * basePath lets Spark reconstruct partition columns from the Hive-style
-    * directory names when the table is partitioned.
+  /** Raw parquet scan of a file subset, no deletion-vector filtering,
+    * planned from the log: one [[GraftFileIndex]] leaf supplies the file
+    * statuses and partition values from the AddFiles, so building the
+    * frame lists no directory and starts no Spark job, and a filter on it
+    * prunes files when Spark plans the scan.
     *
     * `perScan` decorates each LEAF scan before any union — the hook the
     * provenance helpers attach `_metadata`-derived columns through
@@ -69,23 +77,23 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       else physSchema0.add(StructField(GraftTable.RowIdCol, LongType, nullable = true))
     ensureFieldIdResolution(physSchema)
     val partCols = s.metaData.partitionColumns
-    if (files.isEmpty)
-      perScan(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], physSchema))
-    else if (partCols.nonEmpty && files.exists(_.path.startsWith(".."))) {
-      // SHALLOW-CLONE references escape the table root, so basePath (which
-      // requires every file under one root) cannot reconstruct the
-      // partition columns — attach them from the LOG instead. ONE scan
-      // leaf reads every escaped file with the non-partition schema and
-      // each row recovers its partition values through a broadcast
-      // file-name → values map (driver-built, O(files) rows — the same
-      // bounded shape as the row-tracking base map below), then casts
-      // them to the declared partition types. Plan width is CONSTANT in
-      // the number of distinct partition combos: the first scan of a
-      // freshly cloned 100-TB table with thousands of partitions plans
-      // exactly one parquet leaf + one broadcast hash join, not a
-      // thousands-leg union (ShallowClonePlanSpec pins this at 100+
-      // combos; an OPTIMIZE still localizes files and restores the plain
-      // basePath scan).
+    def scanOf(dataSchema: StructType, partitioned: Boolean): DataFrame = {
+      val index = new GraftFileIndex(this, s, files, partitioned)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+        dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+    }
+    if (partCols.nonEmpty && files.exists(_.path.startsWith(".."))) {
+      // SHALLOW-CLONE references escape the table root. ONE scan leaf
+      // reads every escaped file with the non-partition schema and each
+      // row recovers its partition values through a broadcast file-name →
+      // values map (driver-built, O(files) rows — the same bounded shape
+      // as the row-tracking base map below), then casts them to the
+      // declared partition types. Plan width is CONSTANT in the number of
+      // distinct partition combos: the first scan of a freshly cloned
+      // 100-TB table with thousands of partitions plans exactly one
+      // parquet leaf + one broadcast hash join, not a thousands-leg union
+      // (ShallowClonePlanSpec pins this at 100+ combos; an OPTIMIZE still
+      // localizes files and restores the plain partitioned scan).
       val logicalFields = s.schema.fields
       val dataSchema = StructType(physSchema.fields.zipWithIndex.collect {
         case (f, i) if i >= logicalFields.length ||
@@ -119,8 +127,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       // against the single leaf relation (metadata columns propagate
       // through the projection, but hooks like markProvenance were
       // written against a bare scan)
-      val base = perScan(spark.read.schema(dataSchema)
-        .parquet(files.map(f => s"$path/${f.path}"): _*)
+      val base = perScan(scanOf(dataSchema, partitioned = false)
         .withColumn("__pfname", scanFilePath))
       val joined = partIdx.zip(pvCols).foldLeft(
         base.join(pvDf, Seq("__pfname"), "left")) {
@@ -132,28 +139,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       // trail in whatever order the hook produced
       val extras = joined.columns.toSeq.diff(physSchema.fieldNames.toSeq)
       joined.select((physSchema.fieldNames.toSeq ++ extras).map(joined(_)): _*)
-    } else if (partCols.nonEmpty) {
-      // basePath reconstructs partition columns from Hive-style dir names;
-      // it requires every file under the table root
-      val raw = spark.read.schema(physSchema).option("basePath", path)
-        .parquet(files.map(f => s"$path/${f.path}"): _*)
-      // partitioned AND bucketed: basePath inference appends the hidden
-      // __bucket dir as an extra trailing column — project it away (the
-      // bucket id is layout, never schema)
-      perScan(
-        if (Bucketing.spec(s.metaData).isDefined)
-          raw.select(physSchema.fieldNames.map(n => raw(n)).toIndexedSeq: _*)
-        else raw)
     } else
-      // no basePath: shallow-clone references ("../src/...") stay readable
-      perScan(spark.read.schema(physSchema)
-        .parquet(files.map(f => s"$path/${f.path}"): _*))
+      // partition columns keep their schema position; the hidden
+      // `__bucket` dir of a bucketed table is layout, never a column
+      perScan(scanOf(physSchema, partitioned = partCols.nonEmpty))
   }
 
   /** id-mode column mapping: Spark resolves parquet columns by field id
     * only when this session conf is on. Flipping it is a no-op for
     * id-less schemas (name resolution unchanged), so EVERY read path that
-    * builds its own `spark.read` (the V1 scan, the change feed) calls
+    * builds its own parquet scan (readFilesRaw, the change feed) calls
     * this one chokepoint with its physical read schema; the vectorized V2
     * factory sets the equivalent per-task hadoop flag itself. */
   private def ensureFieldIdResolution(physSchema: StructType): Unit =
@@ -189,21 +184,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * `_metadata.file_path` BEFORE any DV anti-join: `input_file_name()`
     * is undefined over a multi-source plan. */
   private[graft] def readFilesWithFileCol(s: Snapshot, files: Seq[AddFile]): DataFrame =
-    if (files.isEmpty)
-      toLogical(s, readFilesRaw(s, files).withColumn("_file", lit("")), Seq("_file"))
-    else
-      toLogical(s, splitOnDv(s, files, (fs, mark) => readFilesRaw(s, fs,
-        perScan = df => mark(df.withColumn("_file", scanFilePath)))), Seq("_file"))
+    toLogical(s, splitOnDv(s, files, (fs, mark) => readFilesRaw(s, fs,
+      perScan = df => mark(df.withColumn("_file", scanFilePath)))), Seq("_file"))
 
   /** readFiles variant that keeps `__fname`/`__pos` provenance columns —
     * the DV delete path needs the surviving rows' positions. */
   private def readFilesMeta(s: Snapshot, files: Seq[AddFile]): DataFrame = {
     val rt = rowTrackingEnabled(s.metaData)
     val rid = if (rt) Seq(GraftTable.RowIdCol) else Nil
-    if (files.isEmpty)
-      return toLogical(s, readFilesRaw(s, files, withMaterializedRowId = rt)
-        .withColumn("__fname", lit(""))
-        .withColumn("__pos", lit(0L)), Seq("__fname", "__pos") ++ rid)
     def marked(fs: Seq[AddFile]): DataFrame =
       readFilesRaw(s, fs, withMaterializedRowId = rt, perScan = markProvenance)
     val (withDv, noDv) = files.partition(_.dvPath.isDefined)
@@ -309,15 +297,9 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * hold entries for many data files, and an entry's data file may have
     * been re-pointed to a NEWER sidecar by a later delete), so entries are
     * semi-joined against the exact (file, sidecar) pairs the AddFiles
-    * reference — driver-built metadata, broadcast.
-    *
-    * `s` supplies the snapshot's FULL live set: the legacy-basename
-    * ambiguity verdict must be derived from every live file sharing a
-    * referenced sidecar, never from the scanned/planned subset — when
-    * partition pruning removes one (sidecar, basename) twin, a legacy
-    * bare-basename entry belonging to the pruned twin would otherwise
-    * silently re-attribute to the surviving file and tombstone rows that
-    * were never deleted. */
+    * reference — driver-built metadata, broadcast. Entries under an
+    * ambiguous legacy spelling ([[dvSpellings]]) match no file here;
+    * [[requireAttributableDv]] refuses the scans they could belong to. */
   private def dvEntries(s: Snapshot, files: Seq[AddFile]): Option[DataFrame] = {
     val withDv = files.filter(_.dvPath.isDefined)
     if (withDv.isEmpty) None
@@ -330,87 +312,18 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       val nativeDf =
         if (nativeDv.isEmpty) None
         else {
-          // a sidecar's `fname` column stores the data file's TABLE-
-          // RELATIVE path (round 15; pre-round-15 sidecars stored the
-          // bare basename) — either spelling maps to the scan's
-          // normalized-absolute-path key through this driver-built
-          // (spelling, sidecar) → canonical map. A LEGACY basename that
-          // names two different files within one sidecar is genuinely
-          // ambiguous (the information was never written) — refuse
-          // loudly rather than tombstone both files' rows.
-          val bySidecar: Seq[(String, DataFrame)] =
-            nativeDv.map(_.dvPath.get).distinct.map(p =>
-              p -> spark.read.parquet(s"$path/$p"))
-          // round-16 sidecars carry the `rel` FORMAT MARKER: every entry
-          // stores the full table-relative path, so a bare basename is a
-          // genuine root-level file — such sidecars never contribute the
-          // legacy-basename spelling (and therefore can never be flagged
-          // ambiguous by a same-named nested twin)
-          val marked: Set[String] = bySidecar.collect {
-            case (p, df) if df.columns.contains("rel") => p }.toSet
-          def spellingsOf(f: AddFile): Seq[((String, String), String)] = {
-            // third spelling: a shallow CLONE references the source's
-            // sidecar ("../src/_dv/…") alongside its data file
-            // ("../src/p=x/part.parquet") — the entry inside was written
-            // relative to the SOURCE root, i.e. the data path with the
-            // sidecar's own root prefix stripped
-            val dv = f.dvPath.get
-            val i = dv.indexOf("_dv/")
-            val viaSidecarRoot =
-              if (i > 0 && f.path.startsWith(dv.take(i))) Seq(f.path.drop(i))
-              else Nil
-            val legacyBasename =
-              if (marked(dv)) Nil else Seq(fileName(f.path))
-            (Seq(f.path) ++ legacyBasename ++ viaSidecarRoot).distinct.map(sp =>
-              (sp, dv) -> canonPath(f.path))
-          }
-          val bySpelling = nativeDv.flatMap(spellingsOf)
-          // an AMBIGUOUS spelling — a legacy basename that names two live
-          // files within ONE sidecar — is excluded from the map; entries
-          // actually USING it (possible only in pre-round-15 sidecars; new
-          // sidecars spell the relative path) refuse at runtime below, so
-          // healthy new-format shared sidecars never refuse spuriously.
-          // The verdict derives from ALL live files sharing each referenced
-          // sidecar — never from the scanned/planned subset: with one
-          // basename twin pruned away, a subset-local check would see no
-          // collision and silently attribute the pruned twin's legacy
-          // entry to the surviving file, vanishing never-deleted rows.
-          val refSidecars = nativeDv.map(_.dvPath.get).toSet
-          val ambiguous = s.files
-            .filter(_.dvPath.exists(refSidecars.contains))
-            .flatMap(spellingsOf)
-            .groupBy(_._1)
-            .filter(_._2.map(_._2).distinct.size > 1).keySet
+          val (bySpelling, ambiguous) = dvSpellings(s, nativeDv)
           val refs = bySpelling.filterNot(t => ambiguous(t._1)).distinct
             .map { case ((sp, src), canon) => Row(sp, src, canon) }
-          val refSchema = StructType(Seq(
+          val refsDf = spark.createDataFrame(refs.asJava, StructType(Seq(
             StructField("__fname", StringType, nullable = false),
             StructField("__src", StringType, nullable = false),
-            StructField("__canon", StringType, nullable = false)))
-          val refsDf = spark.createDataFrame(refs.asJava, refSchema)
-          val entries = bySidecar.map { case (p, df) =>
-            // normalize to (fname, pos) before the union — round-16
-            // sidecars carry the extra `rel` marker column
-            df.select(col("fname"), col("pos")).withColumn("__src", lit(p))
-          }.reduce(_ unionByName _)
-            .withColumnRenamed("fname", "__fname")
-          if (ambiguous.nonEmpty) {
-            val ambDf = spark.createDataFrame(
-              ambiguous.toSeq.map { case (sp, src) => Row(sp, src) }.asJava,
-              StructType(refSchema.fields.take(2)))
-            val bad = entries.join(broadcast(ambDf), Seq("__fname", "__src"),
-              "left_semi").limit(1).collect()
-            if (bad.nonEmpty) throw new GraftProtocolException(
-              s"a legacy deletion-vector sidecar of $path carries a bare " +
-                s"basename entry ('${bad.head.getString(0)}') that names " +
-                "more than one live file — the entry cannot be attributed; " +
-                "rewrite the files (OPTIMIZE after a copy-on-write DELETE) " +
-                "to clear the ambiguous state")
-          }
+            StructField("__canon", StringType, nullable = false))))
           // inner join ≡ the old semi (sidecars are commit-scoped; only
           // the exact (file, sidecar) pairs the AddFiles reference count)
           // + the canonical-key remap in the same broadcast probe
-          Some(entries.join(broadcast(refsDf), Seq("__fname", "__src"))
+          Some(sidecarEntries(nativeDv.map(_.dvPath.get).distinct)
+            .join(broadcast(refsDf), Seq("__fname", "__src"))
             .select(col("__canon").as("__fname"), col("pos").as("__pos")))
         }
       val foreignDf =
@@ -427,6 +340,94 @@ final class GraftTable private (val spark: SparkSession, val path: String)
             .toDF("__fname", "__pos"))
         }
       Seq(nativeDf, foreignDf).flatten.reduceOption(_ unionByName _)
+    }
+  }
+
+  /** Every spelling under which a native sidecar entry may name one of
+    * `nativeDv`'s files — ((spelling, sidecar), canonical path) — and the
+    * AMBIGUOUS (spelling, sidecar) pairs among them.
+    *
+    * A sidecar's `fname` column stores the data file's TABLE-RELATIVE
+    * path (round 15; pre-round-15 sidecars stored the bare basename).
+    * Round-16 sidecars carry the `rel` FORMAT MARKER: every entry stores
+    * the full table-relative path, so a bare basename is a genuine
+    * root-level file — such sidecars never contribute the legacy-basename
+    * spelling (and so are never flagged ambiguous by a same-named nested
+    * twin). The marker is read from the footer on the driver.
+    *
+    * A legacy basename that names two different live files within ONE
+    * sidecar is ambiguous (the information was never written). The
+    * verdict derives from ALL of `s`'s live files sharing each referenced
+    * sidecar — never from a scanned subset: with one basename twin pruned
+    * away, a subset-local check would see no collision and silently
+    * attribute the pruned twin's legacy entry to the surviving file,
+    * vanishing never-deleted rows. */
+  private def dvSpellings(s: Snapshot, nativeDv: Seq[AddFile])
+      : (Seq[((String, String), String)], Set[(String, String)]) = {
+    val refSidecars = nativeDv.map(_.dvPath.get).toSet
+    val marked = refSidecars.filter(p => FileOps.sidecarMarkedRel(
+      Paths.get(path, p), spark.sparkContext.hadoopConfiguration))
+    def spellingsOf(f: AddFile): Seq[((String, String), String)] = {
+      // third spelling: a shallow CLONE references the source's
+      // sidecar ("../src/_dv/…") alongside its data file
+      // ("../src/p=x/part.parquet") — the entry inside was written
+      // relative to the SOURCE root, i.e. the data path with the
+      // sidecar's own root prefix stripped
+      val dv = f.dvPath.get
+      val i = dv.indexOf("_dv/")
+      val viaSidecarRoot =
+        if (i > 0 && f.path.startsWith(dv.take(i))) Seq(f.path.drop(i))
+        else Nil
+      val legacyBasename =
+        if (marked(dv)) Nil else Seq(fileName(f.path))
+      (Seq(f.path) ++ legacyBasename ++ viaSidecarRoot).distinct.map(sp =>
+        (sp, dv) -> canonPath(f.path))
+    }
+    val ambiguous = s.files
+      .filter(_.dvPath.exists(refSidecars.contains))
+      .flatMap(spellingsOf)
+      .groupBy(_._1)
+      .filter(_._2.map(_._2).distinct.size > 1).keySet
+    (nativeDv.flatMap(spellingsOf), ambiguous)
+  }
+
+  /** The entries of native `_dv/` sidecars (`__fname` as stored, `pos`,
+    * `__src` the sidecar), read with an explicit schema so no sidecar
+    * costs a schema-inference job. */
+  private def sidecarEntries(sidecars: Seq[String]): DataFrame =
+    sidecars.map(p =>
+      spark.read.schema(GraftTable.DvEntrySchema).parquet(s"$path/$p")
+        .withColumn("__src", lit(p))
+    ).reduce(_ unionByName _)
+      .withColumnRenamed("fname", "__fname")
+
+  /** Refuse to scan `scanned` when the sidecar of one of its files holds a
+    * legacy bare-basename entry that names more than one live file: the
+    * entry cannot be attributed, and tombstoning both files' rows would be
+    * wrong. [[GraftFileIndex]] calls this on the files that survive
+    * pruning, before Spark reads them, so a scan pruned away from those
+    * files stays readable. Healthy tables pay no job: only an ambiguous
+    * spelling one of the scanned files can be named by is looked up. */
+  private[table] def requireAttributableDv(s: Snapshot, scanned: Seq[AddFile]): Unit = {
+    val nativeDv = scanned.filter(_.dvPath.exists(p => !DeltaDeletionVectors.isForeign(p)))
+    if (nativeDv.nonEmpty) {
+      val (bySpelling, ambiguous) = dvSpellings(s, nativeDv)
+      val used = bySpelling.map(_._1).filter(ambiguous).distinct
+      if (used.nonEmpty) {
+        val ambDf = spark.createDataFrame(
+          used.map { case (sp, src) => Row(sp, src) }.asJava,
+          StructType(Seq(
+            StructField("__fname", StringType, nullable = false),
+            StructField("__src", StringType, nullable = false))))
+        val bad = sidecarEntries(used.map(_._2).distinct)
+          .join(broadcast(ambDf), Seq("__fname", "__src"), "left_semi").limit(1).collect()
+        if (bad.nonEmpty) throw new GraftProtocolException(
+          s"a legacy deletion-vector sidecar of $path carries a bare " +
+            s"basename entry ('${bad.head.getString(0)}') that names " +
+            "more than one live file — the entry cannot be attributed; " +
+            "rewrite the files (OPTIMIZE after a copy-on-write DELETE) " +
+            "to clear the ambiguous state")
+      }
     }
   }
 
@@ -447,13 +448,9 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       throw new IllegalArgumentException(
         s"Cannot time travel to $epochMillis: it predates commit 0 of $path"))
 
-  /** Filtered scan with file-level data skipping: files whose min/max stats
-    * exclude `pred` are never given to Spark. Result is identical to
-    * `toDF.filter(pred)` (DataSkippingSpec property-checks this). */
-  def scan(pred: Column): DataFrame = {
-    val s = snapshot
-    readFiles(s, prunedFiles(s, pred)).filter(pred)
-  }
+  /** Filtered scan at latest: `toDF.filter(pred)`, whose scan prunes the
+    * files whose stats exclude `pred` when Spark plans it. */
+  def scan(pred: Column): DataFrame = toDF.filter(pred)
 
   /** Dynamic file pruning (Delta's DFP): scan only the files that can
     * serve a JOIN against a small build side. The build side's DISTINCT
@@ -472,14 +469,12 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       .distinct().limit(maxKeys + 1).collect().map(_.get(0)).toSeq
     if (vals.size > maxKeys) return toDF
     if (vals.isEmpty) return toDF.limit(0)
-    // Small key sets ride the full IN machinery (min/max + parquet
-    // blooms). Big ones would make DataSkipping's per-file ∃-key loop
-    // O(files × keys) — at 1M files × 100k keys that is the driver
-    // becoming the bottleneck — so they range-prune with ONE binary
-    // search per file over the sorted keys (O(files · log keys)); the
-    // per-row filter stays an InSet hash probe either way.
-    val keep: Seq[AddFile] =
-      if (vals.size <= 256) prunedFiles(s, col(column).isInCollection(vals))
+    // Small key sets ride the scan's own pruning (min/max + parquet
+    // blooms). Big ones range-prune first with ONE binary search per file
+    // over the sorted keys (O(files · log keys)); the per-row filter stays
+    // an InSet hash probe either way.
+    val keep =
+      if (vals.size <= 256) s.files
       else sortedKeyPrune(s, column, vals).getOrElse(s.files)
     readFiles(s, keep).filter(col(column).isInCollection(vals))
   }
@@ -2382,8 +2377,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * probes a WINNING commit's added files against this txn's read
     * predicate with exactly the pruning semantics the read used. */
   private[table] def pruneCandidates(s: Snapshot, pred: Column,
+      candidates: Seq[AddFile]): Seq[AddFile] =
+    pruneResolved(s, DataSkipping.resolve(spark, s.schema, pred), candidates)
+
+  /** The pruning itself, over a predicate already resolved against the
+    * snapshot's LOGICAL column names — [[GraftFileIndex]] hands it the
+    * filters Spark pushes into a scan. */
+  private[table] def pruneResolved(s: Snapshot, resolved: Expression,
       candidates: Seq[AddFile]): Seq[AddFile] = {
-    val resolved = DataSkipping.resolve(spark, s.schema, pred)
     // under column mapping stats/partition keys are physical — translate
     // through the CURRENT mapping (strict: stale physical keys of dropped
     // columns don't translate and so can never prune a same-named
@@ -2418,6 +2419,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           case _ => Some(k -> v)
         }
       }
+    val mayMatch = DataSkipping.matcher(resolved)
     val statPruned = candidates.filter { f =>
       val widened = f.copy(
         minValues = logicalKeys(f.minValues) ++ statEncode(logicalKeys(f.partitionValues)),
@@ -2428,7 +2430,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         nullCounts =
           (if (!mapped) f.nullCounts
            else f.nullCounts.flatMap { case (k, v) => p2l.get(k).map(_ -> v) }))
-      DataSkipping.mayMatch(resolved, widened)
+      mayMatch(widened)
     }
     // bucket skipping: an equality/IN probe on the BUCKETING column keeps
     // only the probed keys' hash buckets — a point lookup on a bucketed
@@ -2875,7 +2877,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
     val perFile = matchesPerFile(s, candidates, matched)
-    if (perFile.isEmpty) { commitNoop(s, "DELETE"); return 0L }
+    if (perFile.isEmpty) { commitNoop(s, "DELETE", "numDeletedRows"); return 0L }
     // path-level matching (normalized absolute spelling) — safe even for
     // converted/foreign layouts whose basenames collide across dirs
     val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
@@ -2914,7 +2916,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
     val perFile = matchesPerFile(s, candidates, matched)
-    if (perFile.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
+    if (perFile.isEmpty) { commitNoop(s, "UPDATE", "numUpdatedRows"); return 0L }
     val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
     rewriteRows(s,
       TxnInfo(readWholeTable = false, Some(pred),
@@ -2933,9 +2935,9 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * through the resolver so a lost race against a concurrent writer
     * rebases trivially instead of surfacing a raw
     * ConcurrentModificationException. */
-  private def commitNoop(s: Snapshot, op: String): Unit =
+  private def commitNoop(s: Snapshot, op: String, rowsMetric: String): Unit =
     commit(s, TxnInfo.Blind, op,
-      Map("numDeletedRows" -> "0", "numRewrittenFiles" -> "0"))((_, _) => Nil)
+      Map(rowsMetric -> "0", "numRewrittenFiles" -> "0"))((_, _) => Nil)
 
   private def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
 
@@ -3593,6 +3595,11 @@ object GraftTable {
   val RowIdCol = "_row_id"
   /** Table property holding the highest allocated row id. */
   val RowIdHwmKey = "rowTracking.rowIdHighWaterMark"
+
+  /** The columns of a native `_dv/` sidecar entry that readers use: the
+    * data file's path as written and the tombstoned row position. */
+  private val DvEntrySchema = StructType(Seq(
+    StructField("fname", StringType), StructField("pos", LongType)))
 
   /** Columns whose EXISTS_DEFAULT is LOAD-BEARING: added with a DEFAULT
     * after files already existed, so some live files may physically lack

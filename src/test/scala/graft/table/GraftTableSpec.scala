@@ -238,6 +238,24 @@ class GraftTableSpec extends SparkTestBase {
     assert(t.history().count() === 3)
   }
 
+  test("a zero-row DELETE or UPDATE records its own zero metrics") {
+    val t = GraftTable.create(spark, tmpDir("gt-"), df((1, "A", "A"), (2, "B", "B")))
+    def latest(): (String, Map[String, String]) = {
+      val r = t.history().select("operation", "operationMetrics").head()
+      (r.getString(0), r.getMap[String, String](1).toMap)
+    }
+    assert(t.update("id = 99", Map("firstname" -> "'Z'")) === 0L)
+    val (upOp, up) = latest()
+    assert(upOp === "UPDATE")
+    assert(up.get("numUpdatedRows").contains("0") && up.get("numRewrittenFiles").contains("0"))
+    assert(!up.contains("numDeletedRows"), s"UPDATE history carries DELETE's metric: $up")
+    assert(t.delete("id = 99") === 0L)
+    val (delOp, del) = latest()
+    assert(delOp === "DELETE")
+    assert(del.get("numDeletedRows").contains("0") && del.get("numRewrittenFiles").contains("0"))
+    assert(!del.contains("numUpdatedRows"))
+  }
+
   test("CHECK constraints: enforced on append and merge, versioned add/drop") {
     val t = GraftTable.create(spark, tmpDir("gt-"), df((1, "A", "B")))
     t.addConstraint("pos_id", "id > 0")
