@@ -554,7 +554,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
     import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration()
+    val conf = new Configuration(graft.table.FileOps.baseConf)
     // under column mapping the parquet DATA files carry PHYSICAL names; the
     // requested schema must ask for them (output stays positional, so the
     // logical scan schema is untouched). CDC sidecars are the exception:

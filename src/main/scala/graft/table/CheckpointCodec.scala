@@ -143,8 +143,11 @@ object CheckpointCodec {
     * slices write CONCURRENTLY. */
   def writePart(file: Path, header: Option[Snapshot], files: Seq[AddFile]): Unit = {
     val factory = new SimpleGroupFactory(schema)
-    val w: ParquetWriter[Group] = ExampleParquetWriter.builder(new HPath(file.toString))
-      .withType(schema).withConf(new Configuration())
+    // java.nio output (no Hadoop FileSystem): no `.crc` sibling is left
+    // beside the tmp file once it is published under its final name
+    val w: ParquetWriter[Group] =
+      ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(file))
+      .withType(schema).withConf(new Configuration(FileOps.baseConf))
       .withCompressionCodec(CompressionCodecName.SNAPPY).build()
     try {
       header.foreach { s =>
@@ -248,7 +251,7 @@ object CheckpointCodec {
       Seq[(String, Long)], Seq[AddFile]) = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
     import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration()
+    val conf = new Configuration(FileOps.baseConf)
     conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, sparkSchema.json)

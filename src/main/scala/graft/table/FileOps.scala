@@ -1,29 +1,47 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.DataFrame
 
-/** Data-file plumbing: stage a DataFrame write, move the part files into the
-  * table directory under fresh UUID names, and harvest per-file footer stats
-  * (row count + column min/max) into AddFile actions for data skipping.
+/** Data-file plumbing: write a DataFrame as table files (through
+  * [[DataFileWriter]], which lands every file at its final name from the
+  * task — the log commit, not the file system, makes it visible), harvest
+  * per-file footer stats (row count + column min/max) into AddFile actions
+  * for data skipping, and graft's own parquet footer and sidecar reads.
   *
-  * Local-filesystem moves are used here; at cluster scale the same protocol
-  * runs over any store with rename — the log, not the file system, provides
-  * atomicity (files are invisible until their commit lands).
+  * Every parquet open here shares one JVM-wide Hadoop conf ([[baseConf]])
+  * and passes read options built from it: a fresh `Configuration` re-parses
+  * the default XML resources, which costs more than the footer read itself.
   */
-// Serializable: the distributed footer harvest in writeDataFiles ships a
+// Serializable: the distributed footer harvest in harvestStats ships a
 // closure over this module's methods to executors (deserializes back to
 // the singleton — no state crosses the wire)
 object FileOps extends Serializable {
+
+  /** The JVM's one Hadoop conf for graft's own parquet opens, built once.
+    * Callers that set keys copy it (`new Configuration(baseConf)`). */
+  lazy val baseConf: Configuration = new Configuration()
+
+  /** Read options for one parquet open under `conf` (each open gets its
+    * own: a reader releases its options' codec factory on close). */
+  def readOptions(conf: Configuration): ParquetReadOptions =
+    HadoopReadOptions.builder(conf).build()
+
+  /** Opens one parquet file for footer or row-group reads. */
+  def openParquet(file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file.toString), baseConf),
+      readOptions(baseConf))
 
   /** Table property capping how many leading schema columns carry min/max/
     * null-count stats in the log — Delta's `dataSkippingNumIndexedCols`,
@@ -76,119 +94,14 @@ object FileOps extends Serializable {
           maxValues = f(a.maxValues), nullCounts = f(a.nullCounts)))
     }
 
-  /** Per-session reference-counted flip of the parquet output-timestamp
-    * conf. Concurrent writers on ONE SparkSession share the SQLConf, so a
-    * naive set/write/restore races: another thread's write could be
-    * planned after the restore and land INT96 (no footer stats → no time
-    * skipping), or observe a mid-flip value and write footer stats
-    * DataSkipping would compare under the wrong unit. The guard keeps the
-    * conf at TIMESTAMP_MICROS for as long as ANY write is in flight and
-    * restores the session default only when the last writer exits — no
-    * writer ever observes a mid-flip value, and writes stay fully
-    * concurrent (the lock covers only the enter/exit bookkeeping, never
-    * the write job itself). WeakHashMap so dropped sessions don't pin. */
-  private val TsKey = "spark.sql.parquet.outputTimestampType"
-  private final class TsGuard { var depth = 0; var prev: String = null }
-  private val tsGuards =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, TsGuard]()
-
-  private def enterMicros(sess: org.apache.spark.sql.SparkSession): Unit =
-    tsGuards.synchronized {
-      var g = tsGuards.get(sess)
-      if (g == null) { g = new TsGuard; tsGuards.put(sess, g) }
-      if (g.depth == 0) {
-        g.prev = sess.conf.get(TsKey)
-        sess.conf.set(TsKey, "TIMESTAMP_MICROS")
-      }
-      g.depth += 1
-    }
-
-  private def exitMicros(sess: org.apache.spark.sql.SparkSession): Unit =
-    tsGuards.synchronized {
-      val g = tsGuards.get(sess)
-      g.depth -= 1
-      if (g.depth == 0) sess.conf.set(TsKey, g.prev)
-    }
-
-  /** Stage one Spark write under `root/.<tag>-<uuid>` and place its output:
-    * `write` writes parquet into the staging dir it is given; `place` gets
-    * each staged part file (sorted by path), its staging-relative dir (""
-    * or "k=v/...") and that dir's Hive partition values, unescaped. It
-    * moves the part into the table and returns what the caller records;
-    * None leaves the part behind. The staging dir is then removed
-    * best-effort (`_SUCCESS`, `.crc`, skipped parts). Data files, `_cdc/`
-    * sidecars and `_dv/` sidecars are all written through here. */
-  def staged[A](root: String, tag: String)(write: String => Unit)(
-      place: (Path, String, Map[String, String]) => Option[A]): Seq[A] = {
-    val staging = Paths.get(root, s".$tag-${UUID.randomUUID()}")
-    write(staging.toString)
-    def unescape(s: String): String =
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
-    val placed = Files.walk(staging).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.toString)
-      .flatMap { part =>
-        val relDir = staging.relativize(part.getParent).toString
-        place(part, relDir, relDir.split('/').filter(_.contains("=")).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          unescape(k) -> unescape(v)
-        }.toMap)
-      }
-    Files.walk(staging).iterator().asScala.toSeq.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    placed
-  }
-
   /** Write `df` as parquet files inside `tablePath` (Hive-style partition
-    * dirs when `partitionCols` is non-empty), returning AddFiles with footer
-    * stats + partition values. Zero-row part files are dropped. */
+    * dirs when `partitionCols` is non-empty) through [[DataFileWriter]],
+    * returning AddFiles with the files' footer stats and partition values. */
   def writeDataFiles(df: DataFrame, tablePath: String,
                      partitionCols: Seq[String] = Nil,
-                     writeOptions: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val writer0 = df.write.options(writeOptions)
-    val writer = if (partitionCols.nonEmpty) writer0.partitionBy(partitionCols: _*)
-                 else writer0
-    // Timestamps land as INT64 micros, not Spark's INT96 default: INT96 is
-    // deprecated and carries NO footer min/max, so a time-range predicate
-    // over INT96 files could never data-skip — the one stat a
-    // time-partitioned 100 TB table lives by. DataSkipping already compares
-    // timestamp stats as micros; this makes every write produce them.
-    // (Session conf, scoped via a ref-counted guard: the parquet source has
-    // no per-write option, and ParquetFileFormat.prepareWrite overwrites any
-    // option from SQLConf, so the session conf is the only lever.)
-    val sess = df.sparkSession
-    // move first (cheap metadata renames), then harvest footer stats — an
-    // executor job beyond a small-commit threshold: stats are one file
-    // open + footer parse PER FILE, and a large initial load writing
-    // thousands of files must not serialize those round-trips on the
-    // driver (the same shape CONVERT's harvest uses)
-    val moved: Seq[(String, Map[String, String])] =
-      staged(tablePath, "staging") { dir =>
-        enterMicros(sess)
-        try writer.parquet(dir)
-        finally exitMicros(sess)
-      } { (part, relDir, partVals) =>
-        val relTarget =
-          (if (relDir.isEmpty) "" else s"$relDir/") + s"part-${UUID.randomUUID()}.parquet"
-        val target = Paths.get(tablePath, relTarget)
-        Files.createDirectories(target.getParent)
-        Files.move(part, target)
-        Some((relTarget, partVals))
-      }
-    val statsByRel: Map[String, (Long, Long, Long, Map[String, String],
-        Map[String, String], Map[String, Long])] =
-      harvestStats(sess, tablePath, moved.map(_._1))
-        .map { case (rel, rows, size, mtime, mins, maxs, nulls) =>
-          rel -> ((rows, size, mtime, mins, maxs, nulls))
-        }.toMap
-    moved.flatMap { case (relTarget, partVals) =>
-      val (rows, size, mtime, mins, maxs, nulls) = statsByRel(relTarget)
-      if (rows == 0L) { Files.delete(Paths.get(tablePath, relTarget)); None }
-      else Some(AddFile(relTarget, size,
-        mtime, rows, mins, maxs, partVals,
-        nullCounts = nulls))
-    }
-  }
+                     writeOptions: Map[String, String] = Map.empty): Seq[AddFile] =
+    DataFileWriter.write(df, tablePath, partitionCols = partitionCols,
+      options = writeOptions).map(_.add)
 
   /** Footer stats for a relative file list under `root` — THE shared
     * distributed-harvest shape (writeDataFiles for large commits,
@@ -196,8 +109,8 @@ object FileOps extends Serializable {
     * round-trips must not serialize on the driver at 1M-file scale, so
     * beyond a small threshold the harvest runs as one executor job. The
     * root ships as an ABSOLUTE path (executors may have a different
-    * working directory), and one Hadoop Configuration serves each
-    * partition (a fresh one per file would re-parse the default XML
+    * working directory), and every footer open shares the JVM's
+    * [[baseConf]] (a fresh one per file would re-parse the default XML
     * resources — a large fraction of per-file cost at the motivating
     * scale). Small lists keep the no-job driver loop.
     *
@@ -218,23 +131,20 @@ object FileOps extends Serializable {
       rels: Seq[String]): Seq[(String, Long, Long, Long, Map[String, String],
       Map[String, String], Map[String, Long])] = {
     val absRoot = Paths.get(root).toAbsolutePath.toString
-    def one(conf: Configuration)(rel: String): (String, Long, Long, Long,
+    def one(rel: String): (String, Long, Long, Long,
         Map[String, String], Map[String, String], Map[String, Long]) = {
       val p = Paths.get(absRoot, rel)
-      val (rows, mins, maxs, nulls) = footerStats(p, conf)
+      val (rows, mins, maxs, nulls) = footerStats(p)
       // real mtime rides along (one extra stat in the same executor pass):
       // CONVERT records each imported file's actual modification time, the
       // audit metadata reference Delta keeps — never a synthetic commit-time
       (rel, rows, Files.size(p), Files.getLastModifiedTime(p).toMillis,
         mins, maxs, nulls)
     }
-    if (rels.size <= 256) { val conf = new Configuration(); rels.map(one(conf)) }
+    if (rels.size <= 256) rels.map(one)
     else {
       import spark.implicits._
-      spark.createDataset(rels).mapPartitions { it =>
-        val conf = new Configuration()
-        it.map(one(conf))
-      }.collect().toSeq.sortBy(_._1)
+      spark.createDataset(rels).mapPartitions(_.map(one)).collect().toSeq.sortBy(_._1)
     }
   }
 
@@ -242,11 +152,10 @@ object FileOps extends Serializable {
     * footer. Only stat types with a total order both here and in predicate
     * literals are kept: int32/int64/float/double and UTF-8 binary. */
   def footerStats(file: Path): (Long, Map[String, String], Map[String, String], Map[String, Long]) =
-    footerStats(file, new Configuration())
+    footerStats(HadoopInputFile.fromPath(new HPath(file.toString), baseConf), baseConf)
 
-  def footerStats(file: Path, conf: Configuration): (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
-    val in = HadoopInputFile.fromPath(new HPath(file.toString), conf)
-    val reader = ParquetFileReader.open(in)
+  def footerStats(in: InputFile, conf: Configuration): (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
+    val reader = ParquetFileReader.open(in, readOptions(conf))
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -405,9 +314,8 @@ object FileOps extends Serializable {
 
   /** Whether a `_dv/` sidecar carries the `rel` format marker column (see
     * [[dvPositions]]), read from its parquet footer on the driver. */
-  def sidecarMarkedRel(sidecar: Path, conf: Configuration): Boolean = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(sidecar.toString), conf))
+  def sidecarMarkedRel(sidecar: Path): Boolean = {
+    val reader = openParquet(sidecar)
     try reader.getFooter.getFileMetaData.getSchema.containsField("rel")
     finally reader.close()
   }
@@ -421,8 +329,7 @@ object FileOps extends Serializable {
   def dvPositions(sidecar: Path, fname: String,
       requireQualified: Boolean = false): java.util.BitSet = {
     val bits = new java.util.BitSet()
-    val in = HadoopInputFile.fromPath(new HPath(sidecar.toString), new Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = openParquet(sidecar)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       // round-16 sidecars carry the `rel` FORMAT MARKER column: every
@@ -486,8 +393,7 @@ object FileOps extends Serializable {
     * straddles the key. */
   def bloomMayMatch(file: Path, probes: Map[String, Seq[Any]]): Boolean = {
     if (probes.isEmpty) return true
-    val in = HadoopInputFile.fromPath(new HPath(file.toString), new Configuration())
-    val reader = ParquetFileReader.open(in)
+    val reader = openParquet(file)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       // the file may match iff SOME row group may satisfy ALL probe columns

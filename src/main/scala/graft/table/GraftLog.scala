@@ -881,9 +881,8 @@ final class GraftLog(val tablePath: String,
       try st.iterator().asScala.toSeq finally st.close()
     }
     try {
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = listStage()
-        .find(_.getFileName.toString.endsWith(".parquet"))
+      val part = DataFileWriter.write(df.coalesce(1), stage.toString).headOption
+        .map(w => stage.resolve(w.path))
         .getOrElse(throw new IllegalStateException(
           s"delta-compat checkpoint $v produced no parquet part"))
       val tmp = logDir.resolve(s".${java.util.UUID.randomUUID()}.cp.tmp")

@@ -365,8 +365,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private def dvSpellings(s: Snapshot, nativeDv: Seq[AddFile])
       : (Seq[((String, String), String)], Set[(String, String)]) = {
     val refSidecars = nativeDv.map(_.dvPath.get).toSet
-    val marked = refSidecars.filter(p => FileOps.sidecarMarkedRel(
-      Paths.get(path, p), spark.sparkContext.hadoopConfiguration))
+    val marked = refSidecars.filter(p => FileOps.sidecarMarkedRel(Paths.get(path, p)))
     def spellingsOf(f: AddFile): Seq[((String, String), String)] = {
       // third spelling: a shallow CLONE references the source's
       // sidecar ("../src/_dv/…") alongside its data file
@@ -2565,12 +2564,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           bucketDir.map(col): _*)
       val physParts =
         meta.partitionColumns.map(ColumnMapping.physicalOf(schema, _)) ++ bucketDir
-      val physBloomMeta = meta.copy(properties = meta.properties ++
-        meta.properties.get("bloom.columns").map(cols => "bloom.columns" ->
-          cols.split(",").map(_.trim).filter(_.nonEmpty)
-            .map(ColumnMapping.physicalOf(schema, _)).mkString(",")))
       FileOps.writeDataFiles(renamed, path, physParts,
-        GraftTable.bloomWriteOptions(physBloomMeta))
+        GraftTable.bloomWriteOptions(meta, ColumnMapping.physicalOf(schema, _)))
     }
   }
 
@@ -2596,22 +2591,22 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       .unionByName(o.exceptAll(n).withColumn("_change_type", lit("delete")))
   }
 
-  /** Write a commit's change rows as `_cdc/` parquet sidecars (distributed
-    * write — executors produce the files, sized by the change volume, not
-    * the table) and return the CdcFile actions to ride in the commit.
-    * No-op (Nil) when CDF is off or the diff is empty. Callers invoke this
-    * BEFORE log.commit so the files exist when the commit makes them
-    * visible; an abandoned staging dir from a failed commit is swept by
-    * vacuum like any unreferenced file. */
+  /** Write a commit's change rows as flat `_cdc/cdc-*.parquet` sidecars
+    * (distributed write — executors produce the files, sized by the change
+    * volume, not the table) and return the CdcFile actions to ride in the
+    * commit. No-op (Nil) when CDF is off or the diff is empty. Callers
+    * invoke this BEFORE the commit so the files exist when it makes them
+    * visible; the files of a commit that never lands are swept by vacuum
+    * like any unreferenced file. */
   private def writeCdcFiles(s: Snapshot, change: => DataFrame): Seq[CdcFile] = {
     if (!cdfEnabled(s.metaData)) return Nil
     // Under delta write-compat on a PARTITIONED table the sidecars take
-    // delta's AddCDCFile shape: the staging write partitions by the table's
-    // partition columns (Spark moves them out of the file into `k=v` dirs,
-    // nulls as the Hive sentinel), and each file's values ride on the
-    // CdcFile action — real delta CDF readers reconstitute the columns
-    // from the action exactly like data files, and so do graft's own
-    // changes()/stream paths. Native tables keep the full-row shape
+    // delta's AddCDCFile shape: the write partitions by the table's
+    // partition columns (moved out of the file, nulls spelled as the Hive
+    // sentinel, the files still flat in `_cdc/`), and each file's values
+    // ride on the CdcFile action — real delta CDF readers reconstitute the
+    // columns from the action exactly like data files, and so do graft's
+    // own changes()/stream paths. Native tables keep the full-row shape
     // (partition columns IN the file), so pre-existing sidecars and new
     // ones coexist: the shape is per-file, told by the action's map.
     val partCols = s.metaData.partitionColumns
@@ -2648,21 +2643,10 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           .fromJson(s.metaData.schemaString).asInstanceOf[StructType]
         partCols.map(ColumnMapping.physicalOf(schema, _))
       }
-    Files.createDirectories(Paths.get(path, "_cdc"))
-    FileOps.staged(path, "cdcstage") { dir =>
-      if (deltaShape) changeW.write.partitionBy(physParts: _*).parquet(dir)
-      else changeW.write.parquet(dir)
-    } { (p, _, pv) =>
-      val (rows, _, _, _) = FileOps.footerStats(p)
-      if (rows == 0L) None
-      else {
-        val rel = s"_cdc/cdc-${UUID.randomUUID()}.parquet"
-        val target = Paths.get(path, rel)
-        Files.move(p, target)
-        // size feeds the CDF stream's maxBytesPerTrigger admission
-        Some(CdcFile(rel, rows, Files.size(target), pv))
-      }
-    }
+    // size feeds the CDF stream's maxBytesPerTrigger admission
+    DataFileWriter.write(changeW, path, kind = "cdc", dir = "_cdc",
+        partitionCols = if (deltaShape) physParts else Nil, partitionDirs = false)
+      .map(w => CdcFile(w.path, w.rows, w.size, w.partitionValues))
   }
 
   /** The one row-level write step of DELETE, UPDATE, MERGE and
@@ -2734,7 +2718,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           dvEntries(s, touched).map(_.unionByName(positions)).getOrElse(positions), touched)
         touched.map { f =>
           val key = canonPath(f.path)
-          Actions.untagReAdd(f).copy(dvPath = Some(dvPathOf(key)),
+          Actions.untagReAdd(f).copy(dvPath = dvPathOf(key),
             dvCount = f.dvCount + counts.getOrElse(key, 0L))
         }
       }
@@ -2793,7 +2777,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
        else Nil): _*)
   }
 
-  /** Tombstone store for one merge-on-read commit: fname → dvPath.
+  /** Tombstone store for one merge-on-read commit: fname → dvPath (None
+    * when there is no tombstone at all).
     * Native tables share ONE `_dv/` parquet sidecar across the touched
     * files; `compat.delta.write` tables write one DELTA-format
     * `deletion_vector_<uuid>.bin` with a per-file roaring blob and carry
@@ -2804,7 +2789,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * back to copy-on-write beyond it), the same bound the native
     * single-sidecar funnel rides. */
   private def writeDvStore(meta: MetaData, entries: DataFrame,
-      touched: Seq[AddFile]): String => String = {
+      touched: Seq[AddFile]): String => Option[String] = {
     // entries arrive keyed by the CANONICAL absolute path (the scan's
     // provenance spelling); persistence and descriptors re-key to the
     // table-relative path so sidecars survive a table relocation
@@ -2825,19 +2810,19 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
         .toSeq.sortBy(_._1)
       val desc = DeltaDeletionVectors.writeDvFile(path, perFile)
-      f => desc.getOrElse(relOf(f), throw new IllegalStateException(
-        s"no deletion-vector blob was written for touched file $f"))
+      f => Some(desc.getOrElse(relOf(f), throw new IllegalStateException(
+        s"no deletion-vector blob was written for touched file $f")))
     }
   }
 
   /** Write tombstone entries as ONE `_dv/` parquet sidecar (fname, pos),
-    * sorted for locality; returns the table-relative path. Tombstone sets
+    * sorted for locality; returns the table-relative path, None when there
+    * are no entries (no zero-row file is written). Tombstone sets
     * are delta-sized — bounded by rows deleted since the last OPTIMIZE and
     * hard-capped by `deletionVectors.maxTombstones` (rewriteRows falls
     * back to copy-on-write beyond it) — so a single sorted file is the
     * right shape and the repartition(1) funnel is bounded. */
-  private def writeDvSidecar(entries: DataFrame): String = {
-    Files.createDirectories(Paths.get(path, "_dv"))
+  private def writeDvSidecar(entries: DataFrame): Option[String] = {
     // `rel = true` is the FORMAT MARKER (round 16): every entry in this
     // sidecar stores the data file's full table-relative path — a bare
     // basename here is a genuine root-level file, never a pre-round-15
@@ -2845,16 +2830,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // clone-escape form) and never raise the legacy-ambiguity refusal
     // on them; sidecars WITHOUT the column keep the conservative
     // suffix-matching + refusal semantics.
-    FileOps.staged(path, "dvstage") { dir =>
+    DataFileWriter.write(
       entries.select(col("__fname").as("fname"), col("__pos").cast(LongType).as("pos"),
           lit(true).as("rel"))
-        .repartition(1).sortWithinPartitions("fname", "pos")
-        .write.parquet(dir)
-    } { (part, _, _) =>
-      val rel = s"_dv/dv-${UUID.randomUUID()}.parquet"
-      Files.move(part, Paths.get(path, rel))
-      Some(rel)
-    }.headOption.getOrElse(throw new IllegalStateException("empty DV sidecar write"))
+        .repartition(1).sortWithinPartitions("fname", "pos"),
+      path, kind = "dv", dir = "_dv").map(_.path).headOption
   }
 
   /** Delta's `delta.appendOnly`: with TBLPROPERTIES `appendOnly = 'true'`
@@ -3079,13 +3059,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           (matchedClauses.isEmpty && bySourceClauses.isEmpty)) Map.empty
       else {
         val metaT = readFilesMeta(s, prunedTargetFiles).alias(targetAlias)
+        // each row's clause flag is projected BELOW the aggregate: a clause
+        // condition may be non-deterministic (rand(), a non-deterministic
+        // UDF), which Spark refuses inside an aggregate function
         val perPos =
           if (bySourceClauses.isEmpty) {
             val anyClause = matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
             metaT.join(src, cond, "inner")
+              .withColumn("__affc", when(anyClause, 1).otherwise(0))
               .groupBy(col("__fname"), col("__pos"))
-              .agg(count(lit(1)).as("__n"),
-                   max(when(anyClause, 1).otherwise(0)).as("__aff"))
+              .agg(count(lit(1)).as("__n"), max(col("__affc")).as("__aff"))
           } else {
             val joined = metaT.join(src.withColumn(srcMark, lit(true)), cond, "left_outer")
             val matchedPred = col(srcMark).isNotNull
@@ -3094,9 +3077,10 @@ final class GraftTable private (val spark: SparkSession, val path: String)
               else matchedPred && matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
             val bAff = !matchedPred && bySourceClauses.map(b => cc(bCond(b))).reduce(_ || _)
             joined
+              .withColumn("__affc", when(mAff || bAff, 1).otherwise(0))
               .groupBy(col("__fname"), col("__pos"))
               .agg(sum(when(matchedPred, 1).otherwise(0)).as("__n"),
-                   max(when(mAff || bAff, 1).otherwise(0)).as("__aff"))
+                   max(col("__affc")).as("__aff"))
           }
         val perFile = perPos.groupBy(col("__fname"))
           .agg(max(col("__n")).as("__mx"), sum(col("__aff")).as("__naff"))
@@ -3670,10 +3654,12 @@ object GraftTable {
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   /** Parquet writer options that (re)build bloom filters on every data
-    * write of a bloom-configured table — DML rewrites keep the index. */
-  private[table] def bloomWriteOptions(meta: MetaData): Map[String, String] = {
+    * write of a bloom-configured table — DML rewrites keep the index.
+    * `physical` spells a column as the files do (column mapping). */
+  private[graft] def bloomWriteOptions(meta: MetaData,
+      physical: String => String = identity): Map[String, String] = {
     val ndv = meta.properties.getOrElse("bloom.ndv", "100000")
-    bloomColumns(meta).flatMap(c => Seq(
+    bloomColumns(meta).map(physical).flatMap(c => Seq(
       s"parquet.bloom.filter.enabled#$c" -> "true",
       s"parquet.bloom.filter.expected.ndv#$c" -> ndv)).toMap
   }

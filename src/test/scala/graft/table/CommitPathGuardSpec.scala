@@ -1,10 +1,12 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the table layer to one commit path and one row-level write step.
+/** Keeps the table layer to one commit path, one row-level write step and
+  * one data-file writer.
   *
   *  - In the table sources, a log publish (`log.commit(`), a `CommitInfo(`
   *    or a `RemoveFile(` may only be built inside `OptimisticCommit.commit`
@@ -15,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `rewriteRows`, the one place that chooses between tombstoning and
   *    rewriting; the literal may also appear in `setProperty`, which
   *    validates it.
+  *  - In the table and source layers, no file is written through a
+  *    `DataFrame.write` chain or staged through a `staged(` helper:
+  *    [[DataFileWriter]] writes every table file at its final name.
   *
   * Comments are skipped; the enclosing method is the nearest member-level
   * `def` above. */
@@ -29,6 +34,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
     """(?<!def )\bwriteDvStore\(""".r -> Set("rewriteRows"),
     "\"deletionVectors\\.maxTombstones\"".r -> Set("rewriteRows", "setProperty"))
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
+  /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
+    * not Spark's `connector.write` package) or a `staged(` helper. */
+  private val writerDetour = """(?<!connector)\.write(?=\s*(?:\.|$))|\bstaged\s*[\[(]""".r
 
   /** `src` with every comment blanked out, line breaks kept. */
   private def withoutComments(src: String): String = {
@@ -62,11 +70,11 @@ class CommitPathGuardSpec extends AnyFunSuite {
     out.toString
   }
 
-  /** Each `pattern` hit in the table source `file` whose enclosing
+  /** Each `pattern` hit in the `layer` source `file` whose enclosing
     * member-level method is not in `methods`, as "file:line in method: hit". */
   private def strays(file: String, pattern: scala.util.matching.Regex,
-      methods: Set[String]): Seq[String] = {
-    val path = Paths.get("src/main/scala/graft/table", file)
+      methods: Set[String], layer: String = "table"): Seq[String] = {
+    val path = Paths.get("src/main/scala/graft", layer, file)
     assert(Files.isRegularFile(path), s"run from the repository root: $path")
     var enclosing = "<none>"
     withoutComments(Files.readString(path)).split("\n", -1).toSeq
@@ -93,5 +101,19 @@ class CommitPathGuardSpec extends AnyFunSuite {
     dvDecision.foreach { case (pattern, _) =>
       assert(strays("GraftTable.scala", pattern, Set.empty).nonEmpty, s"$pattern matches nothing")
     }
+  }
+
+  test("table and source files are written only through DataFileWriter") {
+    val found = for {
+      layer <- Seq("table", "sources")
+      file <- Files.list(Paths.get("src/main/scala/graft", layer)).iterator().asScala.toSeq
+        .map(_.getFileName.toString).filter(_.endsWith(".scala")).sorted
+      hit <- strays(file, writerDetour, Set.empty, layer)
+    } yield s"$layer/$hit"
+    assert(found.isEmpty,
+      s"files written around DataFileWriter:\n${found.mkString("\n")}")
+    // the pattern still recognizes each detour it bars
+    Seq("df.write.parquet(dir)", "      .write", "FileOps.staged(root, tag)").foreach(line =>
+      assert(writerDetour.findFirstIn(line).nonEmpty, line))
   }
 }

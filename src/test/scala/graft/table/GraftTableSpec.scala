@@ -618,6 +618,22 @@ class GraftTableSpec extends SparkTestBase {
     assert(state(t.toDF) === Set((1, "kept", "row")))
   }
 
+  test("MERGE: a non-deterministic clause condition runs, with and without by-source clauses") {
+    val t = GraftTable.create(spark, tmpDir("gt-"),
+      df((1, "A", "B"), (2, "C", "D"), (3, "E", "F")))
+    t.merge(df((1, "u", "u"), (4, "new", "row")), "t.id = s.id")
+      .whenMatchedUpdate("rand() >= 0", Map("firstname" -> "s.firstname"))
+      .whenNotMatchedInsert(Map(
+        "id" -> "s.id", "firstname" -> "s.firstname", "lastname" -> "s.lastname"))
+      .execute()
+    assert(state(t.toDF) === Set((1, "u", "B"), (2, "C", "D"), (3, "E", "F"), (4, "new", "row")))
+    t.merge(df((2, "v", "v")), "t.id = s.id")
+      .whenMatchedUpdate("rand() >= 0", Map("lastname" -> "s.lastname"))
+      .whenNotMatchedBySourceDelete("rand() < 2 AND t.id = 3")
+      .execute()
+    assert(state(t.toDF) === Set((1, "u", "B"), (2, "C", "v"), (4, "new", "row")))
+  }
+
   test("MERGE: multiple conditional insert clauses dispatch in order; no-clause rows drop") {
     val t = GraftTable.create(spark, tmpDir("gt-"), df((1, "A", "B")))
     t.merge(df((2, "hi", "x"), (3, "lo", "x"), (4, "skip", "x")), "t.id = s.id")

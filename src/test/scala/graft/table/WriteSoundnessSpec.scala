@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Write-path soundness under concurrency and stat anomalies:
-  *   - the parquet output-timestamp conf flip is ref-counted per session,
-  *     so concurrent writers can never observe a mid-flip value (a write
-  *     planned during another writer's restore window would land INT96 —
-  *     no footer stats, no time-based data skipping);
+  *   - concurrent writers on an INT96-defaulted session all write INT64
+  *     micros with footer stats: each write carries TIMESTAMP_MICROS in its
+  *     own Hadoop conf and the session conf is never flipped (an INT96
+  *     file has no footer stats, so no time-based data skipping);
   *   - an identity append whose file lacks the max footer stat fails
   *     loudly instead of silently re-issuing ids from a stale frontier;
   *   - symlink manifests are replaced atomically (old or new listing,
