@@ -1645,7 +1645,7 @@ object TableQueries {
     // A delta-spark merge-on-read DELETE leaves the data file intact and a
     // roaring-bitmap deletion vector beside it; graft decodes the public
     // DV format (descriptor, Z85, RoaringBitmapArray portable) into the
-    // same anti-join shape as its native sidecars. The fixture writes ONE
+    // same per-file row mask as its native sidecars. The fixture writes ONE
     // file sorted by n_nationkey so tombstone POSITIONS are known, then
     // the oracle replays the delete as a value predicate.
     "q188_delta_dv_interop" -> Q(
@@ -2673,10 +2673,7 @@ object TableQueries {
       // carry the mapping's field ids — the contract an id-resolving
       // delta reader binds new files through
       t.snapshot.files.foreach { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(root, f.path).toString),
-          new org.apache.hadoop.conf.Configuration())
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val rd = graft.table.FileOps.openParquet(Paths.get(root, f.path))
         try {
           val fields = rd.getFooter.getFileMetaData.getSchema.getFields
           import scala.jdk.CollectionConverters._

@@ -838,7 +838,7 @@ class GraftGroupScan(tablePath: String, snap: Snapshot,
     // collision verdict over the snapshot's FULL live set, never the
     // runtime-filtered subset: pruning one (sidecar, basename) twin must
     // not let the other twin's legacy entry silently re-attribute
-    val strictDv = graft.streaming.GraftTableStream.dvBasenameCollisions(snap.files)
+    val strictDv = graft.table.FileOps.dvBasenameCollisions(snap.files)
     files.map(f => graft.streaming.GraftFilePartition(
       absPath(f), f.partitionValues, f.numRecords,
       // merge-on-read: the rewrite scan must NOT resurrect tombstoned rows
@@ -1007,7 +1007,7 @@ class GraftV1ScanRelation(ctx: SQLContext, table: GraftTable, snap: Snapshot,
     }
     // `_file` metadata column: which data file holds the row, as a plain
     // path comparable with the row-level GraftGroupScan's `_file` — bound
-    // from parquet's _metadata BEFORE any deletion-vector anti-join.
+    // from parquet's _metadata in the scan leaf.
     // `_row_id` (row tracking): the stable id, resolved the same way
     // scanWithRowIds does.
     val wantsFile = required.fieldNames.contains("_file")

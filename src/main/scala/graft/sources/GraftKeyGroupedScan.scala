@@ -87,9 +87,9 @@ class GraftKeyGroupedScan(table: GraftTable, snap: Snapshot,
 
   private lazy val planned: Array[InputPartition] = {
     // collision verdict over the snapshot's FULL live set, never the
-    // pruned subset (see GraftTable.dvEntries: a pruned basename twin
-    // must still force the refusal for its surviving twin)
-    val strictDv = graft.streaming.GraftTableStream.dvBasenameCollisions(snap.files)
+    // pruned subset (see FileOps.dvBasenameCollisions: a pruned basename
+    // twin must still force the refusal for its surviving twin)
+    val strictDv = graft.table.FileOps.dvBasenameCollisions(snap.files)
     files.map { f =>
       val abs = java.nio.file.Paths.get(table.path, f.path).toString
       GraftKeyedFilePartition(

@@ -356,7 +356,7 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
         }
       }
     plannedColumnarOk = files.forall(_.dvPath.isEmpty)
-    val strictDv = GraftTableStream.dvBasenameCollisions(files)
+    val strictDv = graft.table.FileOps.dvBasenameCollisions(files)
     files.map(f => GraftFilePartition(
       Paths.get(tablePath, f.path).toString, f.partitionValues,
       f.numRecords,
@@ -375,7 +375,7 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
     def tsOf(v: Long): String = log.readVersion(v)
       .collectFirst { case c: CommitInfo => c.timestamp }.getOrElse(0L).toString
     def insertParts(files: Seq[AddFile], v: Long): Unit = {
-      val strictDv = GraftTableStream.dvBasenameCollisions(files)
+      val strictDv = graft.table.FileOps.dvBasenameCollisions(files)
       files.foreach { f =>
         parts += GraftFilePartition(
           Paths.get(tablePath, f.path).toString, f.partitionValues, f.numRecords,
@@ -784,27 +784,6 @@ object GraftTableStream {
     case other => throw new UnsupportedOperationException(
       s"unsupported partition column type for streaming: $other")
   }
-
-  /** File paths of files that share (sidecar, basename) with another
-    * file in `files` — for those, a LEGACY bare-basename sidecar entry
-    * is unattributable and the per-file reader must refuse (the same
-    * verdict the batch path's dvEntries reaches), never silently
-    * tombstone both twins. Round-15 sidecars spell the relative path, so
-    * healthy new-format shared sidecars never set the flag's refusal off.
-    *
-    * CONTRACT: `files` must contain every live file sharing a sidecar
-    * with the planned set — the snapshot's full live set for batch scans
-    * (a pruned twin must still force the refusal for its survivor), or a
-    * single commit's adds for the streaming tail (complete by
-    * construction: a DV commit re-adds every file of the new sidecar it
-    * writes in that same commit, and a shallow clone lands all source
-    * references in one commit). */
-  def dvBasenameCollisions(files: Seq[AddFile]): Set[String] =
-    files.filter(_.dvPath.isDefined)
-      .groupBy(f => (f.dvPath.get,
-        f.path.substring(f.path.lastIndexOf('/') + 1)))
-      .collect { case (_, fs) if fs.size > 1 => fs.map(_.path) }
-      .flatten.toSet
 
   /** Types the SPJ scan can decode into partition keys — including
     * TimestampType since the decoder above learned the Hive dir form: an

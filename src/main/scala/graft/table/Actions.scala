@@ -119,7 +119,7 @@ object Protocol {
       // foreign tables wholesale (GraftTable.vacuum's DeltaReadMarker gate
       // + GraftLog.refuseForeignMutation). Foreign deletionVectors READ
       // natively (DeltaDeletionVectors decodes the roaring format into
-      // the same anti-join shape as graft sidecars); columnMapping reads
+      // the same per-file mask as graft sidecars); columnMapping reads
       // natively in NAME mode (the fold translates the delta metadata
       // key, ColumnMapping.fromDeltaSchema) AND in ID mode (field ids
       // translate to Spark's parquet.field.id and the read paths enable
@@ -358,9 +358,9 @@ object Actions {
     * = -1, the "unknown" sentinel metadata-only answers must refuse. */
   private def deltaAdd(n: JsonNode): AddFile = {
     // REAL Delta deletion vectors: the descriptor packs into the dvPath
-    // slot under a marker; GraftTable.dvEntries decodes the roaring
-    // bitmap into the same (__fname, __pos) anti-join shape graft's own
-    // parquet sidecars use (DeltaDeletionVectors has the format). An
+    // slot under a marker; FileOps.dvBitsFor decodes the roaring
+    // bitmap into the same per-file row-index mask graft's own parquet
+    // sidecars decode to (DeltaDeletionVectors has the format). An
     // empty descriptor (delta writes storageType-less placeholders in
     // some checkpoint rows) folds as "no DV".
     val (dvPath, dvCount) = Option(n.get("deletionVector"))

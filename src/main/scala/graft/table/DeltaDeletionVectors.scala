@@ -7,9 +7,9 @@ import java.nio.file.{Files, Path, Paths}
   * round-13 read-interop. A delta-spark table that ran a merge-on-read
   * DELETE carries `add.deletionVector` descriptors; before this, graft
   * refused the whole table ("compact with REORG PURGE first"). Now the
-  * tombstoned row positions decode into the SAME `(__fname, __pos)`
-  * anti-join shape graft's native DV sidecars use, so every read path
-  * (snapshot, time travel, pruning splits) works unchanged.
+  * tombstoned row positions decode into the SAME per-file row-index mask
+  * graft's native DV sidecars decode to (`FileOps.dvBitsFor`), so every
+  * read path (snapshot, time travel, pruning splits) works unchanged.
   *
   * Everything here follows the PUBLIC formats:
   *
@@ -283,8 +283,9 @@ object DeltaDeletionVectors {
     }
   }
 
-  /** Tombstoned positions of one packed descriptor — the executor-side
-    * entry point `GraftTable.dvEntries` maps over. Reconciles the decoded
+  /** Tombstoned positions of one packed descriptor, decoded on the
+    * executor that reads the file (through [[bitsAbs]], which
+    * `FileOps.dvBitsFor` calls). Reconciles the decoded
     * count against the descriptor's declared cardinality (which is what
     * metadata-only counts subtract): a mismatch — bit rot in the log line,
     * a buggy writer, inline payloads which carry no CRC — must fail
@@ -427,8 +428,9 @@ object DeltaDeletionVectors {
   def isForeignAbs(dvAbs: String): Boolean =
     dvAbs.startsWith(Marker) && dvAbs.indexOf('\u0000') >= 0
 
-  /** Tombstone BitSet of one packAbs string — the per-file reader's skip
-    * mask (same shape as FileOps.dvPositions for native sidecars). */
+  /** Tombstone BitSet of one packAbs string — the per-file skip mask
+    * `FileOps.dvBitsFor` returns for a foreign file (FileOps.dvPositions
+    * is its native-sidecar twin). */
   def bitsAbs(dvAbs: String): java.util.BitSet = {
     val body = dvAbs.stripPrefix(Marker)
     val sep = body.indexOf('\u0000')

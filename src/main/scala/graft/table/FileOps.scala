@@ -13,6 +13,10 @@ import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-file plumbing: write a DataFrame as table files (through
   * [[DataFileWriter]], which lands every file at its final name from the
@@ -300,32 +304,96 @@ object FileOps extends Serializable {
       DeltaDeletionVectors.packAbs(tableRoot, dvPath)
     else java.nio.file.Paths.get(tableRoot, dvPath).toString
 
-  /** Tombstone BitSet of one dvAbs reference — dispatches between graft's
-    * parquet sidecar format and the foreign Delta roaring format.
-    * `requireQualified` is the planner's verdict that this file shares
-    * (sidecar, basename) with another planned file: a bare-basename
-    * entry is then genuinely unattributable and must refuse like the
-    * batch path does, never silently tombstone both twins. */
+  /** Tombstone BitSet of one dvAbs reference — the ONLY code that turns a
+    * deletion vector into skipped rows, for every scan: the batch reads
+    * ([[LiveRows]]), the row-level prior-tombstone merge, the streaming
+    * source, the SQL group scan and the SPJ scan. Dispatches between
+    * graft's parquet sidecar format and the foreign Delta roaring format.
+    * `fname` is the data file's table-relative path. `requireQualified`
+    * is the planner's verdict ([[dvBasenameCollisions]]) that this file
+    * shares (sidecar, basename) with another live file: a bare-basename
+    * entry is then genuinely unattributable and must refuse, never
+    * silently tombstone both twins. */
   def dvBitsFor(dvAbsRef: String, fname: String,
       requireQualified: Boolean = false): java.util.BitSet =
     if (DeltaDeletionVectors.isForeignAbs(dvAbsRef))
       DeltaDeletionVectors.bitsAbs(dvAbsRef)
     else dvPositions(java.nio.file.Paths.get(dvAbsRef), fname, requireQualified)
 
-  /** Whether a `_dv/` sidecar carries the `rel` format marker column (see
-    * [[dvPositions]]), read from its parquet footer on the driver. */
-  def sidecarMarkedRel(sidecar: Path): Boolean = {
-    val reader = openParquet(sidecar)
-    try reader.getFooter.getFileMetaData.getSchema.containsField("rel")
-    finally reader.close()
+  /** Table-relative paths of the files in `files` that share (sidecar,
+    * basename) with another file in `files` — for those, a LEGACY
+    * bare-basename sidecar entry is unattributable and [[dvBitsFor]] must
+    * be asked to refuse it. Sidecars since round 15 spell the relative
+    * path, so healthy shared sidecars never set the refusal off.
+    *
+    * CONTRACT: `files` must contain every live file sharing a sidecar
+    * with the planned set — the snapshot's full live set for batch scans
+    * (a pruned twin must still force the refusal for its survivor), or a
+    * single commit's adds for the streaming tail (complete by
+    * construction: a DV commit re-adds every file of the new sidecar it
+    * writes in that same commit, and a shallow clone lands all source
+    * references in one commit). */
+  def dvBasenameCollisions(files: Seq[AddFile]): Set[String] =
+    files.filter(_.dvPath.isDefined)
+      .groupBy(f => (f.dvPath.get,
+        f.path.substring(f.path.lastIndexOf('/') + 1)))
+      .collect { case (_, fs) if fs.size > 1 => fs.map(_.path) }
+      .flatten.toSet
+
+  /** The scheme prefix Spark's `_metadata.file_path` carries and graft's
+    * provenance keys drop (`regexp_replace(file_path, FileScheme, "/")`). */
+  val FileScheme = "^file:/+"
+
+  /** The batch scans' deletion-vector state for one scan: `dvOf` maps
+    * each DV file's provenance key (`_metadata.file_path` without its
+    * [[FileScheme]]) to its dvAbs reference, its
+    * table-relative path and its `requireQualified` verdict; a file not in
+    * the map keeps every row. Each task holds its own copy and decodes a
+    * file's DV through [[dvBitsFor]] when the first row of that file
+    * reaches it, so only the files a scan keeps are ever decoded, and no
+    * sidecar is read on the driver. Rows of one file arrive together, so a
+    * row costs one comparison of its `file_path` bytes with the previous
+    * row's. */
+  final class LiveRows(dvOf: Map[String, (String, String, Boolean)]) extends Serializable {
+    @transient private lazy val loaded =
+      scala.collection.mutable.HashMap.empty[String, java.util.BitSet]
+    @transient private var lastKey: UTF8String = _
+    @transient private var lastBits: java.util.BitSet = _
+
+    def live(key: UTF8String, pos: Long): Boolean = {
+      if (key != lastKey) {
+        val k = key.toString.replaceFirst(FileScheme, "/")
+        lastBits = dvOf.get(k).map { case (dv, rel, strict) =>
+          loaded.getOrElseUpdate(k, dvBitsFor(dv, rel, strict)) }.orNull
+        lastKey = key.clone()
+      }
+      lastBits == null || !lastBits.get(pos.toInt)
+    }
+  }
+
+  /** `dv_live(file_path, row_index)`: whether [[LiveRows]] keeps the row
+    * — the filter a batch scan applies in its parquet leaf when some of
+    * its files carry a DV. A Catalyst expression rather than a UDF: its
+    * generated code is one call, with no per-row string conversion. */
+  final case class LiveRow(left: Expression, right: Expression, rows: LiveRows)
+      extends BinaryExpression {
+    override def dataType: DataType = BooleanType
+    override def nullSafeEval(key: Any, pos: Any): Any =
+      rows.live(key.asInstanceOf[UTF8String], pos.asInstanceOf[Long])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val r = ctx.addReferenceObj("liveRows", rows)
+      defineCodeGen(ctx, ev, (key, pos) => s"$r.live($key, $pos)")
+    }
+    override def prettyName: String = "dv_live"
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): LiveRow =
+      copy(left = l, right = r)
   }
 
   /** Load one data file's deletion-vector tombstones from a `_dv/` sidecar
     * (columns fname/pos, written sorted) as a BitSet over row indexes —
-    * executor-side, parquet-mr only (the custom row-level/streaming
-    * readers can't ride the batch scan's anti-join). A file's positions
-    * are bounded by its row count (~1M for 128 MB), so the bitmap is
-    * ≤ ~128 KB. */
+    * executor-side, parquet-mr only, reached through [[dvBitsFor]]. A
+    * file's positions are bounded by its row count (~1M for 128 MB), so
+    * the bitmap is ≤ ~128 KB. */
   def dvPositions(sidecar: Path, fname: String,
       requireQualified: Boolean = false): java.util.BitSet = {
     val bits = new java.util.BitSet()

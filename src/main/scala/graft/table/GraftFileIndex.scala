@@ -20,26 +20,29 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    starts no Spark listing job, however many files the version has.
   *  - Partition values come from `partitionValues`, cast to the declared
   *    partition types in the session time zone, `__HIVE_DEFAULT_PARTITION__`
-  *    reading as null. `partitioned = false` leaves them out (the
-  *    shallow-clone read attaches them itself).
+  *    reading as null — for a shallow clone's escaped "../src/…" files
+  *    too.
   *  - `listFiles` prunes when Spark plans the scan: partition filters are
   *    evaluated EXACTLY on each file's partition row (Spark drops them from
   *    the post-scan filter), data filters go through the table's stats
   *    pruning (min/max, null counts, bucket, bloom), which is conservative
   *    and re-checked row by row. So a `.filter` on any version's frame
-  *    prunes files, through unions and the deletion-vector anti-join.
+  *    prunes files, and only the kept files' deletion vectors are ever
+  *    decoded (by the tasks that read them).
+  *  - A kept file whose legacy DV sidecar entry cannot be attributed
+  *    refuses here, on the driver, before any task runs
+  *    ([[GraftTable.requireAttributableDv]]).
   *
   * The relation's attributes carry PHYSICAL names under column mapping;
   * data filters are renamed to logical names before the stats pruning,
   * which keys stats by logical name. Two indexes over the same files are
   * equal, so Spark's exchange reuse and cache lookup see equal scans. */
 private[table] final class GraftFileIndex(table: GraftTable, snapshot: Snapshot,
-    files: Seq[AddFile], partitioned: Boolean) extends FileIndex {
+    files: Seq[AddFile]) extends FileIndex {
 
   /** (logical, physical) partition fields, in schema order. */
   private val partFields: Seq[(StructField, StructField)] =
-    if (!partitioned) Nil
-    else snapshot.schema.fields.toSeq
+    snapshot.schema.fields.toSeq
       .zip(ColumnMapping.physicalSchema(snapshot.schema).fields)
       .filter { case (lf, _) => snapshot.metaData.partitionColumns.contains(lf.name) }
 
@@ -121,8 +124,7 @@ private[table] final class GraftFileIndex(table: GraftTable, snapshot: Snapshot,
       case a: AttributeReference if physToLog.contains(a.name) => a.withName(physToLog(a.name))
     }
 
-  private lazy val key: (String, Boolean, Seq[String]) =
-    (table.path, partitioned, files.map(_.path))
+  private lazy val key: (String, Seq[String]) = (table.path, files.map(_.path))
 
   override def equals(other: Any): Boolean = other match {
     case g: GraftFileIndex => g.key == key

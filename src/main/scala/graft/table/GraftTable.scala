@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.GraftSqlShims.{columnOf, expressionOf}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -54,18 +55,12 @@ final class GraftTable private (val spark: SparkSession, val path: String)
 
   /** Raw parquet scan of a file subset, no deletion-vector filtering,
     * planned from the log: one [[GraftFileIndex]] leaf supplies the file
-    * statuses and partition values from the AddFiles, so building the
-    * frame lists no directory and starts no Spark job, and a filter on it
-    * prunes files when Spark plans the scan.
-    *
-    * `perScan` decorates each LEAF scan before any union — the hook the
-    * provenance helpers attach `_metadata`-derived columns through
-    * (metadata columns resolve against a single file relation, never
-    * across a union), so shapes that must union several scans (the
-    * shallow-clone branch below) stay transparent to every caller. */
+    * statuses and partition values from the AddFiles (a shallow clone's
+    * escaped "../src/…" files included), so building the frame lists no
+    * directory and starts no Spark job, and a filter on it prunes files
+    * when Spark plans the scan. */
   private def readFilesRaw(s: Snapshot, files: Seq[AddFile],
-      withMaterializedRowId: Boolean = false,
-      perScan: DataFrame => DataFrame = identity): DataFrame = {
+      withMaterializedRowId: Boolean = false): DataFrame = {
     // under column mapping the FILES carry physical column names; the scan
     // reads them and toLogical() renames at the end of each read helper.
     // With row tracking, the materialized `_row_id` column joins the read
@@ -76,73 +71,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       if (!withMaterializedRowId) physSchema0
       else physSchema0.add(StructField(GraftTable.RowIdCol, LongType, nullable = true))
     ensureFieldIdResolution(physSchema)
-    val partCols = s.metaData.partitionColumns
-    def scanOf(dataSchema: StructType, partitioned: Boolean): DataFrame = {
-      val index = new GraftFileIndex(this, s, files, partitioned)
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-        dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
-    }
-    if (partCols.nonEmpty && files.exists(_.path.startsWith(".."))) {
-      // SHALLOW-CLONE references escape the table root. ONE scan leaf
-      // reads every escaped file with the non-partition schema and each
-      // row recovers its partition values through a broadcast file-name →
-      // values map (driver-built, O(files) rows — the same bounded shape
-      // as the row-tracking base map below), then casts them to the
-      // declared partition types. Plan width is CONSTANT in the number of
-      // distinct partition combos: the first scan of a freshly cloned
-      // 100-TB table with thousands of partitions plans exactly one
-      // parquet leaf + one broadcast hash join, not a thousands-leg union
-      // (ShallowClonePlanSpec pins this at 100+ combos; an OPTIMIZE still
-      // localizes files and restores the plain partitioned scan).
-      val logicalFields = s.schema.fields
-      val dataSchema = StructType(physSchema.fields.zipWithIndex.collect {
-        case (f, i) if i >= logicalFields.length ||
-          !partCols.contains(logicalFields(i).name) => f
-      })
-      val partIdx = logicalFields.zipWithIndex
-        .filter { case (lf, _) => partCols.contains(lf.name) }
-      def valueOf(f: AddFile, lf: StructField): String = {
-        val phys = ColumnMapping.physicalName(lf)
-        f.partitionValues.getOrElse(phys, f.partitionValues(lf.name))
-      }
-      val sentinel = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .DEFAULT_PARTITION_NAME
-      val pvCols = partIdx.indices.map(i => s"__pv_$i")
-      val pvSchema = StructType(
-        StructField("__pfname", StringType, nullable = false) +:
-          pvCols.map(c => StructField(c, StringType, nullable = true)))
-      // keyed by the NORMALIZED absolute path, never the basename: clone
-      // references can point at converted/foreign layouts where many
-      // partition dirs hold a same-named file, and a basename key would
-      // multiply every row by its name-collision count
-      val pvRows = files.map { f =>
-        Row.fromSeq(canonPath(f.path) +:
-          partIdx.map { case (lf, _) =>
-            val v = valueOf(f, lf)
-            if (v == sentinel) null else v
-          })
-      }.asJava
-      val pvDf = broadcast(spark.createDataFrame(pvRows, pvSchema))
-      // __pfname materializes BEFORE perScan so both resolve `_metadata`
-      // against the single leaf relation (metadata columns propagate
-      // through the projection, but hooks like markProvenance were
-      // written against a bare scan)
-      val base = perScan(scanOf(dataSchema, partitioned = false)
-        .withColumn("__pfname", scanFilePath))
-      val joined = partIdx.zip(pvCols).foldLeft(
-        base.join(pvDf, Seq("__pfname"), "left")) {
-          case (d, ((lf, i), c)) =>
-            d.withColumn(physSchema.fields(i).name, col(c).cast(lf.dataType))
-        }.drop("__pfname" +: pvCols: _*)
-      // restore schema column order (callers may rely on it when mapping
-      // is inactive and toLogical is the identity); perScan-added columns
-      // trail in whatever order the hook produced
-      val extras = joined.columns.toSeq.diff(physSchema.fieldNames.toSeq)
-      joined.select((physSchema.fieldNames.toSeq ++ extras).map(joined(_)): _*)
-    } else
-      // partition columns keep their schema position; the hidden
-      // `__bucket` dir of a bucketed table is layout, never a column
-      perScan(scanOf(physSchema, partitioned = partCols.nonEmpty))
+    // partition columns keep their schema position; the hidden
+    // `__bucket` dir of a bucketed table is layout, never a column
+    val index = new GraftFileIndex(this, s, files)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      physSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** id-mode column mapping: Spark resolves parquet columns by field id
@@ -164,45 +97,27 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       keep.map(col): _*)
 
   /** Read a subset of a snapshot's files with the snapshot schema, with
-    * each file's deletion vector applied (merge-on-read): rows whose
-    * (file, row_index) is tombstoned in the file's DV sidecar are filtered
-    * by an anti-join on parquet's stable `_metadata.row_index` — a
-    * map-side hash probe when the tombstone set broadcasts (the common
-    * case: DVs are deltas, OPTIMIZE rebases them away), a shuffle join
-    * beyond that. Declarative on purpose: Catalyst keeps pushdown and
-    * column pruning on the underlying scan.
-    *
-    * The scan SPLITS on DV presence: only files that actually carry a
-    * deletion vector pay the anti-join; DV-free files scan raw and union
-    * in. At 100 TB with one tombstoned file, the other 99.99% of the table
-    * must not pay a per-row hash probe on a string file-name key. */
+    * each file's deletion vector applied (merge-on-read) inside the one
+    * scan leaf by [[dropTombstoned]]: no join, and each task decodes only
+    * the DVs of the files it reads. A subset without DVs scans raw. */
   private[graft] def readFiles(s: Snapshot, files: Seq[AddFile]): DataFrame =
-    toLogical(s, splitOnDv(s, files, (fs, mark) => readFilesRaw(s, fs, perScan = mark)))
+    toLogical(s, dropTombstoned(s, files, readFilesRaw(s, files)))
 
   /** readFiles variant carrying a `_file` column (the row's data file as a
-    * plain absolute path) — the V1 scan's metadata column. Derived from
-    * `_metadata.file_path` BEFORE any DV anti-join: `input_file_name()`
-    * is undefined over a multi-source plan. */
+    * plain absolute path) — the V1 scan's metadata column, derived from
+    * `_metadata.file_path` in the leaf: `input_file_name()` is undefined
+    * over a multi-source plan. */
   private[graft] def readFilesWithFileCol(s: Snapshot, files: Seq[AddFile]): DataFrame =
-    toLogical(s, splitOnDv(s, files, (fs, mark) => readFilesRaw(s, fs,
-      perScan = df => mark(df.withColumn("_file", scanFilePath)))), Seq("_file"))
+    toLogical(s, dropTombstoned(s, files, readFilesRaw(s, files))
+      .withColumn("_file", scanFilePath), Seq("_file"))
 
   /** readFiles variant that keeps `__fname`/`__pos` provenance columns —
     * the DV delete path needs the surviving rows' positions. */
   private def readFilesMeta(s: Snapshot, files: Seq[AddFile]): DataFrame = {
     val rt = rowTrackingEnabled(s.metaData)
     val rid = if (rt) Seq(GraftTable.RowIdCol) else Nil
-    def marked(fs: Seq[AddFile]): DataFrame =
-      readFilesRaw(s, fs, withMaterializedRowId = rt, perScan = markProvenance)
-    val (withDv, noDv) = files.partition(_.dvPath.isDefined)
-    val out =
-      if (withDv.isEmpty) marked(files)
-      else {
-        val filtered = marked(withDv).join(
-          maybeBroadcast(dvEntries(s, withDv).get, withDv.map(_.dvCount).sum),
-          Seq("__fname", "__pos"), "left_anti")
-        if (noDv.isEmpty) filtered else marked(noDv).unionByName(filtered)
-      }
+    val out = markProvenance(
+      dropTombstoned(s, files, readFilesRaw(s, files, withMaterializedRowId = rt)))
     // resolve each row's STABLE id: materialized (survived a rewrite) or
     // baseRowId + physical position (born in this file). The base map is
     // bounded by file count and broadcasts.
@@ -238,22 +153,18 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private[graft] def readFilesWithIds(s: Snapshot, files: Seq[AddFile]): DataFrame =
     readFilesMeta(s, files).drop("__fname", "__pos")
 
-  /** Scan `files` via `scan`, anti-joining ONLY the subset that carries a
-    * deletion vector; DV-free files union in raw (plan has no join). */
-  /** The `_metadata`-derived provenance columns the DV anti-join keys on.
-    * Applied INSIDE each leaf scan (readFilesRaw's perScan hook): metadata
-    * columns resolve against a single file relation, never across the
-    * unions the shallow-clone read shape produces. */
   /** The scan-side spelling of a row's data-file key: Spark's
     * `_metadata.file_path` (URI-encoded absolute path) with the scheme
-    * stripped. [[canonPath]] is the DRIVER twin — the two must stay
-    * byte-identical or every provenance join silently mismatches, which
-    * is why both are defined once and every consumer (markProvenance,
-    * the shallow-clone partition-value join, the `_file` column) reads
-    * this one expression. */
+    * stripped by [[FileOps.FileScheme]]. [[canonPath]] is the DRIVER twin
+    * — the two must stay byte-identical or every provenance lookup
+    * silently mismatches, which is why both are defined once and every
+    * consumer (markProvenance, the `_file` column, [[FileOps.LiveRows]])
+    * applies the same rule. */
   private def scanFilePath: Column =
-    regexp_replace(col("_metadata.file_path"), "^file:/+", "/")
+    regexp_replace(col("_metadata.file_path"), FileOps.FileScheme, "/")
 
+  /** The `__fname`/`__pos` provenance of each row, from the single file
+    * relation's `_metadata`. */
   private val markProvenance: DataFrame => DataFrame = df =>
     // keyed by the NORMALIZED absolute path, never the basename: graft's
     // own part files are UUID-named, but CONVERT-ed and foreign layouts
@@ -262,172 +173,58 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     df.withColumn("__fname", scanFilePath)
       .withColumn("__pos", col("_metadata.row_index"))
 
-  private def splitOnDv(s: Snapshot, files: Seq[AddFile],
-      scan: (Seq[AddFile], DataFrame => DataFrame) => DataFrame): DataFrame = {
-    val (withDv, noDv) = files.partition(_.dvPath.isDefined)
-    if (withDv.isEmpty) scan(files, identity)
-    else {
-      val filtered = antiJoinDv(scan(withDv, markProvenance), dvEntries(s, withDv).get,
-        withDv.map(_.dvCount).sum).drop("__fname", "__pos")
-      if (noDv.isEmpty) filtered else scan(noDv, identity).unionByName(filtered)
-    }
-  }
-
-  /** Broadcast the tombstone set only while its estimated SIZE stays inside
-    * sane broadcast territory (64 MB cap) — a row-count threshold alone
-    * would happily ship hundreds of MB to the driver and every executor.
-    * Per-row estimate: the key is a full absolute path since round 15
-    * (sized from this table's own root, +32 for the file name and
-    * UnsafeRow overhead, +24 for the long and headers), never the old
-    * basename-era constant. Beyond the cap the anti-join falls back to a
-    * shuffle join, which is the right plan for a tombstone set that large
-    * anyway. */
-  private def maybeBroadcast(dv: DataFrame, totalTombstones: Long): DataFrame = {
-    val perRow = path.length + 32L + 24L
-    if (totalTombstones * perRow <= 64L * 1024 * 1024) broadcast(dv) else dv
-  }
-
-  /** `base` must already carry the `__fname`/`__pos` provenance columns
-    * (markProvenance applied inside its leaf scans). */
-  private def antiJoinDv(base: DataFrame, dv: DataFrame, total: Long): DataFrame =
-    base.join(maybeBroadcast(dv, total), Seq("__fname", "__pos"), "left_anti")
-
-  /** Tombstone entries (`__fname`, `__pos`) for the given files, or None
-    * when no file carries a DV. Sidecars are commit-scoped (one file may
-    * hold entries for many data files, and an entry's data file may have
-    * been re-pointed to a NEWER sidecar by a later delete), so entries are
-    * semi-joined against the exact (file, sidecar) pairs the AddFiles
-    * reference — driver-built metadata, broadcast. Entries under an
-    * ambiguous legacy spelling ([[dvSpellings]]) match no file here;
-    * [[requireAttributableDv]] refuses the scans they could belong to. */
-  private def dvEntries(s: Snapshot, files: Seq[AddFile]): Option[DataFrame] = {
+  /** Each DV file of `files` by [[canonPath]]: its dvAbs reference, its
+    * table-relative path and whether a bare-basename entry must refuse
+    * ([[FileOps.dvBasenameCollisions]] over all of `s`'s live files — never
+    * a scanned subset: with one basename twin pruned away, a subset-local
+    * verdict would attribute the pruned twin's legacy entry to the
+    * surviving file). Driver metadata only, no file is opened. */
+  private def dvRefs(s: Snapshot, files: Seq[AddFile]): Map[String, (String, String, Boolean)] = {
     val withDv = files.filter(_.dvPath.isDefined)
-    if (withDv.isEmpty) None
+    if (withDv.isEmpty) Map.empty
     else {
-      // foreign Delta DVs (read-interop): the packed descriptor decodes
-      // to row positions on the EXECUTORS — one task per descriptor, the
-      // bitmap bytes never collect on the driver
-      val (foreignDv, nativeDv) =
-        withDv.partition(f => DeltaDeletionVectors.isForeign(f.dvPath.get))
-      val nativeDf =
-        if (nativeDv.isEmpty) None
-        else {
-          val (bySpelling, ambiguous) = dvSpellings(s, nativeDv)
-          val refs = bySpelling.filterNot(t => ambiguous(t._1)).distinct
-            .map { case ((sp, src), canon) => Row(sp, src, canon) }
-          val refsDf = spark.createDataFrame(refs.asJava, StructType(Seq(
-            StructField("__fname", StringType, nullable = false),
-            StructField("__src", StringType, nullable = false),
-            StructField("__canon", StringType, nullable = false))))
-          // inner join ≡ the old semi (sidecars are commit-scoped; only
-          // the exact (file, sidecar) pairs the AddFiles reference count)
-          // + the canonical-key remap in the same broadcast probe
-          Some(sidecarEntries(nativeDv.map(_.dvPath.get).distinct)
-            .join(broadcast(refsDf), Seq("__fname", "__src"))
-            .select(col("__canon").as("__fname"), col("pos").as("__pos")))
-        }
-      val foreignDf =
-        if (foreignDv.isEmpty) None
-        else {
-          import spark.implicits._
-          val root = path
-          val pairs = foreignDv
-            .map(f => (canonPath(f.path), f.dvPath.get)).distinct
-          Some(spark.createDataset(pairs)
-            .flatMap { case (fn, packed) =>
-              DeltaDeletionVectors.positions(root, packed).map(p => (fn, p))
-            }
-            .toDF("__fname", "__pos"))
-        }
-      Seq(nativeDf, foreignDf).flatten.reduceOption(_ unionByName _)
+      val strict = FileOps.dvBasenameCollisions(s.files)
+      withDv.map(f => canonPath(f.path) ->
+        (FileOps.dvAbs(path, f.dvPath.get), f.path, strict(f.path))).toMap
     }
   }
 
-  /** Every spelling under which a native sidecar entry may name one of
-    * `nativeDv`'s files — ((spelling, sidecar), canonical path) — and the
-    * AMBIGUOUS (spelling, sidecar) pairs among them.
-    *
-    * A sidecar's `fname` column stores the data file's TABLE-RELATIVE
-    * path (round 15; pre-round-15 sidecars stored the bare basename).
-    * Round-16 sidecars carry the `rel` FORMAT MARKER: every entry stores
-    * the full table-relative path, so a bare basename is a genuine
-    * root-level file — such sidecars never contribute the legacy-basename
-    * spelling (and so are never flagged ambiguous by a same-named nested
-    * twin). The marker is read from the footer on the driver.
-    *
-    * A legacy basename that names two different live files within ONE
-    * sidecar is ambiguous (the information was never written). The
-    * verdict derives from ALL of `s`'s live files sharing each referenced
-    * sidecar — never from a scanned subset: with one basename twin pruned
-    * away, a subset-local check would see no collision and silently
-    * attribute the pruned twin's legacy entry to the surviving file,
-    * vanishing never-deleted rows. */
-  private def dvSpellings(s: Snapshot, nativeDv: Seq[AddFile])
-      : (Seq[((String, String), String)], Set[(String, String)]) = {
-    val refSidecars = nativeDv.map(_.dvPath.get).toSet
-    val marked = refSidecars.filter(p => FileOps.sidecarMarkedRel(Paths.get(path, p)))
-    def spellingsOf(f: AddFile): Seq[((String, String), String)] = {
-      // third spelling: a shallow CLONE references the source's
-      // sidecar ("../src/_dv/…") alongside its data file
-      // ("../src/p=x/part.parquet") — the entry inside was written
-      // relative to the SOURCE root, i.e. the data path with the
-      // sidecar's own root prefix stripped
-      val dv = f.dvPath.get
-      val i = dv.indexOf("_dv/")
-      val viaSidecarRoot =
-        if (i > 0 && f.path.startsWith(dv.take(i))) Seq(f.path.drop(i))
-        else Nil
-      val legacyBasename =
-        if (marked(dv)) Nil else Seq(fileName(f.path))
-      (Seq(f.path) ++ legacyBasename ++ viaSidecarRoot).distinct.map(sp =>
-        (sp, dv) -> canonPath(f.path))
-    }
-    val ambiguous = s.files
-      .filter(_.dvPath.exists(refSidecars.contains))
-      .flatMap(spellingsOf)
-      .groupBy(_._1)
-      .filter(_._2.map(_._2).distinct.size > 1).keySet
-    (nativeDv.flatMap(spellingsOf), ambiguous)
+  /** `scan` (a single-relation scan of `files`) without the rows whose
+    * position the row's file's deletion vector tombstones: a `dv_live`
+    * filter ([[FileOps.LiveRow]]) on the row's raw `_metadata.file_path`
+    * and `row_index` (no per-row path rewrite: [[FileOps.LiveRows]]
+    * applies the scan spelling once per file). `scan` itself when no file
+    * of `files` carries a DV. */
+  private def dropTombstoned(s: Snapshot, files: Seq[AddFile], scan: DataFrame): DataFrame = {
+    val refs = dvRefs(s, files)
+    if (refs.isEmpty) scan
+    else scan.filter(columnOf(FileOps.LiveRow(expressionOf(col("_metadata.file_path")),
+      expressionOf(col("_metadata.row_index")), new FileOps.LiveRows(refs))))
   }
 
-  /** The entries of native `_dv/` sidecars (`__fname` as stored, `pos`,
-    * `__src` the sidecar), read with an explicit schema so no sidecar
-    * costs a schema-inference job. */
-  private def sidecarEntries(sidecars: Seq[String]): DataFrame =
-    sidecars.map(p =>
-      spark.read.schema(GraftTable.DvEntrySchema).parquet(s"$path/$p")
-        .withColumn("__src", lit(p))
-    ).reduce(_ unionByName _)
-      .withColumnRenamed("fname", "__fname")
+  /** The tombstones `files` already carry as (`__fname`, `__pos`) rows,
+    * decoded on the executors through [[FileOps.dvBitsFor]], one file per
+    * row of the driver-built [[dvRefs]]. */
+  private def tombstones(s: Snapshot, files: Seq[AddFile]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(dvRefs(s, files).toSeq)
+      .flatMap { case (key, (dv, rel, strict)) =>
+        FileOps.dvBitsFor(dv, rel, strict).stream().toArray.map(p => (key, p.toLong))
+      }
+      .toDF("__fname", "__pos")
+  }
 
   /** Refuse to scan `scanned` when the sidecar of one of its files holds a
     * legacy bare-basename entry that names more than one live file: the
     * entry cannot be attributed, and tombstoning both files' rows would be
     * wrong. [[GraftFileIndex]] calls this on the files that survive
     * pruning, before Spark reads them, so a scan pruned away from those
-    * files stays readable. Healthy tables pay no job: only an ambiguous
-    * spelling one of the scanned files can be named by is looked up. */
+    * files stays readable. Only the files [[FileOps.dvBasenameCollisions]]
+    * flags are decoded here, on the driver; a healthy table decodes none. */
   private[table] def requireAttributableDv(s: Snapshot, scanned: Seq[AddFile]): Unit = {
-    val nativeDv = scanned.filter(_.dvPath.exists(p => !DeltaDeletionVectors.isForeign(p)))
-    if (nativeDv.nonEmpty) {
-      val (bySpelling, ambiguous) = dvSpellings(s, nativeDv)
-      val used = bySpelling.map(_._1).filter(ambiguous).distinct
-      if (used.nonEmpty) {
-        val ambDf = spark.createDataFrame(
-          used.map { case (sp, src) => Row(sp, src) }.asJava,
-          StructType(Seq(
-            StructField("__fname", StringType, nullable = false),
-            StructField("__src", StringType, nullable = false))))
-        val bad = sidecarEntries(used.map(_._2).distinct)
-          .join(broadcast(ambDf), Seq("__fname", "__src"), "left_semi").limit(1).collect()
-        if (bad.nonEmpty) throw new GraftProtocolException(
-          s"a legacy deletion-vector sidecar of $path carries a bare " +
-            s"basename entry ('${bad.head.getString(0)}') that names " +
-            "more than one live file — the entry cannot be attributed; " +
-            "rewrite the files (OPTIMIZE after a copy-on-write DELETE) " +
-            "to clear the ambiguous state")
-      }
-    }
+    val flagged = FileOps.dvBasenameCollisions(s.files)
+    scanned.filter(f => flagged(f.path)).foreach(f =>
+      FileOps.dvBitsFor(FileOps.dvAbs(path, f.dvPath.get), f.path, requireQualified = true))
   }
 
   /** Current-version DataFrame (reference: names_table.toDF(), api.py:74). */
@@ -2715,7 +2512,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       else {
         val positions = hit.select(col("__fname"), col("__pos"))
         val dvPathOf = writeDvStore(s.metaData,
-          dvEntries(s, touched).map(_.unionByName(positions)).getOrElse(positions), touched)
+          if (touched.exists(_.dvPath.isDefined)) positions.unionByName(tombstones(s, touched))
+          else positions, touched)
         touched.map { f =>
           val key = canonPath(f.path)
           Actions.untagReAdd(f).copy(dvPath = dvPathOf(key),
@@ -2918,8 +2716,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private def commitNoop(s: Snapshot, op: String, rowsMetric: String): Unit =
     commit(s, TxnInfo.Blind, op,
       Map(rowsMetric -> "0", "numRewrittenFiles" -> "0"))((_, _) => Nil)
-
-  private def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
 
   /** The driver-side spelling of a table file's provenance key: the
     * normalized absolute path URI-ENCODED the way Spark spells
@@ -3579,11 +3375,6 @@ object GraftTable {
   val RowIdCol = "_row_id"
   /** Table property holding the highest allocated row id. */
   val RowIdHwmKey = "rowTracking.rowIdHighWaterMark"
-
-  /** The columns of a native `_dv/` sidecar entry that readers use: the
-    * data file's path as written and the tombstoned row position. */
-  private val DvEntrySchema = StructType(Seq(
-    StructField("fname", StringType), StructField("pos", LongType)))
 
   /** Columns whose EXISTS_DEFAULT is LOAD-BEARING: added with a DEFAULT
     * after files already existed, so some live files may physically lack

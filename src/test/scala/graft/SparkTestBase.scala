@@ -10,19 +10,38 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, deleted with its contents when the test JVM exits. */
+  def tmpDir(prefix: String): String = SparkTestBase.tmpDir(prefix)
 }
 
 object SparkTestBase {
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    created.forEach(d => deleteTree(d))))
+
+  private def deleteTree(d: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(d)) {
+      val walk = java.nio.file.Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => try java.nio.file.Files.deleteIfExists(p)
+          catch { case _: java.io.IOException => () })
+      finally walk.close()
+    }
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    created.add(d)
+    d.toString
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh-").toString)
+      .config("spark.sql.warehouse.dir", tmpDir("graft-wh-"))
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -107,8 +107,8 @@ class CloneSpec extends SparkTestBase {
     import spark.implicits._
     // 120 distinct partition values: the round-14 union-per-combo read
     // would plan 120 scan legs here — the flattened read must plan ONE
-    // parquet leaf (plus the broadcast file→partition-values map), the
-    // shape that keeps driver-side planning constant when a 100-TB clone
+    // parquet leaf whose partition values come from the log, the shape
+    // that keeps driver-side planning constant when a 100-TB clone
     // carries thousands of partitions.
     val rows = (1 to 400).map(i => (i, f"p${i % 120}%03d"))
     val src = GraftTable.create(spark, tmpDir("clone-wide-src-"),
@@ -119,8 +119,8 @@ class CloneSpec extends SparkTestBase {
     val leaves = "FileScan parquet".r.findAllIn(plan).size
     assert(leaves === 1,
       s"escaped-file scan must plan one parquet leaf, got $leaves:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"partition values must attach via a broadcast join:\n${plan.take(2000)}")
+    assert(!plan.contains("Join"),
+      s"partition values must come from the log, not a join:\n${plan.take(2000)}")
     // value parity: every row lands in its declared partition
     assert(scan.count() === 400L)
     assert(scan.groupBy($"v").count().count() === 120L)
@@ -134,9 +134,9 @@ class CloneSpec extends SparkTestBase {
   test("shallow clone of a CONVERTED layout: same-named files in different partitions stay distinct") {
     import spark.implicits._
     // converted/foreign layouts commonly hold one "part-00000..." per
-    // partition dir — the partition-value join must key on the full
-    // normalized path, never the basename (a basename key multiplies
-    // every row by its name-collision count; caught by ScalingProbe clone)
+    // partition dir — each escaped file must take its own partition values,
+    // never a same-named twin's (a basename key multiplied every row by
+    // its name-collision count; caught by ScalingProbe clone)
     val src = tmpDir("clone-conv-src-")
     val stage = tmpDir("clone-conv-stage-")
     Seq((1, "x")).toDF("id", "payload").coalesce(1)
@@ -165,8 +165,8 @@ class CloneSpec extends SparkTestBase {
     src.setProperty("deletionVectors.enabled", "true")
     src.delete($"id".isin(2, 3)) // tombstones via DV sidecars
     val c = src.cloneTo(tmpDir("clone-dvdst-"))
-    // the DV anti-join's provenance columns attach INSIDE each leaf scan
-    // of the per-partition-group union — tombstoned rows stay dead
+    // the DV filter's provenance columns attach inside the clone's one
+    // scan leaf — tombstoned rows stay dead
     assert(ids(c.toDF) === Set(1, 4, 5, 6, 7, 8))
     // and the provenance-carrying DML path works on the clone too
     c.delete($"id" === 5)

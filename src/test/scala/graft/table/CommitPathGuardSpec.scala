@@ -20,6 +20,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - In the table and source layers, no file is written through a
   *    `DataFrame.write` chain or staged through a `staged(` helper:
   *    [[DataFileWriter]] writes every table file at its final name.
+  *  - In the table, source and streaming layers, a deletion vector is
+  *    decoded (`dvPositions(`, `bitsAbs(`, `DeltaDeletionVectors.positions(`)
+  *    only inside `FileOps.dvBitsFor`, the one DV apply every scan shares,
+  *    and the table layer's only `left_anti` joins are VACUUM's orphan
+  *    listing and MERGE's unmatched source rows: no scan applies
+  *    tombstones through a join.
   *
   * Comments are skipped; the enclosing method is the nearest member-level
   * `def` above. */
@@ -33,6 +39,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
   private val dvDecision = Seq(
     """(?<!def )\bwriteDvStore\(""".r -> Set("rewriteRows"),
     "\"deletionVectors\\.maxTombstones\"".r -> Set("rewriteRows", "setProperty"))
+  private val dvDecode =
+    """(?<!def )\b(?:dvPositions|bitsAbs)\(|\bDeltaDeletionVectors\.positions\(""".r
+  private val antiJoin = "\"left_anti\"".r
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
   /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
     * not Spark's `connector.write` package) or a `staged(` helper. */
@@ -115,5 +124,25 @@ class CommitPathGuardSpec extends AnyFunSuite {
     // the pattern still recognizes each detour it bars
     Seq("df.write.parquet(dir)", "      .write", "FileOps.staged(root, tag)").foreach(line =>
       assert(writerDetour.findFirstIn(line).nonEmpty, line))
+  }
+
+  private def layerFiles(layer: String): Seq[String] =
+    Files.list(Paths.get("src/main/scala/graft", layer)).iterator().asScala.toSeq
+      .map(_.getFileName.toString).filter(_.endsWith(".scala")).sorted
+
+  test("only FileOps.dvBitsFor decodes a deletion vector; no scan anti-joins tombstones") {
+    val decodes = for {
+      layer <- Seq("table", "sources", "streaming")
+      file <- layerFiles(layer)
+      hit <- strays(file, dvDecode, Set("dvBitsFor"), layer)
+    } yield s"$layer/$hit"
+    assert(decodes.isEmpty,
+      s"deletion vectors decoded outside FileOps.dvBitsFor:\n${decodes.mkString("\n")}")
+    val antis = layerFiles("table").flatMap(file =>
+      strays(file, antiJoin, Set("vacuumOrphans", "insertRows")))
+    assert(antis.isEmpty, s"anti-join in the table layer:\n${antis.mkString("\n")}")
+    // each pattern still matches the code it guards
+    assert(strays("FileOps.scala", dvDecode, Set.empty).size === 2)
+    assert(strays("GraftTable.scala", antiJoin, Set.empty).size === 2)
   }
 }

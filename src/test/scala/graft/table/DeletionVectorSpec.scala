@@ -181,13 +181,14 @@ class DeletionVectorSpec extends SparkTestBase {
     val s = t.snapshot
     val (withDv, noDv) = s.files.partition(_.dvPath.isDefined)
     assert(withDv.size == 1 && noDv.size == 2)
-    // full scan: exactly ONE anti-join branch, unioned with a raw scan
+    // full scan: no join — the DV file's tombstones drop inside the scan
+    // leaf through one per-file filter
     val plan = t.toDF.queryExecution.executedPlan.toString
-    assert("LeftAnti".r.findAllIn(plan).size == 1, s"plan:\n$plan")
-    assert(plan.contains("Union"), s"plan:\n$plan")
-    // a scan over only the DV-free subset has no join at all
+    assert(!plan.contains("Join"), s"plan:\n$plan")
+    assert("Filter dv_live".r.findAllIn(plan).size == 1, s"plan:\n$plan")
+    // a scan over only the DV-free subset has no DV filter at all
     val rawPlan = t.readFiles(s, noDv).queryExecution.executedPlan.toString
-    assert(!rawPlan.contains("Join"), s"DV-free subset must scan raw:\n$rawPlan")
+    assert(!rawPlan.contains("dv_live"), s"DV-free subset must scan raw:\n$rawPlan")
     assert(ids(t.toDF) == Set(1, 2, 3, 5, 6))
   }
 

@@ -92,6 +92,24 @@ class ReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(n === 0, s"building the frames started $n Spark job(s)")
   }
 
+  test("a filtered read of a multi-file DV table plans no join and runs one Spark job") {
+    val t = GraftTable.create(spark, tmpDir("rp-dv-read-"), clustered(4000, 40))
+    t.setProperty("deletionVectors.enabled", "true")
+    t.delete(col("id") % 10 === 3)
+    t.delete(col("id") === 1204)
+    assert(t.snapshot.files.count(_.dvPath.isDefined) > 32)
+    val pred = col("id").between(1100, 1400)
+    val df = t.toDF.filter(pred)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
+      s"tombstones must drop inside the scan, not through a join:\n$plan")
+    var got: Seq[String] = Nil
+    val n = jobsDuring { got = rows(df) }
+    assert(n === 1, s"the read ran $n Spark jobs")
+    assert(got === unpruned(t, t.latestVersion, pred))
+    assert(got.size === 301 - 30 - 1)
+  }
+
   test("versionAsOf(v).filter(pred) scans only the files whose stats survive") {
     val t = GraftTable.create(spark, tmpDir("rp-prune-"), clustered(800, 8))
     t.append(clustered(200, 2).withColumn("id", col("id") + 800))
