@@ -5,9 +5,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension wiring: registers the native graft expressions for SQL
-  * use (`SELECT vec_dot(a, b)`) and the table-valued functions that give
-  * the table layer's metadata surfaces a SQL front door:
+/** Session extension wiring: runs SQL `UPDATE`, `MERGE INTO` and
+  * `DELETE FROM` over catalog graft tables through the table layer's
+  * native row-level path ([[graft.sources.GraftDml]]), registers the
+  * native graft expressions for SQL use (`SELECT vec_dot(a, b)`) and the
+  * table-valued functions that give the table layer's metadata surfaces a
+  * SQL front door:
   *
   * {{{
   *   SELECT version, operation FROM graft_history('/data/events')
@@ -16,7 +19,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * (`graft_history` is the DESCRIBE HISTORY equivalent; the TVF shape
   * matches Delta's `table_changes`.) Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`. As with
+  * Delta's session extension, a session without it still reads, writes
+  * and runs DDL on catalog graft tables, and a `DELETE FROM` whose
+  * predicate translates to data source filters still deletes; Spark
+  * refuses `UPDATE` and `MERGE INTO` at planning, before anything is
+  * written.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,6 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPostHocResolutionRule(_ => graft.sources.GraftDml)
     // metadata-only COUNT(*): answer an unfiltered global count over a
     // graft relation from the transaction log (zero files, zero jobs)
     ext.injectOptimizerRule(session => graft.plans.MetadataOnlyCount(session))

@@ -105,11 +105,11 @@ object CatalogQueries {
     // q70 replays api.py:88-107 through the Scala table API; this replays
     // the IDENTICAL scenario through nothing but spark.sql statements —
     // CREATE, seed INSERT, the same MERGE INTO (update one + insert one),
-    // the same DELETE — and must land on the identical final state. MERGE
-    // and UPDATE arrive via SupportsRowLevelOperations (group-based
-    // copy-on-write rewrite, one atomic commit); DELETE via the
-    // translatable-filter fast path. The history tail in the output pins
-    // that each statement became exactly one commit of the right kind.
+    // the same DELETE — and must land on the identical final state. The
+    // MERGE and the DELETE run the table layer's native merge and delete
+    // through GraftExtensions' DML rule (sources/GraftDml.scala), one
+    // atomic commit each. The history tail in the output pins that each
+    // statement became exactly one commit of the right kind.
     "q136_sql_golden_dml" -> Q(
       (s, _) => s.sql(s"SELECT * FROM ${goldenDml(s)} ORDER BY id"),
       """SELECT * FROM (VALUES (2, 'Alice', 'Smith'), (4, 'New', 'Person'))
@@ -133,7 +133,7 @@ object CatalogQueries {
 
     // ---- SQL change data feed: the graft_table_changes table function ------------
     // Delta's table_changes shape over the q136 history: the MERGE's
-    // group-based full rewrite must surface ONLY its semantic deltas
+    // copy-on-write file rewrite must surface ONLY its semantic deltas
     // (update = delete-pre + insert-post, plus the insert) — rows merely
     // rewritten unchanged cancel in the file-diff CDF — and the DELETE's
     // two removed rows close the feed. Literal-VALUES oracle, q74 pattern.

@@ -36,6 +36,34 @@ object TableQueries {
   private def golden(s: SparkSession): GraftTable =
     cache.computeIfAbsent("golden", _ => buildGolden(s))
 
+  /** Write `df` as the ONE parquet file `target` (parent dirs created)
+    * through a stage dir that is deleted afterwards — the fixtures'
+    * hand-built foreign tables name their own files. With `fieldIds` the
+    * file carries the schema's `parquet.field.id`s; the session flag that
+    * enables them is restored after the write, so it never leaks into
+    * other queries of a shared session. Returns the file's (size, mtime). */
+  private def stageOne(df: DataFrame, target: java.nio.file.Path,
+      fieldIds: Boolean = false): (Long, Long) = {
+    import java.nio.file.Files
+    val conf = df.sparkSession.conf
+    val flag = "spark.sql.parquet.fieldId.write.enabled"
+    val stage = Files.createTempDirectory("graft-fixture-stage-")
+    try {
+      val prev = conf.getOption(flag)
+      if (fieldIds) conf.set(flag, "true")
+      try df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      finally if (fieldIds) prev.fold(conf.unset(flag))(conf.set(flag, _))
+      val part = stage.toFile.listFiles().map(_.toPath)
+        .filter(_.toString.endsWith(".parquet")).head
+      Files.createDirectories(target.getParent)
+      Files.move(part, target)
+      (Files.size(target), Files.getLastModifiedTime(target).toMillis)
+    } finally {
+      Option(stage.toFile.listFiles()).foreach(_.foreach(_.delete()))
+      Files.deleteIfExists(stage)
+    }
+  }
+
   /** Run the golden scenario; returns the table (3 commits: v0 seed,
     * v1 merge, v2 delete). */
   private def buildGolden(s: SparkSession): GraftTable = {
@@ -189,16 +217,8 @@ object TableQueries {
       val hi = nation.filter($"n_regionkey" >= 2)
       val loKeep = lo.filter($"n_nationkey" % 2 === 0)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def writeOne(rel: String, df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val stage = Files.createTempDirectory("graft-delta-stage-")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = Files.list(stage).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val target = Paths.get(root, rel)
-        Files.createDirectories(target.getParent)
-        Files.move(Paths.get(part), target)
-        (Files.size(target), Files.getLastModifiedTime(target).toMillis)
-      }
+      def writeOne(rel: String, df: DataFrame): (Long, Long) =
+        stageOne(df, Paths.get(root, rel))
       def statsOf(df: org.apache.spark.sql.DataFrame): String = {
         val r = df.agg(count(lit(1)),
           min($"n_nationkey".cast("long")), max($"n_nationkey".cast("long")),
@@ -906,8 +926,8 @@ object TableQueries {
         |GROUP BY 1, 2 ORDER BY lang, source""".stripMargin),
 
     // ---- Native UPDATE: predicate update, file-scoped CoW ------------------------
-    // DeltaTable.update parity through the native API (SQL UPDATE rides
-    // Spark's group rewrite; this is the driver-side builder twin): one
+    // DeltaTable.update parity through the native API (SQL UPDATE runs the
+    // same update through GraftExtensions' DML rule): one
     // projection rewrites only the stats-pruned-then-provenance-narrowed
     // touched files — `when(pred, setExpr).otherwise(col)` per column —
     // so a selective update on a 100 TB table rewrites its slice, never
@@ -2160,16 +2180,8 @@ object TableQueries {
       val root = graft.Scratch.dir("graft-delta-adopt-").toString
       val nation = graft.Tables.nation(s, dir)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def writeOne(rel: String, df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val stage = Files.createTempDirectory("graft-adopt-stage-")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = Files.list(stage).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val target = Paths.get(root, rel)
-        Files.createDirectories(target.getParent)
-        Files.move(Paths.get(part), target)
-        (Files.size(target), Files.getLastModifiedTime(target).toMillis)
-      }
+      def writeOne(rel: String, df: DataFrame): (Long, Long) =
+        stageOne(df, Paths.get(root, rel))
       def addLine(rel: String, sz: Long, mt: Long, rows: Long): String =
         s"""{"add":{"path":"$rel","partitionValues":{},"size":$sz,"modificationTime":$mt,"dataChange":true,"stats":"{\\"numRecords\\":$rows,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       val lo = nation.filter($"n_regionkey" < 2)
@@ -2251,16 +2263,8 @@ object TableQueries {
       val root = graft.Scratch.dir("graft-delta-modern-").toString
       val nation = graft.Tables.nation(s, dir)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def writeOne(rel: String, df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val stage = Files.createTempDirectory("graft-modern-stage-")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = Files.list(stage).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val target = Paths.get(root, rel)
-        Files.createDirectories(target.getParent)
-        Files.move(Paths.get(part), target)
-        (Files.size(target), Files.getLastModifiedTime(target).toMillis)
-      }
+      def writeOne(rel: String, df: DataFrame): (Long, Long) =
+        stageOne(df, Paths.get(root, rel))
       def addLine(rel: String, sz: Long, mt: Long, rows: Long): String =
         s"""{"add":{"path":"$rel","partitionValues":{},"size":$sz,"modificationTime":$mt,"dataChange":true,"stats":"{\\"numRecords\\":$rows,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       val lo = nation.filter($"n_regionkey" < 3)
@@ -2307,15 +2311,10 @@ object TableQueries {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val phys = Map("n_nationkey" -> "pc_k", "n_name" -> "pc_n",
         "n_regionkey" -> "pc_r", "n_comment" -> "pc_c")
-      val stage = Files.createTempDirectory("graft-mapped-stage-")
-      nation.select(nation.columns.toIndexedSeq.map(c => col(c).as(phys(c))): _*)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-map-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(
+        nation.select(nation.columns.toIndexedSeq.map(c => col(c).as(phys(c))): _*),
+        Paths.get(root, rel))
       val mappedSchema = org.apache.spark.sql.types.StructType(
         nation.schema.fields.zipWithIndex.map { case (f, i) =>
           f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
@@ -2328,7 +2327,7 @@ object TableQueries {
         """{"commitInfo":{"timestamp":1619112345000,"operation":"WRITE","operationParameters":{},"isBlindAppend":true,"operationMetrics":{}}}""",
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
         s"""{"metaData":{"id":"9f2b7c1e-delta-mapadopt","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(mappedSchema.json)},"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"4"},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val t = GraftTable.adoptDelta(s, root)
       // the schema change mapping exists for, then DML over it
@@ -2407,16 +2406,8 @@ object TableQueries {
       val root = graft.Scratch.dir("graft-part-cdf-").toString
       val nation = graft.Tables.nation(s, dir)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def writeOne(rel: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val stage = Files.createTempDirectory("graft-part-cdf-stage-")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = Files.list(stage).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val target = Paths.get(root, rel)
-        Files.createDirectories(target.getParent)
-        Files.move(Paths.get(part), target)
-        Files.size(target)
-      }
+      def writeOne(rel: String, df: DataFrame): Long =
+        stageOne(df, Paths.get(root, rel))._1
       def fileLine(kind: String, rel: String, sz: Long, region: Int,
           dataChange: Boolean): String = {
         val n = mapper.createObjectNode(); val a = n.putObject(kind)
@@ -2497,14 +2488,8 @@ object TableQueries {
       val root = graft.Scratch.dir("graft-delta-dv-").toString
       val nation = graft.Tables.nation(s, dir)
       val sorted = nation.repartition(1).sortWithinPartitions($"n_nationkey")
-      val stage = Files.createTempDirectory("graft-dv-stage-")
-      sorted.write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-dv-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(sorted, Paths.get(root, rel))
       val keys = sorted.select($"n_nationkey".cast("long")).collect().map(_.getLong(0))
       val tomb = keys.zipWithIndex.collect {
         case (k, i) if k % 4 == 1 => i.toLong }.toSeq
@@ -2520,8 +2505,8 @@ object TableQueries {
       val addN = mapper.createObjectNode()
       val a = addN.putObject("add")
       a.put("path", rel); a.putObject("partitionValues")
-      a.put("size", Files.size(target))
-      a.put("modificationTime", Files.getLastModifiedTime(target).toMillis)
+      a.put("size", size)
+      a.put("modificationTime", mtime)
       a.put("dataChange", true)
       a.put("stats", s"""{"numRecords":${keys.length},"minValues":{},"maxValues":{},"nullCount":{}}""")
       val dv = a.putObject("deletionVector")
@@ -2551,14 +2536,8 @@ object TableQueries {
       val root = graft.Scratch.dir("graft-delta-cmap-").toString
       val nation = graft.Tables.nation(s, dir)
       val phys = nation.schema.fields.indices.map(i => s"col-phys$i")
-      val stage = Files.createTempDirectory("graft-cmap-stage-")
-      nation.toDF(phys: _*).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-cmap-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(nation.toDF(phys: _*), Paths.get(root, rel))
       val mapped = org.apache.spark.sql.types.StructType(
         nation.schema.fields.zipWithIndex.map { case (f, i) =>
           f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
@@ -2579,8 +2558,8 @@ object TableQueries {
       val addN = mapper.createObjectNode()
       val a = addN.putObject("add")
       a.put("path", rel); a.putObject("partitionValues")
-      a.put("size", Files.size(target))
-      a.put("modificationTime", Files.getLastModifiedTime(target).toMillis)
+      a.put("size", size)
+      a.put("modificationTime", mtime)
       a.put("dataChange", true)
       val logDir = Paths.get(root, "_delta_log")
       Files.createDirectories(logDir)
@@ -2625,24 +2604,9 @@ object TableQueries {
         f.copy(metadata = new MetadataBuilder()
           .putLong("parquet.field.id", i + 1L).build())
       })
-      // restore the session conf after the staged write: a leaked
-      // session-wide flag is a cross-query contamination channel in a
-      // shared-session harness
-      val prevFieldIdConf = s.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val stage = Files.createTempDirectory("graft-idmap-adopt-stage-")
-      try s.createDataFrame(nation.rdd, withIds)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      finally prevFieldIdConf match {
-        case Some(v) => s.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None => s.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-      }
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-idadopt-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(s.createDataFrame(nation.rdd, withIds),
+        Paths.get(root, rel), fieldIds = true)
       // the LOG: logical names + decoy physicalNames + the binding ids
       val mapped = StructType(nation.schema.fields.zipWithIndex.map { case (f, i) =>
         f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
@@ -2656,7 +2620,7 @@ object TableQueries {
         """{"commitInfo":{"timestamp":1619112345000,"operation":"WRITE"}}""",
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
         s"""{"metaData":{"id":"8e2a4b6c-delta-idmap-adopt","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(mapped.json)},"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"${nation.schema.size}"},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val t = GraftTable.adoptDelta(s, root)
       val adoptLines = Files.readAllLines(logDir.resolve(f"${1L}%020d.json"))
@@ -2733,14 +2697,8 @@ object TableQueries {
         .withColumn("rid", row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy($"n_nationkey")).cast("long"))
         .withColumn("rk2", ($"n_regionkey" * 2).cast("long"))
-      val stage = Files.createTempDirectory("graft-idgen-stage-")
-      seed.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-idgen-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(seed, Paths.get(root, rel))
       val foreignSchema = StructType(
         nation.schema.fields.toSeq ++ Seq(
           StructField("rid", LongType, nullable = true,
@@ -2759,7 +2717,7 @@ object TableQueries {
         """{"commitInfo":{"timestamp":1619112345000,"operation":"WRITE"}}""",
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["identityColumns","generatedColumns","invariants"]}}""",
         s"""{"metaData":{"id":"9c3d5e7f-delta-idgen-adopt","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(foreignSchema.json)},"partitionColumns":[],"configuration":{},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"stats":"{\\"numRecords\\":$nRows,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"stats":"{\\"numRecords\\":$nRows,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val t = GraftTable.adoptDelta(s, root)
       // post-adoption INSERT: ids engine-assigned, generation recomputed
@@ -2794,14 +2752,8 @@ object TableQueries {
       val narrow = nation
         .select($"n_nationkey".cast("int").as("k"),
                 $"n_regionkey".cast("int").as("v"))
-      val stage = Files.createTempDirectory("graft-widen-stage-")
-      narrow.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-widen-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(narrow, Paths.get(root, rel))
       val widenedSchema = StructType(Seq(
         StructField("k", IntegerType, nullable = true),
         StructField("v", LongType, nullable = true,
@@ -2815,7 +2767,7 @@ object TableQueries {
         """{"commitInfo":{"timestamp":1619112345000,"operation":"WRITE"}}""",
         """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["typeWidening"],"writerFeatures":["typeWidening","invariants"]}}""",
         s"""{"metaData":{"id":"7d1c3e5a-delta-widen-adopt","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(widenedSchema.json)},"partitionColumns":[],"configuration":{},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val filesBefore = Set(rel)
       val t = GraftTable.adoptDelta(s, root)
@@ -2863,14 +2815,8 @@ object TableQueries {
       val nation = graft.Tables.nation(s, dir)
       val seed = nation.select($"n_nationkey".cast("long").as("n_nationkey"),
         lit("orig").as("status"))
-      val stage = Files.createTempDirectory("graft-def-stage-")
-      seed.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-defs-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(seed, Paths.get(root, rel))
       val defSchema = StructType(Seq(
         StructField("n_nationkey", LongType, nullable = true),
         StructField("status", StringType, nullable = true,
@@ -2884,7 +2830,7 @@ object TableQueries {
         """{"commitInfo":{"timestamp":1619112345000,"operation":"WRITE"}}""",
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["allowColumnDefaults","invariants"]}}""",
         s"""{"metaData":{"id":"6b4e2d8c-delta-def-adopt","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(defSchema.json)},"partitionColumns":[],"configuration":{},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"stats":"{\\"numRecords\\":${nation.count()},\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val t = GraftTable.adoptDelta(s, root)
       require(t.snapshot.schema("status").metadata
@@ -3015,23 +2961,9 @@ object TableQueries {
           metadata = new MetadataBuilder().putLong("parquet.field.id", 1L).build()),
         StructField("x2", StringType, nullable = true,
           metadata = new MetadataBuilder().putLong("parquet.field.id", 2L).build())))
-      val prevFieldId = s.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val staged =
-        try {
-          val stage = Files.createTempDirectory("graft-sink-stage-")
-          s.createDataFrame(seed.rdd, fileSchema).coalesce(1)
-            .write.mode("overwrite").parquet(stage.toString)
-          Files.list(stage).toArray.map(_.toString)
-            .filter(_.endsWith(".parquet")).head
-        } finally prevFieldId match {
-          case Some(v) => s.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-          case None => s.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-        }
       val rel = "part-00000-sink-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(staged), target)
+      val (size, mtime) = stageOne(s.createDataFrame(seed.rdd, fileSchema),
+        Paths.get(root, rel), fieldIds = true)
       val sinkSchema = StructType(Seq(
         StructField("id", LongType, nullable = true,
           metadata = new MetadataBuilder()
@@ -3054,7 +2986,7 @@ object TableQueries {
         s"""{"commitInfo":{"timestamp":1619112345000,"inCommitTimestamp":$foreignIct,"operation":"WRITE","operationParameters":{},"operationMetrics":{}}}""",
         """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","typeWidening","deletionVectors"],"writerFeatures":["columnMapping","typeWidening","deletionVectors","allowColumnDefaults","checkpointProtection","rowTracking","domainMetadata","inCommitTimestamp","invariants"]}}""",
         s"""{"metaData":{"id":"dddd-sink-oracle","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(sinkSchema.json)},"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"2","delta.enableInCommitTimestamps":"true","delta.inCommitTimestampEnablementVersion":"0","delta.inCommitTimestampEnablementTimestamp":"$foreignIct","delta.requireCheckpointProtectionBeforeVersion":"1","delta.enableRowTracking":"true","delta.enableDeletionVectors":"true"},"createdTime":1619112344000}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{},"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true,"baseRowId":0,"defaultRowCommitVersion":0,"stats":"{\\"numRecords\\":4,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}""",
+        s"""{"add":{"path":"$rel","partitionValues":{},"size":${size},"modificationTime":${mtime},"dataChange":true,"baseRowId":0,"defaultRowCommitVersion":0,"stats":"{\\"numRecords\\":4,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}""",
         """{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\"rowIdHighWaterMark\":3}","removed":false}}"""
       ).mkString("", "\n", "\n").getBytes("UTF-8"))
       val t = GraftTable.adoptDelta(s, root)
@@ -3102,23 +3034,9 @@ object TableQueries {
         f.copy(metadata = new MetadataBuilder()
           .putLong("parquet.field.id", i + 1L).build())
       })
-      // same restore discipline as idMappedAdoptedTable — never leak the
-      // session-wide flag past the staged write
-      val prevFieldIdConf = s.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val stage = Files.createTempDirectory("graft-idmap-stage-")
-      try s.createDataFrame(nation.rdd, withIds)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      finally prevFieldIdConf match {
-        case Some(v) => s.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None => s.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-      }
-      val part = Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
       val rel = "part-00000-idmap-c000.snappy.parquet"
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(Paths.get(part), target)
+      val (size, mtime) = stageOne(s.createDataFrame(nation.rdd, withIds),
+        Paths.get(root, rel), fieldIds = true)
       // the LOG: logical names + decoy physicalNames + the binding ids
       val mapped = StructType(nation.schema.fields.zipWithIndex.map { case (f, i) =>
         f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
@@ -3139,8 +3057,8 @@ object TableQueries {
       val addN = mapper.createObjectNode()
       val a = addN.putObject("add")
       a.put("path", rel); a.putObject("partitionValues")
-      a.put("size", Files.size(target))
-      a.put("modificationTime", Files.getLastModifiedTime(target).toMillis)
+      a.put("size", size)
+      a.put("modificationTime", mtime)
       a.put("dataChange", true)
       val logDir = Paths.get(root, "_delta_log")
       Files.createDirectories(logDir)

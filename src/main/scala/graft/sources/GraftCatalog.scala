@@ -550,7 +550,7 @@ object GraftCatalog {
 class GraftSqlTable(val table: GraftTable, ident: String,
     pinned: Option[Snapshot] = None, cdf: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
-    with SupportsRowLevelOperations with SupportsMetadataColumns {
+    with SupportsMetadataColumns {
 
   /** CHECK constraints surfaced through the v2 Table API (DESCRIBE shows
     * them; Spark's constraint framework reads them back). */
@@ -571,10 +571,8 @@ class GraftSqlTable(val table: GraftTable, ident: String,
     org.apache.spark.sql.types.StructField("_commit_timestamp",
       org.apache.spark.sql.types.TimestampType, nullable = true)))
 
-  /** `_file`: which data file a row lives in — the GROUP identity of the
-    * copy-on-write rewrite (Spark's runtime group filter collects the
-    * `_file` values of matching rows and narrows the rewrite scan to
-    * exactly those files), and available to users as a metadata column. */
+  /** `_file`: which data file a row lives in, as a plain absolute path —
+    * a metadata column for users (`SELECT _file, ... FROM t`). */
   override def metadataColumns(): Array[MetadataColumn] = {
     val file: MetadataColumn = new MetadataColumn {
       override def name(): String = "_file"
@@ -595,23 +593,6 @@ class GraftSqlTable(val table: GraftTable, ident: String,
     else Array(file)
   }
 
-  /** SQL UPDATE / MERGE INTO (and non-translatable DELETEs): group-based
-    * copy-on-write. Spark scans the affected groups, applies the command's
-    * transformations, and writes the replacement; the commit swaps the
-    * scanned files for the new ones atomically. The scan deliberately has
-    * NO filter pushdown: a group scan must return EVERY row of a scanned
-    * file (a pushed row filter would silently drop the non-matching rows
-    * of rewritten files), so groups = all files — correct first; the
-    * file-pruned fast paths remain `deleteWhere` (translatable DELETEs)
-    * and the native merge()'s touched-file semi-join. */
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    new org.apache.spark.sql.connector.write.RowLevelOperationBuilder {
-      override def build(): org.apache.spark.sql.connector.write.RowLevelOperation =
-        new GraftRowLevelOperation(table, info.command())
-    }
-
   private def snap: Snapshot = pinned.getOrElse(table.snapshot)
 
   /** The metadata-only COUNT(*) rewrite (plans.MetadataOnlyCount) may
@@ -625,10 +606,12 @@ class GraftSqlTable(val table: GraftTable, ident: String,
     * guard), so it captures this once and folds everything from it. */
   private[graft] def metadataSnapshot: Snapshot = snap
 
-  /** SQL `DELETE FROM` front door: the predicate routes to the table
-    * layer's stats-pruned delete rewrite. Supported iff every filter
-    * translates exactly (delete semantics can't drop a conjunct the way
-    * best-effort pruning can). */
+  /** SQL `DELETE FROM` in a session without [[graft.GraftExtensions]]
+    * (with it, [[GraftDml]] runs every DELETE through the same
+    * `table.delete`): the predicate routes to the table layer's delete.
+    * Supported iff every filter translates exactly (delete semantics can't
+    * drop a conjunct the way best-effort pruning can); Spark refuses the
+    * rest at planning. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.isEmpty || GraftFilters.toColumnStrict(filters.toSeq).isDefined
 
@@ -690,170 +673,6 @@ class GraftSqlTable(val table: GraftTable, ident: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(table, info)
-}
-
-/** One SQL row-level command (UPDATE / MERGE / DELETE rewrite): the scan
-  * pins the snapshot it plans, and the write replaces exactly that
-  * snapshot's files with the transformed rows in one atomic commit. */
-class GraftRowLevelOperation(table: GraftTable,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation {
-
-  // SQL UPDATE/MERGE rewrite rows through Spark's group plan, which carries
-  // a generated column's OLD value past a change to its base columns — the
-  // group write cannot re-run generation expressions, so refuse loudly.
-  // DELETE only drops rows (values pass through unchanged) and stays open;
-  // the native API (GraftTable.update/merge) recomputes via conform().
-  if (cmd != org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE) {
-    val gen = graft.table.GeneratedColumns.names(table.snapshot.schema) ++
-      graft.table.IdentityColumns.names(table.snapshot.schema)
-    require(gen.isEmpty,
-      s"SQL $cmd cannot maintain generated/identity columns ${gen.toSeq.sorted.mkString(", ")}; " +
-        "use the native GraftTable.update/merge API (they recompute/assign them)")
-  }
-  // the SQL group rewrite re-writes whole files through Spark's plan and
-  // cannot materialize row ids — ANY rewrite (incl. DELETE's carried rows)
-  // would silently re-identify surviving rows
-  require(!table.rowTrackingEnabled(table.snapshot.metaData),
-    s"SQL $cmd cannot preserve row ids (rowTracking.enabled); " +
-      "use the native GraftTable.delete/update/merge API")
-
-  @volatile private var scanned: Option[Snapshot] = None
-  @volatile private var groupScan: Option[GraftGroupScan] = None
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  /** Ask Spark to carry each row's `_file` through the rewrite plan: the
-    * runtime group filter then narrows the scan (and therefore the commit's
-    * removed set) to the files that actually contain matching rows. */
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(Expressions.column("_file"))
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters {
-      // PRUNE-ONLY pushdown: no filter is ever accepted (Spark re-applies
-      // every one row-level — a group scan must return EVERY row of a
-      // scanned file), but translatable predicates narrow WHICH FILES the
-      // scan plans via stats/bloom skipping. Sound because pruning
-      // over-approximates: a file without a possible match can contain no
-      // matched group, so dropping it changes neither the group-filter
-      // query nor the rewrite. On a selective UPDATE/DELETE this is the
-      // difference between scanning the table once to find touched files
-      // and scanning only the stat-surviving slice.
-      private var prunePred: Option[Column] = None
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        prunePred = GraftFilters.toColumn(filters.toSeq)
-        filters
-      }
-      override def pushedFilters(): Array[Filter] = Array.empty
-      override def build(): Scan = {
-        val snap = table.snapshot
-        scanned = Some(snap)
-        // the rewrite read path has no V1 fallback — serve a real DSv2
-        // Batch over the snapshot's files with the executor-side parquet
-        // decoder the streaming source already uses
-        val s = new GraftGroupScan(table.path, snap,
-          prunePred.map(pr => table.prunedFiles(snap, pr)))
-        groupScan = Some(s)
-        s
-      }
-    }
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-          new GraftGroupBatchWrite(table, () => scanned,
-            () => groupScan.map(_.plannedFiles), info.schema(), cmd.toString)
-      }
-    }
-}
-
-/** DSv2 batch scan for the row-level rewrite: every live file is one
-  * InputPartition, decoded on executors by the same parquet reader the
-  * streaming source uses (streaming/GraftTableStream.scala), with each
-  * row's `_file` appended. Implements runtime GROUP filtering: Spark
-  * first finds the `_file` values of rows matching the command's
-  * condition, then calls `filter` with an IN over them — narrowing both
-  * the rewrite read and the commit's removed set to the matched files
-  * (an unmatched MERGE touches nothing instead of rewriting the table). */
-class GraftGroupScan(tablePath: String, snap: Snapshot,
-    prunedInit: Option[Seq[graft.table.AddFile]] = None)
-    extends Scan with org.apache.spark.sql.connector.read.Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  graft.streaming.GraftTableStream.validateSchema(snap.schema)
-
-  // seeded from stat/bloom pruning of the command predicate when one
-  // translated — files that provably hold no match can hold no rewrite
-  // group either
-  @volatile private var files: Seq[graft.table.AddFile] =
-    prunedInit.getOrElse(snap.files)
-
-  /** The files this scan still plans — after runtime filtering, exactly
-    * the groups being replaced. */
-  def plannedFiles: Seq[graft.table.AddFile] = files
-
-  private def absPath(f: graft.table.AddFile): String =
-    java.nio.file.Paths.get(tablePath, f.path).toString
-
-  private val scanSchema: StructType =
-    snap.schema.add(org.apache.spark.sql.types.StructField("_file", org.apache.spark.sql.types.StringType,
-      nullable = false))
-
-  override def readSchema(): StructType = scanSchema
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(Expressions.column("_file"))
-
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    predicates.foreach { p =>
-      val onFile = p.children().headOption.exists {
-        case r: NamedReference => r.fieldNames.sameElements(Array("_file"))
-        case _ => false
-      }
-      if (p.name() == "IN" && onFile) {
-        val allowed = p.children().tail.collect {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            String.valueOf(l.value())
-        }.toSet
-        files = files.filter(f => allowed.contains(absPath(f)))
-      } else if (p.name() == "=" && onFile) {
-        val allowed = p.children().tail.collect {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            String.valueOf(l.value())
-        }.toSet
-        files = files.filter(f => allowed.contains(absPath(f)))
-      }
-      // untranslated predicates simply don't narrow — correct, less pruned
-    }
-  }
-
-  override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] = {
-    // collision verdict over the snapshot's FULL live set, never the
-    // runtime-filtered subset: pruning one (sidecar, basename) twin must
-    // not let the other twin's legacy entry silently re-attribute
-    val strictDv = graft.table.FileOps.dvBasenameCollisions(snap.files)
-    files.map(f => graft.streaming.GraftFilePartition(
-      absPath(f), f.partitionValues, f.numRecords,
-      // merge-on-read: the rewrite scan must NOT resurrect tombstoned rows
-      f.dvPath.map(p => graft.table.FileOps.dvAbs(tablePath, p)),
-      f.path,
-      dvRequireQualified = strictDv(f.path))
-        : org.apache.spark.sql.connector.read.InputPartition).toArray
-  }
-
-  override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    // columnar is scan-uniform: one DV-carrying file anywhere in the
-    // snapshot drops the rewrite scan to the (DV-skipping) row path
-    new graft.streaming.GraftParquetReaderFactory(scanSchema,
-      snap.metaData.partitionColumns,
-      snap.files.forall(_.dvPath.isEmpty))
 }
 
 /** Pushdown surface: required columns shrink the read schema; =/range/IN
@@ -1006,8 +825,7 @@ class GraftV1ScanRelation(ctx: SQLContext, table: GraftTable, snap: Snapshot,
       case None => snap.files
     }
     // `_file` metadata column: which data file holds the row, as a plain
-    // path comparable with the row-level GraftGroupScan's `_file` — bound
-    // from parquet's _metadata in the scan leaf.
+    // absolute path — bound from parquet's _metadata in the scan leaf.
     // `_row_id` (row tracking): the stable id, resolved the same way
     // scanWithRowIds does.
     val wantsFile = required.fieldNames.contains("_file")

@@ -2,62 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.table.{AddFile, Bucketing, ColumnMapping, DataFileWriter, FileOps, GraftTable, Snapshot}
+import graft.table.{AddFile, Bucketing, ColumnMapping, DataFileWriter, FileOps, GraftTable}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Murmur3Hash, Pmod}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.types._
-
-/** The DSv2 `BatchWrite` of the SQL row-level rewrite (UPDATE / MERGE
-  * INTO). Each task writes its files through [[DataFileWriter]] — at their
-  * final names in the table directory, stats from their own footers — and
-  * the driver commits one atomic version: scanned files removed + written
-  * files added. The commit is the only publish; an aborted write's files
-  * (all carrying its writeId) are deleted. Native bloom filters follow the
-  * table's `bloom.columns` property, so DML through SQL keeps the
-  * point-lookup index like every other write path. */
-class GraftGroupBatchWrite(table: GraftTable, scannedSnap: () => Option[Snapshot],
-    plannedFiles: () => Option[Seq[AddFile]],
-    schema: StructType, op: String) extends BatchWrite {
-
-  private val files = new GraftWriteFiles
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftParquetWriterFactory(files.start(table, schema))
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val snap = scannedSnap().getOrElse(table.snapshot)
-    // stats-column cap: executors harvest every footer column in their one
-    // pass; the driver drops the log's share here (dataSkipping.numIndexedCols)
-    val adds = FileOps.capAddStats(snap.metaData,
-      messages.flatMap { case m: GraftWriteMessage => m.adds }.toSeq)
-    val constraints = snap.metaData.constraints
-    if (constraints.nonEmpty && adds.nonEmpty) {
-      // CHECK constraints are enforced on every write path; here the rows
-      // were produced by Spark's rewrite plan, so validate the written
-      // files before the commit makes them visible.
-      val spark = table.spark
-      val written = spark.read
-        .schema(graft.table.ColumnMapping.physicalSchema(snap.schema))
-        .parquet(adds.map(a => s"${table.path}/${a.path}"): _*)
-        .select(snap.schema.fields
-          .map(graft.table.ColumnMapping.logicalColumn).toSeq: _*)
-      constraints.foreach { case (name, expr) =>
-        val bad = written.filter(!org.apache.spark.sql.functions.expr(expr)).count()
-        // a failed commit is aborted, which deletes the written files
-        if (bad > 0)
-          throw new IllegalStateException(
-            s"CHECK constraint $name ($expr) violated by $bad rewritten row(s)")
-      }
-    }
-    // runtime group filtering narrowed the scan to the matched files —
-    // remove exactly those; unmatched files stay live untouched
-    table.commitReplace(snap, plannedFiles().getOrElse(snap.files), adds, op)
-    files.release()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = files.abort()
-}
 
 case class GraftWriteMessage(adds: Seq[AddFile]) extends WriterCommitMessage
 
@@ -97,9 +46,9 @@ private[sources] final class GraftWriteFiles {
   * Delta's streaming sink performs). Exactly-once across checkpoint
   * replays: the commit records (queryId, epochId), and a replayed epoch
   * that already committed is skipped — the idempotent-txn pattern, driver
-  * side. Files are written executor-side through [[DataFileWriter]], like
-  * the SQL rewrite's; a failed epoch's files are deleted on abort and
-  * were never visible (nothing references them until the commit). */
+  * side. Files are written executor-side through [[DataFileWriter]]; a
+  * failed epoch's files are deleted on abort and were never visible
+  * (nothing references them until the commit). */
 class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
@@ -181,36 +130,25 @@ case class GraftStreamingWriterFactory(spec: GraftFileWriteSpec)
       epochId: Long): DataWriter[InternalRow] = new GraftParquetDataWriter(spec)
 }
 
-case class GraftParquetWriterFactory(spec: GraftFileWriteSpec) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftParquetDataWriter(spec)
-}
-
-/** One task of a V2 write: routes each incoming row to its partition's file
-  * through [[DataFileWriter.TaskFiles]] (one open file per partition
-  * value, spelled exactly as batch writes spell it) after checking the
-  * table's NOT NULL columns. */
+/** One task of the streaming sink's write: routes each incoming row to
+  * its partition's file through [[DataFileWriter.TaskFiles]] (one open
+  * file per partition value, spelled exactly as batch writes spell it)
+  * after checking the table's NOT NULL columns. Rows carry `schema`'s
+  * fields in order. */
 class GraftParquetDataWriter(spec: GraftFileWriteSpec) extends DataWriter[InternalRow] {
   import spec._
 
-  private val dataFields = schema.fields.filterNot(f => partitionCols.contains(f.name))
-
-  /** The group-based rewrite prepends metadata columns the logical write
-    * schema doesn't mention (`__row_operation` in the ReplaceData plan);
-    * the table's columns are the TRAILING fields. Resolved from the first
-    * row — the offset is constant for the write. */
-  private var fieldOffset = -1
+  /** Opened at the first row: an empty task builds no projection. */
   private var files: DataFileWriter.TaskFiles = _
   /** Incoming-row view exposing exactly the data columns in file order. */
-  private var view: graft.streaming.RemappedRow = _
+  private val view = new graft.streaming.RemappedRow(
+    schema.fields.filterNot(f => partitionCols.contains(f.name))
+      .map(f => schema.fieldIndex(f.name)), target.fileSchema)
 
-  private def init(row: InternalRow): Unit = {
-    fieldOffset = row.numFields - schema.fields.length
-    require(fieldOffset >= 0,
-      s"write rows carry ${row.numFields} fields for schema ${schema.fieldNames.mkString(",")}")
+  private def open(): DataFileWriter.TaskFiles = {
     def ref(c: String): Expression = {
       val i = schema.fieldIndex(c)
-      BoundReference(fieldOffset + i, schema(i).dataType, nullable = true)
+      BoundReference(i, schema(i).dataType, nullable = true)
     }
     // partition values keyed by PHYSICAL name, as every write path stores
     // them; bucketed tables add the hidden __bucket=<id> dir, the SAME
@@ -218,9 +156,7 @@ class GraftParquetDataWriter(spec: GraftFileWriteSpec) extends DataWriter[Intern
     val keys = partitionCols.map(c => ColumnMapping.physicalOf(schema, c) -> ref(c)) ++
       bucket.map { case (c, n) => Bucketing.BucketCol -> (Pmod(new Murmur3Hash(Seq(ref(c))),
         Literal(n)): Expression) }
-    files = new DataFileWriter.TaskFiles(target, keys, timeZone, oneOpen = false)
-    view = new graft.streaming.RemappedRow(
-      dataFields.map(f => fieldOffset + schema.fieldIndex(f.name)), target.fileSchema)
+    new DataFileWriter.TaskFiles(target, keys, timeZone, oneOpen = false)
   }
 
   // NOT NULL column invariant on the raw executor-side write path (the
@@ -230,11 +166,11 @@ class GraftParquetDataWriter(spec: GraftFileWriteSpec) extends DataWriter[Intern
     schema.fields.zipWithIndex.collect { case (f, i) if !f.nullable => (f.name, i) }
 
   override def write(row: InternalRow): Unit = {
-    if (files == null) init(row)
+    if (files == null) files = open()
     var i = 0
     while (i < notNullIdx.length) {
       val (name, si) = notNullIdx(i)
-      if (row.isNullAt(fieldOffset + si))
+      if (row.isNullAt(si))
         throw new IllegalStateException(
           s"NOT NULL constraint violated: column '$name' " +
             "(declared nullable = false) received a null")

@@ -6,7 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.GraftSqlShims.{columnOf, expressionOf}
+import org.apache.spark.sql.GraftSqlShims.{columnOf, expressionIn, expressionOf}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -925,36 +925,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     }
   }
 
-  /** Delta-style auto compaction: when the table property
-    * `autoCompact.maxFiles` is set and a successful append leaves more
-    * live files than that, bin-pack immediately (target size from
-    * `autoCompact.targetBytes`, default 128 MB). Best-effort by design —
-    * losing an OPTIMIZE race to a concurrent writer must never fail the
-    * append that triggered it; the next append retries. This is what
-    * keeps a streaming sink's many small per-batch commits from
-    * accumulating into a small-file problem at 100 TB. */
-  /** Copy-on-write group replacement for SQL row-level commands (UPDATE /
-    * MERGE INTO arrive through `SupportsRowLevelOperations`): swap
-    * `removed` for the already-written `adds` in ONE commit — readers see
-    * old or new state, never a partial rewrite. The data files were
-    * produced executor-side (sources/GraftGroupWrite.scala) and stay
-    * invisible until this commit lands. */
-  private[graft] def commitReplace(s: Snapshot, removed: Seq[AddFile],
-      adds: Seq[AddFile], op: String): Unit = {
-    val cdc = writeCdcFiles(s, cdcDiff(s, readFiles(s, removed), readFiles(s, adds)))
-    // the SQL rewrite's runtime group filter isn't recoverable here as a
-    // Column, so classify conservatively: the whole table was readable by
-    // the rewrite plan (appends conflict), and the replaced files are both
-    // read and removed
-    commit(s,
-      TxnInfo(readWholeTable = true, None,
-        removed.map(_.path).toSet, removed.map(_.path).toSet),
-      op,
-      Map("numRewrittenFiles" -> removed.size.toString,
-          "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
-      (_, _) => adds ++ cdc)
-  }
-
   /** Atomic REPLACE TABLE (AS SELECT) commit: ONE log version carries the
     * fresh MetaData (new table id — a replace is a new logical table, as
     * in Delta), a RemoveFile for every file live in `s` (the snapshot the
@@ -1417,6 +1387,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     dropVersion.foreach(log.writeCheckpoint)
   }
 
+  /** Delta-style auto compaction: when the table property
+    * `autoCompact.maxFiles` is set and a successful append leaves more
+    * live files than that, bin-pack immediately (target size from
+    * `autoCompact.targetBytes`, default 128 MB). Best-effort by design —
+    * losing an OPTIMIZE race to a concurrent writer must never fail the
+    * append that triggered it; the next append retries. This is what
+    * keeps a streaming sink's many small per-batch commits from
+    * accumulating into a small-file problem at 100 TB. */
   private def autoCompact(): Unit =
     // The WHOLE body is best-effort: a malformed maxFiles/targetBytes
     // property (NumberFormatException) or an IO error inside optimize()
@@ -2507,6 +2485,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       else hit.groupBy("__fname").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     val updated = hit.filter(!col("__deleted"))
+    val kept =
+      if (touched.isEmpty || (tombstone && deletesOnly)) None
+      else Some((if (tombstone) updated else rows.filter(!col("__deleted")))
+        .drop("__fname", "__pos", "__affected", "__deleted", "__pre"))
+    // stamped before the stats cap drops the `_row_id` null counts
+    val adds = (kept ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
+        enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
+      .getOrElse(Nil)
+    // after the data write: a CHECK violation there leaves no DV store behind
     val reAdds =
       if (!tombstone) Nil
       else {
@@ -2520,15 +2508,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
             dvCount = f.dvCount + counts.getOrElse(key, 0L))
         }
       }
-    val kept =
-      if (touched.isEmpty || (tombstone && deletesOnly)) None
-      else Some((if (tombstone) updated else rows.filter(!col("__deleted")))
-        .drop("__fname", "__pos", "__affected", "__deleted", "__pre"))
-    // stamped before the stats cap drops the `_row_id` null counts
-    val adds = (kept ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
-        enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
-      .getOrElse(Nil)
     val cols = s.schema.fieldNames.toSeq.map(col)
     val cdc =
       if (touched.isEmpty) Nil
@@ -2560,17 +2539,17 @@ final class GraftTable private (val spark: SparkSession, val path: String)
 
   /** [[rewriteRows]]' frame for a predicate op: rows of `touched` matching
     * `matched` are affected; with an empty `set` they are deleted, else
-    * their post-image takes `set`'s SQL expressions over the row's current
+    * their post-image takes `set`'s expressions over the row's current
     * values (cast to the column type). Every row keeps its `_row_id`. */
   private def predicateRows(s: Snapshot, touched: Seq[AddFile], matched: Column,
-      set: Map[String, String]): DataFrame = {
+      set: Map[String, Column]): DataFrame = {
     val in = readFilesMeta(s, touched).withColumn("__affected", matched)
     val names = s.schema.fieldNames.toSeq
     in.select(Seq(col("__fname"), col("__pos"), col("__affected"),
         (if (set.isEmpty) col("__affected") else lit(false)).as("__deleted"),
         struct(names.map(col): _*).as("__pre")) ++
       names.map(c => set.get(c).map(u => when(col("__affected"),
-        expr(u).cast(s.schema(c).dataType)).otherwise(col(c)).as(c)).getOrElse(col(c))) ++
+        u.cast(s.schema(c).dataType)).otherwise(col(c)).as(c)).getOrElse(col(c))) ++
       (if (in.columns.contains(GraftTable.RowIdCol)) Seq(col(GraftTable.RowIdCol))
        else Nil): _*)
   }
@@ -2677,7 +2656,12 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * [[rewriteRows]] with ONE projection — `when(pred, setExpr)
     * .otherwise(col)` per column; untouched files survive byte-identical.
     * Returns rows updated. */
-  def update(pred: Column, set: Map[String, String]): Long = {
+  def update(pred: Column, set: Map[String, String]): Long =
+    updateWith(pred, set.map { case (k, v) => k -> expr(v) })
+
+  /** [[update]] with each SET value a Column over the row's current values
+    * (SQL UPDATE's resolved assignments arrive here). */
+  private[graft] def updateWith(pred: Column, set: Map[String, Column]): Long = {
     val s = snapshot
     requireNotAppendOnly(s.metaData, "UPDATE")
     require(set.nonEmpty, "UPDATE requires at least one SET column")
@@ -2747,8 +2731,13 @@ final class GraftTable private (val spark: SparkSession, val path: String)
             targetAlias: String = "t", sourceAlias: String = "s"): MergeBuilder =
     new MergeBuilder(this, source, condition, targetAlias, sourceAlias)
 
-  private[table] def executeMerge(
-      source: DataFrame, condition: String, targetAlias: String, sourceAlias: String,
+  /** The MERGE behind [[MergeBuilder.execute]] and SQL MERGE INTO. The
+    * condition and every clause are Columns over `<targetAlias>.<col>` and
+    * the source's columns (`<sourceAlias>.<col>` or the source frame's own
+    * attributes); clauses apply in order, each row taking the first whose
+    * condition holds. */
+  private[graft] def executeMerge(
+      source: DataFrame, cond: Column, targetAlias: String, sourceAlias: String,
       matchedClauses: Seq[MergeClause.Matched],
       insertClauses: Seq[MergeClause.NotMatchedInsert],
       bySourceClauses: Seq[MergeClause.BySource],
@@ -2801,18 +2790,16 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       .foreach(k => throw new IllegalArgumentException(
         s"MERGE cannot set identity column '$k' — it is GENERATED ALWAYS " +
           "and assigned by the engine"))
-    val cond = expr(condition)
-
     val srcCols = schema.fieldNames.toSeq
     val srcMark = s"__${sourceAlias}_present"
     val src = source.alias(sourceAlias)
 
-    def cc(c: Option[String]): Column = c.map(expr).getOrElse(lit(true))
-    def mCond(m: MergeClause.Matched): Option[String] = m match {
+    def cc(c: Option[Column]): Column = c.getOrElse(lit(true))
+    def mCond(m: MergeClause.Matched): Option[Column] = m match {
       case MergeClause.MatchedUpdate(c, _) => c
       case MergeClause.MatchedDelete(c)    => c
     }
-    def bCond(b: MergeClause.BySource): Option[String] = b match {
+    def bCond(b: MergeClause.BySource): Option[Column] = b match {
       case MergeClause.BySourceUpdate(c, _) => c
       case MergeClause.BySourceDelete(c)    => c
     }
@@ -2827,7 +2814,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // translates or the source is empty.
     val srcKeyPrune: Option[Column] =
       if (bySourceClauses.nonEmpty) None // unmatched rows live in ANY file
-      else mergeSourcePrunePred(source, condition, targetAlias, sourceAlias)
+      else mergeSourcePrunePred(source, cond, targetAlias, sourceAlias)
     val prunedTargetFiles: Seq[AddFile] =
       srcKeyPrune.map(prunedFiles(s, _)).getOrElse(s.files)
     // the insert anti-join probes the same pruned slice: a target row in a
@@ -2918,7 +2905,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         matchedClauses.zipWithIndex.collect { case (MergeClause.MatchedDelete(_), i) => i } ++
         bySourceClauses.zipWithIndex.collect {
           case (MergeClause.BySourceDelete(_), j) => matchedClauses.size + j }
-      val updateSets: Seq[(Int, Map[String, String])] =
+      val updateSets: Seq[(Int, Map[String, Column])] =
         matchedClauses.zipWithIndex.collect {
           case (MergeClause.MatchedUpdate(_, set), i) => (i, set) } ++
         bySourceClauses.zipWithIndex.collect {
@@ -2944,7 +2931,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         srcCols.map { c =>
           var e: Column = col(s"$targetAlias.$c")
           updateSets.foreach { case (i, set) =>
-            set.get(c).foreach(u => e = when(col("__action") === i, expr(u)).otherwise(e)) }
+            set.get(c).foreach(u => e = when(col("__action") === i, u).otherwise(e)) }
           e.as(c)
         } ++
         // row tracking: an updated row KEEPS its id. TARGET-qualified: the
@@ -2991,77 +2978,77 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * bounds: for every `t.col = s.col` equi-conjunct of the merge
     * condition, one pass over the (small) source yields [min, max] per
     * key, and files whose stats exclude every range provably contain no
-    * match. None when no conjunct translates, a bound is null/absent, or
-    * the source is empty (empty source ⇒ callers see zero matches via the
-    * join anyway). */
-  private def mergeSourcePrunePred(source: DataFrame, condition: String,
-      targetAlias: String, sourceAlias: String): Option[Column] = {
+    * match. The source side of a conjunct is `<sourceAlias>.<col>` or one
+    * of the source frame's own attributes (SQL MERGE binds those). None
+    * when no conjunct qualifies, a bound is null/absent, or the source is
+    * empty (empty source ⇒ callers see zero matches via the join anyway). */
+  private def mergeSourcePrunePred(source: DataFrame, condition: Column,
+      targetAlias: String, sourceAlias: String): Option[Column] = try {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, EqualTo => CatEq, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, AttributeReference, EqualTo => CatEq}
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case CatAnd(l, r) => conjuncts(l) ++ conjuncts(r)
       case other        => Seq(other)
     }
-    def pair(a: UnresolvedAttribute, b: UnresolvedAttribute): Option[(String, String)] =
-      (a.nameParts, b.nameParts) match {
-        case (Seq(t, tc), Seq(ss, sc))
-          if t.equalsIgnoreCase(targetAlias) && ss.equalsIgnoreCase(sourceAlias) =>
-          Some(tc -> sc)
-        case (Seq(ss, sc), Seq(t, tc))
-          if t.equalsIgnoreCase(targetAlias) && ss.equalsIgnoreCase(sourceAlias) =>
-          Some(tc -> sc)
-        case _ => None
-      }
-    val pairs = conjuncts(
-      spark.sessionState.sqlParser.parseExpression(condition)).flatMap {
-      case CatEq(a: UnresolvedAttribute, b: UnresolvedAttribute) => pair(a, b)
-      case _ => Nil
+    val srcOut = source.queryExecution.analyzed.output
+    def targetCol(e: Expression): Option[String] = e match {
+      case UnresolvedAttribute(Seq(t, c)) if t.equalsIgnoreCase(targetAlias) => Some(c)
+      case _ => None
+    }
+    // the key's position in the source's output
+    def sourceKey(e: Expression): Option[Int] = e match {
+      case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(sourceAlias) =>
+        Some(source.schema.fieldIndex(c))
+      case a: AttributeReference => Some(srcOut.indexWhere(_.exprId == a.exprId)).filter(_ >= 0)
+      case _ => None
+    }
+    val pairs = conjuncts(expressionIn(spark, condition)).flatMap {
+      case CatEq(a, b) => targetCol(a).zip(sourceKey(b)).orElse(targetCol(b).zip(sourceKey(a)))
+      case _ => None
     }.distinct
     if (pairs.isEmpty) return None
-    try {
-      val aggs = pairs.flatMap { case (_, sc) =>
-        Seq(min(col(sc)).as(s"__lo_$sc"), max(col(sc)).as(s"__hi_$sc")) }
-      // a LocalRelation source (the reference's exact upsert shape — rows
-      // built in memory, api.py:91) folds its min/max on the driver with no
-      // Spark job; distributed sources pay the one-pass aggregate
-      val localRows: Option[Seq[Row]] = source.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if lr.data.length <= 100000 =>
-          val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-            .encoderFor(lr.schema)
-          val de = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(enc)
-            .resolveAndBind(lr.output).createDeserializer()
-          Some(lr.data.map(de(_)))
-        case _ => None
-      }
-      val row: Row = localRows match {
-        case Some(rows) if rows.nonEmpty =>
-          val vals = pairs.flatMap { case (_, sc) =>
-            val i = source.schema.fieldIndex(sc)
-            val vs = rows.map(_.get(i)).filter(_ != null)
-            if (vs.isEmpty) Seq(null, null)
-            // only Comparable key types fold driver-side — anything else
-            // (arrays, structs) must NOT get a made-up ordering: a wrong
-            // bound would unsoundly prune files that hold real matches.
-            // Bailing to None merely disables pruning (over-approximates).
-            else if (!vs.forall(_.isInstanceOf[Comparable[_]])) return None
-            else {
-              implicit val ord: Ordering[Any] =
-                (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
-              Seq(vs.min, vs.max)
-            }
+    val aggs = pairs.flatMap { case (_, i) =>
+      val k = columnOf(srcOut(i))
+      Seq(min(k).as(s"__lo_$i"), max(k).as(s"__hi_$i")) }
+    // a LocalRelation source (the reference's exact upsert shape — rows
+    // built in memory, api.py:91) folds its min/max locally with no Spark
+    // job; distributed sources pay the one-pass aggregate
+    val localRows: Option[Seq[Row]] = source.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if lr.data.length <= 100000 =>
+        val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
+          .encoderFor(lr.schema)
+        val de = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(enc)
+          .resolveAndBind(lr.output).createDeserializer()
+        Some(lr.data.map(de(_)))
+      case _ => None
+    }
+    val row: Row = localRows match {
+      case Some(rows) if rows.nonEmpty =>
+        val vals = pairs.flatMap { case (_, i) =>
+          val vs = rows.map(_.get(i)).filter(_ != null)
+          if (vs.isEmpty) Seq(null, null)
+          // only Comparable key types fold locally — anything else
+          // (arrays, structs) must NOT get a made-up ordering: a wrong
+          // bound would unsoundly prune files that hold real matches.
+          // Bailing to None merely disables pruning (over-approximates).
+          else if (!vs.forall(_.isInstanceOf[Comparable[_]])) return None
+          else {
+            implicit val ord: Ordering[Any] =
+              (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+            Seq(vs.min, vs.max)
           }
-          Row.fromSeq(vals)
-        case Some(_) => return None // empty source — no pruning needed
-        case None => source.agg(aggs.head, aggs.tail: _*).head()
-      }
-      val preds = pairs.zipWithIndex.map { case ((tc, _), i) =>
-        if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) return None
-        col(tc).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1)))
-      }
-      Some(preds.reduce(_ && _))
-    } catch { case _: Exception => None } // never fail a merge over pruning
-  }
+        }
+        Row.fromSeq(vals)
+      case Some(_) => return None // empty source — no pruning needed
+      case None => source.agg(aggs.head, aggs.tail: _*).head()
+    }
+    val preds = pairs.zipWithIndex.map { case ((tc, _), i) =>
+      if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) return None
+      col(tc).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1)))
+    }
+    Some(preds.reduce(_ && _))
+  } catch { case _: Exception => None } // never fail a merge over pruning
 
   /** Source rows with no match in the target, dispatched to the first
     * insert clause whose condition holds (conditions see source columns,
@@ -3081,14 +3068,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     val unmatched = src.join(targetAll, cond, "left_anti")
     var chain: Column = null
     insertClauses.zipWithIndex.foreach { case (ic, i) =>
-      val pred = ic.cond.map(expr).getOrElse(lit(true))
+      val pred = ic.cond.getOrElse(lit(true))
       chain = if (chain == null) when(pred, lit(i)) else chain.when(pred, lit(i)) }
     val withA = unmatched.withColumn("__iact", chain.otherwise(lit(-1)))
       .filter(col("__iact") >= 0)
     insertClauses.zipWithIndex.map { case (ic, i) =>
       withA.filter(col("__iact") === i)
         .select(schema.fieldNames.map(c => ic.values.get(c)
-          .map(v => expr(v).as(c))
+          .map(v => v.as(c))
           .getOrElse(lit(null).cast(schema(c).dataType).as(c))).toSeq: _*)
     }.reduce(_ unionByName _)
   }
@@ -3097,15 +3084,17 @@ final class GraftTable private (val spark: SparkSession, val path: String)
 /** MERGE clause ADT — the full DeltaMergeBuilder clause set the reference's
   * stack exposes (invoked at api.py:92-102): multiple WHEN MATCHED clauses
   * (update/delete, each optionally conditional), multiple conditional
-  * WHEN NOT MATCHED inserts, and WHEN NOT MATCHED BY SOURCE update/delete. */
+  * WHEN NOT MATCHED inserts, and WHEN NOT MATCHED BY SOURCE update/delete.
+  * Conditions and values are Columns: [[MergeBuilder]] parses its SQL
+  * strings, SQL MERGE INTO hands its resolved expressions. */
 object MergeClause {
   sealed trait Matched
-  final case class MatchedUpdate(cond: Option[String], set: Map[String, String]) extends Matched
-  final case class MatchedDelete(cond: Option[String]) extends Matched
-  final case class NotMatchedInsert(cond: Option[String], values: Map[String, String])
+  final case class MatchedUpdate(cond: Option[Column], set: Map[String, Column]) extends Matched
+  final case class MatchedDelete(cond: Option[Column]) extends Matched
+  final case class NotMatchedInsert(cond: Option[Column], values: Map[String, Column])
   sealed trait BySource
-  final case class BySourceUpdate(cond: Option[String], set: Map[String, String]) extends BySource
-  final case class BySourceDelete(cond: Option[String]) extends BySource
+  final case class BySourceUpdate(cond: Option[Column], set: Map[String, Column]) extends BySource
+  final case class BySourceDelete(cond: Option[Column]) extends BySource
 }
 
 /** Fluent MERGE clause builder (shape of api.py:92-102). Column expressions
@@ -3120,32 +3109,35 @@ final class MergeBuilder private[table] (
   private val bySource = scala.collection.mutable.ArrayBuffer[MergeClause.BySource]()
   private var evolve = false
 
+  private def exprs(m: Map[String, String]): Map[String, Column] =
+    m.map { case (k, v) => k -> expr(v) }
+
   /** Delta's `withSchemaEvolution` / autoMerge: source columns the target
     * lacks are added as nullable fields in the merge's own commit. */
   def withSchemaEvolution(): MergeBuilder = { evolve = true; this }
 
   def whenMatchedUpdate(set: Map[String, String]): MergeBuilder = {
-    matched += MergeClause.MatchedUpdate(None, set); this }
+    matched += MergeClause.MatchedUpdate(None, exprs(set)); this }
   def whenMatchedUpdate(condition: String, set: Map[String, String]): MergeBuilder = {
-    matched += MergeClause.MatchedUpdate(Some(condition), set); this }
+    matched += MergeClause.MatchedUpdate(Some(expr(condition)), exprs(set)); this }
   def whenMatchedDelete(): MergeBuilder = {
     matched += MergeClause.MatchedDelete(None); this }
   def whenMatchedDelete(condition: String): MergeBuilder = {
-    matched += MergeClause.MatchedDelete(Some(condition)); this }
+    matched += MergeClause.MatchedDelete(Some(expr(condition))); this }
   def whenNotMatchedInsert(values: Map[String, String]): MergeBuilder = {
-    inserts += MergeClause.NotMatchedInsert(None, values); this }
+    inserts += MergeClause.NotMatchedInsert(None, exprs(values)); this }
   def whenNotMatchedInsert(condition: String, values: Map[String, String]): MergeBuilder = {
-    inserts += MergeClause.NotMatchedInsert(Some(condition), values); this }
+    inserts += MergeClause.NotMatchedInsert(Some(expr(condition)), exprs(values)); this }
   def whenNotMatchedBySourceUpdate(set: Map[String, String]): MergeBuilder = {
-    bySource += MergeClause.BySourceUpdate(None, set); this }
+    bySource += MergeClause.BySourceUpdate(None, exprs(set)); this }
   def whenNotMatchedBySourceUpdate(condition: String, set: Map[String, String]): MergeBuilder = {
-    bySource += MergeClause.BySourceUpdate(Some(condition), set); this }
+    bySource += MergeClause.BySourceUpdate(Some(expr(condition)), exprs(set)); this }
   def whenNotMatchedBySourceDelete(): MergeBuilder = {
     bySource += MergeClause.BySourceDelete(None); this }
   def whenNotMatchedBySourceDelete(condition: String): MergeBuilder = {
-    bySource += MergeClause.BySourceDelete(Some(condition)); this }
+    bySource += MergeClause.BySourceDelete(Some(expr(condition))); this }
   def execute(): Unit =
-    table.executeMerge(source, condition, targetAlias, sourceAlias,
+    table.executeMerge(source, expr(condition), targetAlias, sourceAlias,
       matched.toSeq, inserts.toSeq, bySource.toSeq, evolve)
 }
 

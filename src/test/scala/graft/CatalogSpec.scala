@@ -279,9 +279,9 @@ class CatalogSpec extends SparkTestBase {
       // listener events are async; give the bus a moment to drain
       Thread.sleep(2000)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the command runs two scans (runtime group filter + rewrite); both
-    // must plan only the single stat-matching 1000-row file — without
-    // predicate-driven pruning the group filter alone reads all 3000
+    // the command runs two scans (match discovery + rewrite); both must
+    // plan only the single stat-matching 1000-row file — without
+    // predicate-driven pruning the discovery alone reads all 3000
     assert(reads.get() <= 2200,
       s"UPDATE scanned ${reads.get()} rows; pruning should bound it by ~2 x 1000")
     assert(sql("SELECT v FROM gcat.default.grppr WHERE id = 1500").head().getString(0) == "y")

@@ -12,6 +12,37 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A fresh temp dir, deleted with its contents when the test JVM exits. */
   def tmpDir(prefix: String): String = SparkTestBase.tmpDir(prefix)
+
+  /** Spark jobs started by `body` on this thread. The listener bus is
+    * ordered, so once a sentinel job's start is seen every earlier start
+    * has been counted. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet()
+          case `sentinel` => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      body
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkTestBase {

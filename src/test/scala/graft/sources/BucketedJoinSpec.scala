@@ -415,10 +415,9 @@ class BucketedJoinSpec extends SparkTestBase {
     GraftTable.create(spark, pu, docs.select($"doc_id", $"lang", $"n_chars"),
       bucketBy = Some(("doc_id", 8)))
     spark.sql(s"CREATE TABLE bkt.default.upd USING graft LOCATION '$pu'")
-    // the UPDATE rewrite flows through GraftGroupBatchWrite — before the
-    // fix its writer factory got partitionColumns only, so rewritten
-    // files landed OUTSIDE the __bucket dirs and every future scan
-    // silently fell back to the V1 shuffle plan
+    // the SQL UPDATE and MERGE rewrite files through the table layer's
+    // writer — a rewritten file outside its __bucket dir would make every
+    // future scan silently fall back to the V1 shuffle plan
     spark.sql("UPDATE bkt.default.upd SET n_chars = n_chars + 1 WHERE doc_id % 7 = 0")
     spark.sql(
       """MERGE INTO bkt.default.upd t USING (SELECT 1L AS doc_id, 999L AS nc) s

@@ -166,8 +166,8 @@ class ColumnMappingSpec extends SparkTestBase {
       .whenNotMatchedInsert(Map("id" -> "s.id", "label" -> "s.label", "score" -> "s.score"))
       .execute()
     assert(t.toDF.filter(col("label") === "B2").count() === 1)
-    // SQL path: register and UPDATE through the catalog (group rewrite
-    // writes physical-named files)
+    // SQL path: register and UPDATE through the catalog (the native
+    // update writes physical-named files)
     graft.sources.GraftCatalog.register(spark, tmpDir("cm-wh-"), name = "cmcat")
     spark.sql(s"CREATE TABLE cmcat.default.cm_sql (dummy INT) USING graft LOCATION '${t.path}'")
     spark.sql("UPDATE cmcat.default.cm_sql SET score = score + 100 WHERE id = 1")

@@ -26,6 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    and the table layer's only `left_anti` joins are VACUUM's orphan
   *    listing and MERGE's unmatched source rows: no scan applies
   *    tombstones through a join.
+  *  - SQL UPDATE, MERGE INTO and DELETE have one row-level implementation,
+  *    the table layer's: no source names Spark's DSv2 group-rewrite API
+  *    (`SupportsRowLevelOperations`, `RowLevelOperation`,
+  *    `SupportsRuntimeV2Filtering`) and `GraftTable.commitReplace` is gone.
   *
   * Comments are skipped; the enclosing method is the nearest member-level
   * `def` above. */
@@ -42,6 +46,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
   private val dvDecode =
     """(?<!def )\b(?:dvPositions|bitsAbs)\(|\bDeltaDeletionVectors\.positions\(""".r
   private val antiJoin = "\"left_anti\"".r
+  private val groupRewrite =
+    """SupportsRowLevelOperations|RowLevelOperation|SupportsRuntimeV2Filtering""".r
+  private val commitReplace = """\bcommitReplace\b""".r
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
   /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
     * not Spark's `connector.write` package) or a `staged(` helper. */
@@ -144,5 +151,18 @@ class CommitPathGuardSpec extends AnyFunSuite {
     // each pattern still matches the code it guards
     assert(strays("FileOps.scala", dvDecode, Set.empty).size === 2)
     assert(strays("GraftTable.scala", antiJoin, Set.empty).size === 2)
+  }
+
+  test("SQL row-level DML has one implementation: no DSv2 group rewrite, no commitReplace") {
+    val found = layerFiles("sources").flatMap(strays(_, groupRewrite, Set.empty, "sources")) ++
+      strays("GraftTable.scala", commitReplace, Set.empty)
+    assert(found.isEmpty, s"a second row-level implementation:\n${found.mkString("\n")}")
+    // the patterns still recognize what they bar
+    Seq("    with SupportsRowLevelOperations with SupportsMetadataColumns {",
+        "  extends org.apache.spark.sql.connector.write.RowLevelOperation {",
+        "    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {")
+      .foreach(line => assert(groupRewrite.findFirstIn(line).nonEmpty, line))
+    assert(commitReplace.findFirstIn("table.commitReplace(snap, files, adds, op)").nonEmpty)
+    assert(commitReplace.findFirstIn("t.commitReplaceTable(s, Nil, s.schema, Nil, Map.empty)").isEmpty)
   }
 }

@@ -179,6 +179,27 @@ class ConflictResolutionSpec extends SparkTestBase {
     } finally spark.conf.unset(LogStore.ConfKey)
   }
 
+  test("SQL UPDATE on a stale snapshot rebases past a predicate-disjoint append") {
+    val (t, _, _) = twoFiles()
+    graft.sources.GraftCatalog.register(spark, tmpDir("cr-sql-wh-"), name = "crcat")
+    spark.sql(s"CREATE TABLE crcat.default.u USING graft LOCATION '${t.path}'")
+    val before = t.latestVersion
+    spark.conf.set(LogStore.ConfKey, "graft.table.InjectingPublishStore")
+    try {
+      // the winner lands between the UPDATE's read and its publish
+      InjectingPublishStore.beforePublish = Some(() => t.append(df((200, "w"))))
+      spark.sql("UPDATE crcat.default.u SET v = 'x' WHERE id <= 4")
+      assert(InjectingPublishStore.beforePublish.isEmpty, "no winner was injected")
+    } finally {
+      InjectingPublishStore.beforePublish = None
+      spark.conf.unset(LogStore.ConfKey)
+    }
+    assert(t.latestVersion === before + 2, "the UPDATE rebased onto the winner")
+    assert(t.history().select("operation").collect().map(_.getString(0)).head === "UPDATE")
+    val rows = t.toDF.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(rows === ((0 to 4).map(_ -> "x") ++ (100 to 104).map(i => i -> s"b$i") :+ (200 -> "w")).toMap)
+  }
+
   test("end-to-end race: appends vs predicate-disjoint DELETE — both land, no errors") {
     val t = GraftTable.create(spark, tmpDir("cr-race-"),
       df((0 to 4).map(i => (i, s"d$i")): _*).repartition(1))
@@ -320,4 +341,23 @@ class DroppingPublishStore extends ConfSelectedStore {
 
 object DroppingPublishStore {
   @volatile var dropping = false
+}
+
+/** Top-level so the LogStore conf can load it: a conforming store that runs
+  * `beforePublish` once, just before the next commit-file publish, so a
+  * winner commit can land between a writer's read and its publish. */
+class InjectingPublishStore extends ConfSelectedStore {
+  override def publishIfAbsent(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    if (dst.getFileName.toString.endsWith(".json"))
+      InjectingPublishStore.take().foreach(_.apply())
+    super.publishIfAbsent(src, dst)
+  }
+}
+
+object InjectingPublishStore {
+  @volatile var beforePublish: Option[() => Unit] = None
+
+  private def take(): Option[() => Unit] = synchronized {
+    val hook = beforePublish; beforePublish = None; hook
+  }
 }

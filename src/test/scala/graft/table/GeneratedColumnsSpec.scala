@@ -117,18 +117,39 @@ class GeneratedColumnsSpec extends SparkTestBase {
     assert(t.toDF.count() == 4)
   }
 
-  test("streaming sink and SQL UPDATE refuse generated tables with guidance") {
-    val t = mkTable(partition = false)
-    val e = intercept[IllegalArgumentException](
-      new graft.sources.GraftRowLevelOperation(t,
-        org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE))
-    assert(e.getMessage.contains("generated"))
-    // DELETE stays open (values pass through unchanged)
-    new graft.sources.GraftRowLevelOperation(t,
-      org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+  test("streaming sink refuses generated tables; SQL UPDATE and MERGE INTO maintain them") {
+    val t = GraftTable.create(spark, tmpDir("gen-sql-"),
+      df((1, ts(1, 5), 10), (2, ts(2, 9), 20)),
+      generated = Map("day" -> "cast(date_trunc('DAY', ts) as date)"),
+      identity = Map("rid" -> (100L, 1L)))
     val se = intercept[IllegalArgumentException](
       new graft.sources.GraftStreamingWrite(t, t.snapshot.schema, "q")
         .createStreamingWriterFactory(null))
     assert(se.getMessage.contains("foreachBatch"))
+    def rids: Map[Int, Long] =
+      t.toDF.select("id", "rid").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val before = rids
+    graft.sources.GraftCatalog.register(spark, tmpDir("gen-sql-wh-"), name = "gencat")
+    spark.sql(s"CREATE TABLE gencat.default.g USING graft LOCATION '${t.path}'")
+    // the UPDATE moves the generated column's base: day is recomputed
+    spark.sql("UPDATE gencat.default.g SET ts = timestamp'2024-03-09 01:00:00' WHERE id = 1")
+    assert(days(t) == Map(1 -> "2024-03-09", 2 -> "2024-03-02"))
+    // the MERGE recomputes day on the updated row and on the insert, which
+    // omits day and rid: the insert takes a fresh identity value
+    spark.sql(
+      """MERGE INTO gencat.default.g t
+        |USING (SELECT 2 AS id, timestamp'2024-03-07 03:00:00' AS ts, 21 AS v
+        |       UNION ALL SELECT 3, timestamp'2024-03-08 04:00:00', 30) s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.ts = s.ts, t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, ts, v) VALUES (s.id, s.ts, s.v)""".stripMargin)
+    assert(days(t) == Map(1 -> "2024-03-09", 2 -> "2024-03-07", 3 -> "2024-03-08"))
+    val after = rids
+    assert(before.forall { case (id, rid) => after(id) == rid }, s"$before vs $after")
+    assert(after(3) > before.values.max)
+    // a SET of the generated column itself is refused, as in the API
+    val e = intercept[IllegalArgumentException](
+      spark.sql("UPDATE gencat.default.g SET day = date'1999-01-01' WHERE id = 1"))
+    assert(e.getMessage.contains("generated"))
   }
 }

@@ -2,11 +2,8 @@ package graft.table
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -18,37 +15,6 @@ import org.apache.spark.sql.types._
   * files by partition values and stats when Spark plans the scan — never
   * changing a row. */
 class ReadPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
-
-  /** Spark jobs started by `body` on this thread. The listener bus is
-    * ordered, so once a sentinel job's start is seen every earlier start
-    * has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"read-path-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val started = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => started.incrementAndGet()
-          case `sentinel` => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build")
-      body
-      sc.setJobGroup(sentinel, "sentinel")
-      spark.range(1).collect()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      started.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Files the scans of an executed frame read, from their `numFiles`. */
   private def scannedFiles(df: DataFrame): Long = {

@@ -190,15 +190,29 @@ class RowTrackingSpec extends SparkTestBase {
       "the compat checkpoint must carry defaultRowCommitVersion on every add")
   }
 
-  test("streaming sink and SQL rewrites refuse row-tracking tables") {
+  test("streaming sink refuses row-tracking tables; SQL UPDATE and MERGE INTO keep row ids") {
     val t = mk()
     val se = intercept[IllegalArgumentException](
       new graft.sources.GraftStreamingWrite(t, t.snapshot.schema, "q")
         .createStreamingWriterFactory(null))
     assert(se.getMessage.contains("row ids"))
-    val re = intercept[IllegalArgumentException](
-      new graft.sources.GraftRowLevelOperation(t,
-        org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE))
-    assert(re.getMessage.contains("row ids"))
+    graft.sources.GraftCatalog.register(spark, tmpDir("rt-sql-wh-"), name = "rtcat")
+    spark.sql(s"CREATE TABLE rtcat.default.r USING graft LOCATION '${t.path}'")
+    val before = idsByKey(t)
+    spark.sql("UPDATE rtcat.default.r SET v = 'B' WHERE k = 2")
+    spark.sql(
+      """MERGE INTO rtcat.default.r t
+        |USING (SELECT 3 AS k, 'C' AS v UNION ALL SELECT 4, 'd') s
+        |ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
+    assert(t.toDF.collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
+      Map(1 -> "a", 2 -> "B", 3 -> "C", 4 -> "d"))
+    val after = idsByKey(t)
+    assert(before.forall { case (k, id) => after(k) == id }, s"$before vs $after")
+    assert(after(4) > before.values.max)
+    // the SQL metadata column serves the same ids
+    assert(spark.sql(s"SELECT k, ${GraftTable.RowIdCol} FROM rtcat.default.r").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap == after)
   }
 }

@@ -89,7 +89,8 @@ class TimestampNtzSpec extends SparkTestBase {
     assert(got(4L) === "2024-03-01 04:30:00",
       "the V2 scan must decode NTZ partition constants as local micros")
     assert(got.size === 6)
-    // SQL row-level DML rides the same decoder through the group scan
+    // SQL DELETE matches the same NTZ partition values through the table
+    // layer's delete
     spark.sql("DELETE FROM ntzc.default.t WHERE ts = TIMESTAMP_NTZ'2024-03-01 02:30:00'")
     assert(spark.sql("SELECT COUNT(*) FROM ntzc.default.t").head.getLong(0) === 5L)
     // and the streaming source serves the NTZ-partitioned snapshot
