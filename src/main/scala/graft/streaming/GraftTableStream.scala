@@ -637,7 +637,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
     // rows from the AddFile's row count — zero file IO
     if (lay.dataFields.isEmpty && lay.constFields.nonEmpty || schema.isEmpty) {
       val deleted = p.dvAbsPath.map(d =>
-        graft.table.FileOps.dvBitsFor(d, p.fname, p.dvRequireQualified)).orNull
+        graft.table.FileOps.dvBitsFor(d, p.fname, p.absPath, p.dvRequireQualified)).orNull
       val row = constRow(p, lay)
       val out = if (lay.trailing) row else new RemappedRow(lay.remap, schema).set(row)
       return new PartitionReader[InternalRow] {
@@ -663,7 +663,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
     /** DV tombstones of THIS file (merge-on-read), applied as a row-index
       * skip over the vectorized cursor. Null when the file has no DV. */
     val deleted = p.dvAbsPath.map(d =>
-      graft.table.FileOps.dvBitsFor(d, p.fname, p.dvRequireQualified)).orNull
+      graft.table.FileOps.dvBitsFor(d, p.fname, p.absPath, p.dvRequireQualified)).orNull
     val wrapper = if (lay.trailing) null else new RemappedRow(lay.remap, schema)
     new PartitionReader[InternalRow] {
       private var rowIdx = -1L

@@ -309,16 +309,17 @@ object FileOps extends Serializable {
     * ([[LiveRows]]), the row-level prior-tombstone merge, the streaming
     * source, the SQL group scan and the SPJ scan. Dispatches between
     * graft's parquet sidecar format and the foreign Delta roaring format.
-    * `fname` is the data file's table-relative path. `requireQualified`
+    * `fname` is the data file's table-relative path and `fileAbs` its
+    * absolute path (`<table root>/<fname>`). `requireQualified`
     * is the planner's verdict ([[dvBasenameCollisions]]) that this file
     * shares (sidecar, basename) with another live file: a bare-basename
     * entry is then genuinely unattributable and must refuse, never
     * silently tombstone both twins. */
-  def dvBitsFor(dvAbsRef: String, fname: String,
+  def dvBitsFor(dvAbsRef: String, fname: String, fileAbs: String,
       requireQualified: Boolean = false): java.util.BitSet =
     if (DeltaDeletionVectors.isForeignAbs(dvAbsRef))
       DeltaDeletionVectors.bitsAbs(dvAbsRef)
-    else dvPositions(java.nio.file.Paths.get(dvAbsRef), fname, requireQualified)
+    else dvPositions(java.nio.file.Paths.get(dvAbsRef), fname, fileAbs, requireQualified)
 
   /** Table-relative paths of the files in `files` that share (sidecar,
     * basename) with another file in `files` — for those, a LEGACY
@@ -346,15 +347,16 @@ object FileOps extends Serializable {
 
   /** The batch scans' deletion-vector state for one scan: `dvOf` maps
     * each DV file's provenance key (`_metadata.file_path` without its
-    * [[FileScheme]]) to its dvAbs reference, its
-    * table-relative path and its `requireQualified` verdict; a file not in
+    * [[FileScheme]]) to its dvAbs reference, its table-relative and
+    * absolute paths and its `requireQualified` verdict; a file not in
     * the map keeps every row. Each task holds its own copy and decodes a
     * file's DV through [[dvBitsFor]] when the first row of that file
     * reaches it, so only the files a scan keeps are ever decoded, and no
     * sidecar is read on the driver. Rows of one file arrive together, so a
     * row costs one comparison of its `file_path` bytes with the previous
     * row's. */
-  final class LiveRows(dvOf: Map[String, (String, String, Boolean)]) extends Serializable {
+  final class LiveRows(dvOf: Map[String, (String, String, String, Boolean)])
+      extends Serializable {
     @transient private lazy val loaded =
       scala.collection.mutable.HashMap.empty[String, java.util.BitSet]
     @transient private var lastKey: UTF8String = _
@@ -363,8 +365,8 @@ object FileOps extends Serializable {
     def live(key: UTF8String, pos: Long): Boolean = {
       if (key != lastKey) {
         val k = key.toString.replaceFirst(FileScheme, "/")
-        lastBits = dvOf.get(k).map { case (dv, rel, strict) =>
-          loaded.getOrElseUpdate(k, dvBitsFor(dv, rel, strict)) }.orNull
+        lastBits = dvOf.get(k).map { case (dv, rel, abs, strict) =>
+          loaded.getOrElseUpdate(k, dvBitsFor(dv, rel, abs, strict)) }.orNull
         lastKey = key.clone()
       }
       lastBits == null || !lastBits.get(pos.toInt)
@@ -394,33 +396,42 @@ object FileOps extends Serializable {
     * executor-side, parquet-mr only, reached through [[dvBitsFor]]. A
     * file's positions are bounded by its row count (~1M for 128 MB), so
     * the bitmap is ≤ ~128 KB. */
-  def dvPositions(sidecar: Path, fname: String,
+  def dvPositions(sidecar: Path, fname: String, fileAbs: String,
       requireQualified: Boolean = false): java.util.BitSet = {
     val bits = new java.util.BitSet()
     val reader = openParquet(sidecar)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       // round-16 sidecars carry the `rel` FORMAT MARKER column: every
-      // entry stores the full table-relative path, so a bare basename is
-      // a genuine root-level file — matched exactly (plus the
-      // clone-escape form, where the reader's fname leads with "../"),
-      // and the legacy-ambiguity refusal never applies. The marker is
-      // explicit format metadata, not inferred from '/' presence: a
-      // root-level file's round-16 entry IS a bare basename, and the
-      // old inference would spuriously refuse (or misattribute) it
-      // against a same-named nested twin.
+      // entry stores the full path relative to the root of the table that
+      // wrote it (the parent of the sidecar's `_dv/`), so a bare basename
+      // is a genuine root-level file and the legacy-ambiguity refusal
+      // never applies. An entry matches when it is the reader's `fname`
+      // or, resolved against that root, names the same file as `fileAbs`:
+      // a shallow clone reads its source's sidecar with an escaped fname
+      // ("../src/p=b1/part-0.parquet"), and only the entry that resolves
+      // to that file binds, never a same-named file elsewhere. The marker
+      // is explicit format metadata, not inferred from '/' presence: a
+      // root-level file's round-16 entry IS a bare basename.
       val markedRel = schema.containsField("rel")
+      lazy val sidecarRoot = sidecar.toAbsolutePath.normalize.getParent.getParent
+      lazy val file = java.nio.file.Paths.get(fileAbs).toAbsolutePath.normalize
       // LEGACY sidecars: PATH-SUFFIX matching, one direction only —
       // round-15 entries store the table-relative path, pre-round-15 the
       // bare basename, and a shallow CLONE's reader passes an escaped
       // spelling ("../src/p=b1/part-0.parquet"); the STORED spelling is
       // never more qualified than the reader's `fname`, so only `stored`
       // may be a '/'-bounded suffix of `fname`.
-      def matches(stored: String): Boolean =
-        if (markedRel)
-          stored == fname ||
-            (fname.endsWith("/" + stored) && fname.startsWith(".."))
+      def matchesNow(stored: String): Boolean =
+        if (markedRel) stored == fname || sidecarRoot.resolve(stored).normalize == file
         else stored == fname || fname.endsWith("/" + stored)
+      // entries are sorted by file name: one path resolution per file
+      var lastStored: String = null
+      var lastMatch = false
+      def matches(stored: String): Boolean = {
+        if (stored != lastStored) { lastStored = stored; lastMatch = matchesNow(stored) }
+        lastMatch
+      }
       var rg = Option(reader.readNextRowGroup())
       while (rg.isDefined) {
         val rr = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)

@@ -174,18 +174,19 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       .withColumn("__pos", col("_metadata.row_index"))
 
   /** Each DV file of `files` by [[canonPath]]: its dvAbs reference, its
-    * table-relative path and whether a bare-basename entry must refuse
-    * ([[FileOps.dvBasenameCollisions]] over all of `s`'s live files — never
-    * a scanned subset: with one basename twin pruned away, a subset-local
-    * verdict would attribute the pruned twin's legacy entry to the
-    * surviving file). Driver metadata only, no file is opened. */
-  private def dvRefs(s: Snapshot, files: Seq[AddFile]): Map[String, (String, String, Boolean)] = {
+    * table-relative and absolute paths and whether a bare-basename entry
+    * must refuse ([[FileOps.dvBasenameCollisions]] over all of `s`'s live
+    * files — never a scanned subset: with one basename twin pruned away,
+    * a subset-local verdict would attribute the pruned twin's legacy entry
+    * to the surviving file). Driver metadata only, no file is opened. */
+  private def dvRefs(s: Snapshot, files: Seq[AddFile])
+      : Map[String, (String, String, String, Boolean)] = {
     val withDv = files.filter(_.dvPath.isDefined)
     if (withDv.isEmpty) Map.empty
     else {
       val strict = FileOps.dvBasenameCollisions(s.files)
-      withDv.map(f => canonPath(f.path) ->
-        (FileOps.dvAbs(path, f.dvPath.get), f.path, strict(f.path))).toMap
+      withDv.map(f => canonPath(f.path) -> (FileOps.dvAbs(path, f.dvPath.get), f.path,
+        Paths.get(path, f.path).toString, strict(f.path))).toMap
     }
   }
 
@@ -208,8 +209,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private def tombstones(s: Snapshot, files: Seq[AddFile]): DataFrame = {
     import spark.implicits._
     spark.createDataset(dvRefs(s, files).toSeq)
-      .flatMap { case (key, (dv, rel, strict)) =>
-        FileOps.dvBitsFor(dv, rel, strict).stream().toArray.map(p => (key, p.toLong))
+      .flatMap { case (key, (dv, rel, abs, strict)) =>
+        FileOps.dvBitsFor(dv, rel, abs, strict).stream().toArray.map(p => (key, p.toLong))
       }
       .toDF("__fname", "__pos")
   }
@@ -224,7 +225,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private[table] def requireAttributableDv(s: Snapshot, scanned: Seq[AddFile]): Unit = {
     val flagged = FileOps.dvBasenameCollisions(s.files)
     scanned.filter(f => flagged(f.path)).foreach(f =>
-      FileOps.dvBitsFor(FileOps.dvAbs(path, f.dvPath.get), f.path, requireQualified = true))
+      FileOps.dvBitsFor(FileOps.dvAbs(path, f.dvPath.get), f.path,
+        Paths.get(path, f.path).toString, requireQualified = true))
   }
 
   /** Current-version DataFrame (reference: names_table.toDF(), api.py:74). */
@@ -735,7 +737,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // rows (partial overlap) are carried over
     val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
-    val perFile = matchesPerFile(s, candidates, matched)
+    val perFile = matchesPerFile(s, "OVERWRITE", candidates, matched)
     val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
     rewriteRows(s,
       TxnInfo(readWholeTable = false, Some(pred),
@@ -2470,72 +2472,80 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   private def rewriteRows(s: Snapshot, info: TxnInfo, op: String, base: MetaData,
       touched: Seq[AddFile], affected: Map[String, Long], rows: DataFrame,
       inserts: Option[DataFrame], deletesOnly: Boolean, filesMetric: String)(
-      metrics: (Seq[AddFile], Long) => Map[String, String]): Long = {
-    val maxTombstones = s.metaData.properties.get("deletionVectors.maxTombstones")
-      .map(_.toLong).getOrElse(4L * 1000 * 1000)
-    val tombstone = touched.nonEmpty && dvEnabled(s.metaData) &&
-      affected.values.sum + touched.map(_.dvCount).sum <= maxTombstones
-    val pin = tombstone && !rows.queryExecution.analyzed.deterministic
-    // lazy: the count below is the job that evaluates and pins the rows
-    val hit =
-      if (pin) rows.filter(col("__affected")).localCheckpoint(false)
-      else rows.filter(col("__affected"))
-    val counts =
-      if (!pin) affected
-      else hit.groupBy("__fname").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val updated = hit.filter(!col("__deleted"))
-    val kept =
-      if (touched.isEmpty || (tombstone && deletesOnly)) None
-      else Some((if (tombstone) updated else rows.filter(!col("__deleted")))
-        .drop("__fname", "__pos", "__affected", "__deleted", "__pre"))
-    // stamped before the stats cap drops the `_row_id` null counts
-    val adds = (kept ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
-        enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
-      .getOrElse(Nil)
-    // after the data write: a CHECK violation there leaves no DV store behind
-    val reAdds =
-      if (!tombstone) Nil
-      else {
-        val positions = hit.select(col("__fname"), col("__pos"))
-        val dvPathOf = writeDvStore(s.metaData,
-          if (touched.exists(_.dvPath.isDefined)) positions.unionByName(tombstones(s, touched))
-          else positions, touched)
-        touched.map { f =>
-          val key = canonPath(f.path)
-          Actions.untagReAdd(f).copy(dvPath = dvPathOf(key),
-            dvCount = f.dvCount + counts.getOrElse(key, 0L))
+      metrics: (Seq[AddFile], Long) => Map[String, String]): Long =
+    described(op, s, "write") {
+      val maxTombstones = s.metaData.properties.get("deletionVectors.maxTombstones")
+        .map(_.toLong).getOrElse(4L * 1000 * 1000)
+      val tombstone = touched.nonEmpty && dvEnabled(s.metaData) &&
+        affected.values.sum + touched.map(_.dvCount).sum <= maxTombstones
+      val pin = tombstone && !rows.queryExecution.analyzed.deterministic
+      // lazy: the count below is the job that evaluates and pins the rows
+      val hit =
+        if (pin) rows.filter(col("__affected")).localCheckpoint(false)
+        else rows.filter(col("__affected"))
+      val counts =
+        if (!pin) affected else TouchedFiles.affectedPerFile(hit, lit(false), lit(true))
+      val updated = hit.filter(!col("__deleted"))
+      val kept =
+        if (touched.isEmpty || (tombstone && deletesOnly)) None
+        else Some((if (tombstone) updated else rows.filter(!col("__deleted")))
+          .drop("__fname", "__pos", "__affected", "__deleted", "__pre"))
+      // stamped before the stats cap drops the `_row_id` null counts
+      val adds = (kept ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
+        .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
+          enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
+        .getOrElse(Nil)
+      // after the data write: a CHECK violation there leaves no DV store behind
+      val reAdds =
+        if (!tombstone) Nil
+        else {
+          val positions = hit.select(col("__fname"), col("__pos"))
+          val dvPathOf = writeDvStore(s.metaData,
+            if (touched.exists(_.dvPath.isDefined)) positions.unionByName(tombstones(s, touched))
+            else positions, touched)
+          touched.map { f =>
+            val key = canonPath(f.path)
+            Actions.untagReAdd(f).copy(dvPath = dvPathOf(key),
+              dvCount = f.dvCount + counts.getOrElse(key, 0L))
+          }
         }
-      }
-    val cols = s.schema.fieldNames.toSeq.map(col)
-    val cdc =
-      if (touched.isEmpty) Nil
-      else writeCdcFiles(s, (
-        Seq(hit.select(col("__pre.*"), when(col("__deleted"), lit("delete"))
-          .otherwise(lit("update_preimage")).as("_change_type"))) ++
-        (if (deletesOnly) Nil
-         else Seq(updated.select(cols :+ lit("update_postimage").as("_change_type"): _*))) ++
-        inserts.map(_.select(cols :+ lit("insert").as("_change_type"): _*))
-      ).reduce(_ unionByName _))
-    val meta = s.metaData.copy(properties = advancedProps(s.metaData, s.schema, adds))
-    val n = counts.values.sum
-    commit(s, info, op, metrics(adds, n) ++
-      Map(filesMetric -> (if (tombstone) 0 else touched.size).toString) ++
-      (if (tombstone) Map("numDeletionVectors" -> touched.size.toString) else Map.empty))(
-      (_, _) => (if (meta != base) Seq(meta) else Nil) ++ reAdds ++ adds ++ cdc)
-    n
-  }
+      val cols = s.schema.fieldNames.toSeq.map(col)
+      val cdc =
+        if (touched.isEmpty) Nil
+        else writeCdcFiles(s, (
+          Seq(hit.select(col("__pre.*"), when(col("__deleted"), lit("delete"))
+            .otherwise(lit("update_preimage")).as("_change_type"))) ++
+          (if (deletesOnly) Nil
+           else Seq(updated.select(cols :+ lit("update_postimage").as("_change_type"): _*))) ++
+          inserts.map(_.select(cols :+ lit("insert").as("_change_type"): _*))
+        ).reduce(_ unionByName _))
+      val meta = s.metaData.copy(properties = advancedProps(s.metaData, s.schema, adds))
+      val n = counts.values.sum
+      commit(s, info, op, metrics(adds, n) ++
+        Map(filesMetric -> (if (tombstone) 0 else touched.size).toString) ++
+        (if (tombstone) Map("numDeletionVectors" -> touched.size.toString) else Map.empty))(
+        (_, _) => (if (meta != base) Seq(meta) else Nil) ++ reAdds ++ adds ++ cdc)
+      n
+    }
 
   /** Discovery pass of the predicate ops (DELETE, UPDATE, replaceWhere):
     * each candidate file's count of live rows matching `matched`, keyed by
     * [[canonPath]], files without a match left out. Rows a DV already hides
     * are not counted, so a re-delete counts 0. */
-  private def matchesPerFile(s: Snapshot, candidates: Seq[AddFile],
+  private def matchesPerFile(s: Snapshot, op: String, candidates: Seq[AddFile],
       matched: Column): Map[String, Long] =
     if (candidates.isEmpty) Map.empty
-    else readFilesMeta(s, candidates).filter(matched).groupBy("__fname").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    else described(op, s, "discover")(TouchedFiles.affectedPerFile(
+      readFilesMeta(s, candidates).filter(matched), lit(false), lit(true)))
+
+  /** Runs `body` with its Spark jobs described as `graft <op>
+    * <table>@v<version> <phase>`, then restores the caller's description. */
+  private def described[A](op: String, s: Snapshot, phase: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft $op $path@v${s.version} $phase")
+    try body finally sc.setJobDescription(prev)
+  }
 
   /** [[rewriteRows]]' frame for a predicate op: rows of `touched` matching
     * `matched` are affected; with an empty `set` they are deleted, else
@@ -2633,7 +2643,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     requireNotAppendOnly(s.metaData, "DELETE")
     val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
-    val perFile = matchesPerFile(s, candidates, matched)
+    val perFile = matchesPerFile(s, "DELETE", candidates, matched)
     if (perFile.isEmpty) { commitNoop(s, "DELETE", "numDeletedRows"); return 0L }
     // path-level matching (normalized absolute spelling) — safe even for
     // converted/foreign layouts whose basenames collide across dirs
@@ -2677,7 +2687,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           "and assigned by the engine"))
     val matched = coalesce(pred, lit(false))
     val candidates = prunedFiles(s, pred)
-    val perFile = matchesPerFile(s, candidates, matched)
+    val perFile = matchesPerFile(s, "UPDATE", candidates, matched)
     if (perFile.isEmpty) { commitNoop(s, "UPDATE", "numUpdatedRows"); return 0L }
     val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
     rewriteRows(s,
@@ -2814,7 +2824,8 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // translates or the source is empty.
     val srcKeyPrune: Option[Column] =
       if (bySourceClauses.nonEmpty) None // unmatched rows live in ANY file
-      else mergeSourcePrunePred(source, cond, targetAlias, sourceAlias)
+      else described("MERGE", s, "discover")(
+        mergeSourcePrunePred(source, cond, targetAlias, sourceAlias))
     val prunedTargetFiles: Seq[AddFile] =
       srcKeyPrune.map(prunedFiles(s, _)).getOrElse(s.files)
     // the insert anti-join probes the same pruned slice: a target row in a
@@ -2827,52 +2838,35 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // NOT MATCHED BY SOURCE clauses — when it matches nothing and some
     // by-source clause's condition holds. Only those files are rewritten:
     // per-clause conditions narrow the rewrite set, exactly like Delta's
-    // touched-file inner join. The duplicate-source-match guard (Delta
-    // semantics: >1 source row matching one target row of a rewritten file
-    // is an error, not a nondeterministic update) rides the SAME pass as a
-    // per-(file, row) match count — one job finds the touched set AND
-    // proves match uniqueness, instead of a discovery join plus a separate
-    // guard join over an eagerly checkpointed rewrite frame. Without
-    // by-source clauses this stays an inner join; with them it has to be a
-    // left-outer probe (match status is what the clauses dispatch on).
-    // The same pass also counts each touched file's affected positions —
-    // the per-file counts rewriteRows' tombstone cap and DV counts read.
+    // touched-file inner join. Without by-source clauses this stays an
+    // inner join; with them it has to be a left-outer probe (match status
+    // is what the clauses dispatch on). One TouchedFiles pass over the join
+    // counts each touched file's affected positions (rewriteRows' tombstone
+    // cap and DV counts read them) and, with matched clauses, is the
+    // duplicate-source-match guard: a target row of a touched file matched
+    // by more than one source row is an error (Delta semantics), raised
+    // before anything is written. Clause conditions are evaluated in the
+    // fold's projection, so a non-deterministic one (rand(), a
+    // non-deterministic UDF) runs as it does in the rewrite.
     val affected: Map[String, Long] =
       if (s.files.isEmpty || prunedTargetFiles.isEmpty ||
           (matchedClauses.isEmpty && bySourceClauses.isEmpty)) Map.empty
-      else {
+      else described("MERGE", s, "discover") {
         val metaT = readFilesMeta(s, prunedTargetFiles).alias(targetAlias)
-        // each row's clause flag is projected BELOW the aggregate: a clause
-        // condition may be non-deterministic (rand(), a non-deterministic
-        // UDF), which Spark refuses inside an aggregate function
-        val perPos =
-          if (bySourceClauses.isEmpty) {
-            val anyClause = matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
-            metaT.join(src, cond, "inner")
-              .withColumn("__affc", when(anyClause, 1).otherwise(0))
-              .groupBy(col("__fname"), col("__pos"))
-              .agg(count(lit(1)).as("__n"), max(col("__affc")).as("__aff"))
-          } else {
-            val joined = metaT.join(src.withColumn(srcMark, lit(true)), cond, "left_outer")
-            val matchedPred = col(srcMark).isNotNull
-            val mAff =
-              if (matchedClauses.isEmpty) lit(false)
-              else matchedPred && matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
-            val bAff = !matchedPred && bySourceClauses.map(b => cc(bCond(b))).reduce(_ || _)
-            joined
-              .withColumn("__affc", when(mAff || bAff, 1).otherwise(0))
-              .groupBy(col("__fname"), col("__pos"))
-              .agg(sum(when(matchedPred, 1).otherwise(0)).as("__n"),
-                   max(col("__affc")).as("__aff"))
-          }
-        val perFile = perPos.groupBy(col("__fname"))
-          .agg(max(col("__n")).as("__mx"), sum(col("__aff")).as("__naff"))
-          .filter(col("__naff") > 0)
-          .collect()
-        if (matchedClauses.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
-          throw new IllegalStateException(
-            "MERGE failed: multiple source rows matched the same target row")
-        perFile.map(r => r.getAs[String]("__fname") -> r.getAs[Long]("__naff")).toMap
+        if (bySourceClauses.isEmpty)
+          TouchedFiles.affectedPerFile(metaT.join(src, cond, "inner"),
+            lit(true), matchedClauses.map(m => cc(mCond(m))).reduce(_ || _))
+        else {
+          val matchedPred = col(srcMark).isNotNull
+          val mAff =
+            if (matchedClauses.isEmpty) lit(false)
+            else matchedPred && matchedClauses.map(m => cc(mCond(m))).reduce(_ || _)
+          val bAff = !matchedPred && bySourceClauses.map(b => cc(bCond(b))).reduce(_ || _)
+          // NMBS-only merges may match one target row many times (Phase 2)
+          TouchedFiles.affectedPerFile(
+            metaT.join(src.withColumn(srcMark, lit(true)), cond, "left_outer"),
+            if (matchedClauses.isEmpty) lit(false) else matchedPred, mAff || bAff)
+        }
       }
     val touched = s.files.filter(f => affected.contains(canonPath(f.path)))
 

@@ -13,19 +13,22 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** A fresh temp dir, deleted with its contents when the test JVM exits. */
   def tmpDir(prefix: String): String = SparkTestBase.tmpDir(prefix)
 
-  /** Spark jobs started by `body` on this thread. The listener bus is
-    * ordered, so once a sentinel job's start is seen every earlier start
-    * has been counted. */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started by `body` on this thread. */
+  def jobsDuring(body: => Unit): Int = jobPropertiesDuring(body).size
+
+  /** The local properties of each Spark job started by `body` on this
+    * thread, in start order. The listener bus is ordered, so once a
+    * sentinel job's start is seen every earlier start has been recorded. */
+  def jobPropertiesDuring(body: => Unit): Seq[java.util.Properties] = {
     val sc = spark.sparkContext
     val group = s"jobs-${System.nanoTime()}"
     val sentinel = s"$group-sentinel"
-    val started = new java.util.concurrent.atomic.AtomicInteger
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => started.incrementAndGet()
+          case `group` => started.add(e.properties)
           case `sentinel` => drained.countDown()
           case _ =>
         }
@@ -37,7 +40,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(sentinel, "sentinel")
       spark.range(1).collect()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      started.get
+      started.toArray(Array.empty[java.util.Properties]).toSeq
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -26,6 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    and the table layer's only `left_anti` joins are VACUUM's orphan
   *    listing and MERGE's unmatched source rows: no scan applies
   *    tombstones through a join.
+  *  - In `GraftTable.scala`, no row-level op counts matches per file with a
+  *    `groupBy` on `__fname`: the touched files and their affected-row
+  *    counts come only from [[TouchedFiles]], one exchange-free job that
+  *    also guards against duplicate MERGE matches.
   *  - SQL UPDATE, MERGE INTO and DELETE have one row-level implementation,
   *    the table layer's: no source names Spark's DSv2 group-rewrite API
   *    (`SupportsRowLevelOperations`, `RowLevelOperation`,
@@ -49,6 +53,7 @@ class CommitPathGuardSpec extends AnyFunSuite {
   private val groupRewrite =
     """SupportsRowLevelOperations|RowLevelOperation|SupportsRuntimeV2Filtering""".r
   private val commitReplace = """\bcommitReplace\b""".r
+  private val perFileGroupBy = """groupBy\(\s*(?:col\(\s*)?"__fname"""".r
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
   /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
     * not Spark's `connector.write` package) or a `staged(` helper. */
@@ -164,5 +169,15 @@ class CommitPathGuardSpec extends AnyFunSuite {
       .foreach(line => assert(groupRewrite.findFirstIn(line).nonEmpty, line))
     assert(commitReplace.findFirstIn("table.commitReplace(snap, files, adds, op)").nonEmpty)
     assert(commitReplace.findFirstIn("t.commitReplaceTable(s, Nil, s.schema, Nil, Map.empty)").isEmpty)
+  }
+
+  test("per-file match counts in GraftTable go only through TouchedFiles") {
+    val found = strays("GraftTable.scala", perFileGroupBy, Set.empty)
+    assert(found.isEmpty, s"per-file counts outside TouchedFiles:\n${found.mkString("\n")}")
+    // the pattern still recognizes each spelling it bars
+    Seq("""hit.groupBy("__fname").count()""",
+        """perPos.groupBy(col("__fname"))""",
+        """.groupBy(col("__fname"), col("__pos"))""")
+      .foreach(line => assert(perFileGroupBy.findFirstIn(line).nonEmpty, line))
   }
 }

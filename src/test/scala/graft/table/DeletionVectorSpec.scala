@@ -528,15 +528,9 @@ class DeletionVectorSpec extends SparkTestBase {
     // same-named twin would suffix-match it (misattribution) or — under
     // requireQualified — refuse spuriously.
     val dir = tmpDir("dv-marker-")
-    Seq(("part-0.parquet", 0L, true)).toDF("fname", "pos", "rel")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val sc = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-    val p = java.nio.file.Paths.get(sc)
-    def posOf(fname: String, strict: Boolean = false): Set[Int] = {
-      val b = graft.table.FileOps.dvPositions(p, fname, strict)
-      b.stream().toArray.toSet
-    }
+    val p = markedSidecar(s"$dir/src", Seq("part-0.parquet" -> 0L))
+    def posOf(fname: String, strict: Boolean = false): Set[Int] =
+      readerPositions(dir, p, fname, strict)
     assert(posOf("part-0.parquet") === Set(0), "exact root-level match")
     assert(posOf("p=b1/part-0.parquet") === Set.empty[Int],
       "a nested same-named twin must NOT suffix-match a marked root entry")
@@ -552,9 +546,43 @@ class DeletionVectorSpec extends SparkTestBase {
     val sc2 = java.nio.file.Files.list(java.nio.file.Paths.get(dir2))
       .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
     val p2 = java.nio.file.Paths.get(sc2)
-    assert(graft.table.FileOps.dvPositions(p2, "p=b1/part-0.parquet")
-      .stream().toArray.toSet === Set(0), "legacy suffix matching preserved")
-    intercept[GraftProtocolException](
-      graft.table.FileOps.dvPositions(p2, "p=b1/part-0.parquet", true))
+    assert(graft.table.FileOps.dvPositions(p2, "p=b1/part-0.parquet",
+      s"$dir2/p=b1/part-0.parquet").stream().toArray.toSet === Set(0),
+      "legacy suffix matching preserved")
+    intercept[GraftProtocolException](graft.table.FileOps.dvPositions(p2,
+      "p=b1/part-0.parquet", s"$dir2/p=b1/part-0.parquet", true))
+  }
+
+  test("marked sidecar: a clone's escaped nested file takes only its own entry") {
+    // the source's sidecar tombstones a root-level part-0.parquet and a
+    // nested same-named p=b1/part-0.parquet; a shallow clone reads both
+    // through escaped paths and must not take its twin's positions
+    val dir = tmpDir("dv-escape-")
+    val p = markedSidecar(s"$dir/src",
+      Seq("p=b1/part-0.parquet" -> 1L, "part-0.parquet" -> 0L))
+    assert(readerPositions(dir, p, "../src/p=b1/part-0.parquet") === Set(1))
+    assert(readerPositions(dir, p, "../src/part-0.parquet") === Set(0))
+    assert(readerPositions(dir, p, "p=b1/part-0.parquet") === Set(1))
+    assert(readerPositions(dir, p, "part-0.parquet") === Set(0))
+  }
+
+  /** A `rel`-marked sidecar of the table at `root`, in its `_dv/` dir. */
+  private def markedSidecar(root: String, entries: Seq[(String, Long)]): java.nio.file.Path = {
+    import spark.implicits._
+    val dv = s"$root/_dv"
+    entries.map { case (f, pos) => (f, pos, true) }.toDF("fname", "pos", "rel")
+      .coalesce(1).write.mode("overwrite").parquet(dv)
+    Files.list(Paths.get(dv)).toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      .map(Paths.get(_)).head
+  }
+
+  /** The positions `sidecar` (of `<dir>/src`) tombstones for `fname`, read
+    * as `<dir>/src` reads it or, for an escaped `../` fname, as the shallow
+    * clone `<dir>/clone` does. */
+  private def readerPositions(dir: String, sidecar: java.nio.file.Path, fname: String,
+      strict: Boolean = false): Set[Int] = {
+    val root = if (fname.startsWith("..")) s"$dir/clone" else s"$dir/src"
+    graft.table.FileOps.dvPositions(sidecar, fname, s"$root/$fname", strict)
+      .stream().toArray.toSet
   }
 }
