@@ -10,16 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Harness.cpus)
 
     // Untimed warmup: run EVERY query once at the smallest SF. A fresh JVM
     // charges large one-time costs to whichever query first exercises a
@@ -67,7 +59,7 @@ object Bench {
     // fixture-memoized table-scenario queries time their FIRST run only —
     // a second lap would measure a pre-built scenario, dropping the DML
     // work the query exists to measure.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
+    val reps = Harness.reps
     // Dispersion accounting (VERDICT r15 watch item 2): this host's
     // ambient load swings totals ±35%, which swallows any real ≤30%
     // per-query regression if only a point estimate is recorded. The

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-process concurrency probe: a standalone JVM that runs `nOps`
   * one-commit operations against an existing GraftTable, racing the
   * in-process writer launched by ConcurrencySpec — exercising the
@@ -20,13 +18,7 @@ import org.apache.spark.sql.SparkSession
 object RaceWriter {
   def main(args: Array[String]): Unit = {
     val Array(tablePath, mode, n) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(2)
     import spark.implicits._
     val t = graft.table.GraftTable.forPath(spark, tablePath)
     if (mode == "deleter") {

@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Rounds the most recent `components` call on this thread took to
-    * converge — read by ScalingProbe's dedup-chain mode to pin the
-    * closure-round CURVE (pointer jumping ⇒ rounds track log(component
-    * diameter), which must stay flat when replicas are content-disjoint). */
-  val lastRounds: ThreadLocal[Int] = ThreadLocal.withInitial(() => 0)
-
   /** Labels each node with the minimum node id of its component.
     * `nodes`: one column `id`; `edges`: columns `src`, `dst` (any
     * orientation — symmetrized here). Returns (id, label).
@@ -49,21 +43,15 @@ object ConnectedComponents {
   def components(nodes: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def mark(msg: String, t0: Long): Unit =
-      if (debug) System.err.println(f"[cc] $msg ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val tEdges = System.nanoTime()
     val sym = edges.select($"src", $"dst")
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
       .localCheckpoint(true) // materialize the edge derivation exactly once
-    mark("edges materialized", tEdges)
     var labels = sym.select($"src".as("id")).distinct()
       .select($"id", $"id".as("label")).localCheckpoint(true)
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
-      val tRound = System.nanoTime()
       // neighbor min: every node offers its label to its neighbors
       val prop = sym.join(labels, $"src" === $"id")
         .select($"dst".as("id"), $"label")
@@ -90,9 +78,7 @@ object ConnectedComponents {
       changed = next.filter($"chg").count()
       labels = next.select($"id", $"label")
       it += 1
-      mark(s"round $it changed=$changed:", tRound)
     }
-    lastRounds.set(it)
     nodes.select($"id").join(labels, Seq("id"), "left")
       .select($"id", coalesce($"label", $"id").as("label"))
   }

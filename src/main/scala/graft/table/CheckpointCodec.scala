@@ -65,8 +65,9 @@ object CheckpointCodec {
   /** Minimal parser for the flat {"k":"v",...} string maps THIS codec
     * writes (jsonMap above — Jackson-escaped string values only). At 1M
     * files the checkpoint read parses 3 maps per file; a general
-    * ObjectMapper tree parse there is the single hottest cost the log
-    * probe found (ScalingProbe `log` mode), and this parser is ~6× leaner.
+    * ObjectMapper tree parse there is the single hottest cost of a
+    * checkpoint-seeded fold (perfbench's `LogProbe` times it as
+    * `GraftLog.open`), and this parser is ~6× leaner.
     * Falls back to Jackson on anything unexpected — correctness first. */
   private def readMap(s: String): Map[String, String] = {
     try {
@@ -216,11 +217,11 @@ object CheckpointCodec {
   /** Read a parquet checkpoint back to the folded snapshot at `version`.
     *
     * Decodes with Spark's VECTORIZED parquet reader (column-at-a-time page
-    * decode, no per-row Group materialization) — the log probe
-    * (ScalingProbe `log` mode) showed the row-path Group decode DOMINATING
-    * snapshot resolution at the 1M-file scale a 100 TB table actually has
-    * (~800k × 128 MB files); the columnar decode plus the flat-map parser
-    * above cut the checkpoint-seeded snapshot to a fraction. Checkpoints
+    * decode, no per-row Group materialization) — on synthetic logs the
+    * row-path Group decode DOMINATED snapshot resolution at the 1M-file
+    * scale a 100 TB table actually has (~800k × 128 MB files); the
+    * columnar decode plus the flat-map parser above cut the
+    * checkpoint-seeded snapshot to a fraction. Checkpoints
     * written before a column existed (e.g. dvPath) decode it as a null
     * vector — parquet missing-column semantics, same back-compat as the
     * old per-file-schema path. No SparkSession involved: the reader class

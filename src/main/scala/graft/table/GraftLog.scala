@@ -577,8 +577,9 @@ final class GraftLog(val tablePath: String,
     // ATOMIC publish-or-fail: a direct CREATE_NEW write makes the version
     // file VISIBLE WHILE EMPTY — a concurrent reader probing latestVersion
     // in that window folds a truncated commit (dropping, e.g., an identity
-    // frontier bump → silent duplicate ids; found by ScalingProbe's
-    // contention mode) and poisons its immutable action cache with it.
+    // frontier bump → silent duplicate ids; ConflictResolutionSpec's
+    // identity-contention test pins it) and poisons its immutable action
+    // cache with it.
     // Instead the body lands fully in a temp file and the store publishes
     // it under the LogStore putIfAbsent contract: exactly one writer wins
     // version v, losers get FileAlreadyExists (the compare-and-swap the
@@ -710,8 +711,8 @@ final class GraftLog(val tablePath: String,
     // fold via snapshotAt: seeds from the newest checkpoint ≤ v and
     // replays only the tail — a full replay(0, v) here would re-read the
     // ENTIRE log every checkpointInterval commits, quadratic total work
-    // over a long-lived table's life (measured: ScalingProbe contention
-    // readsPerCommit grew with history before this)
+    // over a long-lived table's life (measured: commit-file reads per
+    // landed commit under racing writers grew with history before this)
     val s = snapshotAt(v)
     if (DeltaWriteCompat.enabled(s.metaData)) {
       // compat tables always checkpoint in DELTA's parquet layout (a real
@@ -731,7 +732,7 @@ final class GraftLog(val tablePath: String,
     val nParts = if (parquet) ((s.files.size + partSize - 1) / partSize).max(1) else 1
     if (nParts > 1) {
       // MULTIPART: slices encode concurrently (the single-threaded 1M-row
-      // parquet write was the measured bottleneck — ScalingProbe `log`),
+      // parquet write was the measured bottleneck of a 100k-file log),
       // land fully in tmp files, then move into place part by part; the
       // pointer (with `parts`) publishes LAST, so a crash mid-move leaves
       // at worst an incomplete part set that multipartFiles treats as
@@ -924,8 +925,8 @@ final class GraftLog(val tablePath: String,
 
   /** Commit files actually read from storage by this instance (cache
     * misses only) — the observable proving a conflict rebase costs
-    * O(winner commits), never a full log re-read (ScalingProbe's
-    * contention mode reports reads-per-commit under N racing writers). */
+    * O(winner commits), never a full log re-read (perfbench reports it
+    * per op as `GraftLog.uncached_reads_per_op`). */
   private[graft] var uncachedVersionReads: Int = 0
 
   private def latestCheckpointAtOrBefore(v: Long): Option[Long] = {

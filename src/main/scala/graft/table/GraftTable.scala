@@ -498,9 +498,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // identity columns: GENERATED ALWAYS — reject explicit values (all-null
     // means "assign": the SQL-INSERT default-filled shape), assign fresh
     // ids above the frontier, and advance it in this same commit
-    val dfA = assignIdentity(df, s0)
-    val adds = stampRowIds(s0, writeDataMapped(
-      enforceConstraints(conform(dfA, s0.schema), s0.metaData), s0.metaData))
+    val (_, adds) = writeNew(s0, df)
     val metaBumped = s0.metaData.copy(
       properties = advancedProps(s0.metaData, s0.schema, adds))
     val metaAction: Seq[Action] =
@@ -526,9 +524,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     val s0 = snapshot
     gateWriterFeatures(s0.protocol)
     if (s0.transactions.get(appId).exists(_ >= version)) return false
-    val adds = stampRowIds(s0, writeDataMapped(
-      enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
-      s0.metaData))
+    val (_, adds) = writeNew(s0, df)
     val committed = commit(s0, TxnInfo.Blind, "WRITE",
       Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
           "txnAppId" -> appId, "epoch" -> version.toString),
@@ -537,8 +533,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       onRaceRecheck = head =>
         log.snapshotAt(head).transactions.get(appId).exists(_ >= version))(
       (_, _) => Txn(appId, version) +: (identityMeta(s0, adds) ++ adds)).isDefined
-    if (!committed)
-      adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
+    if (!committed) discard(adds)
     committed
   }
 
@@ -589,9 +584,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     }
     val df = reader.format(if (fmt == "jsonl") "json" else fmt)
       .load(pending.map(_.toString): _*)
-    val adds = stampRowIds(s0, writeDataMapped(
-      enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
-      s0.metaData))
+    val (_, adds) = writeNew(s0, df)
     val txns = pending.map(p => Txn(txnKey(p), Files.getLastModifiedTime(p).toMillis))
     val committed = commit(s0, TxnInfo.Blind, "COPY INTO",
       Map("numSourceFiles" -> pending.size.toString,
@@ -606,7 +599,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           .exists(_ >= Files.getLastModifiedTime(p).toMillis))
       })((_, _) => identityMeta(s0, adds) ++ txns ++ adds).isDefined
     if (!committed) {
-      adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
+      discard(adds)
       return copyInto(sourceDir, fmt)
     }
     autoCompact()
@@ -620,9 +613,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
   def overwrite(df: DataFrame): Unit = {
     val s = snapshot
     requireNotAppendOnly(s.metaData, "OVERWRITE")
-    val adds = stampRowIds(s, writeDataMapped(
-      enforceConstraints(conform(assignIdentity(df, s), s.schema), s.metaData),
-      s.metaData))
+    val (_, adds) = writeNew(s, df)
     val cdc = writeCdcFiles(s, cdcDiff(s, read(s), readFiles(s, adds)))
     // overwrite logically replaces EVERYTHING as of its snapshot — a
     // concurrent append would be silently erased by a rebase, so it
@@ -632,6 +623,19 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
     autoCompact()
   }
+
+  /** The one write-prep step of every write of fresh rows: identity ids
+    * assigned, rows conformed to the table schema and checked against its
+    * constraints, written as data files whose row ids are stamped. Returns
+    * the prepared rows too, for the writes that log them as CDC. */
+  private def writeNew(s: Snapshot, df: DataFrame): (DataFrame, Seq[AddFile]) = {
+    val rows = enforceConstraints(conform(assignIdentity(df, s), s.schema), s.metaData)
+    (rows, stampRowIds(s, writeDataMapped(rows, s.metaData)))
+  }
+
+  /** Delete the data files of a commit that lost its race and gave up. */
+  private def discard(adds: Seq[AddFile]): Unit =
+    adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
 
   /** ALWAYS-generated identity handling shared by the overwrite family:
     * reject writer-supplied values, assign above the frontier. When CDF is
@@ -760,8 +764,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     requireNotAppendOnly(s.metaData, "dynamic partition OVERWRITE")
     val parts = s.metaData.partitionColumns
     require(parts.nonEmpty, "dynamic partition overwrite requires a partitioned table")
-    val conformed = enforceConstraints(conform(assignIdentity(df, s), s.schema), s.metaData)
-    val adds = stampRowIds(s, writeDataMapped(conformed, s.metaData))
+    val (conformed, adds) = writeNew(s, df)
     // which partitions does the frame carry? Derived from the WRITTEN
     // files' own partitionValues — the same Hive directory encoding the
     // existing files use, so null (`__HIVE_DEFAULT_PARTITION__`) and
@@ -1416,7 +1419,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * (fromVersion, toVersion], diff the rows of removed vs added files.
     * Rows only in added files surface as `insert` (an update's post-image);
     * rows only in removed files as `delete` (an update's pre-image); rows
-    * present in both (rewritten untouched) cancel out via exceptAll.
+    * present in both (rewritten untouched) cancel out in the multiset diff.
     * Columns: table columns + _change_type + _commit_version.
     * (Delta CDF materializes change files at write time; computing from
     * file diffs trades one read of the touched files for zero write-path
@@ -1431,7 +1434,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     *  - commits that wrote `_cdc/` sidecars (CDF-enabled DML) read them
     *    back directly — O(changes) IO, no diffing;
     *  - pure-add commits derive inserts from the added files — no
-    *    exceptAll (nothing to cancel against);
+    *    diff (nothing to cancel against);
     *  - legacy rewrite commits (pre-CDF) fall back to the two-snapshot
     *    multiset file-diff. */
   private[graft] def changesOf(v: Long): DataFrame = {
@@ -1523,28 +1526,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     } else {
       val prev = log.snapshotAt(v - 1).files.map(f => f.path -> f).toMap
       val removedFiles = removePaths.map(prev)
-      val added =
-        if (addedFiles.isEmpty) readFiles(cur, Nil) else readFiles(cur, addedFiles)
-      val removed = readFiles(cur, removedFiles)
-      // Multiset diff in ONE aggregation (round 18): the former
-      // added.exceptAll(removed) ∪ removed.exceptAll(added) planned two
-      // exceptAll joins that each scanned BOTH file sets — four scans and
-      // two shuffles per legacy version. A signed-count aggregate computes
-      // the identical multiset: exceptAll emits each row value
-      // max(0, cnt_added − cnt_removed) times (resp. the negation), which
-      // is exactly |net| copies tagged by net's sign — one scan per side,
-      // one exchange (guide §2.4). Grouping treats NULLs as equal, the
-      // same null semantics exceptAll uses.
-      val cols = added.columns.toSeq
-      val net = added.withColumn("__cdf_sign", lit(1L))
-        .unionByName(removed.withColumn("__cdf_sign", lit(-1L)))
-        .groupBy(cols.map(col): _*)
-        .agg(sum(col("__cdf_sign")).as("__cdf_net"))
-        .filter(col("__cdf_net") =!= 0L)
-      stamp(net
-        .select(cols.map(col) :+ explode(expr(
-          """array_repeat(if(__cdf_net > 0, 'insert', 'delete'),
-            |cast(abs(__cdf_net) as int))""".stripMargin)).as("_change_type"): _*))
+      stamp(multisetDiff(readFiles(cur, removedFiles), readFiles(cur, addedFiles)))
     }
   }
 
@@ -2362,10 +2344,25 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * read time, here paid ONCE at write time). */
   private def cdcDiff(s: Snapshot, oldRows: DataFrame, newRows: DataFrame): DataFrame = {
     val cols = s.schema.fieldNames.map(col).toSeq
-    val o = oldRows.select(cols: _*)
-    val n = newRows.select(cols: _*)
-    n.exceptAll(o).withColumn("_change_type", lit("insert"))
-      .unionByName(o.exceptAll(n).withColumn("_change_type", lit("delete")))
+    multisetDiff(oldRows.select(cols: _*), newRows.select(cols: _*))
+  }
+
+  /** `newRows` minus `oldRows` as multisets, each row tagged `insert` or
+    * `delete` in `_change_type`: a row value appears |net| times, tagged by
+    * the sign of net = (copies in `newRows`) − (copies in `oldRows`) —
+    * the rows `n.exceptAll(o)` ∪ `o.exceptAll(n)` would give, from one
+    * signed-count aggregate that scans each side once, with one exchange
+    * (guide §2.4). Grouping treats NULLs as equal, as exceptAll does. */
+  private def multisetDiff(oldRows: DataFrame, newRows: DataFrame): DataFrame = {
+    val cols = newRows.columns.toSeq.map(col)
+    newRows.withColumn("__cdf_sign", lit(1L))
+      .unionByName(oldRows.withColumn("__cdf_sign", lit(-1L)))
+      .groupBy(cols: _*)
+      .agg(sum(col("__cdf_sign")).as("__cdf_net"))
+      .filter(col("__cdf_net") =!= 0L)
+      .select(cols :+ explode(expr(
+        """array_repeat(if(__cdf_net > 0, 'insert', 'delete'),
+          |cast(abs(__cdf_net) as int))""".stripMargin)).as("_change_type"): _*)
   }
 
   /** Write a commit's change rows as flat `_cdc/cdc-*.parquet` sidecars
@@ -3252,8 +3249,8 @@ object GraftTable {
   /** Files whose [min, max] stat interval contains at least one of the
     * sorted keys — None when the column's type or stats can't support the
     * comparison (caller keeps all files: pruning is only ever an
-    * optimization). O(files · log keys); ScalingProbe `log` mode measures
-    * it at the 1M-file × 100k-key design point. */
+    * optimization). O(files · log keys); DynamicFilePruningSpec and
+    * MultipartCheckpointSpec pin that it prunes and keeps every match. */
   private[graft] def sortedKeyPruneOf(s: Snapshot, column: String,
       vals: Seq[Any]): Option[Seq[AddFile]] = {
     val statKey = ColumnMapping.physicalOf(s.schema, column)

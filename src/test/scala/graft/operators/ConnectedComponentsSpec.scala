@@ -29,6 +29,19 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(got.values.toSet === Set(1L), s"chain did not converge: $got")
   }
 
+  test("round count tracks diameter, not volume: 25 disjoint 40-chains converge within 8 rounds") {
+    import spark.implicits._
+    // the same graph as above, replicated into disjoint copies: volume
+    // scales the per-round shuffles, never the number of rounds
+    val n = 40L; val copies = 25L
+    val nodes = (0L until copies * n).map(_ + 1).toDF("id")
+    val edges = (0L until copies).flatMap(c =>
+      (1L until n).map(i => (c * n + i, c * n + i + 1))).toDF("src", "dst")
+    val got = ConnectedComponents.components(nodes, edges, maxIter = 8)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (1L to copies * n).map(id => id -> ((id - 1) / n * n + 1)).toMap)
+  }
+
   test("q57 clusters are consistent with q42 pairs: endpoints share a rep") {
     import spark.implicits._
     val comp = graft.SparkEntry.queries("q57_dedup_clusters")(spark, sfDir)

@@ -71,6 +71,35 @@ class ChangeFeedSpec extends SparkTestBase {
         s"_commit_timestamp must equal history() for v${r.getLong(0)}"))
   }
 
+  test("OVERWRITE and RESTORE sidecars keep duplicate rows: the exceptAll multiset") {
+    val t = GraftTable.create(spark, tmpDir("cdf-dup-"),
+      df((1, "A", "B"), (1, "A", "B"), (2, "C", "D")))
+    t.setProperty("changeDataFeed.enabled", "true")
+    val before = t.latestVersion
+    def rows(d: DataFrame): Seq[(Int, String, String, String)] =
+      d.select("id", "firstname", "lastname", "_change_type").collect().toSeq
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3))).sorted
+    /** The change rows as two exceptAlls define them. */
+    def exceptAllDiff(o: DataFrame, n: DataFrame): Seq[(Int, String, String, String)] =
+      rows(n.exceptAll(o).withColumn("_change_type", lit("insert"))
+        .unionByName(o.exceptAll(n).withColumn("_change_type", lit("delete"))))
+    def sidecarRows(v: Long): Seq[(Int, String, String, String)] = {
+      assert(t.log.readVersion(v).exists(_.isInstanceOf[CdcFile]), s"v$v wrote no sidecar")
+      rows(t.changes(v - 1, v))
+    }
+    val replacement = df((1, "A", "B"), (3, "E", "F"), (3, "E", "F"))
+    t.overwrite(replacement)
+    val overwritten = sidecarRows(t.latestVersion)
+    assert(overwritten === Seq((1, "A", "B", "delete"), (2, "C", "D", "delete"),
+      (3, "E", "F", "insert"), (3, "E", "F", "insert")))
+    assert(overwritten === exceptAllDiff(t.versionAsOf(before), replacement))
+    t.restore(before)
+    val restored = sidecarRows(t.latestVersion)
+    assert(restored === Seq((1, "A", "B", "insert"), (2, "C", "D", "insert"),
+      (3, "E", "F", "delete"), (3, "E", "F", "delete")))
+    assert(restored === exceptAllDiff(replacement, t.toDF))
+  }
+
   test("batch readChangeFeed relation serves the version range") {
     val t = goldenCdf()
     val feed = spark.read.format("graft")

@@ -136,7 +136,7 @@ class CloneSpec extends SparkTestBase {
     // converted/foreign layouts commonly hold one "part-00000..." per
     // partition dir — each escaped file must take its own partition values,
     // never a same-named twin's (a basename key multiplied every row by
-    // its name-collision count; caught by ScalingProbe clone)
+    // its name-collision count)
     val src = tmpDir("clone-conv-src-")
     val stage = tmpDir("clone-conv-stage-")
     Seq((1, "x")).toDF("id", "payload").coalesce(1)

@@ -34,6 +34,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the table layer's: no source names Spark's DSv2 group-rewrite API
   *    (`SupportsRowLevelOperations`, `RowLevelOperation`,
   *    `SupportsRuntimeV2Filtering`) and `GraftTable.commitReplace` is gone.
+  *  - Every session of the program and its tests is built by
+  *    `graft.Harness`, and the only mains are Bench, Verify, Diag and
+  *    RaceWriter.
   *
   * Comments are skipped; the enclosing method is the nearest member-level
   * `def` above. */
@@ -54,6 +57,8 @@ class CommitPathGuardSpec extends AnyFunSuite {
     """SupportsRowLevelOperations|RowLevelOperation|SupportsRuntimeV2Filtering""".r
   private val commitReplace = """\bcommitReplace\b""".r
   private val perFileGroupBy = """groupBy\(\s*(?:col\(\s*)?"__fname"""".r
+  private val sessionBuilder = """SparkSession\s*\.\s*builder\b""".r
+  private val mainMethod = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
   /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
     * not Spark's `connector.write` package) or a `staged(` helper. */
@@ -75,7 +80,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
           else { if (src(i) == '\n') out += '\n'; i += 1 }
         } while (depth > 0 && i < src.length)
       } else if (at("\"\"\"")) {
-        val end = src.indexOf("\"\"\"", i + 3)
+        // a run of more than three quotes closes on its last three
+        var end = src.indexOf("\"\"\"", i + 3)
+        while (end + 3 < src.length && src(end + 3) == '"') end += 1
         out ++= src.substring(i, end + 3); i = end + 3
       } else if (at("'\"'")) {
         out ++= "'\"'"; i += 3
@@ -179,5 +186,25 @@ class CommitPathGuardSpec extends AnyFunSuite {
         """perPos.groupBy(col("__fname"))""",
         """.groupBy(col("__fname"), col("__pos"))""")
       .foreach(line => assert(perFileGroupBy.findFirstIn(line).nonEmpty, line))
+  }
+
+  test("sessions come only from Harness; the only mains are Bench, Verify, Diag and RaceWriter") {
+    val sources = for {
+      root <- Seq("src/main/scala", "src/test/scala")
+      p <- Files.walk(Paths.get(root)).iterator().asScala.toSeq.sortBy(_.toString)
+      if p.toString.endsWith(".scala")
+    } yield p
+    /** One entry per hit: the file it is in. */
+    def hitFiles(pattern: scala.util.matching.Regex): Seq[String] = sources.flatMap(p =>
+      pattern.findAllIn(withoutComments(Files.readString(p))).map(_ => p.toString))
+    assert(hitFiles(sessionBuilder) === Seq("src/main/scala/graft/Harness.scala"),
+      "a SparkSession built outside graft.Harness")
+    assert(hitFiles(mainMethod).map(Paths.get(_).getFileName.toString).sorted ===
+      Seq("Bench.scala", "Diag.scala", "RaceWriter.scala", "Verify.scala"))
+    // the patterns still recognize each spelling they bar
+    Seq("    val s = SparkSession" + ".builder()", "SparkSession\n" + "  .builder()")
+      .foreach(src => assert(sessionBuilder.findFirstIn(src).nonEmpty, src))
+    Seq("  def " + "main(args: Array[String]): Unit = {", "object Probe extends " + "App {")
+      .foreach(line => assert(mainMethod.findFirstIn(line).nonEmpty, line))
   }
 }

@@ -1267,4 +1267,81 @@ class DeltaAdoptionSpec extends SparkTestBase {
     t.append(df(40 until 42))
     assert(ids(t) === Set(0L, 1L, 2L, 3L, 40L, 41L))
   }
+
+  // ---- synthetic foreign logs: n files named in the log, none ever opened --
+
+  /** A foreign log over `n` synthetic files: v0 protocol + metaData, v1
+    * every add, a classic checkpoint at v1 carrying them plus the
+    * `checkpointOnly` lines, then a 10-commit JSON tail of one add each. */
+  private def syntheticForeignLog(dir: String, n: Int, proto: String, meta: String,
+      add: Int => String, checkpointOnly: Seq[String] = Nil): Unit = {
+    import spark.implicits._
+    commit(dir, 0, Seq(infoLine(1619112345000L, "WRITE"), proto, meta))
+    commit(dir, 1, infoLine(1619112346000L, "WRITE") +: (0 until n).map(add))
+    val stage = tmpDir("adopt-synth-cp-")
+    spark.read.json((Seq(proto, meta) ++ checkpointOnly ++ (0 until n).map(add)).toDS)
+      .coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    Files.move(Paths.get(part), Paths.get(dir, "_delta_log", f"${1L}%020d.checkpoint.parquet"))
+    Files.write(Paths.get(dir, "_delta_log", "_last_checkpoint"),
+      s"""{"version":1,"size":${n + 2 + checkpointOnly.size}}""".getBytes("UTF-8"))
+    (2 to 11).foreach(v =>
+      commit(dir, v, Seq(infoLine(1619112346000L + v, "WRITE"), add(n + v))))
+  }
+
+  /** The adopting commit at v12: no add, and O(1) bytes whatever n is. */
+  private def assertMetadataOnlyAdoption(dir: String): Unit = {
+    val adoptFile = Paths.get(dir, "_delta_log", f"${12L}%020d.json")
+    assert(!Files.readAllLines(adoptFile).asScala.exists(_.contains("\"add\"")),
+      "adoption is metadata-only — no data file moves")
+    assert(Files.size(adoptFile) < 8192, s"adopting commit is ${Files.size(adoptFile)} B")
+  }
+
+  test("a 2,000-file foreign log adopts metadata-only; every fold seeds from its checkpoint") {
+    val n = 2000
+    val dir = tmpDir("adopt-synth-")
+    def add(i: Int): String =
+      s"""{"add":{"path":"part-$i-a-c000.snappy.parquet","partitionValues":{},"size":134217728,"modificationTime":1619112345000,"dataChange":true,"stats":"{\\"numRecords\\":1000,\\"minValues\\":{\\"id\\":${i * 1000L}},\\"maxValues\\":{\\"id\\":${(i + 1) * 1000L}},\\"nullCount\\":{\\"id\\":0}}"}}"""
+    syntheticForeignLog(dir, n,
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["vacuumProtocolCheck"],"writerFeatures":["vacuumProtocolCheck"]}}""",
+      metaLine(), add)
+    // a full JSON replay would read all 12 commits, the n-add v1 among them
+    val pre = new GraftLog(dir)
+    assert(pre.snapshotAt(11L).files.size === n + 10)
+    assert(pre.uncachedVersionReads <= 11,
+      s"the foreign fold read ${pre.uncachedVersionReads} commits; the tail is 10")
+    GraftTable.adoptDelta(spark, dir)
+    assertMetadataOnlyAdoption(dir)
+    val post = new GraftLog(dir)
+    assert(post.snapshotAt(12L).files.size === n + 10)
+    assert(post.uncachedVersionReads <= 11,
+      s"the first post-adoption fold read ${post.uncachedVersionReads} commits; the tail is 11")
+    assert(GraftTable.forPath(spark, dir).history().count() === 13L)
+  }
+
+  test("a 2,000-file ID-mode rowTracking foreign log adopts metadata-only; the hwm folds from the checkpoint") {
+    import org.apache.spark.sql.types._
+    val n = 2000
+    val dir = tmpDir("adopt-synth-id-")
+    val schema = StructType(Seq(StructField("id", LongType, nullable = true,
+      new MetadataBuilder().putLong("delta.columnMapping.id", 1L)
+        .putString("delta.columnMapping.physicalName", "col-1").build())))
+    // the domain lives only in the checkpoint (delta's metadata-cleanup
+    // shape), and leads the live-derived floor of n * 1000 ids
+    val hwm = n * 1000L + 999999L
+    def add(i: Int): String =
+      s"""{"add":{"path":"part-$i-a-c000.snappy.parquet","partitionValues":{},"size":134217728,"modificationTime":1619112345000,"dataChange":true,"baseRowId":${i * 1000L},"defaultRowCommitVersion":1,"stats":"{\\"numRecords\\":1000,\\"minValues\\":{\\"id\\":${i * 1000L}},\\"maxValues\\":{\\"id\\":${(i + 1) * 1000L}},\\"nullCount\\":{\\"id\\":0}}"}}"""
+    syntheticForeignLog(dir, n,
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping"],"writerFeatures":["columnMapping","rowTracking","domainMetadata","invariants"]}}""",
+      s"""{"metaData":{"id":"adopt-synth-id-1","format":{"provider":"parquet","options":{}},"schemaString":${mapper.writeValueAsString(schema.json)},"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"1","delta.enableRowTracking":"true"},"createdTime":1619112344000}}""",
+      add,
+      checkpointOnly = Seq(s"""{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\\"rowIdHighWaterMark\\":$hwm}","removed":false}}"""))
+    val t = GraftTable.adoptDelta(spark, dir)
+    assertMetadataOnlyAdoption(dir)
+    val props = t.snapshot.metaData.properties
+    assert(props.get("columnMapping.mode").contains("id"), "id-mode mapping must translate")
+    assert(props.get(GraftTable.RowIdHwmKey).map(_.toLong).contains(hwm),
+      s"the hwm must fold from the checkpoint domain ($hwm), got ${props.get(GraftTable.RowIdHwmKey)}")
+  }
 }

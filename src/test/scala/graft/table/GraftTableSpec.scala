@@ -238,6 +238,35 @@ class GraftTableSpec extends SparkTestBase {
     assert(t.history().count() === 3)
   }
 
+  test("VACUUM over 2,000 files in 64 directories: finds and deletes exactly the orphans") {
+    // a synthetic table: vacuum only lists and stats files, so they are
+    // empty; half are referenced by the log, half are old orphans
+    val n = 2000
+    val dir = tmpDir("gt-vac-")
+    val root = java.nio.file.Paths.get(dir)
+    val now = System.currentTimeMillis()
+    val old = java.nio.file.attribute.FileTime.fromMillis(now - 30L * 24 * 3600 * 1000)
+    def name(i: Int) = f"b${i % 64}%d/part-$i%07d.parquet"
+    (0 until 64).foreach(b => java.nio.file.Files.createDirectories(root.resolve(s"b$b")))
+    (0 until n).foreach { i =>
+      val f = java.nio.file.Files.createFile(root.resolve(name(i)))
+      java.nio.file.Files.setLastModifiedTime(f, old)
+    }
+    val log = new GraftLog(dir)
+    log.commit(0L, Seq(
+      MetaData(java.util.UUID.randomUUID().toString,
+        StructType(Seq(StructField("id", LongType))).json, now, Nil, Map.empty,
+        Map("vacuum.retentionDurationCheck" -> "false")),
+      CommitInfo(0L, log.nextTimestamp(), "CONVERT", Map.empty)) ++
+      (0 until n by 2).map(i => AddFile(name(i), 1024L, now, 10L, Map.empty, Map.empty)))
+    val t = GraftTable.forPath(spark, dir)
+    val orphans = t.vacuumDryRun(retainVersions = 0, retentionMs = 0L)
+    assert(orphans.size === n / 2)
+    assert(t.vacuum(retainVersions = 0, retentionMs = 0L) === n / 2)
+    assert((0 until n).forall(i =>
+      java.nio.file.Files.exists(root.resolve(name(i))) == (i % 2 == 0)))
+  }
+
   test("a zero-row DELETE or UPDATE records its own zero metrics") {
     val t = GraftTable.create(spark, tmpDir("gt-"), df((1, "A", "A"), (2, "B", "B")))
     def latest(): (String, Map[String, String]) = {

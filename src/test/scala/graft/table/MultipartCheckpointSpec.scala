@@ -110,4 +110,40 @@ class MultipartCheckpointSpec extends SparkTestBase {
     assert(Files.readString(log.lastCheckpointFile).contains(""""version":10"""))
     assert(new GraftLog(dir).snapshotAt(10L).files.size === 9)
   }
+
+  test("a synthetic 2,000-file log: JSON fold, parquet and multipart checkpoints keep every file") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // the fold never opens a data file, so the files need not exist
+    val n = 2000
+    val dir = tmpDir("mpcp-synth-")
+    val now = System.currentTimeMillis()
+    def addFile(i: Int): AddFile = AddFile(
+      f"part-$i%07d-xxxxxxxx.parquet", 128L * 1024 * 1024, now, 1000000L,
+      Map("id" -> (i * 1000L).toString, "v" -> "aaaa"),
+      Map("id" -> ((i + 1) * 1000L).toString, "v" -> "zzzz"))
+    val log = new GraftLog(dir)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val meta = MetaData(java.util.UUID.randomUUID().toString, schema.json, now, Nil,
+      Map.empty, Map("checkpoint.format" -> "parquet"))
+    def write(v: Long, adds: Seq[AddFile], extra: Action*): Unit =
+      log.commit(v, (extra :+ CommitInfo(v, log.nextTimestamp(), "WRITE", Map.empty)) ++ adds)
+    write(0L, (0 until n).map(addFile), meta)
+    (1 to 9).foreach(v => write(v, (0 until 10).map(i => addFile(n + v * 10 + i))))
+    assert(new GraftLog(dir).snapshotAt(9L).files.size === n + 90, "the JSON fold lost files")
+    // v10 crosses the checkpoint interval: one parquet checkpoint
+    write(10L, (0 until 10).map(i => addFile(n + 100 + i)))
+    assert(Files.exists(log.parquetCheckpointFile(10)))
+    assert(new GraftLog(dir).snapshotAt(10L).files.size === n + 100,
+      "the checkpoint-seeded fold lost files")
+    // the same table split into parts: v20 writes a 4-part checkpoint
+    write(11L, Nil, meta.copy(properties = meta.properties +
+      ("checkpoint.partSize" -> (n / 4 + 1).toString)))
+    (12 to 20).foreach(v => write(v, Nil))
+    assert(Files.exists(log.multipartManifestFile(20)))
+    val s20 = new GraftLog(dir).snapshotAt(20L)
+    assert(s20.files.size === n + 100, "the multipart-seeded fold lost files")
+    // file pruning by a large sorted key set supports the numeric id stats
+    val kept = GraftTable.sortedKeyPruneOf(s20, "id", (0 until 10000).map(i => Long.box(i * 37L)))
+    assert(kept.exists(k => k.nonEmpty && k.size < s20.files.size), kept.map(_.size))
+  }
 }

@@ -119,4 +119,40 @@ class TypeWideningSpec extends SparkTestBase {
       spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
     }
   }
+
+  test("DDL on a 2,000-file table lands as small metadata-only commits; pruning stays collation-safe") {
+    // a synthetic log: none of these operations may open a data file
+    val n = 2000
+    val dir = tmpDir("tw-ddl-")
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("cnt", IntegerType),
+      StructField("name", StringType("UTF8_LCASE"))))
+    val now = System.currentTimeMillis()
+    val log = new GraftLog(dir)
+    log.commit(0L, Seq(
+      MetaData(java.util.UUID.randomUUID().toString, schema.json, now, Nil, Map.empty, Map.empty),
+      CommitInfo(0L, log.nextTimestamp(), "CONVERT", Map.empty)) ++
+      (0 until n).map(i => AddFile(
+        f"part-$i%07d-xxxxxxxx.parquet", 128L * 1024 * 1024, now, 1000000L,
+        Map("id" -> (i * 1000L).toString, "cnt" -> "0", "name" -> "AAAA"),
+        Map("id" -> ((i + 1) * 1000L).toString, "cnt" -> "99", "name" -> "MZZZ"))))
+    val t = GraftTable.forPath(spark, dir)
+    assert(dataFileCount(t) === n)
+    // a commit that re-listed the files would be ~300 KB at this n
+    def commitBytes(v: Long): Long = java.nio.file.Files.size(
+      java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json"))
+    t.addColumn("tier", StringType, Some("'legacy'"))
+    t.alterColumnType("cnt", LongType)
+    t.setProperty("clustering.columns", "id")
+    assert(t.latestVersion === 3L)
+    (1L to 3L).foreach(v => assert(commitBytes(v) < 64 * 1024, s"v$v is ${commitBytes(v)} B"))
+    assert(dataFileCount(t) === n, "no DDL may touch the file set")
+    // stats pruning: a binary predicate prunes, a collated one never does
+    val snap = t.snapshot
+    def kept(pred: org.apache.spark.sql.Column): Int =
+      DataSkipping.prune(DataSkipping.resolve(spark, snap.schema, pred), snap.files).size
+    assert(kept(col("id") < 5000L) < n / 100)
+    assert(kept(col("name") === "zz") === n, "a collated predicate must never prune")
+  }
 }
