@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The one session factory of Bench, Verify, Diag, RaceWriter and the
   * tests, and the one Spark job counter of Diag and the tests. */
@@ -34,12 +35,24 @@ object Harness {
   }
 
   /** The Spark jobs `body` starts on this thread (and on the threads that
-    * inherit its job group). The listener bus is ordered, so once a
-    * sentinel job's start is seen every earlier event has been recorded. */
+    * inherit its job group), and the micro-batch jobs of the streaming
+    * queries `body` starts: Structured Streaming runs those under the
+    * query's run id as job group, and a query reports its start, run id
+    * included, before it runs a batch. The listener bus is ordered, so
+    * once a sentinel job's start is seen every earlier event has been
+    * recorded. */
   def jobsDuring(spark: SparkSession)(body: => Unit): Jobs = {
     val sc = spark.sparkContext
     val group = s"jobs-${System.nanoTime()}"
     val sentinel = s"$group-sentinel"
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    groups.add(group)
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        groups.add(e.runId.toString)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
     val started = new ConcurrentLinkedQueue[Properties]
     val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val stages = new AtomicInteger
@@ -47,11 +60,11 @@ object Harness {
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` =>
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`sentinel`) => drained.countDown()
+          case Some(g) if groups.contains(g) =>
             started.add(e.properties)
             e.stageIds.foreach(stageIds.add)
-          case `sentinel` => drained.countDown()
           case _ =>
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -60,6 +73,7 @@ object Harness {
         if (stageIds.contains(e.stageId)) tasks.incrementAndGet()
     }
     sc.addSparkListener(listener)
+    spark.streams.addListener(queries)
     try {
       sc.setJobGroup(group, "build")
       body
@@ -69,6 +83,7 @@ object Harness {
       Jobs(started.toArray(Array.empty[Properties]).toSeq, stages.get, tasks.get)
     } finally {
       sc.clearJobGroup()
+      spark.streams.removeListener(queries)
       sc.removeSparkListener(listener)
     }
   }

@@ -343,7 +343,7 @@ object TableQueries {
   }
 
   /** q141 fixture: the SAME seed + delete sequence run twice — once
-    * merge-on-read (deletion vectors: deletes commit tombstone sidecars,
+    * merge-on-read (deletion vectors: deletes commit Delta DV files,
     * zero files rewritten) and once copy-on-write. A marker property on
     * the CoW twin keeps version numbering aligned. */
   private def dvDeleteTable(s: SparkSession, dvMode: Boolean): GraftTable =

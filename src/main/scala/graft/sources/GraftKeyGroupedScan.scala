@@ -87,17 +87,14 @@ class GraftKeyGroupedScan(table: GraftTable, snap: Snapshot,
 
   private lazy val planned: Array[InputPartition] = {
     // collision verdict over the snapshot's FULL live set, never the
-    // pruned subset (see FileOps.dvBasenameCollisions: a pruned basename
-    // twin must still force the refusal for its surviving twin)
-    val strictDv = graft.table.FileOps.dvBasenameCollisions(snap.files)
+    // pruned subset (a pruned basename twin must still force the refusal
+    // for its surviving twin)
+    val dv = graft.table.FileOps.dvRefs(table.path, files, snap.files)
     files.map { f =>
       val abs = java.nio.file.Paths.get(table.path, f.path).toString
       GraftKeyedFilePartition(
-        graft.streaming.GraftFilePartition(
-          abs, f.partitionValues, f.numRecords,
-          f.dvPath.map(p => graft.table.FileOps.dvAbs(table.path, p)),
-          f.path,
-          dvRequireQualified = strictDv(f.path)),
+        graft.streaming.GraftFilePartition(abs, f.partitionValues, f.numRecords,
+          dv.get(f.path)),
         keyOf(f)): InputPartition
     }.toArray
   }

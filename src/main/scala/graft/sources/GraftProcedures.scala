@@ -253,7 +253,7 @@ object GraftProcedures {
       ("property", "dataSkipping.numIndexedCols",
         "min/max/null stats recorded for the first N schema columns only (default 32, Delta's default); partition/clustering/identity columns always kept; -1 indexes every column"),
       ("property", "compat.delta.write",
-        "emit commits and checkpoints in genuine delta action shape so real Delta readers open the table; graft keeps writing it (ownership markers); DV/CDF/columnMapping/VARIANT/NTZ/rowTracking/ICT/typeWidening/column-defaults/clustering all emit standard spellings — only pre-compat native DV sidecars refuse"),
+        "emit commits and checkpoints in genuine delta action shape so real Delta readers open the table; graft keeps writing it (ownership markers); DV/CDF/columnMapping/VARIANT/NTZ/rowTracking/ICT/typeWidening/column-defaults/clustering all emit standard spellings — only legacy `_dv/` DV sidecars refuse"),
       ("property", "clustering.columns",
         "incremental clustering maintained by OPTIMIZE (SQL: CREATE/ALTER TABLE ... CLUSTER BY); under compat the delta.clustering domain (physical-name spelling) rides every commit and checkpoint so foreign engines see the layout advice; adopt_delta folds a foreign domain back onto this property"),
       ("property", "graft.existenceDefaults",

@@ -7,12 +7,6 @@ import scala.jdk.CollectionConverters._
 import graft.table.{AddFile, CommitInfo, GraftLog, MetaData, RemoveFile}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, Type}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -356,13 +350,10 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
         }
       }
     plannedColumnarOk = files.forall(_.dvPath.isEmpty)
-    val strictDv = graft.table.FileOps.dvBasenameCollisions(files)
+    val dv = graft.table.FileOps.dvRefs(tablePath, files, files)
     files.map(f => GraftFilePartition(
       Paths.get(tablePath, f.path).toString, f.partitionValues,
-      f.numRecords,
-      f.dvPath.map(p => graft.table.FileOps.dvAbs(tablePath, p)),
-      f.path,
-      dvRequireQualified = strictDv(f.path)): InputPartition).toArray
+      f.numRecords, dv.get(f.path)): InputPartition).toArray
   }
 
   /** CDF planning: the initial batch (no startingVersion) emits the folded
@@ -375,15 +366,13 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
     def tsOf(v: Long): String = log.readVersion(v)
       .collectFirst { case c: CommitInfo => c.timestamp }.getOrElse(0L).toString
     def insertParts(files: Seq[AddFile], v: Long): Unit = {
-      val strictDv = graft.table.FileOps.dvBasenameCollisions(files)
+      val dv = graft.table.FileOps.dvRefs(tablePath, files, files)
       files.foreach { f =>
         parts += GraftFilePartition(
           Paths.get(tablePath, f.path).toString, f.partitionValues, f.numRecords,
-          f.dvPath.map(p => graft.table.FileOps.dvAbs(tablePath, p)),
-          f.path,
+          dv.get(f.path),
           constOverrides = Seq("_change_type" -> "insert", "_commit_version" -> v.toString,
-            "_commit_timestamp" -> tsOf(v)),
-          dvRequireQualified = strictDv(f.path))
+            "_commit_timestamp" -> tsOf(v)))
       }
     }
     if (s < 0 && startingVersion.isEmpty) {
@@ -431,7 +420,6 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
           parts += GraftFilePartition(
             Paths.get(tablePath, c.path).toString, c.partitionValues,
             c.numRecords, None,
-            c.path,
             constOverrides = Seq("_commit_version" -> v.toString,
               "_commit_timestamp" -> commitTs),
             // partitionColsInFile also selects the requested NAME SPACE:
@@ -450,7 +438,7 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
             "row-level DML so the change feed can stream its deltas")
       }
     }
-    plannedColumnarOk = parts.forall(_.dvAbsPath.isEmpty) &&
+    plannedColumnarOk = parts.forall(_.dv.isEmpty) &&
       parts.map(p => (p.constOverrides.map(_._1), p.partitionColsInFile))
         .distinct.size <= 1
     parts.toArray.map(p => p: InputPartition)
@@ -476,20 +464,18 @@ case class GraftStreamOffset(version: Long) extends Offset {
   override def json(): String = s"""{"version":$version}"""
 }
 
-/** One file to decode. `constOverrides` are extra per-partition constant
-  * columns (name → string value, cast by the reader to the schema type) —
-  * the CDF stream uses them for `_change_type`/`_commit_version`.
-  * `partitionColsInFile` marks files (CDC sidecars) that store the table's
-  * partition columns as ordinary data columns instead of Hive paths. */
+/** One file to decode. `dv` is the file's deletion vector, if it has one
+  * ([[graft.table.FileOps.dvRefs]]). `constOverrides` are extra
+  * per-partition constant columns (name → string value, cast by the
+  * reader to the schema type) — the CDF stream uses them for
+  * `_change_type`/`_commit_version`. `partitionColsInFile` marks files
+  * (CDC sidecars) that store the table's partition columns as ordinary
+  * data columns instead of Hive paths. */
 case class GraftFilePartition(absPath: String,
     partitionValues: Map[String, String], numRecords: Long,
-    dvAbsPath: Option[String] = None, fname: String = "",
+    dv: Option[graft.table.FileOps.DvRef] = None,
     constOverrides: Seq[(String, String)] = Nil,
-    partitionColsInFile: Boolean = false,
-    // planner's verdict that another planned file shares (sidecar,
-    // basename) with this one: legacy bare-basename entries are then
-    // unattributable and the reader refuses instead of tombstoning twins
-    dvRequireQualified: Boolean = false) extends InputPartition
+    partitionColsInFile: Boolean = false) extends InputPartition
 
 /** Decodes table files with Spark's VECTORIZED parquet reader — the same
   * columnar decoder the batch parquet scan uses (column-at-a-time page
@@ -547,7 +533,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
 
   override def supportColumnarReads(partition: InputPartition): Boolean = {
     val p = unwrap(partition)
-    columnarOk && p.dvAbsPath.isEmpty && layoutFor(p).trailing
+    columnarOk && p.dv.isEmpty && layoutFor(p).trailing
   }
 
   private def openVectorized(p: GraftFilePartition, lay: Layout)
@@ -636,8 +622,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
     // count-only projection over constants (no data columns): synthesize
     // rows from the AddFile's row count — zero file IO
     if (lay.dataFields.isEmpty && lay.constFields.nonEmpty || schema.isEmpty) {
-      val deleted = p.dvAbsPath.map(d =>
-        graft.table.FileOps.dvBitsFor(d, p.fname, p.absPath, p.dvRequireQualified)).orNull
+      val deleted = p.dv.map(graft.table.FileOps.dvBitsFor).orNull
       val row = constRow(p, lay)
       val out = if (lay.trailing) row else new RemappedRow(lay.remap, schema).set(row)
       return new PartitionReader[InternalRow] {
@@ -662,8 +647,7 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
     val rdr = openVectorized(p, lay)
     /** DV tombstones of THIS file (merge-on-read), applied as a row-index
       * skip over the vectorized cursor. Null when the file has no DV. */
-    val deleted = p.dvAbsPath.map(d =>
-      graft.table.FileOps.dvBitsFor(d, p.fname, p.absPath, p.dvRequireQualified)).orNull
+    val deleted = p.dv.map(graft.table.FileOps.dvBitsFor).orNull
     val wrapper = if (lay.trailing) null else new RemappedRow(lay.remap, schema)
     new PartitionReader[InternalRow] {
       private var rowIdx = -1L

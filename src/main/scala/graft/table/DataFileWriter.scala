@@ -21,8 +21,10 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-/** The one writer of table files: data files, `_cdc/` and `_dv/` sidecars,
-  * for batch jobs, the SQL row-level rewrite and the streaming sink alike.
+/** The one writer of table parquet files: data files and `_cdc/` sidecars,
+  * for batch jobs, the SQL row-level rewrite and the streaming sink alike
+  * (deletion vectors are Delta `.bin` files, written on the driver by
+  * [[DeltaDeletionVectors.writeDvFile]]).
   *
   * Each task writes its files at their final names under the table root,
   * `<dir>/<partition dirs>/<kind>-<writeId>-<uuid>.parquet`, and returns

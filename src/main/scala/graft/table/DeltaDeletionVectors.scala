@@ -1,15 +1,22 @@
 package graft.table
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path, Paths}
 
-/** Reader for REAL Delta deletion vectors — the last refusal gate in the
-  * round-13 read-interop. A delta-spark table that ran a merge-on-read
-  * DELETE carries `add.deletionVector` descriptors; before this, graft
-  * refused the whole table ("compact with REORG PURGE first"). Now the
-  * tombstoned row positions decode into the SAME per-file row-index mask
-  * graft's native DV sidecars decode to (`FileOps.dvBitsFor`), so every
-  * read path (snapshot, time travel, pruning splits) works unchanged.
+import org.roaringbitmap.longlong.Roaring64NavigableMap
+
+/** graft's one deletion-vector format: the Delta protocol's per-file
+  * descriptor. Every merge-on-read DML writes one
+  * `deletion_vector_<uuid>.bin` with a bitmap per touched file
+  * ([[writeDvFile]]), and each touched file's AddFile carries its packed
+  * descriptor. `FileOps.dvBitsFor` decodes a descriptor, graft's own or
+  * one a delta-spark writer left, into the file's row-index mask, so
+  * every read path (snapshot, time travel, pruned splits, streaming)
+  * applies both the same way, and a Delta reader applies graft's.
+  * Tables written before this format may still point at a commit-scoped
+  * `_dv/` parquet sidecar, which `FileOps.dvPositions` keeps reading
+  * until OPTIMIZE purges it.
   *
   * Everything here follows the PUBLIC formats:
   *
@@ -24,24 +31,20 @@ import java.nio.file.{Files, Path, Paths}
   *    `[size: int32 BIG-endian][data][crc32(data): int32 BIG-endian]`
   *    with `offset` pointing at the size field.
   *  - `data` (Delta's RoaringBitmapArray "portable" format): magic
-  *    1681511377 (int32 LITTLE-endian), bitmap count (int64 LE), then
-  *    each 32-bit RoaringBitmap in the standard interoperable roaring
-  *    serialization (RoaringFormatSpec): cookie 12346 (no runs, count
-  *    follows) or 12347 (runs, count in the cookie's high 16 bits +
-  *    run-container bitset), per-container `[key][cardinality-1]`
-  *    headers (int16 LE), optional int32 offsets, then array
-  *    (int16 values), bitmap (1024 × int64), or run (`[start][len-1]`
-  *    int16 pairs) containers. A 64-bit row index is
-  *    `(bitmapIndex << 32) | value`.
+  *    1681511377 (int32 LITTLE-endian), then RoaringBitmap's 64-bit
+  *    portable serialization (`Roaring64NavigableMap.serializePortable`:
+  *    bitmap count as int64 LE, then each `[key: int32 LE][32-bit
+  *    roaring bitmap]`, the key carrying a row index's high 32 bits).
+  *    RoaringBitmap does the container coding both ways.
   *  - Z85 (ZeroMQ base85): 5 chars → 4 bytes, the alphabet below;
   *    non-multiple-of-4 payloads are encoded padded and truncated to
   *    `sizeInBytes` on decode (delta's Base85Codec discipline).
   */
 object DeltaDeletionVectors {
 
-  /** `dvPath` marker prefix distinguishing a foreign descriptor from a
-    * graft parquet sidecar path (graft sidecar paths are always relative
-    * file paths; `#` never starts one). */
+  /** `dvPath` marker prefix distinguishing a packed descriptor from a
+    * legacy parquet sidecar path (sidecar paths are always relative file
+    * paths; `#` never starts one). */
   val Marker = "#deltaDv#"
 
   /** Pack a parsed descriptor into the AddFile.dvPath slot. Fields are
@@ -55,13 +58,13 @@ object DeltaDeletionVectors {
       sizeInBytes: Long, cardinality: Long): String =
     s"$Marker$storageType\t$pathOrInlineDv\t$offset\t$sizeInBytes\t$cardinality"
 
-  def isForeign(dvPath: String): Boolean = dvPath.startsWith(Marker)
+  def isDescriptor(dvPath: String): Boolean = dvPath.startsWith(Marker)
 
   final case class Descriptor(storageType: String, pathOrInlineDv: String,
       offset: Long, sizeInBytes: Long, cardinality: Long)
 
   def unpack(dvPath: String): Descriptor = {
-    require(isForeign(dvPath), s"not a delta DV marker: $dvPath")
+    require(isDescriptor(dvPath), s"not a delta DV marker: $dvPath")
     dvPath.stripPrefix(Marker).split('\t') match {
       case Array(st, p, off, sz, card) =>
         Descriptor(st, p, off.toLong, sz.toLong, card.toLong)
@@ -192,16 +195,12 @@ object DeltaDeletionVectors {
     }
   }
 
-  // ---- RoaringBitmapArray portable decode -----------------------------------
+  // ---- RoaringBitmapArray portable format -----------------------------------
 
   private val Magic = 1681511377
 
-  /** All tombstoned row indexes of one serialized RoaringBitmapArray.
-    * Per the 64-bit portable layout (RoaringFormatSpec's 64-bit extension,
-    * what Roaring64NavigableMap.serializePortable writes and delta's
-    * RoaringBitmapArray mirrors): after the count, each bitmap is
-    * `[key: int32 LE][standard 32-bit roaring]` — the KEY carries the
-    * high 32 bits (keys may be sparse; never assume the loop index). */
+  /** All tombstoned row indexes of one serialized RoaringBitmapArray,
+    * ascending. */
   def decode(data: Array[Byte]): Array[Long] = {
     val bb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
     val magic = bb.getInt
@@ -209,78 +208,22 @@ object DeltaDeletionVectors {
       s"delta DV data: bad magic $magic (expected $Magic) — not a portable RoaringBitmapArray")
     val n = bb.getLong
     require(n >= 0 && n <= Int.MaxValue, s"delta DV data: bitmap count $n")
-    val out = Array.newBuilder[Long]
-    var i = 0L
-    while (i < n) {
-      val key = bb.getInt.toLong & 0xFFFFFFFFL
-      decodeBitmap(bb, v32 => out += (key << 32) | (v32 & 0xFFFFFFFFL))
-      i += 1
-    }
-    out.result()
+    val bits = new Roaring64NavigableMap()
+    bits.deserializePortable(new DataInputStream(
+      new ByteArrayInputStream(data, 4, data.length - 4)))
+    bits.toArray
   }
 
-  /** One standard-format 32-bit RoaringBitmap, values emitted ascending. */
-  private def decodeBitmap(bb: ByteBuffer, emit: Int => Unit): Unit = {
-    val cookie = bb.getInt
-    val hasRun = (cookie & 0xFFFF) == 12347
-    val size =
-      if (hasRun) (cookie >>> 16) + 1
-      else {
-        require(cookie == 12346,
-          s"roaring bitmap: unknown cookie $cookie (expected 12346/12347)")
-        bb.getInt
-      }
-    val runBits =
-      if (hasRun) {
-        val bytes = new Array[Byte]((size + 7) / 8)
-        bb.get(bytes)
-        bytes
-      } else Array.empty[Byte]
-    def isRun(c: Int): Boolean =
-      hasRun && (runBits(c / 8) & (1 << (c % 8))) != 0
-    val keys = new Array[Int](size)
-    val cards = new Array[Int](size)
-    var c = 0
-    while (c < size) {
-      keys(c) = bb.getShort & 0xFFFF
-      cards(c) = (bb.getShort & 0xFFFF) + 1
-      c += 1
-    }
-    // offset header: always for the no-run cookie, for >= 4 containers
-    // with runs; containers follow IN ORDER so sequential reads suffice
-    if (!hasRun || size >= 4) bb.position(bb.position() + 4 * size)
-    c = 0
-    while (c < size) {
-      val base = keys(c) << 16
-      if (isRun(c)) {
-        val nRuns = bb.getShort & 0xFFFF
-        var r = 0
-        while (r < nRuns) {
-          val start = bb.getShort & 0xFFFF
-          val len = bb.getShort & 0xFFFF // stored as (count - 1)
-          var v = start
-          while (v <= start + len) { emit(base | v); v += 1 }
-          r += 1
-        }
-      } else if (cards(c) <= 4096) {
-        var v = 0
-        while (v < cards(c)) { emit(base | (bb.getShort & 0xFFFF)); v += 1 }
-      } else {
-        var w = 0
-        while (w < 1024) {
-          val word = bb.getLong
-          if (word != 0L) {
-            var bit = 0
-            while (bit < 64) {
-              if ((word & (1L << bit)) != 0L) emit(base | (w * 64 + bit))
-              bit += 1
-            }
-          }
-          w += 1
-        }
-      }
-      c += 1
-    }
+  /** The RoaringBitmapArray bytes of `bits`, its containers run-optimized
+    * first (a run is the smaller spelling of a deleted range). */
+  private def serialize(bits: Roaring64NavigableMap): Array[Byte] = {
+    bits.runOptimize()
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    out.writeInt(Integer.reverseBytes(Magic))
+    bits.serializePortable(out)
+    out.flush()
+    bytes.toByteArray
   }
 
   /** Tombstoned positions of one packed descriptor, decoded on the
@@ -301,19 +244,19 @@ object DeltaDeletionVectors {
 
   /** The table-relative STORAGE file a dvPath slot references (what
     * vacuum must retain while the version is retained, and may collect
-    * once it expires): a native sidecar references itself; a packed
+    * once it expires): a legacy sidecar references itself; a packed
     * 'u'-type marker references its `deletion_vector_*.bin`; inline
     * markers reference nothing; 'p' markers point outside the table (not
     * vacuum's to manage). */
   def referencedFile(dvPath: String): Option[String] =
-    if (!isForeign(dvPath)) Some(dvPath)
+    if (!isDescriptor(dvPath)) Some(dvPath)
     else {
       val d = unpack(dvPath)
       if (d.storageType == "u") Some(resolveRelativePath(d.pathOrInlineDv))
       else None
     }
 
-  // ---- encode (fixtures / write-compat) --------------------------------------
+  // ---- encode ----------------------------------------------------------------
 
   /** Z85-encode, zero-padding the tail group (delta's Base85Codec pads on
     * encode; decoders truncate via sizeInBytes). */
@@ -336,51 +279,10 @@ object DeltaDeletionVectors {
     sb.toString
   }
 
-  /** Serialize 64-bit row indexes as portable RoaringBitmapArray bytes.
-    * Layout per the 64-bit portable spec: count of (key, bitmap) PAIRS,
-    * then each pair as `[key: int32 LE][standard 32-bit roaring]` with
-    * container offsets relative to the START of that bitmap's own
-    * serialization. Containers: array ≤ 4096 values, 8 KiB bitmap beyond
-    * (runs never emitted — both forms are universally decodable). */
-  def serialize(rows: Seq[Long]): Array[Byte] = {
-    val byBitmap = rows.groupBy(r => (r >>> 32).toInt).toSeq.sortBy(_._1)
-    // worst case: every container a bitmap (8 KiB + headers)
-    val cap = 16 + byBitmap.map { case (_, rs) =>
-      16 + rs.map(r => ((r & 0xFFFFFFFFL) >>> 16).toInt).distinct.size * (8 + 8192)
-    }.sum
-    val bb = ByteBuffer.allocate(cap).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(Magic)
-    bb.putLong(byBitmap.size.toLong)
-    byBitmap.foreach { case (idx, rs) =>
-      bb.putInt(idx)
-      val bitmapStart = bb.position()
-      val vals = rs.map(r => (r & 0xFFFFFFFFL).toInt)
-      val byKey = vals.groupBy(v => v >>> 16).toSeq.sortBy(_._1)
-        .map { case (k, vs) => k -> vs.map(_ & 0xFFFF).sorted }
-      bb.putInt(12346)
-      bb.putInt(byKey.size)
-      byKey.foreach { case (k, vs) =>
-        bb.putShort(k.toShort); bb.putShort((vs.size - 1).toShort)
-      }
-      def containerBytes(vs: Seq[Int]): Int = if (vs.size <= 4096) 2 * vs.size else 8192
-      var pos = (bb.position() - bitmapStart) + 4 * byKey.size
-      byKey.foreach { case (_, vs) => bb.putInt(pos); pos += containerBytes(vs) }
-      byKey.foreach { case (_, vs) =>
-        if (vs.size <= 4096) vs.foreach(v => bb.putShort(v.toShort))
-        else {
-          val words = new Array[Long](1024)
-          vs.foreach(v => words(v / 64) |= (1L << (v % 64)))
-          words.foreach(bb.putLong)
-        }
-      }
-    }
-    java.util.Arrays.copyOf(bb.array(), bb.position())
-  }
-
   /** Serialize + Z85-encode as an inline ('i') descriptor payload.
     * Returns (pathOrInlineDv, sizeInBytes). */
   def encodeInline(rows: Seq[Long]): (String, Int) = {
-    val data = serialize(rows)
+    val data = serialize(Roaring64NavigableMap.bitmapOf(rows: _*))
     (z85Encode(data), data.length)
   }
 
@@ -388,21 +290,20 @@ object DeltaDeletionVectors {
     * version byte 1, then per entry `[size: int32 BE][data][crc32: int32
     * BE]`) holding each file's tombstone bitmap, under the table root.
     * Returns fname → packed 'u'-type descriptor (what AddFile.dvPath
-    * carries; DeltaShapeWriter unpacks it into the descriptor JSON real
-    * delta readers consume, and graft's own scan decodes it through the
-    * read-interop path). */
+    * carries; under compat DeltaShapeWriter unpacks it into the
+    * descriptor JSON real delta readers consume). */
   def writeDvFile(tableRoot: String,
-      perFile: Seq[(String, Array[Long])]): Map[String, String] = {
+      perFile: Seq[(String, Roaring64NavigableMap)]): Map[String, String] = {
     val uuid = java.util.UUID.randomUUID()
     val uuidBytes = ByteBuffer.allocate(16)
       .putLong(uuid.getMostSignificantBits)
       .putLong(uuid.getLeastSignificantBits).array()
     val enc = z85Encode(uuidBytes)
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteArrayOutputStream()
     out.write(1) // version byte
     var offset = 1L
     val descriptors = perFile.map { case (fname, rows) =>
-      val data = serialize(rows.toSeq)
+      val data = serialize(rows)
       val crc = new java.util.zip.CRC32(); crc.update(data)
       val head = ByteBuffer.allocate(4) // big-endian default
       head.putInt(data.length)
@@ -410,7 +311,7 @@ object DeltaDeletionVectors {
       val tail = ByteBuffer.allocate(4)
       tail.putInt(crc.getValue.toInt)
       out.write(tail.array())
-      val d = fname -> pack("u", enc, offset, data.length.toLong, rows.length.toLong)
+      val d = fname -> pack("u", enc, offset, data.length.toLong, rows.getLongCardinality)
       offset += 4 + data.length + 4
       d
     }.toMap
@@ -425,12 +326,12 @@ object DeltaDeletionVectors {
   def packAbs(tableRoot: String, packed: String): String =
     s"$Marker$tableRoot\u0000${packed.stripPrefix(Marker)}"
 
-  def isForeignAbs(dvAbs: String): Boolean =
+  def isDescriptorAbs(dvAbs: String): Boolean =
     dvAbs.startsWith(Marker) && dvAbs.indexOf('\u0000') >= 0
 
   /** Tombstone BitSet of one packAbs string — the per-file skip mask
-    * `FileOps.dvBitsFor` returns for a foreign file (FileOps.dvPositions
-    * is its native-sidecar twin). */
+    * `FileOps.dvBitsFor` returns for a descriptor (FileOps.dvPositions is
+    * its legacy-sidecar twin). */
   def bitsAbs(dvAbs: String): java.util.BitSet = {
     val body = dvAbs.stripPrefix(Marker)
     val sep = body.indexOf('\u0000')

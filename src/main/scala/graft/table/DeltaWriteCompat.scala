@@ -24,15 +24,15 @@ import org.apache.spark.sql.types._
   *
   * The property REFUSES features whose on-disk semantics a delta reader
   * cannot honor: column mapping (physical names would not resolve),
-  * VARIANT columns (parquet layout delta 1.x predates), NATIVE
-  * parquet-sidecar deletion vectors written before compat (no delta
-  * spelling — dropping them would resurrect deleted rows), and CDF on
-  * PARTITIONED tables (cdc partition-value reconstruction differs).
-  * Merge-on-read under compat stays AVAILABLE: deletionVectors.enabled
-  * tables write genuine delta-format DV files (GraftTable.writeDvStore →
-  * DeltaDeletionVectors.writeDvFile) and declare the standard protocol
-  * gate (minReader 3 + the deletionVectors reader feature), so DV-capable
-  * delta readers apply the same tombstones graft does. CDF on
+  * VARIANT columns (parquet layout delta 1.x predates), LEGACY `_dv/`
+  * parquet-sidecar deletion vectors (no delta spelling — dropping them
+  * would resurrect deleted rows), and CDF on PARTITIONED tables (cdc
+  * partition-value reconstruction differs). Merge-on-read under compat
+  * stays AVAILABLE: every table's DV DML writes genuine delta-format DV
+  * files (GraftTable.rewriteRows → DeltaDeletionVectors.writeDvFile),
+  * and compat declares the standard protocol gate (minReader 3 + the
+  * deletionVectors reader feature), so DV-capable delta readers apply
+  * the same tombstones graft does. CDF on
   * UNPARTITIONED tables stays available too — graft's `_cdc/` sidecars
   * are delta's AddCDCFile layout, emitted as delta `cdc` actions with
   * the `delta.enableChangeDataFeed` mirror. Generated/identity columns
@@ -309,12 +309,13 @@ object DeltaWriteCompat {
         " (only name and id modes have a delta spelling graft's files satisfy)")
     // deletionVectors.enabled is ALLOWED under compat since round 13:
     // merge-on-read DML writes genuine delta-format DV files and carries
-    // packed descriptors (GraftTable.writeDvStore), which serialize to
-    // the descriptor JSON real delta readers apply. Only NATIVE parquet
-    // sidecars (written before compat) have no delta spelling — dropping
-    // them would resurrect deleted rows for every foreign reader.
+    // packed descriptors (GraftTable.rewriteRows), which serialize to
+    // the descriptor JSON real delta readers apply. Only LEGACY `_dv/`
+    // parquet sidecars (written by older releases) have no delta
+    // spelling — dropping them would resurrect deleted rows for every
+    // foreign reader.
     else if (actions.exists {
-      case a: AddFile => a.dvPath.exists(p => !DeltaDeletionVectors.isForeign(p))
+      case a: AddFile => a.dvPath.exists(p => !DeltaDeletionVectors.isDescriptor(p))
       case _ => false })
       Some("native deletion-vector sidecar references (OPTIMIZE to purge " +
         "them before enabling compat)")
@@ -618,12 +619,12 @@ final class DeltaShapeWriter(meta: MetaData) {
         f.baseRowId.foreach(b => n.put("baseRowId", b))
         f.defaultRowCommitVersion.foreach(v => n.put("defaultRowCommitVersion", v))
         f.dvPath.foreach { p =>
-          // merge-on-read DVs under compat are packed delta descriptors
-          // (GraftTable.writeDvStore) — unpack into the descriptor JSON
-          // real readers apply. A NATIVE sidecar here means a refusal
+          // merge-on-read DVs are packed delta descriptors
+          // (GraftTable.rewriteRows) — unpack into the descriptor JSON
+          // real readers apply. A LEGACY sidecar here means a refusal
           // gate was bypassed: emitting the add WITHOUT it would
           // resurrect deleted rows for every delta reader — fail loudly.
-          if (!DeltaDeletionVectors.isForeign(p)) throw new GraftProtocolException(
+          if (!DeltaDeletionVectors.isDescriptor(p)) throw new GraftProtocolException(
             s"add ${f.path} carries a native deletion-vector sidecar ($p) " +
               "— no delta-1.0 spelling exists; OPTIMIZE to purge DVs first")
           val d = DeltaDeletionVectors.unpack(p)

@@ -296,46 +296,68 @@ object FileOps extends Serializable {
     if (str) { if (a >= b) a else b }
     else { if (BigDecimal(a) >= BigDecimal(b)) a else b }
 
-  /** Absolute DV reference for an InputPartition: native sidecars resolve
-    * against the table root; foreign Delta descriptors ride whole (the
-    * root rides inside, see DeltaDeletionVectors.packAbs). */
-  def dvAbs(tableRoot: String, dvPath: String): String =
-    if (DeltaDeletionVectors.isForeign(dvPath))
+  /** Absolute DV reference: a legacy sidecar resolves against the table
+    * root; a descriptor rides whole (the root rides inside, see
+    * DeltaDeletionVectors.packAbs). */
+  private def dvAbs(tableRoot: String, dvPath: String): String =
+    if (DeltaDeletionVectors.isDescriptor(dvPath))
       DeltaDeletionVectors.packAbs(tableRoot, dvPath)
     else java.nio.file.Paths.get(tableRoot, dvPath).toString
 
-  /** Tombstone BitSet of one dvAbs reference — the ONLY code that turns a
+  /** One data file's deletion vector as a scan task loads it: `dv` is the
+    * absolute DV reference, `fname` the file's table-relative path and
+    * `fileAbs` its absolute path (`<table root>/<fname>`).
+    * `requireQualified` is the planner's verdict
+    * ([[dvBasenameCollisions]]) that this file shares (legacy sidecar,
+    * basename) with another live file: a bare-basename entry is then
+    * genuinely unattributable and must refuse, never silently tombstone
+    * both twins. */
+  final case class DvRef(dv: String, fname: String, fileAbs: String,
+      requireQualified: Boolean)
+
+  /** The [[DvRef]] of each file of `files` that carries a DV, keyed by
+    * its table-relative path: the one place a scan, the streaming source,
+    * the SPJ scan and the row-level write build one. `live` must hold
+    * every live file sharing a legacy sidecar with `files` (see
+    * [[dvBasenameCollisions]]). Driver metadata only, no file is opened. */
+  def dvRefs(tableRoot: String, files: Seq[AddFile],
+      live: Seq[AddFile]): Map[String, DvRef] = {
+    val withDv = files.filter(_.dvPath.isDefined)
+    if (withDv.isEmpty) Map.empty
+    else {
+      val strict = dvBasenameCollisions(live)
+      withDv.map(f => f.path -> DvRef(dvAbs(tableRoot, f.dvPath.get), f.path,
+        java.nio.file.Paths.get(tableRoot, f.path).toString, strict(f.path))).toMap
+    }
+  }
+
+  /** Tombstone BitSet of one file's DV — the ONLY code that turns a
     * deletion vector into skipped rows, for every scan: the batch reads
     * ([[LiveRows]]), the row-level prior-tombstone merge, the streaming
-    * source, the SQL group scan and the SPJ scan. Dispatches between
-    * graft's parquet sidecar format and the foreign Delta roaring format.
-    * `fname` is the data file's table-relative path and `fileAbs` its
-    * absolute path (`<table root>/<fname>`). `requireQualified`
-    * is the planner's verdict ([[dvBasenameCollisions]]) that this file
-    * shares (sidecar, basename) with another live file: a bare-basename
-    * entry is then genuinely unattributable and must refuse, never
-    * silently tombstone both twins. */
-  def dvBitsFor(dvAbsRef: String, fname: String, fileAbs: String,
-      requireQualified: Boolean = false): java.util.BitSet =
-    if (DeltaDeletionVectors.isForeignAbs(dvAbsRef))
-      DeltaDeletionVectors.bitsAbs(dvAbsRef)
-    else dvPositions(java.nio.file.Paths.get(dvAbsRef), fname, fileAbs, requireQualified)
+    * source, the SQL group scan and the SPJ scan. Dispatches between the
+    * Delta descriptor and the legacy parquet sidecar. */
+  def dvBitsFor(ref: DvRef): java.util.BitSet =
+    if (DeltaDeletionVectors.isDescriptorAbs(ref.dv))
+      DeltaDeletionVectors.bitsAbs(ref.dv)
+    else dvPositions(java.nio.file.Paths.get(ref.dv), ref.fname, ref.fileAbs,
+      ref.requireQualified)
 
-  /** Table-relative paths of the files in `files` that share (sidecar,
-    * basename) with another file in `files` — for those, a LEGACY
+  /** Table-relative paths of the files in `files` that share (legacy
+    * sidecar, basename) with another file in `files` — for those, a LEGACY
     * bare-basename sidecar entry is unattributable and [[dvBitsFor]] must
     * be asked to refuse it. Sidecars since round 15 spell the relative
-    * path, so healthy shared sidecars never set the refusal off.
+    * path, so healthy shared sidecars never set the refusal off, and a
+    * descriptor is per file, so it never does.
     *
     * CONTRACT: `files` must contain every live file sharing a sidecar
     * with the planned set — the snapshot's full live set for batch scans
     * (a pruned twin must still force the refusal for its survivor), or a
     * single commit's adds for the streaming tail (complete by
-    * construction: a DV commit re-adds every file of the new sidecar it
-    * writes in that same commit, and a shallow clone lands all source
+    * construction: a sidecar-writing DV commit re-added every file of its
+    * sidecar in that same commit, and a shallow clone lands all source
     * references in one commit). */
-  def dvBasenameCollisions(files: Seq[AddFile]): Set[String] =
-    files.filter(_.dvPath.isDefined)
+  private def dvBasenameCollisions(files: Seq[AddFile]): Set[String] =
+    files.filter(_.dvPath.exists(p => !DeltaDeletionVectors.isDescriptor(p)))
       .groupBy(f => (f.dvPath.get,
         f.path.substring(f.path.lastIndexOf('/') + 1)))
       .collect { case (_, fs) if fs.size > 1 => fs.map(_.path) }
@@ -347,15 +369,14 @@ object FileOps extends Serializable {
 
   /** The batch scans' deletion-vector state for one scan: `dvOf` maps
     * each DV file's provenance key (`_metadata.file_path` without its
-    * [[FileScheme]]) to its dvAbs reference, its table-relative and
-    * absolute paths and its `requireQualified` verdict; a file not in
-    * the map keeps every row. Each task holds its own copy and decodes a
+    * [[FileScheme]]) to its [[DvRef]]; a file not in the map keeps every
+    * row. Each task holds its own copy and decodes a
     * file's DV through [[dvBitsFor]] when the first row of that file
     * reaches it, so only the files a scan keeps are ever decoded, and no
     * sidecar is read on the driver. Rows of one file arrive together, so a
     * row costs one comparison of its `file_path` bytes with the previous
     * row's. */
-  final class LiveRows(dvOf: Map[String, (String, String, String, Boolean)])
+  final class LiveRows(dvOf: Map[String, DvRef])
       extends Serializable {
     @transient private lazy val loaded =
       scala.collection.mutable.HashMap.empty[String, java.util.BitSet]
@@ -365,8 +386,7 @@ object FileOps extends Serializable {
     def live(key: UTF8String, pos: Long): Boolean = {
       if (key != lastKey) {
         val k = key.toString.replaceFirst(FileScheme, "/")
-        lastBits = dvOf.get(k).map { case (dv, rel, abs, strict) =>
-          loaded.getOrElseUpdate(k, dvBitsFor(dv, rel, abs, strict)) }.orNull
+        lastBits = dvOf.get(k).map(ref => loaded.getOrElseUpdate(k, dvBitsFor(ref))).orNull
         lastKey = key.clone()
       }
       lastBits == null || !lastBits.get(pos.toInt)
@@ -391,11 +411,12 @@ object FileOps extends Serializable {
       copy(left = l, right = r)
   }
 
-  /** Load one data file's deletion-vector tombstones from a `_dv/` sidecar
-    * (columns fname/pos, written sorted) as a BitSet over row indexes —
-    * executor-side, parquet-mr only, reached through [[dvBitsFor]]. A
-    * file's positions are bounded by its row count (~1M for 128 MB), so
-    * the bitmap is ≤ ~128 KB. */
+  /** Load one data file's deletion-vector tombstones from a legacy `_dv/`
+    * sidecar (columns fname/pos, written sorted by releases before the
+    * Delta descriptor became the one format) as a BitSet over row
+    * indexes — parquet-mr only, reached through [[dvBitsFor]]. A file's
+    * positions are bounded by its row count (~1M for 128 MB), so the
+    * bitmap is ≤ ~128 KB. */
   def dvPositions(sidecar: Path, fname: String, fileAbs: String,
       requireQualified: Boolean = false): java.util.BitSet = {
     val bits = new java.util.BitSet()

@@ -506,7 +506,7 @@ final class GraftLog(val tablePath: String,
             s"${DeltaWriteCompat.Prop}: a delta-1.0 reader cannot honor " +
               s"$why — disable the feature or the compat property"))
         // ENABLING-transition gate: the first compat commit must also
-        // prove no LIVE file still carries a native parquet-sidecar DV —
+        // prove no LIVE file still carries a legacy parquet-sidecar DV —
         // those never appear in this commit's actions, but the compat
         // CHECKPOINT re-serializes the whole live set, and a native
         // sidecar has no delta spelling (dropping it silently resurrects
@@ -521,10 +521,10 @@ final class GraftLog(val tablePath: String,
           val removedNow = actions.collect { case r: RemoveFile => r.path }.toSet
           val nativeDv = snapshotAt(v - 1).files.filter(f =>
             !removedNow.contains(f.path) &&
-              f.dvPath.exists(p => !DeltaDeletionVectors.isForeign(p)))
+              f.dvPath.exists(p => !DeltaDeletionVectors.isDescriptor(p)))
           if (nativeDv.nonEmpty) throw new GraftProtocolException(
             s"${DeltaWriteCompat.Prop}: ${nativeDv.size} live file(s) carry " +
-              "native deletion-vector sidecars written before compat — a " +
+              "legacy native deletion-vector sidecars (`_dv/`) — a " +
               "delta reader cannot apply them; run OPTIMIZE (purges DVs) " +
               "before enabling the property")
         }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.roaringbitmap.RoaringBitmap
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** A versioned, ACID, Parquet-backed table with snapshot reads, time travel
   * (by version and timestamp), commit history, MERGE upsert and predicate
@@ -173,46 +175,21 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     df.withColumn("__fname", scanFilePath)
       .withColumn("__pos", col("_metadata.row_index"))
 
-  /** Each DV file of `files` by [[canonPath]]: its dvAbs reference, its
-    * table-relative and absolute paths and whether a bare-basename entry
-    * must refuse ([[FileOps.dvBasenameCollisions]] over all of `s`'s live
-    * files — never a scanned subset: with one basename twin pruned away,
-    * a subset-local verdict would attribute the pruned twin's legacy entry
-    * to the surviving file). Driver metadata only, no file is opened. */
-  private def dvRefs(s: Snapshot, files: Seq[AddFile])
-      : Map[String, (String, String, String, Boolean)] = {
-    val withDv = files.filter(_.dvPath.isDefined)
-    if (withDv.isEmpty) Map.empty
-    else {
-      val strict = FileOps.dvBasenameCollisions(s.files)
-      withDv.map(f => canonPath(f.path) -> (FileOps.dvAbs(path, f.dvPath.get), f.path,
-        Paths.get(path, f.path).toString, strict(f.path))).toMap
-    }
-  }
-
   /** `scan` (a single-relation scan of `files`) without the rows whose
     * position the row's file's deletion vector tombstones: a `dv_live`
     * filter ([[FileOps.LiveRow]]) on the row's raw `_metadata.file_path`
     * and `row_index` (no per-row path rewrite: [[FileOps.LiveRows]]
     * applies the scan spelling once per file). `scan` itself when no file
-    * of `files` carries a DV. */
+    * of `files` carries a DV. The legacy-sidecar collision verdict is
+    * taken over all of `s`'s live files, never a scanned subset: with one
+    * basename twin pruned away, a subset-local verdict would attribute
+    * the pruned twin's legacy entry to the surviving file. */
   private def dropTombstoned(s: Snapshot, files: Seq[AddFile], scan: DataFrame): DataFrame = {
-    val refs = dvRefs(s, files)
+    val refs = FileOps.dvRefs(path, files, s.files)
     if (refs.isEmpty) scan
     else scan.filter(columnOf(FileOps.LiveRow(expressionOf(col("_metadata.file_path")),
-      expressionOf(col("_metadata.row_index")), new FileOps.LiveRows(refs))))
-  }
-
-  /** The tombstones `files` already carry as (`__fname`, `__pos`) rows,
-    * decoded on the executors through [[FileOps.dvBitsFor]], one file per
-    * row of the driver-built [[dvRefs]]. */
-  private def tombstones(s: Snapshot, files: Seq[AddFile]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(dvRefs(s, files).toSeq)
-      .flatMap { case (key, (dv, rel, abs, strict)) =>
-        FileOps.dvBitsFor(dv, rel, abs, strict).stream().toArray.map(p => (key, p.toLong))
-      }
-      .toDF("__fname", "__pos")
+      expressionOf(col("_metadata.row_index")),
+      new FileOps.LiveRows(refs.map { case (rel, ref) => canonPath(rel) -> ref }))))
   }
 
   /** Refuse to scan `scanned` when the sidecar of one of its files holds a
@@ -220,14 +197,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * entry cannot be attributed, and tombstoning both files' rows would be
     * wrong. [[GraftFileIndex]] calls this on the files that survive
     * pruning, before Spark reads them, so a scan pruned away from those
-    * files stays readable. Only the files [[FileOps.dvBasenameCollisions]]
-    * flags are decoded here, on the driver; a healthy table decodes none. */
-  private[table] def requireAttributableDv(s: Snapshot, scanned: Seq[AddFile]): Unit = {
-    val flagged = FileOps.dvBasenameCollisions(s.files)
-    scanned.filter(f => flagged(f.path)).foreach(f =>
-      FileOps.dvBitsFor(FileOps.dvAbs(path, f.dvPath.get), f.path,
-        Paths.get(path, f.path).toString, requireQualified = true))
-  }
+    * files stays readable. Only the flagged files are decoded here, on
+    * the driver; a healthy table decodes none. */
+  private[table] def requireAttributableDv(s: Snapshot, scanned: Seq[AddFile]): Unit =
+    FileOps.dvRefs(path, scanned, s.files).values.filter(_.requireQualified)
+      .foreach(FileOps.dvBitsFor)
 
   /** Current-version DataFrame (reference: names_table.toDF(), api.py:74). */
   def toDF: DataFrame = read(snapshot)
@@ -1626,7 +1600,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           .relativize(Paths.get(path).toAbsolutePath.normalize())
         s.files.map(f => untag(f).copy(path = s"$rel/${f.path}",
           dvPath = f.dvPath.map(p =>
-            if (DeltaDeletionVectors.isForeign(p))
+            if (DeltaDeletionVectors.isDescriptor(p))
               DeltaDeletionVectors.rebase(p, rel.toString)
             else s"$rel/$p")))
       } else {
@@ -2431,28 +2405,33 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * `__fname`/`__pos` provenance, an `__affected` flag (the op changes or
     * removes the row), a `__deleted` flag (the row has no post-image), the
     * pre-image as the `__pre` struct and the post-image in the schema's
-    * columns (plus `_row_id` under row tracking). `affected` counts each
-    * touched file's affected rows, keyed by [[canonPath]]; `inserts` are
-    * fresh rows; `deletesOnly` says no affected row has a post-image.
-    * Returns the number of affected rows the commit applied.
+    * columns (plus `_row_id` under row tracking). `affected` holds each
+    * touched file's affected positions, keyed by [[canonPath]] (the
+    * discovery pass's [[TouchedFiles]] fold); `inserts` are fresh rows;
+    * `deletesOnly` says no affected row has a post-image. Returns the
+    * number of affected rows the commit applied.
     *
     *  - Tombstone when `deletionVectors.enabled` is on and the touched
     *    files' existing tombstones plus the affected rows stay within
-    *    `deletionVectors.maxTombstones` (default 4M): the affected
-    *    positions merge with the prior ones into one DV store (one live DV
-    *    per file), the touched files are re-added pointing at it, and only
+    *    `deletionVectors.maxTombstones` (default 4M): each touched file's
+    *    affected positions, ORed on the driver with the tombstones it
+    *    already carries, become its bitmap in one Delta-format
+    *    `deletion_vector_<uuid>.bin` ([[DeltaDeletionVectors.writeDvFile]]),
+    *    the touched files are re-added with their descriptors, and only
     *    the post-images of affected rows plus the inserts are written — a
     *    1-row change on a 100 TB table writes kilobytes. The positions,
     *    the post-images and the CDC are separate jobs, so when `rows` is
     *    not deterministic (a non-deterministic predicate or SET; every
     *    MERGE frame, whose source may change between reads) the affected
-    *    rows are pinned (local checkpoint) and all three, and the per-file
-    *    tombstone counts, come from one evaluation: no row is tombstoned
-    *    in one job and loses or duplicates its post-image in another.
+    *    rows are pinned (local checkpoint) and all three come from one
+    *    evaluation: the positions are refolded from the pinned rows, so no
+    *    row is tombstoned in one job and loses or duplicates its
+    *    post-image in another. A deterministic `rows` tombstones
+    *    `affected` as it is, with no further job.
     *  - Rewrite otherwise: every non-deleted row of the touched files, plus
     *    the inserts, goes to new files. Past the cap a tombstone set costs
-    *    every later read more than the rewrite it avoids, and the DV write
-    *    funnels through one task.
+    *    every later read more than the rewrite it avoids, and every
+    *    tombstone passes through the driver.
     *
     * Both modes take their CDC from the same frame: deleted rows as
     * `delete`, other affected rows as `update_preimage`/`update_postimage`
@@ -2467,20 +2446,21 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * affected rows applied, gain `filesMetric` (files rewritten, 0 when
     * tombstoning) and, when tombstoning, `numDeletionVectors`. */
   private def rewriteRows(s: Snapshot, info: TxnInfo, op: String, base: MetaData,
-      touched: Seq[AddFile], affected: Map[String, Long], rows: DataFrame,
+      touched: Seq[AddFile], affected: Map[String, RoaringBitmap], rows: DataFrame,
       inserts: Option[DataFrame], deletesOnly: Boolean, filesMetric: String)(
       metrics: (Seq[AddFile], Long) => Map[String, String]): Long =
     described(op, s, "write") {
       val maxTombstones = s.metaData.properties.get("deletionVectors.maxTombstones")
         .map(_.toLong).getOrElse(4L * 1000 * 1000)
       val tombstone = touched.nonEmpty && dvEnabled(s.metaData) &&
-        affected.values.sum + touched.map(_.dvCount).sum <= maxTombstones
+        affected.values.map(_.getLongCardinality).sum + touched.map(_.dvCount).sum <=
+          maxTombstones
       val pin = tombstone && !rows.queryExecution.analyzed.deterministic
-      // lazy: the count below is the job that evaluates and pins the rows
+      // lazy: the fold below is the job that evaluates and pins the rows
       val hit =
         if (pin) rows.filter(col("__affected")).localCheckpoint(false)
         else rows.filter(col("__affected"))
-      val counts =
+      val positions =
         if (!pin) affected else TouchedFiles.affectedPerFile(hit, lit(false), lit(true))
       val updated = hit.filter(!col("__deleted"))
       val kept =
@@ -2492,18 +2472,22 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         .map(out => FileOps.capAddStats(s.metaData, stampRowIds(s, writeDataMappedUncapped(
           enforceConstraints(conform(out, s.schema, keepRowId = true), s.metaData), s.metaData))))
         .getOrElse(Nil)
-      // after the data write: a CHECK violation there leaves no DV store behind
+      // after the data write: a CHECK violation there leaves no DV file behind
       val reAdds =
         if (!tombstone) Nil
         else {
-          val positions = hit.select(col("__fname"), col("__pos"))
-          val dvPathOf = writeDvStore(s.metaData,
-            if (touched.exists(_.dvPath.isDefined)) positions.unionByName(tombstones(s, touched))
-            else positions, touched)
-          touched.map { f =>
-            val key = canonPath(f.path)
-            Actions.untagReAdd(f).copy(dvPath = dvPathOf(key),
-              dvCount = f.dvCount + counts.getOrElse(key, 0L))
+          val prior = FileOps.dvRefs(path, touched, s.files)
+          val bits = touched.map { f =>
+            val b = new Roaring64NavigableMap()
+            positions.get(canonPath(f.path)).foreach(_.forEach((p: Int) => b.addInt(p)))
+            prior.get(f.path).foreach(r => FileOps.dvBitsFor(r).stream().forEach(b.addInt(_)))
+            f -> b
+          }
+          val dvPathOf = DeltaDeletionVectors.writeDvFile(path,
+            bits.collect { case (f, b) if !b.isEmpty => f.path -> b })
+          bits.map { case (f, b) =>
+            Actions.untagReAdd(f).copy(dvPath = dvPathOf.get(f.path),
+              dvCount = b.getLongCardinality)
           }
         }
       val cols = s.schema.fieldNames.toSeq.map(col)
@@ -2517,7 +2501,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           inserts.map(_.select(cols :+ lit("insert").as("_change_type"): _*))
         ).reduce(_ unionByName _))
       val meta = s.metaData.copy(properties = advancedProps(s.metaData, s.schema, adds))
-      val n = counts.values.sum
+      val n = positions.values.map(_.getLongCardinality).sum
       commit(s, info, op, metrics(adds, n) ++
         Map(filesMetric -> (if (tombstone) 0 else touched.size).toString) ++
         (if (tombstone) Map("numDeletionVectors" -> touched.size.toString) else Map.empty))(
@@ -2526,11 +2510,11 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     }
 
   /** Discovery pass of the predicate ops (DELETE, UPDATE, replaceWhere):
-    * each candidate file's count of live rows matching `matched`, keyed by
-    * [[canonPath]], files without a match left out. Rows a DV already hides
-    * are not counted, so a re-delete counts 0. */
+    * each candidate file's positions of live rows matching `matched`,
+    * keyed by [[canonPath]], files without a match left out. Rows a DV
+    * already hides are not matched, so a re-delete matches none. */
   private def matchesPerFile(s: Snapshot, op: String, candidates: Seq[AddFile],
-      matched: Column): Map[String, Long] =
+      matched: Column): Map[String, RoaringBitmap] =
     if (candidates.isEmpty) Map.empty
     else described(op, s, "discover")(TouchedFiles.affectedPerFile(
       readFilesMeta(s, candidates).filter(matched), lit(false), lit(true)))
@@ -2559,66 +2543,6 @@ final class GraftTable private (val spark: SparkSession, val path: String)
         u.cast(s.schema(c).dataType)).otherwise(col(c)).as(c)).getOrElse(col(c))) ++
       (if (in.columns.contains(GraftTable.RowIdCol)) Seq(col(GraftTable.RowIdCol))
        else Nil): _*)
-  }
-
-  /** Tombstone store for one merge-on-read commit: fname → dvPath (None
-    * when there is no tombstone at all).
-    * Native tables share ONE `_dv/` parquet sidecar across the touched
-    * files; `compat.delta.write` tables write one DELTA-format
-    * `deletion_vector_<uuid>.bin` with a per-file roaring blob and carry
-    * packed descriptors instead — so a real delta reader applies the
-    * SAME tombstones graft does (merge-on-read DML stays available under
-    * compat). The compat branch collects positions driver-side: the set
-    * is hard-capped by `deletionVectors.maxTombstones` (rewriteRows falls
-    * back to copy-on-write beyond it), the same bound the native
-    * single-sidecar funnel rides. */
-  private def writeDvStore(meta: MetaData, entries: DataFrame,
-      touched: Seq[AddFile]): String => Option[String] = {
-    // entries arrive keyed by the CANONICAL absolute path (the scan's
-    // provenance spelling); persistence and descriptors re-key to the
-    // table-relative path so sidecars survive a table relocation
-    val relOf = touched.map(f => canonPath(f.path) -> f.path).toMap
-    if (!DeltaWriteCompat.enabled(meta)) {
-      val relDf = broadcast(spark.createDataFrame(
-        relOf.toSeq.map { case (c, r) => Row(c, r) }.asJava,
-        StructType(Seq(
-          StructField("__fname", StringType, nullable = false),
-          StructField("__rel", StringType, nullable = false)))))
-      val rel = writeDvSidecar(entries.join(relDf, Seq("__fname"))
-        .select(col("__rel").as("__fname"), col("__pos")))
-      _ => rel
-    } else {
-      val perFile = entries
-        .select(col("__fname"), col("__pos").cast(LongType).as("__pos"))
-        .collect().groupBy(r => relOf(r.getString(0)))
-        .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
-        .toSeq.sortBy(_._1)
-      val desc = DeltaDeletionVectors.writeDvFile(path, perFile)
-      f => Some(desc.getOrElse(relOf(f), throw new IllegalStateException(
-        s"no deletion-vector blob was written for touched file $f")))
-    }
-  }
-
-  /** Write tombstone entries as ONE `_dv/` parquet sidecar (fname, pos),
-    * sorted for locality; returns the table-relative path, None when there
-    * are no entries (no zero-row file is written). Tombstone sets
-    * are delta-sized — bounded by rows deleted since the last OPTIMIZE and
-    * hard-capped by `deletionVectors.maxTombstones` (rewriteRows falls
-    * back to copy-on-write beyond it) — so a single sorted file is the
-    * right shape and the repartition(1) funnel is bounded. */
-  private def writeDvSidecar(entries: DataFrame): Option[String] = {
-    // `rel = true` is the FORMAT MARKER (round 16): every entry in this
-    // sidecar stores the data file's full table-relative path — a bare
-    // basename here is a genuine root-level file, never a pre-round-15
-    // legacy spelling. Readers match such entries exactly (plus the
-    // clone-escape form) and never raise the legacy-ambiguity refusal
-    // on them; sidecars WITHOUT the column keep the conservative
-    // suffix-matching + refusal semantics.
-    DataFileWriter.write(
-      entries.select(col("__fname").as("fname"), col("__pos").cast(LongType).as("pos"),
-          lit(true).as("rel"))
-        .repartition(1).sortWithinPartitions("fname", "pos"),
-      path, kind = "dv", dir = "_dv").map(_.path).headOption
   }
 
   /** Delta's `delta.appendOnly`: with TBLPROPERTIES `appendOnly = 'true'`
@@ -2838,14 +2762,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     // touched-file inner join. Without by-source clauses this stays an
     // inner join; with them it has to be a left-outer probe (match status
     // is what the clauses dispatch on). One TouchedFiles pass over the join
-    // counts each touched file's affected positions (rewriteRows' tombstone
-    // cap and DV counts read them) and, with matched clauses, is the
+    // folds each touched file's affected positions (rewriteRows' tombstone
+    // cap and deletion vectors read them) and, with matched clauses, is the
     // duplicate-source-match guard: a target row of a touched file matched
     // by more than one source row is an error (Delta semantics), raised
     // before anything is written. Clause conditions are evaluated in the
     // fold's projection, so a non-deterministic one (rand(), a
     // non-deterministic UDF) runs as it does in the rewrite.
-    val affected: Map[String, Long] =
+    val affected: Map[String, RoaringBitmap] =
       if (s.files.isEmpty || prunedTargetFiles.isEmpty ||
           (matchedClauses.isEmpty && bySourceClauses.isEmpty)) Map.empty
       else described("MERGE", s, "discover") {

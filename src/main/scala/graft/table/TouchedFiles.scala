@@ -28,18 +28,19 @@ object TouchedFiles {
   final case class Fold(file: String, matched: RoaringBitmap, affected: RoaringBitmap,
       duplicate: Boolean)
 
-  /** Each file's count of affected rows, keyed by the rows' `__fname`;
-    * files without one are left out. `rows` carry `__fname` and `__pos`
+  /** Each file's affected positions, keyed by the rows' `__fname`; files
+    * without one are left out. `rows` carry `__fname` and `__pos`
     * provenance; `matched` flags a row a MERGE source row matched (lit
     * false where no guard applies) and `affected` a row the op changes or
     * removes. Throws [[DuplicateMatch]] when a touched file holds a
     * position matched twice, before anything is written. */
-  def affectedPerFile(rows: DataFrame, matched: Column, affected: Column): Map[String, Long] = {
+  def affectedPerFile(rows: DataFrame, matched: Column, affected: Column)
+      : Map[String, RoaringBitmap] = {
     val qe = rows.select(col("__fname"), col("__pos"), matched, affected).queryExecution
     val folds = SQLExecution.withNewExecutionId(qe, Some("graft discover")) {
       qe.toRdd.mapPartitions(foldTask).collect()
     }
-    counts(combine(folds.iterator))
+    touched(combine(folds.iterator))
   }
 
   /** The tasks' folds ORed per file. */
@@ -53,12 +54,12 @@ object TouchedFiles {
     out.toMap
   }
 
-  /** Affected-row count of each file with one; throws on a duplicate match
-    * in such a file. */
-  private[table] def counts(files: Map[String, Fold]): Map[String, Long] = {
-    val touched = files.values.filterNot(_.affected.isEmpty)
-    if (touched.exists(_.duplicate)) throw new IllegalStateException(DuplicateMatch)
-    touched.map(f => f.file -> f.affected.getLongCardinality).toMap
+  /** Affected positions of each file with one; throws on a duplicate
+    * match in such a file. */
+  private[table] def touched(files: Map[String, Fold]): Map[String, RoaringBitmap] = {
+    val hit = files.values.filterNot(_.affected.isEmpty)
+    if (hit.exists(_.duplicate)) throw new IllegalStateException(DuplicateMatch)
+    hit.map(f => f.file -> f.affected).toMap
   }
 
   private final class Bits {

@@ -44,6 +44,27 @@ class DiagSpec extends SparkTestBase {
     assert(lines.exists(_.contains("\"batchId\"")), "no micro-batch progress printed")
   }
 
+  test("the job counter counts the micro-batch jobs of a stream started inside it") {
+    import spark.implicits._
+    val dir = tmpDir("diag-jobs-stream-")
+    val t = graft.table.GraftTable.create(spark, dir, (1 to 10).toDF("id").coalesce(1))
+    t.append((11 to 20).toDF("id").coalesce(1))
+    t.append((21 to 30).toDF("id").coalesce(1))
+    var batches = 0
+    val jobs = Harness.jobsDuring(spark) {
+      val q = spark.readStream.format("graft").option("maxFilesPerTrigger", "1").load(dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation", tmpDir("diag-jobs-stream-ckpt-"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      batches = q.recentProgress.count(_.numInputRows > 0)
+    }
+    assert(batches === 3, "one file per micro-batch")
+    assert(jobs.count >= batches, s"${jobs.count} jobs counted for $batches micro-batches")
+    assert(jobs.tasks >= jobs.count)
+  }
+
   test("hash-audit prints 3- and 4-gram collision counts per corpus") {
     val lines = diag("hash-audit")
     for (n <- Seq(3, 4))

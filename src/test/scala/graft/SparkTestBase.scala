@@ -23,25 +23,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    created.forEach(d => deleteTree(d))))
-
-  private def deleteTree(d: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(d)) {
-      val walk = java.nio.file.Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-      finally walk.close()
-    }
-
-  def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    created.add(d)
-    d.toString
-  }
+  def tmpDir(prefix: String): String =
+    Scratch.deletedAtExit(java.nio.file.Files.createTempDirectory(prefix)).toString
 
   lazy val session: SparkSession = Harness.session(4, Some(tmpDir("graft-wh-")))
 }

@@ -258,7 +258,7 @@ class GraftTableStreamSpec extends SparkTestBase {
       GraftStreamOffset(-1), GraftStreamOffset(t.latestVersion))
     val rf2 = stream2.createReaderFactory()
     assert(parts2.exists(p =>
-      p.asInstanceOf[GraftFilePartition].dvAbsPath.isDefined))
+      p.asInstanceOf[GraftFilePartition].dv.isDefined))
     assert(parts2.forall(p => !rf2.supportColumnarReads(p)),
       "a DV in the planned batch must drop every partition to the row path")
     val rowTotal = parts2.map { p =>

@@ -12,18 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
   *    or a `RemoveFile(` may only be built inside `OptimisticCommit.commit`
   *    or one of the version-0 creates and ADOPT, which have no prior
   *    version to conflict with.
-  *  - In `GraftTable.scala`, a `writeDvStore(` call and the
+  *  - In `GraftTable.scala`, a `writeDvFile(` call and the
   *    `"deletionVectors.maxTombstones"` literal may only appear inside
   *    `rewriteRows`, the one place that chooses between tombstoning and
   *    rewriting; the literal may also appear in `setProperty`, which
-  *    validates it.
+  *    validates it. No table source writes a `_dv/` parquet sidecar
+  *    (`kind = "dv"` or `dir = "_dv"`): every deletion vector is a Delta
+  *    descriptor.
   *  - In the table and source layers, no file is written through a
   *    `DataFrame.write` chain or staged through a `staged(` helper:
   *    [[DataFileWriter]] writes every table file at its final name.
   *  - In the table, source and streaming layers, a deletion vector is
   *    decoded (`dvPositions(`, `bitsAbs(`, `DeltaDeletionVectors.positions(`)
-  *    only inside `FileOps.dvBitsFor`, the one DV apply every scan shares,
-  *    and the table layer's only `left_anti` joins are VACUUM's orphan
+  *    only inside `FileOps.dvBitsFor`, the one DV apply every scan and
+  *    `rewriteRows`' merge of prior tombstones share, and the table
+  *    layer's only `left_anti` joins are VACUUM's orphan
   *    listing and MERGE's unmatched source rows: no scan applies
   *    tombstones through a join.
   *  - In `GraftTable.scala`, no row-level op counts matches per file with a
@@ -48,10 +51,12 @@ class CommitPathGuardSpec extends AnyFunSuite {
 
   private val construction = """(?i:log)\.commit\(|\bCommitInfo\(|\bRemoveFile\(""".r
   private val dvDecision = Seq(
-    """(?<!def )\bwriteDvStore\(""".r -> Set("rewriteRows"),
+    """(?<!def )\bwriteDvFile\(""".r -> Set("rewriteRows"),
     "\"deletionVectors\\.maxTombstones\"".r -> Set("rewriteRows", "setProperty"))
   private val dvDecode =
     """(?<!def )\b(?:dvPositions|bitsAbs)\(|\bDeltaDeletionVectors\.positions\(""".r
+  private val sidecarWrite = """\bkind\s*=\s*"dv"|\bdir\s*=\s*"_dv"""".r
+  private val dvApply = """\bFileOps\.dvBitsFor\b""".r
   private val antiJoin = "\"left_anti\"".r
   private val groupRewrite =
     """SupportsRowLevelOperations|RowLevelOperation|SupportsRuntimeV2Filtering""".r
@@ -131,6 +136,16 @@ class CommitPathGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("no table source writes a _dv/ sidecar") {
+    val found = layerFiles("table").flatMap(strays(_, sidecarWrite, Set.empty))
+    assert(found.isEmpty, s"a deletion-vector sidecar writer:\n${found.mkString("\n")}")
+    // the pattern still recognizes each spelling it bars
+    Seq("""DataFileWriter.write(df, path, kind = "dv", dir = "_dv")""",
+        """      path, kind="dv")""", """      dir = "_dv").map(_.path)""")
+      .foreach(line => assert(sidecarWrite.findFirstIn(line).nonEmpty, line))
+    assert(sidecarWrite.findFirstIn("""kind = "dvx", dir = "_dvs"""").isEmpty)
+  }
+
   test("table and source files are written only through DataFileWriter") {
     val found = for {
       layer <- Seq("table", "sources")
@@ -160,6 +175,9 @@ class CommitPathGuardSpec extends AnyFunSuite {
     val antis = layerFiles("table").flatMap(file =>
       strays(file, antiJoin, Set("vacuumOrphans", "insertRows")))
     assert(antis.isEmpty, s"anti-join in the table layer:\n${antis.mkString("\n")}")
+    // rewriteRows merges the tombstones a file already carries through it
+    assert(strays("GraftTable.scala", dvApply, Set.empty).exists(_.contains(" in rewriteRows: ")),
+      "rewriteRows does not read prior tombstones through FileOps.dvBitsFor")
     // each pattern still matches the code it guards
     assert(strays("FileOps.scala", dvDecode, Set.empty).size === 2)
     assert(strays("GraftTable.scala", antiJoin, Set.empty).size === 2)

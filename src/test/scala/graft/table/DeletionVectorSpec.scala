@@ -4,16 +4,19 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Merge-on-read DELETE via deletion vectors: a delete commits a tombstone
-  * sidecar and re-adds the same data files, so a 1-row delete on a
-  * multi-file table rewrites NOTHING (VERDICT r5 #1). Every path that
-  * serves rows — batch scan, pruned scan, SQL row-level rewrite, streaming
-  * snapshot, CDF, metadata stats — must apply the tombstones. */
+/** Merge-on-read DELETE via deletion vectors: a delete commits one
+  * Delta-format deletion-vector file and re-adds the same data files, so
+  * a 1-row delete on a multi-file table rewrites NOTHING (VERDICT r5 #1).
+  * Every path that serves rows — batch scan, pruned scan, SQL row-level
+  * rewrite, streaming snapshot, CDF, metadata stats — must apply the
+  * tombstones, and so must it for tables still pointing at a legacy
+  * `_dv/` parquet sidecar. */
 class DeletionVectorSpec extends SparkTestBase {
+  import DeletionVectorSpec._
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType, nullable = false),
@@ -107,14 +110,15 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(t.snapshot.files.forall(_.dvPath.isEmpty), "OPTIMIZE must purge DVs")
     assert(ids(t.toDF) == Set(2, 3, 4, 5))
     assert(t.metadataCount() == 4)
-    // sidecar is unreferenced by the head; retained versions still use it
+    // the DV file is unreferenced by the head; retained versions still use it
     assert(ids(t.versionAsOf(2)) == Set(2, 3, 4, 5))
+    def dvFiles: Seq[String] = Files.list(Paths.get(t.path)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("deletion_vector_")).toSeq
+    assert(dvFiles.size == 1, s"one DELETE writes one DV file: $dvFiles")
     // vacuum with no retained versions can collect it
     t.setProperty("vacuum.retentionDurationCheck", "false")
     t.vacuum(retainVersions = 0, retentionMs = 0)
-    val dvDir = Paths.get(t.path, "_dv")
-    assert(!Files.exists(dvDir) ||
-      Files.list(dvDir).iterator().asScala.isEmpty, "orphaned sidecar collected")
+    assert(dvFiles.isEmpty, "orphaned DV file collected")
     assert(ids(t.toDF) == Set(2, 3, 4, 5))
   }
 
@@ -417,10 +421,9 @@ class DeletionVectorSpec extends SparkTestBase {
     t.update(col("id") === 2, Map("v" -> "'patched'"))
     assert(t.toDF.filter(col("v") === "patched").count() === 1L)
 
-    // ONE commit tombstoning TWO same-named files shares one sidecar —
-    // the round-15 relative-path spelling keeps it fully attributable
-    // (no spurious legacy-ambiguity refusal), and each file loses
-    // exactly its own row
+    // ONE commit tombstoning TWO same-named files shares one DV file,
+    // with one descriptor per file: no spurious legacy-ambiguity refusal,
+    // and each file loses exactly its own row
     val t2 = convertedCollidingTable("dv-conv2-")
     assert(t2.delete(col("id").isin(1, 3)) === 2L)
     assert(ids(t2.toDF) === Set(2, 4))
@@ -437,54 +440,29 @@ class DeletionVectorSpec extends SparkTestBase {
   }
 
   test("LEGACY basename sidecars still apply; ambiguous legacy state refuses loudly") {
-    import spark.implicits._
-    // legacy spelling on a NON-colliding partitioned table: rewrite the
-    // sidecar's fname column from the round-15 relative path back to the
-    // bare basename pre-round-15 code wrote — the read must still apply it
+    // legacy spelling on a NON-colliding partitioned table: a
+    // pre-round-15 sidecar stores the bare basename and no `rel` format
+    // marker — the read must still apply it
     val t = GraftTable.create(spark, tmpDir("dv-legacy-"),
       df((1, "a"), (2, "b"), (3, "a"), (4, "b")), partitionBy = Seq("v"))
     t.setProperty("deletionVectors.enabled", "true")
-    assert(t.delete(col("id") === 3) === 1L)
-    val dvRel = t.snapshot.files.flatMap(_.dvPath).head
-    val dvAbs = java.nio.file.Paths.get(t.path, dvRel).toString
-    // the downgrade DROPS the round-16 `rel` format marker too — a real
-    // pre-round-15 sidecar has neither the relative paths nor the marker
-    val legacy = spark.read.parquet(dvAbs).drop("rel")
-      .withColumn("fname", element_at(split(col("fname"), "/"), -1))
-      .collect()
-    val tmp = tmpDir("dv-legacy-rw-")
-    spark.createDataFrame(java.util.Arrays.asList(legacy: _*),
-      spark.read.parquet(dvAbs).drop("rel").schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-    java.nio.file.Files.move(java.nio.file.Paths.get(part),
-      java.nio.file.Paths.get(dvAbs),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val (f3, pos3) = rowPositions(spark, t)(3)
+    pointAt(t, legacySidecar(spark, t.path, Seq(basename(f3) -> pos3), marked = false),
+      Seq(f3 -> 1L))
     assert(ids(GraftTable.forPath(spark, t.path).toDF) === Set(1, 2, 4),
       "a legacy basename sidecar must still tombstone its row")
 
     // AMBIGUOUS legacy state: one commit's sidecar covering TWO files
-    // that share a basename, downgraded to basename spelling — the
-    // attribution was never written, so the read must refuse loudly
-    // rather than tombstone both files' rows
+    // that share a basename, in basename spelling — the attribution was
+    // never written, so the read must refuse loudly rather than
+    // tombstone both files' rows
     val c = convertedCollidingTable("dv-legacy-amb-")
-    assert(c.delete(col("id").isin(1, 2)) === 2L) // one sidecar, two files
-    val rel2 = c.snapshot.files.flatMap(_.dvPath).distinct
-    assert(rel2.size === 1, "one commit writes one shared sidecar")
-    val abs2 = java.nio.file.Paths.get(c.path, rel2.head).toString
-    val rows2 = spark.read.parquet(abs2).drop("rel")
-      .withColumn("fname", element_at(split(col("fname"), "/"), -1))
-      .collect()
-    val tmp2 = tmpDir("dv-legacy-amb-rw-")
-    spark.createDataFrame(java.util.Arrays.asList(rows2: _*),
-      spark.read.parquet(abs2).drop("rel").schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp2)
-    val part2 = java.nio.file.Files.list(java.nio.file.Paths.get(tmp2))
-      .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-    java.nio.file.Files.move(java.nio.file.Paths.get(part2),
-      java.nio.file.Paths.get(abs2),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val at = rowPositions(spark, c)
+    val (f1, p1) = at(1)
+    val (f2, p2) = at(2)
+    assert(basename(f1) == basename(f2), "fixture: the two files share a basename")
+    pointAt(c, legacySidecar(spark, c.path,
+      Seq(basename(f1) -> p1, basename(f2) -> p2), marked = false), Seq(f1 -> 1L, f2 -> 1L))
     val e = intercept[GraftProtocolException](
       GraftTable.forPath(spark, c.path).toDF.collect())
     assert(e.getMessage.contains("cannot be attributed"), s"got $e")
@@ -520,8 +498,41 @@ class DeletionVectorSpec extends SparkTestBase {
       s"pruned V2 scan must refuse like the batch path: ${msgs(e4).mkString(" | ")}")
   }
 
+  test("a legacy sidecar stays readable; a DV DELETE folds it into one descriptor; OPTIMIZE purges it") {
+    val t = GraftTable.create(spark, tmpDir("dv-legacy-read-"),
+      df((1 to 6).map(i => (i, s"v$i")): _*).coalesce(1))
+    t.setProperty("deletionVectors.enabled", "true")
+    val at = rowPositions(spark, t)
+    val (f, p2) = at(2)
+    val p4 = at(4)._2
+    pointAt(t, legacySidecar(spark, t.path, Seq(f.path -> p2, f.path -> p4)), Seq(f -> 2L))
+    val before = GraftTable.forPath(spark, t.path)
+    val legacy = before.latestVersion
+    assert(before.snapshot.files.flatMap(_.dvPath).forall(_.startsWith("_dv/")),
+      "fixture: the file points at the legacy sidecar")
+    assert(ids(before.toDF) == Set(1, 3, 5, 6))
+    assert(before.metadataCount() == 4)
+    assert(before.detail().select("numRows").head().getLong(0) == 4)
+
+    // the DELETE merges the sidecar's tombstones into the file's new descriptor
+    assert(before.delete(col("id") === 5) == 1)
+    val after = before.snapshot.files.filter(_.dvPath.isDefined)
+    assert(after.size == 1 && after.head.dvCount == 3)
+    val d = DeltaDeletionVectors.unpack(after.head.dvPath.get)
+    assert(d.storageType == "u" && d.cardinality == 3, s"got $d")
+    assert(Files.list(Paths.get(t.path)).iterator().asScala
+      .count(_.getFileName.toString.startsWith("deletion_vector_")) == 1)
+    assert(ids(before.toDF) == Set(1, 3, 6))
+    assert(before.metadataCount() == 3)
+
+    before.optimize()
+    assert(before.snapshot.files.forall(_.dvPath.isEmpty), "OPTIMIZE must purge DVs")
+    assert(ids(before.toDF) == Set(1, 3, 6))
+    // time travel still reads the legacy state
+    assert(ids(before.versionAsOf(legacy)) == Set(1, 3, 5, 6))
+  }
+
   test("round-16 `rel` marker: a bare-basename entry is a ROOT-LEVEL path, never legacy") {
-    import spark.implicits._
     // a marked sidecar whose entry names a root-level file ("part-0
     // .parquet" IS its full table-relative path). Before the marker, the
     // '/'-presence inference treated it as potentially legacy: a nested
@@ -541,11 +552,7 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(posOf("../src/part-0.parquet") === Set(0))
     // and an UNMARKED sidecar keeps the conservative legacy semantics
     val dir2 = tmpDir("dv-marker-legacy-")
-    Seq(("part-0.parquet", 0L)).toDF("fname", "pos")
-      .coalesce(1).write.mode("overwrite").parquet(dir2)
-    val sc2 = java.nio.file.Files.list(java.nio.file.Paths.get(dir2))
-      .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-    val p2 = java.nio.file.Paths.get(sc2)
+    val p2 = legacySidecar(spark, dir2, Seq("part-0.parquet" -> 0L), marked = false)
     assert(graft.table.FileOps.dvPositions(p2, "p=b1/part-0.parquet",
       s"$dir2/p=b1/part-0.parquet").stream().toArray.toSet === Set(0),
       "legacy suffix matching preserved")
@@ -567,14 +574,8 @@ class DeletionVectorSpec extends SparkTestBase {
   }
 
   /** A `rel`-marked sidecar of the table at `root`, in its `_dv/` dir. */
-  private def markedSidecar(root: String, entries: Seq[(String, Long)]): java.nio.file.Path = {
-    import spark.implicits._
-    val dv = s"$root/_dv"
-    entries.map { case (f, pos) => (f, pos, true) }.toDF("fname", "pos", "rel")
-      .coalesce(1).write.mode("overwrite").parquet(dv)
-    Files.list(Paths.get(dv)).toArray.map(_.toString).filter(_.endsWith(".parquet"))
-      .map(Paths.get(_)).head
-  }
+  private def markedSidecar(root: String, entries: Seq[(String, Long)]): java.nio.file.Path =
+    legacySidecar(spark, root, entries)
 
   /** The positions `sidecar` (of `<dir>/src`) tombstones for `fname`, read
     * as `<dir>/src` reads it or, for an escaped `../` fname, as the shallow
@@ -584,5 +585,44 @@ class DeletionVectorSpec extends SparkTestBase {
     val root = if (fname.startsWith("..")) s"$dir/clone" else s"$dir/src"
     graft.table.FileOps.dvPositions(sidecar, fname, s"$root/$fname", strict)
       .stream().toArray.toSet
+  }
+}
+
+object DeletionVectorSpec {
+
+  /** Each row's file and position in it, by its `id`. */
+  def rowPositions(spark: SparkSession, t: GraftTable): Map[Long, (AddFile, Long)] =
+    t.snapshot.files.flatMap { f =>
+      spark.read.parquet(Paths.get(t.path, f.path).toString)
+        .select(col("id"), col("_metadata.row_index")).collect()
+        .map(r => r.getAs[Number](0).longValue -> (f, r.getLong(1)))
+    }.toMap
+
+  def basename(f: AddFile): String = f.path.substring(f.path.lastIndexOf('/') + 1)
+
+  /** A legacy `_dv/` parquet sidecar of the table at `root` holding
+    * `entries` (stored fname, pos), as merge-on-read DML wrote it before
+    * the Delta descriptor became the one format: with `marked`, the
+    * round-16 `rel` format-marker column; without, the earlier layout. */
+  def legacySidecar(spark: SparkSession, root: String, entries: Seq[(String, Long)],
+      marked: Boolean = true): java.nio.file.Path = {
+    import spark.implicits._
+    val dv = s"$root/_dv"
+    val rows = entries.toDF("fname", "pos")
+    (if (marked) rows.withColumn("rel", lit(true)) else rows)
+      .coalesce(1).write.mode("overwrite").parquet(dv)
+    Files.list(Paths.get(dv)).toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      .map(Paths.get(_)).head
+  }
+
+  /** Commit `tombstoned`'s files re-added with `sidecar` as their DV, each
+    * `dvCount` raised by its count: the log state of a DV DELETE that
+    * wrote a legacy sidecar. */
+  def pointAt(t: GraftTable, sidecar: java.nio.file.Path,
+      tombstoned: Seq[(AddFile, Long)]): Unit = {
+    val v = t.latestVersion + 1
+    val rel = Paths.get(t.path).relativize(sidecar).toString
+    t.log.commit(v, CommitInfo(v, t.log.nextTimestamp(), "DELETE", Map.empty) +:
+      tombstoned.map { case (f, n) => f.copy(dvPath = Some(rel), dvCount = f.dvCount + n) })
   }
 }

@@ -170,6 +170,18 @@ class DeltaWriteCompatSpec extends SparkTestBase {
     assert(t2.toDF.count() === 4L)
   }
 
+  test("a DV DELETE's Delta descriptor needs no OPTIMIZE before compat enables") {
+    val dir = tmpDir("dwc-dv-descriptor-")
+    val t = GraftTable.create(spark, dir, seed(6))
+    t.setProperty("deletionVectors.enabled", "true")
+    t.delete(col("id") === 1L)
+    assert(t.snapshot.files.flatMap(_.dvPath).exists(DeltaDeletionVectors.isDescriptor))
+    t.setProperty(DeltaWriteCompat.Prop, "true")
+    assert(t.snapshot.files.exists(_.dvPath.isDefined), "enabling compat keeps the DV")
+    assert(GraftTable.forPath(spark, dir).toDF.count() === 5L)
+    assert(t.metadataCount() === 5L)
+  }
+
   test("constraints travel as constraint.* configuration and still enforce after reopen") {
     val dir = tmpDir("dwc-constraint-")
     val t = GraftTable.create(spark, dir, seed(3))
@@ -182,13 +194,16 @@ class DeltaWriteCompatSpec extends SparkTestBase {
   }
 
   test("features a delta reader cannot honor refuse at the enabling commit") {
-    // PRE-COMPAT native DV sidecars: the live set (not this commit's
+    // LEGACY `_dv/` parquet sidecars: the live set (not this commit's
     // actions) carries tombstones no delta reader can apply — the
     // enabling-transition gate must refuse until OPTIMIZE purges them
     val dir = tmpDir("dwc-refuse-")
     val t = GraftTable.create(spark, dir, seed(6))
     t.setProperty("deletionVectors.enabled", "true")
-    t.delete(col("id") === 1L) // merge-on-read: native parquet sidecar
+    val (f, pos) = DeletionVectorSpec.rowPositions(spark, t)(1L)
+    DeletionVectorSpec.pointAt(t,
+      DeletionVectorSpec.legacySidecar(spark, dir, Seq(f.path -> pos)), Seq(f -> 1L))
+    assert(t.toDF.count() === 5L)
     val e = intercept[GraftProtocolException](
       t.setProperty(DeltaWriteCompat.Prop, "true"))
     assert(e.getMessage.contains("native deletion-vector"), s"got $e")

@@ -50,8 +50,9 @@ class FsckSpec extends SparkTestBase {
     t.setProperty("deletionVectors.enabled", "true")
     t.delete(col("id") === 2)
     val withDv = t.snapshot.files.filter(_.dvPath.isDefined)
-    assert(withDv.nonEmpty, "DV delete must leave a sidecar-carrying file")
-    Files.delete(Paths.get(t.path, withDv.head.dvPath.get))
+    assert(withDv.nonEmpty, "DV delete must leave a DV-carrying file")
+    Files.delete(Paths.get(t.path,
+      DeltaDeletionVectors.referencedFile(withDv.head.dvPath.get).get))
     assert(t.fsck(dryRun = true) === Seq(withDv.head.path))
     t.fsck()
     assert(t.toDF.count() === 0, "the DV-broken file's rows are gone")

@@ -48,16 +48,17 @@ class TouchedFilesSpec extends SparkTestBase {
       TouchedFiles.Fold("f", bits(2, 3), bits(3), duplicate = false),
       TouchedFiles.Fold("g", bits(7), bits(7), duplicate = false)))
     assert(one("f").duplicate && !one("g").duplicate)
-    val e = intercept[IllegalStateException](TouchedFiles.counts(one))
+    val e = intercept[IllegalStateException](TouchedFiles.touched(one))
     assert(e.getMessage === TouchedFiles.DuplicateMatch)
-    // disjoint positions across tasks: counts are the ORed cardinalities
+    // disjoint positions across tasks: a file's positions are the ORed bitmaps
     val two = TouchedFiles.combine(Iterator(
       TouchedFiles.Fold("f", bits(1), bits(1), duplicate = false),
       TouchedFiles.Fold("f", bits(2), bits(2), duplicate = false),
       TouchedFiles.Fold("g", bits(5), bits(), duplicate = false)))
-    assert(TouchedFiles.counts(two) === Map("f" -> 2L), "a file with no affected row is left out")
+    assert(TouchedFiles.touched(two) === Map("f" -> bits(1, 2)),
+      "a file with no affected row is left out")
     // a duplicate in a file with no affected row touches nothing
-    assert(TouchedFiles.counts(Map("h" ->
+    assert(TouchedFiles.touched(Map("h" ->
       TouchedFiles.Fold("h", bits(4), bits(), duplicate = true))) === Map.empty)
   }
 
@@ -109,6 +110,44 @@ class TouchedFilesSpec extends SparkTestBase {
     val n = jobsDuring(assert(t.delete(col("id").between(2000, 2019)) === 20L))
     assert(n <= 2, s"the DELETE ran $n jobs")
     assert(t.toDF.count() === 3960)
+  }
+
+  /** [[fourFiles]] with deletion vectors on. */
+  private def fourDvFiles(prefix: String): GraftTable = {
+    val t = fourFiles(prefix)
+    t.setProperty("deletionVectors.enabled", "true")
+    t
+  }
+
+  test("a merge-on-read API upsert into one file runs at most 6 Spark jobs") {
+    val t = fourDvFiles("tf-jobs-dv-merge-")
+    upsert(t, upsertSource) // warm
+    val n = jobsDuring(upsert(t, upsertSource))
+    assert(n <= 6, s"the upsert ran $n jobs")
+    assert(t.history().select("operationMetrics").head().getMap[String, String](0)
+      .get("numDeletionVectors").exists(_.toInt > 0), "the upsert must tombstone")
+    assert(t.toDF.count() === 4020)
+    assert(t.toDF.filter(col("v").startsWith("u")).count() === 80)
+  }
+
+  test("a 20-id merge-on-read DELETE runs at most 1 Spark job") {
+    val t = fourDvFiles("tf-jobs-dv-delete-")
+    t.delete(col("id").between(100, 119)) // warm
+    val n = jobsDuring(assert(t.delete(col("id").between(2000, 2019)) === 20L))
+    assert(n <= 1, s"the DELETE ran $n jobs")
+    assert(t.snapshot.files.count(_.dvPath.isDefined) === 2)
+    assert(t.toDF.count() === 3960)
+  }
+
+  test("a 20-id merge-on-read DELETE into files that carry DVs runs at most 1 Spark job") {
+    val t = fourDvFiles("tf-jobs-dv-redelete-")
+    t.delete(col("id").between(100, 119) || col("id").between(1100, 1119))
+    t.delete(col("id").between(120, 129) || col("id").between(1120, 1129)) // warm
+    val n = jobsDuring(
+      assert(t.delete(col("id").between(130, 139) || col("id").between(1130, 1139)) === 20L))
+    assert(n <= 1, s"the DELETE ran $n jobs")
+    assert(t.snapshot.files.map(_.dvCount).sum === 80)
+    assert(t.toDF.count() === 3920 && t.metadataCount() === 3920)
   }
 
   test("an API MERGE's jobs are described by op, table, version and phase") {

@@ -100,7 +100,7 @@ class WritePathSpec extends SparkTestBase {
     }
     assert(debris.isEmpty, s"debris: ${debris.mkString(", ")}")
     assert(all.exists(_.toString.contains("/_cdc/cdc-")))
-    assert(all.exists(_.toString.contains("/_dv/dv-")))
+    assert(all.exists(_.getFileName.toString.matches("deletion_vector_[-0-9a-f]{36}\\.bin")))
     assert(all.exists(_.getFileName.toString.endsWith(".checkpoint.parquet")))
     assert(t.toDF.count() == 24)
   }
