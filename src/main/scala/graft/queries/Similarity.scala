@@ -53,11 +53,20 @@ object Similarity {
     * sequentially — the codebook and centroid trainings share no state, so
     * the second job's tasks back-fill executors freed by the first's tail). */
   private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val f = Future(fa)
-    val b = fb
-    (Await.result(f, scala.concurrent.duration.Duration.Inf), b)
+    val spark = SparkSession.active
+    val sc = spark.sparkContext
+    // pool threads carry no caller state: each job runs under the
+    // caller's session, job group and description
+    val props = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+      .map(k => k -> sc.getLocalProperty(k))
+    def asCaller(x: => Any): () => Any = () => {
+      SparkSession.setActiveSession(spark)
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      x
+    }
+    val Seq(a, b) = graft.DriverPool.all(Seq(asCaller(fa), asCaller(fb)))
+    (a.asInstanceOf[A], b.asInstanceOf[B])
   }
 
   /** PQ training shared by q172 (in-query), q176 (persisted index table)

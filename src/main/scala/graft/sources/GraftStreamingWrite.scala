@@ -2,44 +2,13 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.table.{AddFile, Bucketing, ColumnMapping, DataFileWriter, FileOps, GraftTable}
+import graft.table.{AddFile, Bucketing, ColumnMapping, DataFileWriter, FileOps, GraftTable, Snapshot}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.types._
 
 case class GraftWriteMessage(adds: Seq[AddFile]) extends WriterCommitMessage
-
-/** The driver side of one V2 write's files at a time: its
-  * [[DataFileWriter.Target]] (conf broadcast once), released after the
-  * commit, or deleted with its files on abort. */
-private[sources] final class GraftWriteFiles {
-  private var target: Option[DataFileWriter.Target] = None
-
-  /** A new write into `table`: files spell the data columns by their
-    * physical names with the mapping's field ids, bloom filters per the
-    * table's properties. The V2 write info hands the QUERY's schema, which
-    * Spark marks all-nullable for most sources — the TABLE's nullability
-    * is the invariant the executor-side writers must enforce, so it is
-    * overlaid by field name. */
-  def start(table: GraftTable, writeSchema: StructType): GraftFileWriteSpec = synchronized {
-    val snap = table.snapshot
-    val meta = snap.metaData
-    val schema = StructType(writeSchema.fields.map(f =>
-      snap.schema.find(_.name == f.name).map(tf => f.copy(nullable = tf.nullable)).getOrElse(f)))
-    val fileSchema = ColumnMapping.physicalWriteSchema(
-      StructType(schema.fields.filterNot(f => meta.partitionColumns.contains(f.name))))
-    val t = DataFileWriter.target(table.spark, table.path, fileSchema,
-      options = GraftTable.bloomWriteOptions(meta, ColumnMapping.physicalOf(schema, _)))
-    target = Some(t)
-    GraftFileWriteSpec(t, schema, meta.partitionColumns, Bucketing.spec(meta),
-      table.spark.sessionState.conf.sessionLocalTimeZone)
-  }
-
-  def release(): Unit = synchronized { target.foreach(_.conf.destroy()); target = None }
-
-  def abort(): Unit = synchronized { target.foreach(DataFileWriter.deleteWrite); release() }
-}
 
 /** `writeStream.format("graft")` / `.toTable("graft.ns.t")`: each epoch's
   * rows land as one atomic APPEND commit (the micro-batch transaction
@@ -48,41 +17,69 @@ private[sources] final class GraftWriteFiles {
   * that already committed is skipped — the idempotent-txn pattern, driver
   * side. Files are written executor-side through [[DataFileWriter]]; a
   * failed epoch's files are deleted on abort and were never visible
-  * (nothing references them until the commit). */
+  * (nothing references them until the commit). Each epoch folds the
+  * table's snapshot once, when its writer factory is built; the commit
+  * reuses that snapshot unless another commit landed in between. */
 class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private val files = new GraftWriteFiles
+  /** The running epoch's file target and the snapshot its factory was
+    * built from. Cleared when the epoch commits, so a later abort can only
+    * delete files no commit references. */
+  private var epoch: Option[(DataFileWriter.Target, Snapshot)] = None
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
+      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = synchronized {
+    val snap = table.snapshot
     // the sink's executor-side writers persist the stream's rows verbatim —
     // they cannot (re)compute generation expressions or allocate identity
     // ids, so refuse loudly rather than break the invariant; foreachBatch
     // + append conforms/assigns
-    val gen = graft.table.GeneratedColumns.names(table.snapshot.schema) ++
-      graft.table.IdentityColumns.names(table.snapshot.schema)
+    val gen = graft.table.GeneratedColumns.names(snap.schema) ++
+      graft.table.IdentityColumns.names(snap.schema)
     require(gen.isEmpty,
       s"streaming sink cannot maintain generated/identity columns ${gen.toSeq.sorted.mkString(", ")}; " +
         "stream via foreachBatch { (batch, _) => table.append(batch) } instead")
-    require(!table.rowTrackingEnabled(table.snapshot.metaData),
+    require(!table.rowTrackingEnabled(snap.metaData),
       "streaming sink cannot allocate row ids (rowTracking.enabled); " +
         "stream via foreachBatch { (batch, _) => table.append(batch) } instead")
-    // writer-feature gate, once per stream start (the per-epoch commit
-    // path deliberately skips the snapshot fold)
-    table.gateWrite()
-    GraftStreamingWriterFactory(files.start(table, schema))
+    // writer-feature gate, before any executor writes a file
+    table.gateWrite(snap)
+    val spec = fileSpec(snap)
+    epoch = Some((spec.target, snap))
+    GraftStreamingWriterFactory(spec)
   }
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+  /** The epoch's file target: files spell the data columns by their
+    * physical names with the mapping's field ids, bloom filters per the
+    * table's properties. The V2 write info hands the QUERY's schema, which
+    * Spark marks all-nullable for most sources — the TABLE's nullability
+    * is the invariant the executor-side writers must enforce, so it is
+    * overlaid by field name. */
+  private def fileSpec(snap: Snapshot): GraftFileWriteSpec = {
+    val meta = snap.metaData
+    val writeSchema = StructType(schema.fields.map(f =>
+      snap.schema.find(_.name == f.name).map(tf => f.copy(nullable = tf.nullable)).getOrElse(f)))
+    val fileSchema = ColumnMapping.physicalWriteSchema(
+      StructType(writeSchema.fields.filterNot(f => meta.partitionColumns.contains(f.name))))
+    val t = DataFileWriter.target(table.spark, table.path, fileSchema,
+      options = GraftTable.bloomWriteOptions(meta, ColumnMapping.physicalOf(writeSchema, _)))
+    GraftFileWriteSpec(t, writeSchema, meta.partitionColumns, Bucketing.spec(meta),
+      table.spark.sessionState.conf.sessionLocalTimeZone)
+  }
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = synchronized {
     // the factory-time guards (generated/identity/rowTracking + writer
     // features) re-check at EVERY epoch commit against the current head
     // snapshot — a mid-stream ALTER that enables row tracking or adds a
     // generated/identity column must fail the stream loudly, not commit
-    // epochs whose rows lack row-id stamps / identity values. One fold
-    // serves these guards, the exactly-once probe below and the commit
-    // (whose writer-feature gate reads its protocol).
-    val head = table.snapshot
+    // epochs whose rows lack row-id stamps / identity values. One
+    // snapshot serves these guards, the exactly-once probe below and the
+    // commit (whose writer-feature gate reads its protocol): the
+    // factory's, while it is still the head.
+    val latest = table.latestVersion
+    val head = epoch.map(_._2).filter(_.version == latest)
+      .getOrElse(table.log.snapshotAt(latest))
     val headMeta = head.metaData
     val genNow = graft.table.GeneratedColumns.names(head.schema) ++
       graft.table.IdentityColumns.names(head.schema)
@@ -111,16 +108,18 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
     if (alreadyCommitted)
       adds.foreach(a => Files.deleteIfExists(Paths.get(table.path, a.path)))
     else table.commitStreamingAppend(head, adds, queryId, epochId)
-    files.release()
+    epoch = None
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    files.abort()
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = synchronized {
+    epoch.foreach { case (t, _) => DataFileWriter.deleteWrite(t) }
+    epoch = None
+  }
 }
 
 /** What each task of a V2 write needs: the write's file target, the
   * table-nullability write schema, and the table's partition and bucket
-  * layout. Built once per write on the driver ([[GraftWriteFiles.start]]). */
+  * layout. Built once per epoch on the driver. */
 case class GraftFileWriteSpec(target: DataFileWriter.Target, schema: StructType,
     partitionCols: Seq[String], bucket: Option[(String, Int)], timeZone: String)
 

@@ -229,17 +229,12 @@ object CheckpointCodec {
   def read(file: Path, version: Long): Snapshot = readMulti(Seq(file), version)
 
   /** Assemble the snapshot from one or many checkpoint part files. Parts
-    * decode CONCURRENTLY (one vectorized reader per part on its own
-    * thread — the same parallelism the write side gets), then merge:
+    * decode CONCURRENTLY (one vectorized reader per part on a
+    * [[graft.DriverPool]] thread — the same parallelism the write side
+    * gets; the first part that fails fails the read), then merge:
     * exactly one part carries the header, every part contributes adds. */
   def readMulti(parts: Seq[Path], version: Long): Snapshot = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val decoded =
-      if (parts.size == 1) Seq(readPart(parts.head))
-      else Await.result(Future.sequence(
-        parts.map(p => Future(readPart(p)))), Duration.Inf)
+    val decoded = graft.DriverPool.all(parts.map(p => () => readPart(p)))
     val meta = decoded.flatMap(_._1).headOption.getOrElse(
       throw new IllegalStateException(
         s"parquet checkpoint ${parts.head} lacks metaData"))

@@ -184,7 +184,7 @@ trait OptimisticCommit { self: GraftTable =>
 
   /** Streaming-sink entry: gate once at writer-factory creation, before
     * any executor writes a file. */
-  private[graft] def gateWrite(): Unit = gateWriterFeatures(snapshot.protocol)
+  private[graft] def gateWrite(s: Snapshot): Unit = gateWriterFeatures(s.protocol)
 
   /** Writer-feature gate (the write-side twin of GraftLog's reader gate): a
     * table whose protocol lists a writerFeature this build does not

@@ -10,7 +10,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.Job
 import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -19,7 +18,6 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 /** The one writer of table parquet files: data files and `_cdc/` sidecars,
   * for batch jobs, the SQL row-level rewrite and the streaming sink alike
@@ -37,10 +35,13 @@ import org.apache.spark.util.SerializableConfiguration
   * through `ParquetFileFormat.prepareWrite` like a batch `df.write.parquet`,
   * plus INT64 TIMESTAMP_MICROS timestamps. INT96 (Spark's default) is
   * deprecated and carries no footer min/max, so a time-range predicate
-  * could never data-skip. The conf is broadcast once per write and
-  * destroyed after it. Files go through `java.nio` (parquet's
-  * `LocalOutputFile`), not a Hadoop FileSystem: no `.crc` siblings and no
-  * permission calls per create.
+  * could never data-skip. The target carries only the entries of that
+  * conf that differ from [[FileOps.baseConf]] (a few dozen: parquet keys,
+  * bloom options, session overrides), and each task rebuilds the conf
+  * from `baseConf` plus those entries. No conf is broadcast: a broadcast
+  * per write cost more than the small writes it configured. Files go
+  * through `java.nio` (parquet's `LocalOutputFile`), not a Hadoop
+  * FileSystem: no `.crc` siblings and no permission calls per create.
   *
   * Partition dirs are spelled as Spark's file writer spells them: each
   * value cast to string in the session time zone, Hive-escaped, with null
@@ -58,14 +59,22 @@ object DataFileWriter {
 
   /** Where one write's files go and how they are encoded. `partitionDirs`
     * false keeps a partitioned write's files flat in `dir` (their values
-    * ride only on the returned [[Written]]). */
+    * ride only on the returned [[Written]]). `conf` holds the write conf's
+    * entries that differ from [[FileOps.baseConf]]. */
   final case class Target(root: String, dir: String, kind: String, writeId: String,
-      partitionDirs: Boolean, fileSchema: StructType,
-      conf: Broadcast[SerializableConfiguration]) {
+      partitionDirs: Boolean, fileSchema: StructType, conf: Map[String, String]) {
     private[DataFileWriter] def prefix: String = s"$kind-$writeId-"
+
+    /** The write's Hadoop conf, rebuilt on the task side. */
+    def hadoopConf: Configuration = {
+      val c = new Configuration(FileOps.baseConf)
+      conf.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
   }
 
-  /** A new write's target, its Hadoop conf built and broadcast once. */
+  /** A new write's target: its Hadoop conf built once on the driver and
+    * kept as its difference from [[FileOps.baseConf]]. */
   def target(spark: SparkSession, root: String, fileSchema: StructType,
       kind: String = "part", dir: String = "", partitionDirs: Boolean = true,
       options: Map[String, String] = Map.empty): Target = {
@@ -73,8 +82,11 @@ object DataFileWriter {
     new ParquetFileFormat().prepareWrite(spark, job, options, fileSchema)
     val conf = job.getConfiguration
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
-    Target(root, dir, kind, UUID.randomUUID().toString, partitionDirs, fileSchema,
-      spark.sparkContext.broadcast(new SerializableConfiguration(conf)))
+    val base = FileOps.baseConf
+    val diff = conf.iterator().asScala.collect {
+      case e if base.getRaw(e.getKey) != e.getValue => e.getKey -> e.getValue
+    }.toMap
+    Target(root, dir, kind, UUID.randomUUID().toString, partitionDirs, fileSchema, diff)
   }
 
   /** Deletes every file that carries `t`'s writeId: the cleanup of a failed
@@ -124,7 +136,6 @@ object DataFileWriter {
         } catch { case e: Throwable => files.abort(); throw e }
       }.collect().toSeq.flatten
     } catch { case e: Throwable => deleteWrite(t); throw e }
-    finally t.conf.destroy()
   }
 
   /** The files one task writes for target `t`. `keys` compute a row's
@@ -133,7 +144,7 @@ object DataFileWriter {
     * them), otherwise a file per distinct values stays open to the end. */
   final class TaskFiles(t: Target, keys: Seq[(String, Expression)], tz: String,
       oneOpen: Boolean) {
-    private val conf = t.conf.value.value
+    private val conf = t.hadoopConf
     private val keyOf = if (keys.isEmpty) null else UnsafeProjection.create(keys.map(_._2))
     private lazy val spell = keys.zipWithIndex.map { case ((name, e), i) =>
       name -> Cast(BoundReference(i, e.dataType, nullable = true), StringType, Some(tz)) }

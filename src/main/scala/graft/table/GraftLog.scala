@@ -737,20 +737,16 @@ final class GraftLog(val tablePath: String,
       // pointer (with `parts`) publishes LAST, so a crash mid-move leaves
       // at worst an incomplete part set that multipartFiles treats as
       // absent and cleanup removes. A lost checkpoint race deletes our
-      // tmps and keeps the winner's files.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
+      // tmps and keeps the winner's files, and so does a failed part.
       val slices = s.files.grouped(partSize).toSeq
       val staged = slices.zipWithIndex.map { case (slice, i) =>
         (logDir.resolve(s".${java.util.UUID.randomUUID()}.cp$i.tmp"),
          multipartCheckpointFile(v, i),
          if (i == 0) Some(s) else None, slice)
       }
-      Await.result(Future.traverse(staged) { case (tmp, _, hdr, slice) =>
-        Future(CheckpointCodec.writePart(tmp, hdr, slice))
-      }, Duration.Inf)
       try {
+        graft.DriverPool.all(staged.map { case (tmp, _, hdr, slice) =>
+          () => CheckpointCodec.writePart(tmp, hdr, slice) })
         // Per-part publish tolerates FileAlreadyExists and KEEPS GOING:
         // an existing part is normally this part, left by a crashed
         // earlier attempt of this version's checkpoint (fold order and
@@ -929,6 +925,10 @@ final class GraftLog(val tablePath: String,
     * per op as `GraftLog.uncached_reads_per_op`). */
   private[graft] var uncachedVersionReads: Int = 0
 
+  /** Snapshots this instance seeded from a checkpoint: a warm log that
+    * folds forward from its cached snapshots reads none. */
+  private[table] var checkpointReads: Int = 0
+
   private def latestCheckpointAtOrBefore(v: Long): Option[Long] = {
     // fast path: the pointer names a usable checkpoint ≤ v (the common
     // latest-snapshot read) — no directory listing at all
@@ -1080,7 +1080,14 @@ final class GraftLog(val tablePath: String,
         size > 4
     }
 
-  /** Snapshot at version v: nearest checkpoint ≤ v + tail replay. */
+  /** Snapshot at version v. A cached snapshot at most
+    * `checkpointInterval` commits below v is extended by the commits
+    * between them, as Delta updates a snapshot by applying the new log
+    * records; so a warm log never re-parses a checkpoint to step forward.
+    * Otherwise, or when a commit file of that tail is gone (log cleanup),
+    * v folds from the nearest checkpoint ≤ v plus the commits after it.
+    * Both folds apply the same actions in the same order, so they give
+    * equal snapshots, file order included. */
   def snapshotAt(v: Long): Snapshot = synchronized {
     val cached = snapshotCache.get(v)
     if (cached != null) {
@@ -1089,52 +1096,74 @@ final class GraftLog(val tablePath: String,
       cached
     }
     else {
-      val snap = latestCheckpointAtOrBefore(v) match {
-        case Some(cp) =>
-          // A checkpoint written by a FOREIGN writer (delta-spark's parquet
-          // checkpoints share graft's file naming but not its schema) fails
-          // decode; the seed is only ever an optimization, so fall back to
-          // a full JSON replay when the commit files still reach back to
-          // version 0 — and fail loudly (not confusingly mid-parquet-parse)
-          // when retention already pruned them.
-          scala.util.Try(readCheckpoint(cp)) match {
-            case scala.util.Success(seed) =>
-              if (cp == v) {
-                gateReaderFeatures(seed.protocol)
-                gateForeignMetadata(seed.metaData)
-                seed
-              } else replay(cp + 1, v, Some(seed))
-            case scala.util.Failure(e: GraftProtocolException) => throw e
-            case scala.util.Failure(e) =>
-              // graft codec refused — a REAL delta-spark checkpoint shares
-              // the file naming but not the layout; decode it through the
-              // compat reader, and only when that too fails fall back to a
-              // full JSON replay (commits intact) or a named error.
-              scala.util.Try(DeltaCheckpointCompat.read(
-                  deltaCheckpointFiles(cp), cp)) match {
-                case scala.util.Success(seed) =>
-                  if (cp == v) {
-                    gateReaderFeatures(seed.protocol)
-                    gateForeignMetadata(seed.metaData)
-                    seed
-                  } else replay(cp + 1, v, Some(seed))
-                case scala.util.Failure(e2: GraftProtocolException) => throw e2
-                case scala.util.Failure(_) if earliestVersion == 0L =>
-                  replay(0L, v, None)
-                case scala.util.Failure(e2) => throw new GraftProtocolException(
-                  s"checkpoint $cp of $tablePath decodes as neither a graft " +
-                    "checkpoint nor a Delta single/multi-part/v2 " +
-                    "checkpoint, and the JSON commits before it were " +
-                    s"already cleaned up — cannot fold version $v: " +
-                    s"graft codec: $e; delta: $e2")
-              }
-          }
-        case None => replay(0L, v, None)
-      }
+      val snap = foldForward(v).getOrElse(foldFromCheckpoint(v))
       snapshotCache.put(v, snap)
       snap
     }
   }
+
+  /** `v` folded from the newest cached snapshot below it, or None when no
+    * cached snapshot is within `checkpointInterval` commits or a commit
+    * file between them is gone. A reader-feature refusal propagates. */
+  private def foldForward(v: Long): Option[Snapshot] =
+    snapshotCache.values.asScala
+      .filter(s => s.version < v && v - s.version <= checkpointInterval)
+      .maxByOption(_.version)
+      .filter(s => (s.version + 1 to v).forall(i => store.exists(versionFile(i))))
+      .flatMap { s =>
+        try Some(replay(s.version + 1, v, Some(s)))
+        catch {
+          case e: GraftProtocolException => throw e
+          case scala.util.control.NonFatal(_) => None
+        }
+      }
+
+  /** `v` folded from the nearest checkpoint ≤ v plus the commits after
+    * it, or from version 0 when there is no usable checkpoint. */
+  private def foldFromCheckpoint(v: Long): Snapshot =
+    latestCheckpointAtOrBefore(v) match {
+      case Some(cp) =>
+        checkpointReads += 1
+        // A checkpoint written by a FOREIGN writer (delta-spark's parquet
+        // checkpoints share graft's file naming but not its schema) fails
+        // decode; the seed is only ever an optimization, so fall back to
+        // a full JSON replay when the commit files still reach back to
+        // version 0 — and fail loudly (not confusingly mid-parquet-parse)
+        // when retention already pruned them.
+        scala.util.Try(readCheckpoint(cp)) match {
+          case scala.util.Success(seed) =>
+            if (cp == v) {
+              gateReaderFeatures(seed.protocol)
+              gateForeignMetadata(seed.metaData)
+              seed
+            } else replay(cp + 1, v, Some(seed))
+          case scala.util.Failure(e: GraftProtocolException) => throw e
+          case scala.util.Failure(e) =>
+            // graft codec refused — a REAL delta-spark checkpoint shares
+            // the file naming but not the layout; decode it through the
+            // compat reader, and only when that too fails fall back to a
+            // full JSON replay (commits intact) or a named error.
+            scala.util.Try(DeltaCheckpointCompat.read(
+                deltaCheckpointFiles(cp), cp)) match {
+              case scala.util.Success(seed) =>
+                if (cp == v) {
+                  gateReaderFeatures(seed.protocol)
+                  gateForeignMetadata(seed.metaData)
+                  seed
+                } else replay(cp + 1, v, Some(seed))
+              case scala.util.Failure(e2: GraftProtocolException) => throw e2
+              case scala.util.Failure(_) if earliestVersion == 0L =>
+                replay(0L, v, None)
+              case scala.util.Failure(e2) => throw new GraftProtocolException(
+                s"checkpoint $cp of $tablePath decodes as neither a graft " +
+                  "checkpoint nor a Delta single/multi-part/v2 " +
+                  "checkpoint, and the JSON commits before it were " +
+                  s"already cleaned up — cannot fold version $v: " +
+                  s"graft codec: $e; delta: $e2")
+            }
+        }
+      case None => replay(0L, v, None)
+    }
 
   /** All commitInfo records, one per version, ascending. Empty for a
     * checkpoint-only foreign log — no commit files survive, so there is

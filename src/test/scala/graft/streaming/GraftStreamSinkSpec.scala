@@ -97,4 +97,36 @@ class GraftStreamSinkSpec extends SparkTestBase {
     }
     assert(t.toDF.count() === 3L)
   }
+
+  /** The state-store count of a graft source → [[EventStreams.streamingFirstTouch]]
+    * → graft sink run under [[EventStreams.scopedStreamRun]]. */
+  private def dedupStatePartitions(tag: String): Seq[Int] = {
+    val src = tmpDir(s"gsink-state-src-$tag-")
+    val dst = tmpDir(s"gsink-state-dst-$tag-")
+    val ts = (m: Int) => java.sql.Timestamp.valueOf(
+      java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(m))
+    GraftTable.create(spark, src,
+      Seq((1L, "click", ts(0)), (1L, "click", ts(5)), (2L, "view", ts(7)))
+        .toDF("user_id", "event_type", "ts"))
+    val deduped = EventStreams.streamingFirstTouch(spark.readStream.format("graft").load(src))
+    GraftTable.create(spark, dst,
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        deduped.schema))
+    val q = EventStreams.scopedStreamRun(spark) {
+      deduped.writeStream.format("graft").option("path", dst)
+        .option("checkpointLocation", tmpDir(s"gsink-state-ckpt-$tag-"))
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    q.awaitTermination(60000)
+    assert(GraftTable.forPath(spark, dst).toDF.count() == 2)
+    q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numShufflePartitions.toInt)).distinct
+  }
+
+  test("stream state stores default to the core count, and an explicit statePartitions wins") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(dedupStatePartitions("default") == Seq(4))
+    spark.conf.set("graft.streaming.statePartitions", "2")
+    try assert(dedupStatePartitions("two") == Seq(2))
+    finally spark.conf.unset("graft.streaming.statePartitions")
+  }
 }

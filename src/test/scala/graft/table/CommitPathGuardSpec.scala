@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    descriptor.
   *  - In the table and source layers, no file is written through a
   *    `DataFrame.write` chain or staged through a `staged(` helper:
-  *    [[DataFileWriter]] writes every table file at its final name.
+  *    [[DataFileWriter]] writes every table file at its final name, and
+  *    it broadcasts nothing (its tasks rebuild the write conf from
+  *    `FileOps.baseConf`).
   *  - In the table, source and streaming layers, a deletion vector is
   *    decoded (`dvPositions(`, `bitsAbs(`, `DeltaDeletionVectors.positions(`)
   *    only inside `FileOps.dvBitsFor`, the one DV apply every scan and
@@ -67,6 +69,7 @@ class CommitPathGuardSpec extends AnyFunSuite {
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
   /** A `DataFrame.write` chain (`.write` then `.` or the end of the line,
     * not Spark's `connector.write` package) or a `staged(` helper. */
+  private val broadcastCall = """\bbroadcast\s*\(""".r
   private val writerDetour = """(?<!connector)\.write(?=\s*(?:\.|$))|\bstaged\s*[\[(]""".r
 
   /** `src` with every comment blanked out, line breaks kept. */
@@ -158,6 +161,15 @@ class CommitPathGuardSpec extends AnyFunSuite {
     // the pattern still recognizes each detour it bars
     Seq("df.write.parquet(dir)", "      .write", "FileOps.staged(root, tag)").foreach(line =>
       assert(writerDetour.findFirstIn(line).nonEmpty, line))
+  }
+
+  test("DataFileWriter broadcasts no conf") {
+    val found = strays("DataFileWriter.scala", broadcastCall, Set.empty)
+    assert(found.isEmpty, s"a broadcast per write:\n${found.mkString("\n")}")
+    // the pattern still recognizes each spelling it bars
+    Seq("spark.sparkContext.broadcast(new SerializableConfiguration(conf)))",
+        "      sc.broadcast (conf)")
+      .foreach(line => assert(broadcastCall.findFirstIn(line).nonEmpty, line))
   }
 
   private def layerFiles(layer: String): Seq[String] =

@@ -56,6 +56,20 @@ class MultipartCheckpointSpec extends SparkTestBase {
     assert(s.files.size === 9, "torn multipart must fall back, not misfold")
   }
 
+  test("a failing checkpoint part surfaces its own exception") {
+    val dir = tmpDir("mpcp-fail-")
+    build(dir)
+    val log = new GraftLog(dir)
+    val parts = (0 until 3).map(i => log.multipartCheckpointFile(10, i))
+    assert(CheckpointCodec.readMulti(parts, 10).files.size == 9)
+    Files.write(parts(1), "not a parquet file".getBytes("UTF-8"))
+    val e = intercept[RuntimeException](CheckpointCodec.readMulti(parts, 10))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(e.getMessage.contains(parts(1).getFileName.toString), e.getMessage)
+    // the fold treats the torn set as absent and replays the commits
+    assert(new GraftLog(dir).snapshotAt(10L).files.size == 9)
+  }
+
   test("log retention cleanup removes expired multipart parts") {
     val dir = tmpDir("mpcp-clean-")
     val t = build(dir)

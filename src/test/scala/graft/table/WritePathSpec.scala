@@ -105,6 +105,63 @@ class WritePathSpec extends SparkTestBase {
     assert(t.toDF.count() == 24)
   }
 
+  test("the session codec, bloom.columns and a Hadoop page-size override reach every written file") {
+    implicit val sqlCtx = spark.sqlContext
+    val codecKey = "spark.sql.parquet.compression.codec"
+    val prevCodec = spark.conf.getOption(codecKey)
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val prevPage = Option(hadoop.get("parquet.page.size"))
+    spark.conf.set(codecKey, "zstd")
+    hadoop.set("parquet.page.size", "1024")
+    try {
+      val dir = tmpDir("wp-conf-")
+      val rows = (n: Int, from: Long) => (from until from + n).map(i => (i, s"v$i"))
+      val t = GraftTable.create(spark, dir, Seq.empty[(Long, String)].toDF("id", "v"))
+      t.setProperty("bloom.columns", "id")
+      t.setProperty("changeDataFeed.enabled", "true")
+      t.append(rows(8000, 0).toDF("id", "v").coalesce(1))
+      val input = MemoryStream[(Long, String)]
+      val q = input.toDF().toDF("id", "v").writeStream.format("graft")
+        .option("path", dir)
+        .option("checkpointLocation", tmpDir("wp-conf-ckpt-"))
+        .start()
+      try {
+        input.addData(rows(4000, 10000): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      t.delete(col("id") < 4000)
+      val log = t.log.readVersion(t.snapshot.version)
+      val cdc = log.collect { case c: CdcFile => c.path }
+      assert(cdc.size == 1, s"one CDC sidecar: $log")
+      val data = t.snapshot.files.map(_.path)
+      assert(data.size == 2, s"the streamed file and the DELETE's rewrite: $data")
+      /** (codec, bloom filter present, page count) of column `id`. */
+      def footer(rel: String): (org.apache.parquet.hadoop.metadata.CompressionCodecName, Boolean, Int) = {
+        val r = FileOps.openParquet(Paths.get(dir, rel))
+        try {
+          val blocks = r.getFooter.getBlocks.asScala
+          assert(blocks.size == 1, rel)
+          val id = blocks.head.getColumns.asScala.find(_.getPath.toDotString == "id").get
+          (id.getCodec, r.readBloomFilter(id) != null, r.readOffsetIndex(id).getPageCount)
+        } finally r.close()
+      }
+      (data ++ cdc).foreach { f =>
+        val (codec, bloom, pages) = footer(f)
+        assert(codec == org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD, f)
+        assert(pages > 1, s"$f: 1 KB pages over 4,000 rows")
+        // CDC sidecars carry no bloom filters, data files always do
+        assert(bloom == !f.startsWith("_cdc/"), f)
+      }
+      // the batch append's file (removed by the DELETE) was written the same way
+      val appended = t.log.readVersion(3).collect { case a: AddFile => a.path }
+      assert(appended.size == 1)
+      assert(footer(appended.head)._2 && footer(appended.head)._3 > 1)
+    } finally {
+      prevCodec.fold(spark.conf.unset(codecKey))(spark.conf.set(codecKey, _))
+      prevPage.fold(hadoop.unset("parquet.page.size"))(hadoop.set("parquet.page.size", _))
+    }
+  }
+
   test("a write whose last task violates NOT NULL leaves the version and the file listing unchanged") {
     val schema = StructType(Seq(
       StructField("id", IntegerType, nullable = false), StructField("v", StringType)))
