@@ -12,7 +12,8 @@ case class GraftWriteMessage(adds: Seq[AddFile]) extends WriterCommitMessage
 
 /** `writeStream.format("graft")` / `.toTable("graft.ns.t")`: each epoch's
   * rows land as one atomic APPEND commit (the micro-batch transaction
-  * Delta's streaming sink performs). Exactly-once across checkpoint
+  * Delta's streaming sink performs); an epoch with no rows commits no
+  * version. Exactly-once across checkpoint
   * replays: the commit records (queryId, epochId), and a replayed epoch
   * that already committed is skipped — the idempotent-txn pattern, driver
   * side. Files are written executor-side through [[DataFileWriter]]; a
@@ -69,6 +70,16 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = synchronized {
+    // An epoch that wrote no file commits no version and checks nothing:
+    // the no-data batches Spark runs to advance a watermark would otherwise
+    // publish an empty version each, and replaying one has nothing to
+    // re-commit.
+    val written = messages.flatMap { case m: GraftWriteMessage => m.adds }.toSeq
+    if (written.nonEmpty) commitEpoch(epochId, written)
+    epoch = None
+  }
+
+  private def commitEpoch(epochId: Long, written: Seq[AddFile]): Unit = {
     // the factory-time guards (generated/identity/rowTracking + writer
     // features) re-check at EVERY epoch commit against the current head
     // snapshot — a mid-stream ALTER that enables row tracking or adds a
@@ -103,12 +114,10 @@ class GraftStreamingWrite(table: GraftTable, schema: StructType, queryId: String
           c.operationMetrics.get("txnAppId").contains(queryId) &&
           c.operationMetrics.get("epoch").exists(_.toLong >= epochId))
       }
-    val adds = FileOps.capAddStats(headMeta,
-      messages.flatMap { case m: GraftWriteMessage => m.adds }.toSeq)
+    val adds = FileOps.capAddStats(headMeta, written)
     if (alreadyCommitted)
       adds.foreach(a => Files.deleteIfExists(Paths.get(table.path, a.path)))
     else table.commitStreamingAppend(head, adds, queryId, epochId)
-    epoch = None
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = synchronized {

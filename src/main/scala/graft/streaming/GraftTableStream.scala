@@ -2,11 +2,8 @@ package graft.streaming
 
 import java.nio.file.Paths
 
-import scala.jdk.CollectionConverters._
 
-import graft.table.{AddFile, CommitInfo, GraftLog, MetaData, RemoveFile}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import graft.table.{AddFile, CommitChanges, GraftLog, MetaData, RemoveFile}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -27,12 +24,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - The FIRST batch (offset -1 → v) serves the live snapshot at v (the
   *    initial load); every later batch serves exactly the files ADDED by
   *    commits in (start, end].
-  *  - DML that REWRITES files (MERGE/DELETE/UPDATE) aborts the stream by
-  *    default — appends-only is the contract, as in Delta; option
-  *    `ignoreChanges` streams the added files anyway (re-emitting
-  *    rewritten rows, Delta's documented semantic). OPTIMIZE/CLONE/
-  *    RESTORE-style maintenance commits that add no new rows are skipped
-  *    wholesale (our equivalent of Delta's dataChange=false).
+  *  - Each tailed commit is read through its [[graft.table.CommitChanges]]
+  *    plan, the classification batch `changes()` uses too. DML that
+  *    REWRITES rows (MERGE/DELETE/UPDATE) aborts the stream by default —
+  *    appends-only is the contract, as in Delta; option `ignoreChanges`
+  *    streams the added files anyway (re-emitting rewritten rows, Delta's
+  *    documented semantic). Maintenance commits (OPTIMIZE, property and
+  *    constraint changes, foreign `dataChange = false` reorganizations)
+  *    are skipped wholesale.
+  *  - Admission control (`maxFilesPerTrigger`, `maxBytesPerTrigger`) sums
+  *    the same plans' read costs; the initial snapshot batch sizes from
+  *    one live (files, bytes) fold.
   *  - `startingVersion` option starts the tail at a commit instead of the
   *    initial snapshot (the "only new data" shape).
   *
@@ -62,13 +64,6 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
     * past rename can never misbind). Property-only MetaData commits
     * (identity frontiers, tblproperties) share the schemaString and pass. */
   private val creationHead = log.latestVersion
-  /** Lazy one-time provenance probe (foreign delta log?) — feeds the
-    * malformed-cdc refusal in planCdfPartitions; fixed for a running
-    * stream, so one fold at the creation head, never per commit. */
-  private lazy val foreignProvenance: Boolean =
-    creationHead >= 0 && log.snapshotAt(creationHead).metaData
-      .properties.contains(graft.table.Actions.DeltaReadMarker)
-
   private val creationSchemaJson =
     if (creationHead < 0) "" else log.snapshotAt(creationHead).metaData.schemaString
 
@@ -138,171 +133,66 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val cap = availableNowTarget.getOrElse(log.latestVersion)
     val s = start.asInstanceOf[GraftStreamOffset].version
-    val initial = s < 0 && startingVersion.isEmpty
-    val fileEnd = limit match {
-      case mf: ReadMaxFiles =>
-        if (initial) {
-          // initial snapshot batch: size from the FOLDED live-file count
-          // (per-commit add sums overcount files later removed); advance
-          // at least to version 0 so the stream makes progress
-          var v = 0L
-          while (v < cap && liveFileCount(v + 1) <= mf.maxFiles) v += 1
-          v
-        } else {
-          // tail mode: cap the sum of per-commit added files; commits are
-          // immutable, so counts are cached across triggers instead of
-          // re-reading the whole backlog every time (ADVICE r5)
-          var v = s
-          var total = 0L
-          var stop = false
-          while (!stop && v < cap) {
-            val n = filesAddedIn(v + 1)
-            if (total > 0 && total + n > mf.maxFiles) stop = true
-            else { total += n; v += 1 }
-          }
-          v
-        }
-      case _ => cap
+    val maxFiles = limit match {
+      case mf: ReadMaxFiles => Some(mf.maxFiles.toLong)
+      case _ => None
     }
-    val end = maxBytesPerTrigger match {
-      case None => fileEnd
-      case Some(maxB) =>
-        val byteEnd =
-          if (initial) {
-            var v = 0L
-            while (v < cap && liveByteCount(v + 1) <= maxB) v += 1
-            v
-          } else {
-            var v = s
-            var total = 0L
-            var stop = false
-            while (!stop && v < cap) {
-              val b = bytesAddedIn(v + 1)
-              if (total > 0 && total + b > maxB) stop = true
-              else { total += b; v += 1 }
-            }
-            v
-          }
-        math.min(fileEnd, byteEnd)
-    }
-    GraftStreamOffset(end)
-  }
-
-  private val byteCountCache = scala.collection.mutable.Map[Long, Long]()
-  private def bytesAddedIn(v: Long): Long = synchronized {
-    byteCountCache.getOrElseUpdate(v, {
-      val actions = log.readVersion(v)
-      val op = actions.collectFirst { case c: CommitInfo => c.operation }
-      if (op.exists(nonDataOps.contains) || foreignReorg(actions)) 0L
-      else {
-        // CDF admission sizes what the batch will actually READ: a commit
-        // with `_cdc/` sidecars plans those, not its add files. A legacy
-        // sidecar (logged before sizes existed) deserializes to size 0 —
-        // summing zeros would FAIL OPEN (the byte loop would admit the
-        // whole backlog in one batch), so an unknown-size commit costs a
-        // large sentinel instead: it still rides the ≥1-commit/trigger
-        // progress guarantee, and nothing else joins its batch.
-        val cdc = actions.collect { case c: graft.table.CdcFile => c }
-        if (cdfMode && cdc.nonEmpty) {
-          val sz = cdc.map(_.size).sum
-          if (sz == 0L) Long.MaxValue / 4 else sz
-        }
-        else actions.collect { case a: AddFile if dataChanging(a) => a.size }.sum
+    if (maxFiles.isEmpty && maxBytesPerTrigger.isEmpty) return GraftStreamOffset(cap)
+    var v = s
+    if (s < 0 && startingVersion.isEmpty) {
+      // the initial snapshot batch sizes from the live (files, bytes) after
+      // each version, advancing at least to version 0
+      v = 0L
+      def fits(live: (Long, Long)) =
+        maxFiles.forall(live._1 <= _) && maxBytesPerTrigger.forall(live._2 <= _)
+      while (v < cap && fits(liveAfter(v + 1))) v += 1
+    } else {
+      // tail mode: sum the commits' read costs; a cap binds only once the
+      // batch holds something, so each batch admits at least one commit
+      var files, bytes = 0L
+      var stop = false
+      while (!stop && v < cap) {
+        val (f, b) = changesAt(v + 1).readCost(cdfMode)
+        stop = maxFiles.exists(m => files > 0 && files + f > m) ||
+          maxBytesPerTrigger.exists(m => bytes > 0 && bytes + b > m)
+        if (!stop) { files += f; bytes += b; v += 1 }
       }
-    })
+    }
+    GraftStreamOffset(v)
   }
 
-  /** Live BYTES after commit v, folded strictly forward once (a path→size
-    * map resolves removed files' sizes; re-adds replace) — the byte twin
-    * of liveFileCount for sizing the initial snapshot batch. */
-  private val liveBytesCache = scala.collection.mutable.Map[Long, Long](-1L -> 0L)
+  /** Each commit's classified changes, planned once: admission control and
+    * the batch that serves the commit share one plan. Spark's `commit`
+    * drops the plans of consumed versions. */
+  private val planned = scala.collection.mutable.Map[Long, CommitChanges]()
+  private def changesAt(v: Long): CommitChanges = synchronized {
+    planned.getOrElseUpdate(v, CommitChanges.of(log, v))
+  }
+
+  /** Live (files, bytes) after commit v, folded strictly forward once
+    * through a path → size map (a re-add replaces its path) — sizes the
+    * initial snapshot batch. */
+  private val liveCache = scala.collection.mutable.Map[Long, (Long, Long)](-1L -> (0L, 0L))
   private val liveSizeByPath = scala.collection.mutable.Map[String, Long]()
-  private var bytesFrontier = -1L
-  private def liveByteCount(v: Long): Long = synchronized {
-    while (bytesFrontier < v) {
-      val nv = bytesFrontier + 1
-      var running = liveBytesCache(bytesFrontier)
+  private var liveFrontier = -1L
+  private def liveAfter(v: Long): (Long, Long) = synchronized {
+    while (liveFrontier < v) {
+      val nv = liveFrontier + 1
+      var bytes = liveCache(liveFrontier)._2
       log.readVersion(nv).foreach {
-        case r: RemoveFile =>
-          liveSizeByPath.remove(r.path).foreach(sz => running -= sz)
+        case r: RemoveFile => liveSizeByPath.remove(r.path).foreach(sz => bytes -= sz)
         case a: AddFile =>
-          liveSizeByPath.put(a.path, a.size).foreach(old => running -= old)
-          running += a.size
+          liveSizeByPath.put(a.path, a.size).foreach(old => bytes -= old)
+          bytes += a.size
         case _ => ()
       }
-      liveBytesCache(nv) = running
-      bytesFrontier = nv
+      liveCache(nv) = (liveSizeByPath.size.toLong, bytes)
+      liveFrontier = nv
     }
-    liveBytesCache(v)
-  }
-
-  private val addCountCache = scala.collection.mutable.Map[Long, Long]()
-  private def filesAddedIn(v: Long): Long = synchronized {
-    addCountCache.getOrElseUpdate(v, {
-      val actions = log.readVersion(v)
-      val op = actions.collectFirst { case c: CommitInfo => c.operation }
-      if (op.exists(nonDataOps.contains) || foreignReorg(actions)) 0L
-      else {
-        // CDF mode: the batch plans the commit's `_cdc/` sidecars when
-        // present (rewrites), else its add files (appends) — size the cap
-        // on what planInputPartitions will emit
-        val cdc = actions.count(_.isInstanceOf[graft.table.CdcFile]).toLong
-        if (cdfMode && cdc > 0) cdc
-        else actions.collect { case a: AddFile if dataChanging(a) => a }.size.toLong
-      }
-    })
-  }
-
-  /** Exact live-file count after commit v, folded incrementally (adds −
-    * removes per commit; every rewrite pairs its removes with adds, so the
-    * running difference equals the snapshot's live-file count) — O(1)
-    * amortized per trigger vs re-folding the snapshot. */
-  private val liveCountCache = scala.collection.mutable.Map[Long, Long](-1L -> 0L)
-  private def liveFileCount(v: Long): Long = synchronized {
-    if (!liveCountCache.contains(v)) {
-      var base = v - 1
-      while (!liveCountCache.contains(base)) base -= 1
-      (base + 1 to v).foreach { i =>
-        val actions = log.readVersion(i)
-        liveCountCache(i) = liveCountCache(i - 1) +
-          actions.count(_.isInstanceOf[AddFile]) -
-          actions.count(_.isInstanceOf[RemoveFile])
-      }
-    }
-    liveCountCache(v)
+    liveCache(v)
   }
 
   override def reportLatestOffset(): Offset = GraftStreamOffset(log.latestVersion)
-
-  /** Maintenance operations that reorganize files without changing table
-    * CONTENT — skipped entirely by the tail reader. */
-  private val nonDataOps = Set("OPTIMIZE", "VACUUM", "SET TBLPROPERTIES",
-    "UNSET TBLPROPERTIES", "ADD CONSTRAINT", "DROP CONSTRAINT")
-
-  /** An add carrying NEW rows (vs a foreign `dataChange = false`
-    * reorganization add — delta OPTIMIZE/clustering output). Graft's own
-    * maintenance is recognized by operation name above; the tag is the
-    * PROTOCOL-level signal for foreign logs, where commitInfo is
-    * free-form (optional fields, engine-specific operation names). */
-  private def dataChanging(a: AddFile): Boolean =
-    !a.tags.contains(graft.table.Actions.DataChangeFalseTag)
-
-  /** True when the commit is a foreign reorganization: it has adds, none
-    * of which carry new data, every remove is ALSO flagged as a
-    * reorganization, and no change-data file is present — skip it
-    * wholesale (its removes pair with the compacted files, not with
-    * deleted rows). The remove/cdc guards matter because the add-side
-    * flag alone is ambiguous: a DV DELETE whose touched files all came
-    * out of a prior OPTIMIZE re-adds only previously-compacted paths, but
-    * its removes carry dataChange=true (and CDF mode ships a cdc file) —
-    * that commit changes data and must NOT be skipped. */
-  private def foreignReorg(actions: Seq[graft.table.Action]): Boolean = {
-    val adds = actions.collect { case a: AddFile => a }
-    adds.nonEmpty && !adds.exists(dataChanging) &&
-      actions.collect { case r: graft.table.RemoveFile => r }
-        .forall(!_.dataChange) &&
-      !actions.exists(_.isInstanceOf[graft.table.CdcFile])
-  }
 
   override def initialOffset(): Offset =
     GraftStreamOffset(startingVersion.map(_ - 1).getOrElse(-1L))
@@ -328,26 +218,14 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
         log.snapshotAt(e).files
       }
       else ((s + 1) to e).flatMap { v =>
-        val actions = log.readVersion(v)
-        failOnMidStreamEvolution(v, actions)
-        val op = actions.collectFirst { case c: CommitInfo => c.operation }
-        if (op.exists(nonDataOps.contains) || foreignReorg(actions)) Nil
-        else {
-          // dataChange=false removes pair with a reorganization's compacted
-          // files (the rows MOVED, delta's OPTIMIZE shape) — only
-          // data-changing removes break the append-only contract
-          val removes = actions.collect {
-            case r: RemoveFile if r.dataChange => r }
-          if (removes.nonEmpty && !ignoreChanges)
-            throw new IllegalStateException(
-              s"commit $v of $tablePath rewrites files (${op.getOrElse("?")}); " +
-                "streaming reads are append-only — set option(\"ignoreChanges\", " +
-                "\"true\") to stream added files anyway (rewritten rows re-emit)")
-          // a MIXED commit (new data + dataChange=false reorg adds) plans
-          // only the data-changing files — same filter as the admission
-          // counters, or compacted rows would re-serve as appends
-          actions.collect { case a: AddFile if dataChanging(a) => a }
-        }
+        failOnMidStreamEvolution(v, log.readVersion(v))
+        val c = changesAt(v)
+        if (c.rewrites && !ignoreChanges)
+          throw new IllegalStateException(
+            s"commit $v of $tablePath rewrites files (${c.operation}); " +
+              "streaming reads are append-only — set option(\"ignoreChanges\", " +
+              "\"true\") to stream added files anyway (rewritten rows re-emit)")
+        c.adds
       }
     plannedColumnarOk = files.forall(_.dvPath.isEmpty)
     val dv = graft.table.FileOps.dvRefs(tablePath, files, files)
@@ -358,21 +236,20 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
 
   /** CDF planning: the initial batch (no startingVersion) emits the folded
     * snapshot as inserts stamped with the snapshot version; each tailed
-    * commit emits its `_cdc/` sidecars when present (rewrites), else its
-    * added files as inserts (appends). All constants ride as per-partition
-    * overrides decoded by the shared reader factory. */
+    * commit emits its `_cdc/` sidecars when present, else its added files
+    * as inserts (appends). All constants ride as per-partition overrides
+    * decoded by the shared reader factory. */
   private def planCdfPartitions(s: Long, e: Long): Array[InputPartition] = {
     val parts = scala.collection.mutable.ArrayBuffer[GraftFilePartition]()
-    def tsOf(v: Long): String = log.readVersion(v)
-      .collectFirst { case c: CommitInfo => c.timestamp }.getOrElse(0L).toString
-    def insertParts(files: Seq[AddFile], v: Long): Unit = {
+    def stamps(c: CommitChanges): Seq[(String, String)] =
+      Seq("_commit_version" -> c.version.toString,
+        "_commit_timestamp" -> c.info.map(_.timestamp).getOrElse(0L).toString)
+    def insertParts(files: Seq[AddFile], c: CommitChanges): Unit = {
       val dv = graft.table.FileOps.dvRefs(tablePath, files, files)
       files.foreach { f =>
         parts += GraftFilePartition(
           Paths.get(tablePath, f.path).toString, f.partitionValues, f.numRecords,
-          dv.get(f.path),
-          constOverrides = Seq("_change_type" -> "insert", "_commit_version" -> v.toString,
-            "_commit_timestamp" -> tsOf(v)))
+          dv.get(f.path), constOverrides = ("_change_type" -> "insert") +: stamps(c))
       }
     }
     if (s < 0 && startingVersion.isEmpty) {
@@ -381,60 +258,25 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
       // must fail loudly, not serve evolved files through the pinned schema
       ((creationHead + 1) to e).foreach(v =>
         failOnMidStreamEvolution(v, log.readVersion(v)))
-      insertParts(log.snapshotAt(e).files, e)
+      insertParts(log.snapshotAt(e).files, changesAt(e))
     }
     else ((s + 1) to e).foreach { v =>
-      val actions = log.readVersion(v)
-      failOnMidStreamEvolution(v, actions)
-      val op = actions.collectFirst { case c: CommitInfo => c.operation }
-      val commitTs = actions.collectFirst { case c: CommitInfo => c.timestamp }
-        .getOrElse(0L).toString
-      if (!op.exists(nonDataOps.contains) && !foreignReorg(actions)) {
-        val cdc = actions.collect { case c: graft.table.CdcFile => c }
-        val adds = actions.collect { case a: AddFile => a }
-        val removes = actions.collect {
-          case r: RemoveFile if r.dataChange => r }
-        // Per-file cdc shape, told by the ACTION's partitionValues: a map
-        // covering the partition columns is delta's AddCDCFile (partition
-        // columns OMITTED from the file — foreign delta DML and graft's
-        // compat sidecars), served through the reader factory's constant
-        // row exactly like data files; an empty map is graft-native
-        // (columns IN the file). A partitioned FOREIGN cdc action without
-        // values is malformed — refuse loudly, never stream silent NULLs.
-        if (cdc.nonEmpty) {
-          // compat-written sidecars spell PHYSICAL names like foreign
-          // delta cdc files (round 16) — per-VERSION dispatch by the
-          // governing metaData, so mixed histories (compat enabled
-          // mid-life) stream each sidecar in its written spelling
-          val compatV = graft.table.DeltaWriteCompat
-            .enabled(log.snapshotAt(v).metaData)
-          cdc.foreach { c =>
-          val colsFromAction = graft.table.ColumnMapping
-            .cdcPartitionValues(schema, partitionCols, c.partitionValues)
-            .isDefined
-          if (partitionCols.nonEmpty && !colsFromAction && foreignProvenance)
-            throw new graft.table.GraftProtocolException(
-              s"cdc action of PARTITIONED foreign Delta table $tablePath at " +
-                s"version $v carries no partitionValues; the change feed " +
-                "cannot reconstitute its partition columns")
-          parts += GraftFilePartition(
-            Paths.get(tablePath, c.path).toString, c.partitionValues,
-            c.numRecords, None,
-            constOverrides = Seq("_commit_version" -> v.toString,
-              "_commit_timestamp" -> commitTs),
-            // partitionColsInFile also selects the requested NAME SPACE:
-            // graft-native sidecars are logical-named; foreign delta and
-            // graft-compat cdc files spell physical names (+ field ids in
-            // id mode), so those take the physical branch or column
-            // mapping would decode silent NULLs
-            partitionColsInFile = !colsFromAction && !foreignProvenance &&
-              !compatV)
-        }
-        }
-        else if (removes.isEmpty) insertParts(adds.filter(dataChanging), v)
-        else throw new IllegalStateException(
+      failOnMidStreamEvolution(v, log.readVersion(v))
+      changesAt(v) match {
+        case _: CommitChanges.Maintenance => ()
+        case c: CommitChanges.Sidecars =>
+          // a physically spelled file (foreign, compat or Delta-shaped)
+          // takes the reader's physical-name branch, or column mapping
+          // would decode NULLs; a Delta-shaped file's partition columns
+          // come from the action through the constant row
+          c.files.foreach(f => parts += GraftFilePartition(
+            Paths.get(tablePath, f.file.path).toString, f.file.partitionValues,
+            f.file.numRecords, None, constOverrides = stamps(c),
+            partitionColsInFile = !f.physical))
+        case c: CommitChanges.Appends => insertParts(c.adds, c)
+        case c: CommitChanges.Rewrite => throw new IllegalStateException(
           s"commit $v of $tablePath rewrites files without change data " +
-            s"(${op.getOrElse("?")}); set changeDataFeed.enabled=true before " +
+            s"(${c.operation}); set changeDataFeed.enabled=true before " +
             "row-level DML so the change feed can stream its deltas")
       }
     }
@@ -455,7 +297,10 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
     // partitions before asking the factory about columnar support)
     new GraftParquetReaderFactory(schema, partitionCols, plannedColumnarOk)
 
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit = synchronized {
+    val e = end.asInstanceOf[GraftStreamOffset].version
+    planned.keys.filter(_ <= e).foreach(planned.remove)
+  }
   override def stop(): Unit = ()
 }
 
@@ -538,53 +383,19 @@ class GraftParquetReaderFactory(schema: StructType, partitionCols: Seq[String],
 
   private def openVectorized(p: GraftFilePartition, lay: Layout)
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
-    import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration(graft.table.FileOps.baseConf)
     // under column mapping the parquet DATA files carry PHYSICAL names; the
     // requested schema must ask for them (output stays positional, so the
-    // logical scan schema is untouched). CDC sidecars are the exception:
-    // writeCdcFiles emits them from a LOGICAL-named frame, so their
-    // partitions (partitionColsInFile) must request logical names or a
-    // renamed column silently decodes as null.
+    // logical scan schema is untouched). Graft-native CDC sidecars are the
+    // exception: writeCdcFiles emits them from a LOGICAL-named frame, so
+    // their partitions (partitionColsInFile) must request logical names or
+    // a renamed column silently decodes as null.
     val dataSchema =
       if (p.partitionColsInFile)
         StructType(lay.dataFields.map(f =>
           f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
       else graft.table.ColumnMapping.physicalSchema(StructType(lay.dataFields))
-    // the same read-path conf Spark's ParquetFileFormat sets: requested
-    // schema + the semantics flags the schema converter consults
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
-    ParquetWriteSupport.setSchema(dataSchema, conf)
-    // id-mode column mapping: the physical schema carries parquet field
-    // ids — Spark's read support resolves those fields by id when the
-    // flag is on (fields without ids keep name resolution, so this is a
-    // no-op for every non-id table)
-    if (graft.table.ColumnMapping.hasFieldIds(dataSchema))
-      conf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, true)
-    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
-    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
-    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
-    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
-    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, "UTC")
-    // mapred.FileSplit (extends the mapreduce one) — the concrete class
-    // Spark's reader base casts the split to
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new HPath(p.absPath), 0, Long.MaxValue, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    // graft data files are written by Spark with CORRECTED (proleptic
-    // Gregorian) datetimes — no rebase, no INT96 conversion zone
-    val rdr = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-    try {
-      rdr.initialize(split, ctx)
-      rdr.initBatch(StructType(lay.constFields), constRow(p, lay))
-      rdr
-    } catch { case e: Throwable => rdr.close(); throw e }
+    graft.table.FileOps.openVectorized(p.absPath, dataSchema,
+      StructType(lay.constFields), constRow(p, lay))
   }
 
   /** Per-file constant column values, Catalyst-encoded. */

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -245,29 +244,8 @@ object CheckpointCodec {
 
   private def readPart(file: Path): (Option[MetaData], Option[Protocol],
       Seq[(String, Long)], Seq[AddFile]) = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
-    import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration(FileOps.baseConf)
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, sparkSchema.json)
-    ParquetWriteSupport.setSchema(sparkSchema, conf)
-    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
-    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
-    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
-    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
-    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, "UTC")
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new HPath(file.toString), 0, Long.MaxValue, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    val rdr = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
+    val rdr = FileOps.openVectorized(file.toString, sparkSchema)
     try {
-      rdr.initialize(split, ctx)
-      rdr.initBatch(new org.apache.spark.sql.types.StructType(),
-        org.apache.spark.sql.catalyst.InternalRow.empty)
       rdr.enableReturningBatches()
       var meta: Option[MetaData] = None
       var protocol: Option[Protocol] = None

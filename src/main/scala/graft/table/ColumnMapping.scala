@@ -291,27 +291,6 @@ object ColumnMapping {
     inType(schema).asInstanceOf[StructType]
   }
 
-  /** Partition values a cdc ACTION carries for the given partition
-    * columns, looked up physical-name-first (the key space data files
-    * use) with a logical-name fallback: Some(values in partitionCols
-    * order) when the action covers EVERY column — delta's AddCDCFile
-    * shape, the file omits the columns and readers reconstitute them —
-    * None otherwise (graft-native sidecars carry the columns IN the
-    * file). Shared by batch changes() and the CDF stream so the per-file
-    * shape dispatch can never drift between the two. */
-  def cdcPartitionValues(schema: StructType, partitionCols: Seq[String],
-      actionValues: Map[String, String]): Option[Seq[String]] = {
-    if (partitionCols.isEmpty) None
-    else {
-      val vals = partitionCols.map { pc =>
-        val phys = schema.fields.find(_.name == pc)
-          .map(physicalName).getOrElse(pc)
-        actionValues.get(phys).orElse(actionValues.get(pc))
-      }
-      if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
-    }
-  }
-
   /** Stamp `f` with an explicit physical name (no-op key update if equal). */
   def withPhysical(f: StructField, physical: String): StructField =
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)

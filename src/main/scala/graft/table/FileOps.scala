@@ -13,9 +13,12 @@ import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Data-file plumbing: write a DataFrame as table files (through
@@ -46,6 +49,44 @@ object FileOps extends Serializable {
   def openParquet(file: Path): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file.toString), baseConf),
       readOptions(baseConf))
+
+  /** Opens one parquet file with Spark's vectorized reader, decoding the
+    * columns of `requested` (as the file spells them) followed by the
+    * constant `partitionSchema` columns valued by `partitionValues`. The
+    * conf is the one Spark's ParquetFileFormat sets on its read path; a
+    * schema carrying parquet field ids resolves by id. Files are read as
+    * Spark writes them: CORRECTED (proleptic Gregorian) datetimes, no
+    * rebase, no INT96 conversion zone. */
+  def openVectorized(file: String, requested: StructType,
+      partitionSchema: StructType = new StructType(),
+      partitionValues: InternalRow = InternalRow.empty): VectorizedParquetRecordReader = {
+    val conf = new Configuration(baseConf)
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    ParquetWriteSupport.setSchema(requested, conf)
+    if (ColumnMapping.hasFieldIds(requested))
+      conf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, true)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, true)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, "UTC")
+    // mapred.FileSplit (extends the mapreduce one): the concrete class
+    // Spark's reader base casts the split to
+    val split = new org.apache.hadoop.mapred.FileSplit(
+      new HPath(file), 0, Long.MaxValue, Array.empty[String])
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val rdr = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
+    try {
+      rdr.initialize(split, ctx)
+      rdr.initBatch(partitionSchema, partitionValues)
+      rdr
+    } catch { case e: Throwable => rdr.close(); throw e }
+  }
 
   /** Table property capping how many leading schema columns carry min/max/
     * null-count stats in the log — Delta's `dataSkippingNumIndexedCols`,

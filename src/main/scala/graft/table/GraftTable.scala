@@ -485,7 +485,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     commit(s0raw, TxnInfo.Blind, "WRITE",
       Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))(
       (_, _) => metaAction ++ adds)
-    autoCompact()
+    autoCompact(s0raw)
   }
 
   /** Idempotent batch append (Delta's `txnAppId`/`txnVersion` options —
@@ -576,7 +576,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       discard(adds)
       return copyInto(sourceDir, fmt)
     }
-    autoCompact()
+    autoCompact(s0)
     adds.map(_.numRecords).sum
   }
 
@@ -595,7 +595,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     commit(s, TxnInfo.wholeTable(s, removeAll = true), "OVERWRITE",
       Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))(
       (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
-    autoCompact()
+    autoCompact(s)
   }
 
   /** The one write-prep step of every write of fresh rows: identity ids
@@ -724,7 +724,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       Some(conformed), deletesOnly = true, "numRewrittenFiles")(
       (adds, _) => Map("predicate" -> pred.toString,
         "numOutputRows" -> adds.map(_.numRecords).sum.toString))
-    autoCompact()
+    autoCompact(s)
   }
 
   /** Dynamic partition overwrite: atomically replace exactly the
@@ -780,7 +780,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
           "numRewrittenFiles" -> touched.size.toString,
           "numOutputRows" -> adds.map(_.numRecords).sum.toString))(
       (_, _) => identityMeta(s, adds) ++ adds ++ cdc)
-    autoCompact()
+    autoCompact(s)
   }
 
   /** SET TBLPROPERTIES: commit a metaData with the property added/updated
@@ -1291,7 +1291,7 @@ final class GraftTable private (val spark: SparkSession, val path: String)
       // SetTransaction: folds into the snapshot so the exactly-once
       // replay guard is an O(1) lookup, not an O(history) log scan
       (_, _) => Txn(queryId, epochId) +: adds)
-    autoCompact()
+    autoCompact(s)
   }
 
   /** UNSET TBLPROPERTIES: commit a metaData with the property removed. */
@@ -1373,12 +1373,14 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * losing an OPTIMIZE race to a concurrent writer must never fail the
     * append that triggered it; the next append retries. This is what
     * keeps a streaming sink's many small per-batch commits from
-    * accumulating into a small-file problem at 100 TB. */
-  private def autoCompact(): Unit =
+    * accumulating into a small-file problem at 100 TB. The property is
+    * read from `committedFrom`, the snapshot the op committed from, so a
+    * table without it never probes the head. */
+  private def autoCompact(committedFrom: Snapshot): Unit =
     // The WHOLE body is best-effort: a malformed maxFiles/targetBytes
     // property (NumberFormatException) or an IO error inside optimize()
     // must not fail an append whose commit already succeeded.
-    try {
+    if (committedFrom.metaData.properties.contains("autoCompact.maxFiles")) try {
       val s = snapshot
       s.metaData.properties.get("autoCompact.maxFiles").map(_.toInt).foreach { maxFiles =>
         if (s.files.size > maxFiles) {
@@ -1394,113 +1396,85 @@ final class GraftTable private (val spark: SparkSession, val path: String)
     * Rows only in added files surface as `insert` (an update's post-image);
     * rows only in removed files as `delete` (an update's pre-image); rows
     * present in both (rewritten untouched) cancel out in the multiset diff.
-    * Columns: table columns + _change_type + _commit_version.
+    * Columns: table columns + _change_type + _commit_version +
+    * _commit_timestamp; a range of maintenance commits only is an empty
+    * frame with those columns.
     * (Delta CDF materializes change files at write time; computing from
     * file diffs trades one read of the touched files for zero write-path
     * overhead — the right trade for occasional consumers.) */
   def changes(fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion, s"empty range: ($fromVersion, $toVersion]")
-    val frames = ((fromVersion + 1) to toVersion).map(changesOf)
-    frames.reduce(_ unionByName _)
+    ((fromVersion + 1) to toVersion).flatMap(v => changesOf(CommitChanges.of(log, v)))
+      .reduceOption(_ unionByName _)
+      .getOrElse {
+        val schema = log.snapshotAt(toVersion).schema
+          .add(StructField("_change_type", StringType, nullable = false))
+          .add(StructField("_commit_version", LongType, nullable = false))
+          .add(StructField("_commit_timestamp", TimestampType, nullable = true))
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      }
   }
 
-  /** One commit's row-level deltas. Three tiers, cheapest first:
+  /** One commit's row-level deltas, None for a maintenance commit (it
+    * changes no row, so nothing is read). Three tiers, cheapest first:
     *  - commits that wrote `_cdc/` sidecars (CDF-enabled DML) read them
     *    back directly — O(changes) IO, no diffing;
     *  - pure-add commits derive inserts from the added files — no
     *    diff (nothing to cancel against);
     *  - legacy rewrite commits (pre-CDF) fall back to the two-snapshot
     *    multiset file-diff. */
-  private[graft] def changesOf(v: Long): DataFrame = {
-    val actions = log.readVersion(v)
-    val cur = log.snapshotAt(v)
-    val commitTs = actions.collectFirst { case c: CommitInfo => c.timestamp }
-      .map(new Timestamp(_)).orNull
-    val cdcFiles = actions.collect { case c: CdcFile => c }
-    val addedFiles = actions.collect { case a: AddFile => a }
-    val removePaths = actions.collect { case r: RemoveFile => r.path }
-    def stamp(df: DataFrame): DataFrame = df
+  private def changesOf(c: CommitChanges): Option[DataFrame] = {
+    val v = c.version
+    val commitTs = c.info.map(i => new Timestamp(i.timestamp)).orNull
+    def stamp(df: DataFrame): Option[DataFrame] = Some(df
       .withColumn("_commit_version", lit(v))
-      .withColumn("_commit_timestamp", lit(commitTs))
-    if (cdcFiles.nonEmpty) {
-      // Per-file cdc shape, told by the ACTION's partitionValues: a map
-      // covering the partition columns is delta's AddCDCFile (partition
-      // columns OMITTED from the file — foreign delta DML and graft's own
-      // compat sidecars), reconstituted here from the action exactly like
-      // data files; an empty map is graft-native (columns IN the file).
-      // Both shapes can coexist in one table's history (compat enabled
-      // mid-life), so the split is per file, never per table.
-      val cdcSchema = cur.schema.add(StructField("_change_type", StringType, nullable = false))
-      val partCols = cur.metaData.partitionColumns
-      def shapeOf(c: CdcFile): Option[Seq[String]] =
-        ColumnMapping.cdcPartitionValues(cur.schema, partCols, c.partitionValues)
-      val (shaped, inFile) = cdcFiles.partition(c => shapeOf(c).isDefined)
-      // a partitioned FOREIGN cdc action without partitionValues is
-      // malformed (nothing can reconstitute the columns) — refuse loudly
-      // rather than serve silent NULLs
-      if (inFile.nonEmpty && partCols.nonEmpty &&
-          cur.metaData.properties.contains(Actions.DeltaReadMarker))
-        throw new GraftProtocolException(
-          s"cdc action of PARTITIONED foreign Delta table $path at version " +
-            s"$v carries no partitionValues; the change feed cannot " +
-            "reconstitute its partition columns")
-      val foreignTable = cur.metaData.properties.contains(Actions.DeltaReadMarker)
-      // compat-written sidecars spell PHYSICAL names like foreign delta
-      // cdc files (round 16) — dispatch per VERSION by the governing
-      // metaData, so mixed histories (compat enabled mid-life) read each
-      // sidecar in the spelling it was written with
-      val compatV = DeltaWriteCompat.enabled(cur.metaData)
-      val inFileDf =
-        if (inFile.isEmpty) Nil
-        else if (!foreignTable && !compatV)
-          // graft-native sidecars are written from LOGICAL-named frames
-          // (writeCdcFiles) — request logical names directly
-          Seq(spark.read.schema(cdcSchema)
-            .parquet(inFile.map(c => Paths.get(path, c.path).toString): _*))
-        else {
-          // FOREIGN delta and graft-compat cdc files spell PHYSICAL
-          // column names (and carry field ids in id mode) — read
-          // physically, rename back to logical, exactly like data files;
-          // a logical-named request would silently serve NULL columns
-          // under column mapping
-          val physFull = ColumnMapping.physicalSchema(cur.schema)
-            .add(StructField("_change_type", StringType, nullable = false))
-          ensureFieldIdResolution(physFull)
-          val base = spark.read.schema(physFull)
-            .parquet(inFile.map(c => Paths.get(path, c.path).toString): _*)
-          Seq(base.select(cur.schema.fields.map(ColumnMapping.logicalColumn).toSeq
-            :+ col("_change_type"): _*))
+      .withColumn("_commit_timestamp", lit(commitTs)))
+    c match {
+      case _: CommitChanges.Maintenance => None
+      case sc: CommitChanges.Sidecars =>
+        // Each file is read in the shape CommitChanges gave it: Delta's
+        // AddCDCFile shape (partition columns omitted from the file and
+        // attached from the action), or columns in the file, spelled
+        // logically (graft-native) or physically (foreign and compat).
+        // Shapes can mix within one table's history (compat enabled
+        // mid-life), so the split is per file.
+        val cur = sc.governing
+        val partCols = cur.metaData.partitionColumns
+        val changeType = StructField("_change_type", StringType, nullable = false)
+        def paths(fs: Seq[CommitChanges.Sidecar]) = fs.map(f => Paths.get(path, f.file.path).toString)
+        /** `fs` read with `fields` spelled physically, renamed to logical. */
+        def physical(fields: Seq[StructField], fs: Seq[CommitChanges.Sidecar]): DataFrame = {
+          val phys = ColumnMapping.physicalSchema(StructType(fields)).add(changeType)
+          ensureFieldIdResolution(phys)
+          spark.read.schema(phys).parquet(paths(fs): _*)
+            .select(fields.map(ColumnMapping.logicalColumn) :+ col("_change_type"): _*)
         }
-      // delta-shaped files read through the non-partition (physical-named)
-      // schema, rename back to logical, then attach the decoded partition
-      // values as constants — same cast the Hive dir decode applies
-      val nonPart = StructType(cur.schema.fields.filterNot(f => partCols.contains(f.name)))
-      val physData = ColumnMapping.physicalSchema(nonPart)
-        .add(StructField("_change_type", StringType, nullable = false))
-      ensureFieldIdResolution(physData)
-      val sentinel = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .DEFAULT_PARTITION_NAME
-      val shapedDfs = shaped.groupBy(c => shapeOf(c).get)
-        .toSeq.map { case (vals, cs) =>
-          val base = spark.read.schema(physData)
-            .parquet(cs.map(c => Paths.get(path, c.path).toString): _*)
-          val logical = base.select(
-            nonPart.fields.map(ColumnMapping.logicalColumn).toSeq :+ col("_change_type"): _*)
-          val withParts = partCols.zip(vals).foldLeft(logical) { case (df, (pc, pv)) =>
+        val (shaped, inFile) = sc.files.partition(_.partitionValues.isDefined)
+        val (physInFile, logicalInFile) = inFile.partition(_.physical)
+        val inFileDfs =
+          (if (logicalInFile.isEmpty) Nil
+           else Seq(spark.read.schema(cur.schema.add(changeType)).parquet(paths(logicalInFile): _*))) ++
+          (if (physInFile.isEmpty) Nil else Seq(physical(cur.schema.fields.toSeq, physInFile)))
+        // delta-shaped files read the non-partition columns, then attach the
+        // action's partition values as constants — the cast the Hive dir
+        // decode applies
+        val nonPart = cur.schema.fields.toSeq.filterNot(f => partCols.contains(f.name))
+        val sentinel = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .DEFAULT_PARTITION_NAME
+        val shapedDfs = shaped.groupBy(_.partitionValues.get).toSeq.map { case (vals, fs) =>
+          partCols.zip(vals).foldLeft(physical(nonPart, fs)) { case (df, (pc, pv)) =>
             val dt = cur.schema(pc).dataType
-            df.withColumn(pc,
-              if (pv == sentinel) lit(null).cast(dt) else lit(pv).cast(dt))
-          }
-          withParts.select(cdcSchema.fieldNames.map(col).toIndexedSeq: _*)
+            df.withColumn(pc, if (pv == sentinel) lit(null).cast(dt) else lit(pv).cast(dt))
+          }.select((cur.schema.fieldNames :+ "_change_type").map(col).toIndexedSeq: _*)
         }
-      stamp((inFileDf ++ shapedDfs).reduce(_ unionByName _))
-    } else if (removePaths.isEmpty) {
-      stamp(readFiles(cur, addedFiles)
-        .withColumn("_change_type", lit("insert")))
-    } else {
-      val prev = log.snapshotAt(v - 1).files.map(f => f.path -> f).toMap
-      val removedFiles = removePaths.map(prev)
-      stamp(multisetDiff(readFiles(cur, removedFiles), readFiles(cur, addedFiles)))
+        stamp((inFileDfs ++ shapedDfs).reduce(_ unionByName _))
+      case a: CommitChanges.Appends =>
+        stamp(readFiles(log.snapshotAt(v), a.adds).withColumn("_change_type", lit("insert")))
+      case r: CommitChanges.Rewrite =>
+        val cur = log.snapshotAt(v)
+        val prev = log.snapshotAt(v - 1).files.map(f => f.path -> f).toMap
+        stamp(multisetDiff(readFiles(cur, r.removes.map(x => prev(x.path))),
+          readFiles(cur, r.adds)))
     }
   }
 

@@ -196,6 +196,57 @@ class ChangeFeedSpec extends SparkTestBase {
     assert(drain("cdf_adm_bytes", Map("maxBytesPerTrigger" -> "1")) >= 3L)
   }
 
+  test("a byte-capped CDF tail sizes each commit by what it reads") {
+    val t = goldenCdf()                             // v2 merge + v3 delete, sidecars
+    t.append(df((7, "Extra", "Row")))               // v4: plain append
+    t.delete(col("id") === 7)                       // v5: rewrite w/ sidecar
+    t.setProperty("autoCompact.targetBytes", "1048576") // v6: maintenance
+    t.update(col("id") === 4, Map("lastname" -> "'Q'")) // v7: sidecar
+    val cap = t.log.readVersion(2).collect { case c: CdcFile => c.size }.sum
+    val q = spark.readStream.format("graft")
+      .option("readChangeFeed", "true").option("startingVersion", 2)
+      .option("maxBytesPerTrigger", cap.toString)
+      .load(t.path)
+      .writeStream.format("memory").queryName("cdf_bytes_batches")
+      .option("checkpointLocation", tmpDir("cdf-bytes-batches-ckpt-"))
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    def version(json: String): Long =
+      Option(json).map("""-?\d+""".r.findFirstIn(_).get.toLong).getOrElse(-1L)
+    val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+      .map(p => version(p.sources.head.startOffset) -> version(p.sources.head.endOffset))
+    // the cap is the merge's sidecar bytes: the merge rides alone, the
+    // delete's sidecar and the append's file share a batch, and the rest
+    // (a sidecar, a maintenance commit, a sidecar) fit in the last
+    assert(batches === Seq(-1L -> 2L, 2L -> 4L, 4L -> 7L))
+    assert(canon(spark.table("cdf_bytes_batches")) === canon(t.changes(1, 7)))
+  }
+
+  test("changes() reads nothing for maintenance commits") {
+    val t = GraftTable.create(spark, tmpDir("cdf-maint-"),
+      df((1 to 16).map(i => (i, s"f$i", s"l$i")): _*).repartitionByRange(16, col("id")))
+    t.setProperty("changeDataFeed.enabled", "true")  // v1
+    t.append(df((17, "f17", "l17")))                  // v2
+    t.optimize()                                      // v3
+    val optV = t.latestVersion
+    val compacted = t.log.snapshotAt(optV - 1).files.size
+    assert(compacted >= 8 &&
+      t.log.readVersion(optV).count(_.isInstanceOf[graft.table.RemoveFile]) === compacted)
+    for (v <- Seq(1L, optV)) {
+      var rows = -1
+      assert(jobsDuring { rows = t.changes(v - 1, v).collect().length } === 0, s"v$v")
+      assert(rows === 0, s"v$v")
+    }
+    // a range of maintenance commits only: an empty frame with the CDF columns
+    val empty = t.changes(optV - 1, optV)
+    assert(empty.columns.toSeq ===
+      Seq("id", "firstname", "lastname", "_change_type", "_commit_version", "_commit_timestamp"))
+    assert(empty.schema("_commit_version").dataType === LongType)
+    assert(empty.schema("_commit_timestamp").dataType === TimestampType)
+    // a range mixing them serves exactly the data commits' rows
+    assert(canon(t.changes(0, optV)) === Set((17, "f17", "l17", "insert", 2L)))
+  }
+
   test("byte-capped CDF tail over a LEGACY log (no sidecar sizes) stays rate-limited") {
     // pre-round-11 logs carry CdcFile entries without a size field; a
     // byte-denominated cap must not FAIL OPEN over them (all-zero sums

@@ -98,6 +98,41 @@ class GraftStreamSinkSpec extends SparkTestBase {
     assert(t.toDF.count() === 3L)
   }
 
+  test("a stateful stream commits a sink version only for epochs with rows") {
+    val src = tmpDir("gsink-nodata-src-")
+    val dst = tmpDir("gsink-nodata-dst-")
+    val ts = (m: Int) => java.sql.Timestamp.valueOf(
+      java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(m))
+    def events(rows: (Long, String, Int)*) =
+      rows.map { case (u, e, m) => (u, e, ts(m)) }.toDF("user_id", "event_type", "ts")
+    val source = GraftTable.create(spark, src, events((1L, "click", 0)))
+    val deduped = EventStreams.streamingFirstTouch(spark.readStream.format("graft").load(src))
+    GraftTable.create(spark, dst,
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        deduped.schema))
+    val q = EventStreams.scopedStreamRun(spark) {
+      deduped.writeStream.format("graft").option("path", dst)
+        .option("checkpointLocation", tmpDir("gsink-nodata-ckpt-")).start()
+    }
+    try {
+      q.processAllAvailable()
+      // each append advances the watermark, so Spark follows its batch
+      // with a no-data batch that evicts state
+      Seq(events((1L, "click", 5), (2L, "view", 7)), events((3L, "view", 40)),
+          events((1L, "click", 120), (4L, "click", 125))).foreach { df =>
+        source.append(df)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val sink = GraftTable.forPath(spark, dst)
+    assert(sink.toDF.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ===
+      Seq((1L, "click"), (2L, "view"), (3L, "view"), (4L, "click")))
+    val empty = (1L to sink.latestVersion).filterNot(v =>
+      sink.log.readVersion(v).exists(_.isInstanceOf[graft.table.AddFile]))
+    assert(empty.isEmpty, s"sink versions without a file: $empty")
+    assert(sink.latestVersion === 4L)
+  }
+
   /** The state-store count of a graft source → [[EventStreams.streamingFirstTouch]]
     * → graft sink run under [[EventStreams.scopedStreamRun]]. */
   private def dedupStatePartitions(tag: String): Seq[Int] = {

@@ -39,6 +39,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the table layer's: no source names Spark's DSv2 group-rewrite API
   *    (`SupportsRowLevelOperations`, `RowLevelOperation`,
   *    `SupportsRuntimeV2Filtering`) and `GraftTable.commitReplace` is gone.
+  *  - One module, [[CommitChanges]], classifies what a commit changed for
+  *    batch `changes()` and the streaming source: no other table, source
+  *    or streaming file names the maintenance op-name set or reads a
+  *    change file's partition-value shape, and neither `GraftTable.scala`
+  *    nor a source or streaming file reads an action's `dataChange` flag.
   *  - Every session of the program and its tests is built by
   *    `graft.Harness`, and the only mains are Bench, Verify, Diag and
   *    RaceWriter.
@@ -64,6 +69,11 @@ class CommitPathGuardSpec extends AnyFunSuite {
     """SupportsRowLevelOperations|RowLevelOperation|SupportsRuntimeV2Filtering""".r
   private val commitReplace = """\bcommitReplace\b""".r
   private val perFileGroupBy = """groupBy\(\s*(?:col\(\s*)?"__fname"""".r
+  private val maintenanceSet =
+    """\b(?:MaintenanceOps|nonDataOps)\b|Set\(\s*"OPTIMIZE"\s*,\s*"VACUUM"""".r
+  private val cdcShape = """\bcdcPartitionValues\b""".r
+  private val dataChangeRead =
+    """\.dataChange\b|\.contains\(\s*(?:[\w.]+\.)?DataChangeFalseTag\b""".r
   private val sessionBuilder = """SparkSession\s*\.\s*builder\b""".r
   private val mainMethod = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
@@ -216,6 +226,33 @@ class CommitPathGuardSpec extends AnyFunSuite {
         """perPos.groupBy(col("__fname"))""",
         """.groupBy(col("__fname"), col("__pos"))""")
       .foreach(line => assert(perFileGroupBy.findFirstIn(line).nonEmpty, line))
+  }
+
+  test("commit changes are classified only in CommitChanges") {
+    val layers = Seq("table", "sources", "streaming")
+    val outside = for {
+      layer <- layers
+      file <- layerFiles(layer) if file != "CommitChanges.scala"
+      pattern <- Seq(maintenanceSet, cdcShape)
+      hit <- strays(file, pattern, Set.empty, layer)
+    } yield s"$layer/$hit"
+    assert(outside.isEmpty, s"commit classification outside CommitChanges:\n${outside.mkString("\n")}")
+    val flagReads = (("table", "GraftTable.scala") +: Seq("sources", "streaming")
+        .flatMap(l => layerFiles(l).map(l -> _)))
+      .flatMap { case (layer, file) => strays(file, dataChangeRead, Set.empty, layer) }
+    assert(flagReads.isEmpty, s"dataChange read outside CommitChanges:\n${flagReads.mkString("\n")}")
+    // each pattern still matches the code it guards
+    Seq(maintenanceSet, cdcShape, dataChangeRead).foreach(pattern =>
+      assert(strays("CommitChanges.scala", pattern, Set.empty).nonEmpty, s"$pattern matches nothing"))
+    Seq("""  private val nonDataOps = Set("OPTIMIZE", "VACUUM", "SET TBLPROPERTIES",""",
+        """if (op.exists(CommitChanges.MaintenanceOps.contains)) Nil""")
+      .foreach(line => assert(maintenanceSet.findFirstIn(line).nonEmpty, line))
+    Seq("""case r: RemoveFile if r.dataChange => r""",
+        """!a.tags.contains(graft.table.Actions.DataChangeFalseTag)""")
+      .foreach(line => assert(dataChangeRead.findFirstIn(line).nonEmpty, line))
+    // the optimizer's tag write and named argument are not reads
+    Seq("""a.tags + (Actions.DataChangeFalseTag -> "true"))))""", "      dataChange = false)(")
+      .foreach(line => assert(dataChangeRead.findFirstIn(line).isEmpty, line))
   }
 
   test("sessions come only from Harness; the only mains are Bench, Verify, Diag and RaceWriter") {

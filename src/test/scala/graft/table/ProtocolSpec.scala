@@ -153,11 +153,16 @@ class ProtocolSpec extends SparkTestBase {
       Map("numOutputRows" -> "1", "txnAppId" -> "legacyQuery", "epoch" -> "7")) ) ++ adds)
     assert(t.snapshot.transactions.get("legacyQuery").isEmpty)
     val w = new graft.sources.GraftStreamingWrite(t, schema, "legacyQuery")
-    // replaying epoch 7 after a restart must be skipped, not re-committed
-    w.commit(7L, Array(graft.sources.GraftWriteMessage(Nil)))
+    // replaying epoch 7 after a restart must be skipped, not re-committed,
+    // and its rewritten file deleted (an epoch without rows commits
+    // nothing either way, so both epochs carry a file)
+    val replayed = FileOps.writeDataFiles(df((2, "b")), t.path)
+    w.commit(7L, Array(graft.sources.GraftWriteMessage(replayed)))
     assert(t.latestVersion == 1L, "replayed legacy epoch must not re-commit")
+    assert(replayed.forall(a => !Files.exists(Paths.get(t.path, a.path))))
     // the next epoch commits normally and writes the Txn action
-    w.commit(8L, Array(graft.sources.GraftWriteMessage(Nil)))
+    w.commit(8L, Array(graft.sources.GraftWriteMessage(
+      FileOps.writeDataFiles(df((3, "c")), t.path))))
     assert(t.latestVersion == 2L)
     assert(t.snapshot.transactions.get("legacyQuery").contains(8L))
   }
